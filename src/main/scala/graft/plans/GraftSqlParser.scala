@@ -1792,39 +1792,14 @@ private[plans] object VectorKnnJoinDf {
       where: Option[String],
       version: Option[Int] = None): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
-    val batch = spark.sql(batchSql)
-    version.foreach { v =>
-      // every clause composes with time travel (r15): the predicate
-      // narrows the snapshot's candidates (or, with RERANK USING PQ,
-      // its codes) before each row's cutoff, at the version's rows and
-      // DV state
-      val pred = where.map(org.apache.spark.sql.functions.expr)
-      val asof = rerank match {
-        case Some(r) => graft.sources.VectorIndex
-          .knnJoinAsOfPq(spark, target, colName, batch, topK, v, r, pred)
-        case None => graft.sources.VectorIndex
-          .knnJoinAsOf(spark, target, colName, batch, topK, v, pred)
-      }
-      return asof
-        .select(col("vec_id").cast(org.apache.spark.sql.types.LongType),
-          col("rank").cast(org.apache.spark.sql.types.IntegerType),
-          col("nn_id").cast(org.apache.spark.sql.types.LongType),
-          col("sim").cast(org.apache.spark.sql.types.DoubleType))
-    }
-    val res = (rerank, where.map(expr)) match {
-      case (Some(r), Some(pred)) => graft.sources.VectorIndex
-        .knnJoinPqWhere(spark, target, colName, batch, topK, r, pred)
-      case (Some(r), None) => graft.sources.VectorIndex
-        .knnJoinPq(spark, target, colName, batch, topK, r)
-      case (None, Some(pred)) => graft.sources.VectorIndex
-        .knnJoinWhere(spark, target, colName, batch, topK, pred)
-      case (None, None) => graft.sources.VectorIndex
-        .knnJoin(spark, target, colName, batch, topK)
-    }
-    res.select(col("vec_id").cast(org.apache.spark.sql.types.LongType),
-      col("rank").cast(org.apache.spark.sql.types.IntegerType),
-      col("nn_id").cast(org.apache.spark.sql.types.LongType),
-      col("sim").cast(org.apache.spark.sql.types.DoubleType))
+    import graft.sources.VectorIndex
+    VectorIndex.serve(spark, target, colName,
+        VectorIndex.Batch(spark.sql(batchSql), topK), rerank,
+        where.map(expr), version)
+      .select(col("vec_id").cast(org.apache.spark.sql.types.LongType),
+        col("rank").cast(org.apache.spark.sql.types.IntegerType),
+        col("nn_id").cast(org.apache.spark.sql.types.LongType),
+        col("sim").cast(org.apache.spark.sql.types.DoubleType))
   }
 }
 
@@ -1942,45 +1917,14 @@ private[plans] object VectorSearchDf {
             "literal — PROBE takes a comma-separated float vector")
       }
     }
-    import org.apache.spark.sql.functions.col
-    version.foreach { v =>
-      // WHERE and RERANK USING PQ compose with time travel (r15 — the
-      // C238 refusal lifted): the predicate evaluates against the
-      // snapshot's rows/DV state; the ADC cutoff runs over the
-      // snapshot's own codes sidecar
-      val asof = (rerank,
-          where.map(org.apache.spark.sql.functions.expr)) match {
-        case (Some(r), pred) => graft.sources.VectorIndex
-          .searchAsOfPq(spark, target, colName, probe, topK, v, probes,
-            r, pred)
-        case (None, Some(pred)) => graft.sources.VectorIndex
-          .searchAsOfWhere(spark, target, colName, probe, topK, v,
-            probes, pred)
-        case (None, None) => graft.sources.VectorIndex
-          .searchAsOf(spark, target, colName, probe, topK, v, probes)
-      }
-      return asof
-        .select(col("vec_id").cast(org.apache.spark.sql.types.LongType),
-          col("list_id").cast(org.apache.spark.sql.types.IntegerType),
-          col("sim").cast(org.apache.spark.sql.types.DoubleType))
-    }
-    val res = (rerank, where.map(org.apache.spark.sql.functions.expr)) match {
-      case (Some(r), Some(pred)) =>
-        // filtered PQ: the predicate narrows the codes BEFORE the rerank
-        // cutoff (metadata predicate + compressed candidates — the RAG
-        // serving shape)
-        graft.sources.VectorIndex
-          .searchPqWhere(spark, target, colName, probe, topK, probes, r, pred)
-      case (Some(r), None) =>
-        graft.sources.VectorIndex
-          .searchPq(spark, target, colName, probe, topK, probes, r)
-      case (None, pred) =>
-        graft.sources.VectorIndex.searchWhere(spark, target, colName, probe,
-          topK, probes, pred.getOrElse(org.apache.spark.sql.functions.lit(true)))
-    }
-    res.select(col("vec_id").cast(org.apache.spark.sql.types.LongType),
-      col("list_id").cast(org.apache.spark.sql.types.IntegerType),
-      col("sim").cast(org.apache.spark.sql.types.DoubleType))
+    import org.apache.spark.sql.functions.{col, expr}
+    import graft.sources.VectorIndex
+    VectorIndex.serve(spark, target, colName,
+        VectorIndex.Probe(probe, topK, probes), rerank, where.map(expr),
+        version)
+      .select(col("vec_id").cast(org.apache.spark.sql.types.LongType),
+        col("list_id").cast(org.apache.spark.sql.types.IntegerType),
+        col("sim").cast(org.apache.spark.sql.types.DoubleType))
   }
 }
 

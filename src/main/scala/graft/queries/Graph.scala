@@ -120,9 +120,12 @@ object Graph extends QueryModule {
       for (_ <- 1 to Iters) {
         val cs = scala.collection.mutable.Map.empty[Long, Long]
           .withDefaultValue(0L)
+        // an edge whose source has no node row (a dangling foreign key)
+        // carries no rank — the oracle's join with the rank table drops it
         edgeRows.foreach { r =>
           val src = r.getLong(0)
-          cs(r.getLong(1)) += pr(src) * r.getLong(2) / outwOf(src)
+          pr.get(src).foreach(p =>
+            cs(r.getLong(1)) += p * r.getLong(2) / outwOf(src))
         }
         pr = nodeRows.map { nr =>
           val k = nr.getLong(0)

@@ -2,7 +2,8 @@ package graft.sources
 
 import java.nio.file.Path
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType}
 
@@ -33,6 +34,44 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType}
   * fresh rebuild, no pruning — so correctness never depends on rebuild
   * discipline. Deletion vectors change no file names: the posting just
   * over-approximates and the scan-side filter is exact either way.
+  *
+  * SERVING is one pipeline ([[serve]]) behind every search and kNN-join
+  * entry point, in four stages, each written once:
+  *  1. snapshot — the live manifest under the `spark.graft.index.onStale`
+  *     policy ([[onStale]]: `fail` refuses, `refresh` runs ONE bounded
+  *     catch-up and re-serves, `retrain` replays), or a VERSION AS OF
+  *     manifest under the retrain posture (refreshing would mutate
+  *     CURRENT state to serve the past) with every scan pinned to that
+  *     snapshot's files and DV state. The stored sidecars serve iff the
+  *     prop's digest matches the snapshot's file set and — at a version —
+  *     every sidecar the serve reads survived VACUUM;
+  *  2. geometry source — the stored `cents/`, `posts/`, `pqcb/`, `codes/`
+  *     sidecars, or the in-query retrain under the prop's persisted
+  *     LISTS/SAMPLE policy (a rebuild's exact answer, no pruning). Both
+  *     key by `list_id`, `(part, list_id)` BY PARTITION, where the
+  *     predicate's partition pins ([[partitionPins]]) route to the pinned
+  *     sub-geometries — no pin = every partition — and pin every row set;
+  *  3. scorer — the exact fixed-point dot over candidates that re-derive
+  *     their list under the geometry, or PQ: the ADC pre-rank over the
+  *     narrow codes (embeddings unread), the top `rerank` per (query,
+  *     part) materialized, and an exact rerank of only those survivors;
+  *  4. shape — one probe (its `probes` nearest lists, a bounded
+  *     `(sim desc, vec_id)` heap, output `(vec_id, list_id, sim)`) or a
+  *     batch carrying the table's id + embedding columns (each row's home
+  *     list by flat argmax, a per-row `(sim desc, nn_id)` window, output
+  *     `(vec_id, rank, nn_id, sim)`); each shape has one empty result, in
+  *     its ranked schema.
+  * THE FILTERED-ANN RULE: a predicate narrows the CANDIDATES before any
+  * cutoff — filtering a top-k's output would under-fill it. It evaluates
+  * scan-side over the probed lists' files (pushdown and zone-map skipping
+  * stack with the posting pruning), at a version against that snapshot's
+  * rows. THE PQ RULE: the predicate semi-joins the codes before the ADC
+  * cutoff (the probed files scan for its columns only), so a selective
+  * filter never under-fills the rerank budget; the answer is the exact
+  * top-k among the ADC-top-`rerank` candidates, equal to the exact
+  * scorer's once `rerank` covers the probed lists. Every step is
+  * deterministic (anchor seeds, first-max tie-breaks, fixed-point
+  * scores), so the DuckDB oracle replays each path from raw data.
   *
   * Anchors are declared DDL-side (`CREATE VECTOR INDEX ON t (col)
   * ANCHORS (idCol)`): the k lowest idCol rows seed the one-refinement
@@ -236,12 +275,15 @@ object VectorIndex {
     }
   }
 
-  private def scanFiles(spark: SparkSession, dir: Path,
-      names: Seq[String]): DataFrame =
-    spark.read.format("graft.sources.GraftManifestSink")
+  /** A scan of the named files — at `version`, pinned to that snapshot's
+    * rows and DV state. */
+  private def scanFiles(spark: SparkSession, dir: Path, names: Seq[String],
+      version: Option[Int] = None): DataFrame = {
+    val r = spark.read.format("graft.sources.GraftManifestSink")
       .option("path", dir.toString)
       .option("files", names.mkString(","))
-      .load()
+    version.fold(r)(v => r.option("snapshot", v.toString)).load()
+  }
 
   private def checkCols(m: Manifest, colName: String, idCol: String): Unit = {
     def field(c: String) =
@@ -643,9 +685,10 @@ object VectorIndex {
     * candidate-I/O cut of the standard IVF-PQ architecture. Skipped
     * (with no published marker) when the anchor id range has no rows
     * below PqCbK — [[searchPq]] then refuses loudly. */
-  /** One-row codebook array from a (c_id, c_emb) relation. */
-  private def pqCbArr(cb: DataFrame): DataFrame =
-    cb.agg(
+  /** Codebook (or centroid) array rows from a (c_id, c_emb) relation —
+    * one row, or one per `by` group. */
+  private def pqCbArr(cb: DataFrame, by: Seq[String] = Nil): DataFrame =
+    cb.groupBy(by.map(col): _*).agg(
       array_sort(collect_list(struct(col("c_id"), col("c_emb")))).as("cents"))
 
   /** PQ-encode `rows` (needs an `embedding` column) against the one-row
@@ -1423,11 +1466,7 @@ object VectorIndex {
           s"version $version — the snapshot carries no vecidx prop")))
     val names = m.entries.filter(_.rows > 0).map(_.name)
     def snapScan(fs: Seq[String]): DataFrame =
-      spark.read.format("graft.sources.GraftManifestSink")
-        .option("path", mt.dir.toString)
-        .option("snapshot", version.toString)
-        .option("files", fs.mkString(","))
-        .load()
+      scanFiles(spark, mt.dir, fs, Some(version))
     val b0 = batch.select(col(p.idCol).as("vec_id"), lit(0).as("label"),
       col(colName).as("embedding"))
     def result(matched: DataFrame): DataFrame =
@@ -1631,1326 +1670,505 @@ object VectorIndex {
   /** INDEX-BACKED kNN JOIN — "for each batch row, its k nearest CORPUS
     * rows": the retrieval/augmentation join (RAG candidate fetch, label
     * propagation, hard-negative mining) served from the STORED geometry
-    * with NOTHING corpus-sized recomputed per batch. Each batch row
-    * takes its home list by per-row broadcast math against the stored
-    * centroids (flat argmax — the probe rule [[search]] uses), corpus
-    * candidates fetch from ONLY the probed lists' posting files (each
-    * fetched row re-derives its stored cluster, so the list equi-join is
-    * exact w.r.t. the kept geometry), and a ranked window per batch row
-    * takes the top-k. IVF-approximate like [[search]]: a neighbor
-    * outside a batch row's home list doesn't surface — the documented
-    * recall trade the audits monitor. Per-batch cost: Σ probed-list
-    * sizes of join work + a scan of the probed lists' files — a small
-    * batch reads a handful of the corpus's files, never the corpus.
-    * `batch` carries the table's own id + embedding columns; output
-    * `(vec_id, rank, nn_id, sim)`, rank 1..k per batch row (no
-    * self-exclusion: the batch is external — an exact corpus copy is
-    * legitimately rank 1). Stale index: the onStale policy (`retrain`
-    * replays geometry in-query — exactly a rebuild's answer, no pruning;
-    * `refresh` = the bounded catch-up; `fail` refuses). */
+    * with nothing corpus-sized recomputed per batch. IVF-approximate like
+    * [[search]]: a neighbor outside a batch row's home list doesn't
+    * surface — the documented recall trade the audits monitor. Per-batch
+    * cost: Σ probed-list sizes of join work + a scan of the probed lists'
+    * files — a small batch reads a handful of the corpus's files, never
+    * the corpus. No self-exclusion: the batch is external, so an exact
+    * corpus copy is legitimately rank 1. */
   def knnJoin(spark: SparkSession, table: String, colName: String,
       batch: DataFrame, k: Int): DataFrame =
-    knnJoinAttempt(spark, table, colName, batch, k, None,
-      allowRefresh = true)
+    serve(spark, table, colName, Batch(batch, k), None, None, None)
 
-  /** FILTERED kNN JOIN — the predicate narrows the CANDIDATES before
-    * each batch row's top-k (the filtered-ANN rule applied to the batch
-    * join: filtering the output would under-fill every row's k). The
-    * predicate references the table's own columns and evaluates
-    * scan-side over the probed lists' files — pushdown and zone-map file
-    * skipping stack with the posting pruning. */
+  /** FILTERED kNN JOIN — the filtered-ANN rule per batch row: filtering
+    * the output would under-fill every row's k. */
   def knnJoinWhere(spark: SparkSession, table: String, colName: String,
-      batch: DataFrame, k: Int,
-      predicate: org.apache.spark.sql.Column): DataFrame =
-    knnJoinAttempt(spark, table, colName, batch, k, Some(predicate),
-      allowRefresh = true)
+      batch: DataFrame, k: Int, predicate: Column): DataFrame =
+    serve(spark, table, colName, Batch(batch, k), None, Some(predicate), None)
 
-  private def knnJoinAttempt(spark: SparkSession, table: String,
-      colName: String, batch: DataFrame, k: Int,
-      predicate: Option[org.apache.spark.sql.Column],
-      allowRefresh: Boolean): DataFrame = {
-    import graft.llm.Similarity
-    import graft.llm.PortableHash.dotFixed
-    val op = "KNN JOIN"
-    val mt = resolveTable(spark, table, op)
-    val m = Manifest.read(mt.dir).getOrElse(
-      throw new IllegalStateException(s"$op: no manifest at ${mt.dir}"))
-    val prop = m.props.getOrElse(PropPrefix + colName.toLowerCase,
-      throw new IllegalStateException(
-        s"$op: no vector index on $table ($colName) — CREATE VECTOR INDEX " +
-          "first"))
-    val p = parseProp(prop)
-    val b0 = batch.select(col(p.idCol).as("vec_id"), lit(0).as("label"),
-      col(colName).as("embedding"))
-    def rekey(df: DataFrame): DataFrame =
-      df.select(col(p.idCol).as("vec_id"), lit(0).as("label"),
-        col(colName).as("embedding"))
-    // per-(batch row, candidate) pairs with each row's local top-k — the
-    // building block both the global path and the per-pin sub-joins use
-    def rankedPairs(bAssigned: DataFrame,
-        corpusAssigned: DataFrame): DataFrame = {
-      val x = bAssigned.select(col("vec_id").as("bid"),
-        col("embedding").as("e_n"), col("list_id"))
-      val y = corpusAssigned.select(col("list_id"),
-        col("vec_id").as("nn_id"), col("embedding").as("e_o"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("bid").orderBy(desc("sim"), col("nn_id"))
-      x.join(y, Seq("list_id"))
-        .select(col("bid"), col("nn_id"),
-          dotFixed(col("e_n"), col("e_o")).as("sim"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= k)
-        .select(col("bid"), col("nn_id"), col("sim"))
-    }
-    def finish(pairs: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("bid").orderBy(desc("sim"), col("nn_id"))
-      pairs
-        .withColumn("rank", row_number().over(w)
-          .cast(org.apache.spark.sql.types.IntegerType))
-        .filter(col("rank") <= k)
-        .select(col("bid").as("vec_id"), col("rank"), col("nn_id"),
-          col("sim"))
-        .orderBy("vec_id", "rank")
-    }
-    def ranked(bAssigned: DataFrame, corpusAssigned: DataFrame): DataFrame =
-      finish(rankedPairs(bAssigned, corpusAssigned))
-    if (p.isCurrent(digestOf(m))) {
-      val idxDir = mt.dir.resolve(p.idxName)
-      p.partCol match {
-        case Some(pc) =>
-          // BY PARTITION (r13): pinned pins route to their OWN
-          // sub-geometries, each contributing a per-(batch row, pin)
-          // top-k; the global per-row top-k ranks the ≤ pins×k union.
-          // NO pin = all partitions (the C225 rule applied to the batch
-          // join — corpus-wide kNN joins without a second global index).
-          // ONE part-keyed dataflow for any pin count (r14): the batch
-          // assigns under EVERY pin's geometry in one fan-out pass,
-          // candidate files come from one posting-sidecar join (the
-          // single driver collect), and the candidate scan re-derives
-          // each corpus row under ITS OWN partition's geometry — job
-          // count independent of the partition count.
-          val cents0 = graft.Tables.sidecar(spark, idxDir.resolve("cents").toString)
-          val posts0 = graft.Tables.sidecar(spark, idxDir.resolve("posts").toString)
-          val pins = predicate.flatMap(
-            partitionPins(_, pc, partTypeOf(m, pc)))
-          val centsP = pins.fold(cents0)(ps =>
-            cents0.where(col("part").isin(ps: _*)))
-          // |batch| × pins rows; an unseen pin value has no centroids
-          // and contributes nothing. MATERIALIZED once: it drives the
-          // candidate-file planning AND the ranked candidate join.
-          val bAssigned = assignBatchAllParts(b0, centsP).localCheckpoint()
-          val cand = posts0.join(
-              bAssigned.select("part", "list_id").distinct(),
-              Seq("part", "list_id"))
-            .select("file").distinct().collect().map(_.getString(0))
-          if (cand.isEmpty)
-            finish(b0.select(col("vec_id").as("bid"),
-              col("vec_id").as("nn_id"), lit(0L).as("sim"))
-              .where(lit(false)))
-          else {
-            val scan0 = scanFiles(spark, mt.dir, cand.toSeq)
-            val scanP = predicate.fold(scan0)(scan0.where)
-              .select(col(p.idCol).as("vec_id"), lit(0).as("label"),
-                col(colName).as("embedding"),
-                col(pc).cast("string").as("part"))
-            val corpusP = pins.fold(scanP)(ps =>
-              scanP.where(col("part").isin(ps: _*)))
-            val corpusAssigned = Similarity.assignListsHierByPartLocal(
-              corpusP, centsP, p.coarse)
-            // per-(batch row, part) top-k — the old per-pin rankedPairs
-            // — then the global per-row top-k over the union
-            val wpp = org.apache.spark.sql.expressions.Window
-              .partitionBy("bid", "part").orderBy(desc("sim"), col("nn_id"))
-            val pairs = bAssigned
-              .select(col("part"), col("vec_id").as("bid"),
-                col("embedding").as("e_n"), col("list_id"))
-              .join(corpusAssigned.select(col("part"), col("list_id"),
-                  col("vec_id").as("nn_id"), col("embedding").as("e_o")),
-                Seq("part", "list_id"))
-              .select(col("bid"), col("part"), col("nn_id"),
-                dotFixed(col("e_n"), col("e_o")).as("sim"))
-              .withColumn("rk", row_number().over(wpp))
-              .filter(col("rk") <= k)
-              .select(col("bid"), col("nn_id"), col("sim"))
-            finish(pairs)
-          }
-        case None =>
-          val cents = graft.Tables.sidecar(spark, idxDir.resolve("cents").toString)
-          // MATERIALIZE the batch assignment once: it drives BOTH the
-          // probed-list planning and the candidate join (bounded by the
-          // batch)
-          val bAssigned = Similarity.assignLists(b0, cents).localCheckpoint()
-          val probed = bAssigned.select("list_id").distinct()
-            .collect().map(_.getInt(0)).toSeq
-          val candFiles =
-            if (probed.isEmpty) Seq.empty[String]
-            else graft.Tables.sidecar(spark, idxDir.resolve("posts").toString)
-              .where(col("list_id").isin(probed: _*))
-              .select("file").distinct().collect().map(_.getString(0)).toSeq
-          // the predicate narrows the candidate rows INSIDE the probed
-          // files' scan (pushdown + zone-map skipping apply) BEFORE the
-          // re-derivation and the per-row top-k
-          val candScan =
-            if (candFiles.isEmpty) spark.table(table).where(lit(false))
-            else scanFiles(spark, mt.dir, candFiles)
-          val corpusAssigned = Similarity.assignListsHierLocal(
-            rekey(predicate.fold(candScan)(candScan.where)), cents, p.coarse)
-          ranked(bAssigned, corpusAssigned)
-      }
-    } else onStale(spark) match {
-      case "fail" => staleRefused(op, table)
-      case "refresh" if allowRefresh =>
-        refuseRefreshIfReadOnly(spark, op)
-        refresh(spark, mt.dir, colName)
-        knnJoinAttempt(spark, table, colName, batch, k, predicate,
-          allowRefresh = false)
-      case _ =>
-        // in-query replay of the build geometry — exactly a rebuild's
-        // answer, minus the file-bounded fetch; the geometry trains on
-        // the FULL corpus (or, BY PARTITION, per pinned slice with
-        // ranked seeding — the sub-index rule), the predicate narrows
-        // candidates only
-        val names = m.entries.filter(_.rows > 0).map(_.name)
-        val all = scanFiles(spark, mt.dir, names)
-        p.partCol match {
-          case Some(pc) =>
-            // pinned partitions retrain their ranked, SAMPLE-aware
-            // sub-geometries in ONE part-keyed dataflow (r14 — formerly
-            // a sequential per-pin kmeans loop that also ignored the
-            // persisted SAMPLE policy), the batch fans out under every
-            // pin's retrained geometry, and per-(row, part) top-ks
-            // union into the global per-row top-k — a rebuild's answer.
-            val pins = predicate.flatMap(
-              partitionPins(_, pc, partTypeOf(m, pc)))
-            def partKey(df: DataFrame): DataFrame = {
-              val keyed = df.select(col(p.idCol).as("vec_id"),
-                lit(0).as("label"), col(colName).as("embedding"),
-                col(pc).cast("string").as("part"))
-              pins.fold(keyed)(ps => keyed.where(col("part").isin(ps: _*)))
-            }
-            val cents = retrainGeometryRankedByPart(partKey(all), p)._2
-            val bAssigned = assignBatchAllParts(b0, cents)
-            val corpusAssigned = Similarity.assignListsHierByPartLocal(
-              partKey(predicate.fold(all)(all.where)), cents, p.coarse)
-            val wpp = org.apache.spark.sql.expressions.Window
-              .partitionBy("bid", "part").orderBy(desc("sim"), col("nn_id"))
-            finish(bAssigned
-              .select(col("part"), col("vec_id").as("bid"),
-                col("embedding").as("e_n"), col("list_id"))
-              .join(corpusAssigned.select(col("part"), col("list_id"),
-                  col("vec_id").as("nn_id"), col("embedding").as("e_o")),
-                Seq("part", "list_id"))
-              .select(col("bid"), col("part"), col("nn_id"),
-                dotFixed(col("e_n"), col("e_o")).as("sim"))
-              .withColumn("rk", row_number().over(wpp))
-              .filter(col("rk") <= k)
-              .select(col("bid"), col("nn_id"), col("sim")))
-          case None =>
-            val rows = rekey(all)
-            val (_, cents) = retrainGeometry(rows, p, rows.count())
-            val corpusAssigned = Similarity.assignListsHierLocal(
-              rekey(predicate.fold(all)(all.where)), cents, p.coarse)
-            ranked(Similarity.assignLists(b0, cents), corpusAssigned)
-        }
-    }
-  }
-
-  /** PQ-COMPRESSED kNN JOIN — [[knnJoin]] with the C213 two-stage
-    * candidate cut applied per batch row: the ADC pre-rank runs over the
-    * NARROW codes sidecar of the probed lists (embeddings unread), each
-    * batch row keeps its ADC-top-`rerank` survivors, and ONLY the
-    * survivors' rows fetch embeddings (their ≤ \|batch\|×rerank files,
-    * broadcast id semi-join) for the exact fixed-point rerank. At 100 TB
-    * the candidate scan is the batch join's whole cost — reading PqM
-    * small ints per candidate instead of dim×4 B of floats is the same
-    * 4-16× I/O cut searchPq makes, here amortized across the batch.
-    * Approximation explicit and bounded exactly like [[searchPq]]: exact
-    * top-k among each row's ADC-top-rerank. Output and policies match
-    * [[knnJoin]]. */
+  /** PQ-COMPRESSED kNN JOIN — [[knnJoin]] with the two-stage candidate
+    * cut per batch row: the same 4-16× candidate-I/O cut [[searchPq]]
+    * makes, amortized across the batch (the survivors' ≤
+    * \|batch\|×rerank files are the only embedding reads). */
   def knnJoinPq(spark: SparkSession, table: String, colName: String,
       batch: DataFrame, k: Int, rerank: Int = 50): DataFrame =
-    knnJoinPqAttempt(spark, table, colName, batch, k, rerank, None,
-      allowRefresh = true)
+    serve(spark, table, colName, Batch(batch, k), Some(rerank), None, None)
 
-  /** FILTERED PQ kNN JOIN — the predicate semi-joins the codes BEFORE
-    * each row's ADC rerank cutoff (the filtered-PQ rule per batch row: a
-    * selective filter must never under-fill any row's rerank budget);
-    * the probed lists' files scan for the predicate columns only. */
+  /** FILTERED PQ kNN JOIN — the predicate narrows every batch row's
+    * codes before its ADC cutoff. */
   def knnJoinPqWhere(spark: SparkSession, table: String, colName: String,
-      batch: DataFrame, k: Int, rerank: Int,
-      predicate: org.apache.spark.sql.Column): DataFrame =
-    knnJoinPqAttempt(spark, table, colName, batch, k, rerank,
-      Some(predicate), allowRefresh = true)
+      batch: DataFrame, k: Int, rerank: Int, predicate: Column): DataFrame =
+    serve(spark, table, colName, Batch(batch, k), Some(rerank),
+      Some(predicate), None)
 
-  private def knnJoinPqAttempt(spark: SparkSession, table: String,
-      colName: String, batch: DataFrame, k: Int, rerank: Int,
-      predicate: Option[org.apache.spark.sql.Column],
-      allowRefresh: Boolean): DataFrame = {
-    import graft.llm.Similarity
-    import graft.llm.PortableHash.dotFixed
-    val op = "KNN JOIN PQ"
-    val mt = resolveTable(spark, table, op)
-    val m = Manifest.read(mt.dir).getOrElse(
-      throw new IllegalStateException(s"$op: no manifest at ${mt.dir}"))
-    val prop = m.props.getOrElse(PropPrefix + colName.toLowerCase,
-      throw new IllegalStateException(
-        s"$op: no vector index on $table ($colName) — CREATE VECTOR INDEX " +
-          "first"))
-    val p = parseProp(prop)
-    val b0 = batch.select(col(p.idCol).as("vec_id"), lit(0).as("label"),
-      col(colName).as("embedding"))
-    val wAdc = org.apache.spark.sql.expressions.Window
-      .partitionBy("bid").orderBy(desc("sim_adc"), col("vec_id"))
-    val wTop = org.apache.spark.sql.expressions.Window
-      .partitionBy("bid").orderBy(desc("sim"), col("nn_id"))
-    def rankTop(pairs: DataFrame): DataFrame =
-      pairs
-        .withColumn("rank", row_number().over(wTop)
-          .cast(org.apache.spark.sql.types.IntegerType))
-        .filter(col("rank") <= k)
-        .select(col("bid").as("vec_id"), col("rank"), col("nn_id"),
-          col("sim"))
-        .orderBy("vec_id", "rank")
-    if (p.isCurrent(digestOf(m))) {
-      val idxDir = mt.dir.resolve(p.idxName)
-      if (!java.nio.file.Files.exists(idxDir.resolve("pqcb")))
-        throw new IllegalStateException(
-          s"$op: the index on $table ($colName) has no PQ codebook — " +
-            "re-run CREATE VECTOR INDEX, or use knnJoin")
-      p.partCol match {
-        case Some(pc) =>
-          // BY PARTITION (r14): the batch fans out under every pin's
-          // geometry, its ADC pre-rank runs per (batch row, pin) over
-          // that pin's OWN codes against that pin's OWN ranked codebook
-          // (one part-keyed join — no per-pin loop), and only the
-          // per-pin survivors' files fetch embeddings for the exact
-          // per-row rerank — the C226 part-keyed codebooks serving the
-          // batch join.
-          val cents0 = graft.Tables.sidecar(spark, idxDir.resolve("cents").toString)
-          val posts0 = graft.Tables.sidecar(spark, idxDir.resolve("posts").toString)
-          val cb0 = graft.Tables.sidecar(spark, idxDir.resolve("pqcb").toString)
-          val codesAll = graft.Tables.sidecar(spark, 
-            idxDir.resolve("codes").toString)
-          val pins = predicate.flatMap(
-            partitionPins(_, pc, partTypeOf(m, pc)))
-          val centsP = pins.fold(cents0)(ps =>
-            cents0.where(col("part").isin(ps: _*)))
-          val bAssigned = assignBatchAllParts(b0, centsP).localCheckpoint()
-          val bcodes = bAssigned
-            .select(col("part"), col("vec_id").as("bid"),
-              col("embedding").as("e_n"), col("list_id"))
-            .join(codesAll, Seq("part", "list_id"))
-          // the predicate narrows each pin's codes BEFORE the per-row
-          // rerank cutoff (the filtered-PQ rule per batch row and pin)
-          val bcodesF = predicate match {
-            case None => bcodes
-            case Some(pred) =>
-              val pFiles = posts0.join(
-                  bAssigned.select("part", "list_id").distinct(),
-                  Seq("part", "list_id"))
-                .select("file").distinct().collect().map(_.getString(0))
-              if (pFiles.isEmpty) bcodes.where(lit(false))
-              else {
-                val match0 = scanFiles(spark, mt.dir, pFiles.toSeq)
-                  .where(pred)
-                  .select(col(p.idCol).as("vec_id"),
-                    col(pc).cast("string").as("part"))
-                val matching = pins.fold(match0)(ps =>
-                  match0.where(col("part").isin(ps: _*)))
-                bcodes.join(matching, Seq("part", "vec_id"), "left_semi")
-              }
-          }
-          val cbByPart = cb0.groupBy("part")
-            .agg(array_sort(collect_list(struct(col("c_id"), col("c_emb"))))
-              .as("cents"))
-          val wAdcP = org.apache.spark.sql.expressions.Window
-            .partitionBy("bid", "part")
-            .orderBy(desc("sim_adc"), col("vec_id"))
-          val top = bcodesF.join(broadcast(cbByPart), "part")
-            .withColumn("sim_adc",
-              Similarity.pqAdc(col("cents"), col("e_n"),
-                b => col(s"code$b")))
-            .withColumn("rk", row_number().over(wAdcP))
-            .filter(col("rk") <= rerank)
-            .select(col("bid"), col("e_n"), col("part"), col("vec_id"),
-              col("file"))
-            .localCheckpoint()
-          val candFiles = top.select("file").distinct()
-            .collect().map(_.getString(0))
-          val pairs =
-            if (candFiles.isEmpty)
-              top.select(col("bid"), col("vec_id").as("nn_id"),
-                lit(0L).as("sim")).where(lit(false))
-            // the fetch keys on (part, vec_id), not vec_id alone (r15
-            // advice): ids only need be unique within a partition
-            else scanFiles(spark, mt.dir, candFiles.toSeq)
-              .select(col(pc).cast("string").as("part"),
-                col(p.idCol).as("vec_id"), col(colName).as("e_o"))
-              .join(broadcast(top), Seq("part", "vec_id"))
-              .select(col("bid"), col("vec_id").as("nn_id"),
-                dotFixed(col("e_n"), col("e_o")).as("sim"))
-          return rankTop(pairs)
-        case None => ()
-      }
-      val cents = graft.Tables.sidecar(spark, idxDir.resolve("cents").toString)
-      val bAssigned = Similarity.assignLists(b0, cents).localCheckpoint()
-      val probed = bAssigned.select("list_id").distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val cbArr = pqCbArr(graft.Tables.sidecar(spark, idxDir.resolve("pqcb").toString))
-      // ADC pre-rank per batch row over the narrow codes of the probed
-      // lists — embeddings unread; survivors MATERIALIZE once (≤
-      // |batch|×rerank rows) to drive the file pruning and the fetch
-      val codesAll =
-        if (probed.isEmpty)
-          graft.Tables.sidecar(spark, idxDir.resolve("codes").toString)
-            .where(lit(false))
-        else graft.Tables.sidecar(spark, idxDir.resolve("codes").toString)
-          .where(col("list_id").isin(probed: _*))
-      // the predicate narrows the codes BEFORE each row's rerank cutoff
-      // (the filtered-PQ rule): the probed lists' files scan for the
-      // predicate columns only, matching ids semi-join the codes
-      val codes0 = predicate match {
-        case None => codesAll
-        case Some(pred) =>
-          val pFiles =
-            if (probed.isEmpty) Array.empty[String]
-            else graft.Tables.sidecar(spark, idxDir.resolve("posts").toString)
-              .where(col("list_id").isin(probed: _*))
-              .select("file").distinct().collect().map(_.getString(0))
-          if (pFiles.isEmpty) codesAll.where(lit(false))
-          else codesAll.join(
-            scanFiles(spark, mt.dir, pFiles.toSeq).where(pred)
-              .select(col(p.idCol).as("vec_id")),
-            Seq("vec_id"), "left_semi")
-      }
-      val top = bAssigned
-        .select(col("vec_id").as("bid"), col("embedding").as("e_n"),
-          col("list_id"))
-        .join(codes0, Seq("list_id"))
-        .crossJoin(broadcast(cbArr))
-        .withColumn("sim_adc",
-          Similarity.pqAdc(col("cents"), col("e_n"), b => col(s"code$b")))
-        .withColumn("rk", row_number().over(wAdc))
-        .filter(col("rk") <= rerank)
-        .select(col("bid"), col("e_n"), col("vec_id"), col("file"))
-        .localCheckpoint()
-      val candFiles = top.select("file").distinct()
-        .collect().map(_.getString(0))
-      val pairs =
-        if (candFiles.isEmpty)
-          top.select(col("bid"), col("vec_id").as("nn_id"),
-            lit(0L).as("sim")).where(lit(false))
-        else scanFiles(spark, mt.dir, candFiles.toSeq)
-          .select(col(p.idCol).as("vec_id"), col(colName).as("e_o"))
-          .join(broadcast(top), "vec_id")
-          .select(col("bid"), col("vec_id").as("nn_id"),
-            dotFixed(col("e_n"), col("e_o")).as("sim"))
-      rankTop(pairs)
-    } else onStale(spark) match {
-      case "fail" => staleRefused(op, table)
-      case "refresh" if allowRefresh =>
-        refuseRefreshIfReadOnly(spark, op)
-        refresh(spark, mt.dir, colName)
-        knnJoinPqAttempt(spark, table, colName, batch, k, rerank,
-          predicate, allowRefresh = false)
-      case _ if p.partCol.isDefined =>
-        // in-query replay of the PARTITIONED pipeline (r14): every
-        // pinned partition's ranked SAMPLE-aware geometry + ranked
-        // codebook + codes in ONE part-keyed dataflow, per-(row, pin)
-        // ADC cutoff, exact rerank, global per-row top-k — a
-        // partitioned rebuild's answer, no pruning.
-        val pc = p.partCol.get
-        val names = m.entries.filter(_.rows > 0).map(_.name)
-        val all = scanFiles(spark, mt.dir, names)
-        val pins = predicate.flatMap(
-          partitionPins(_, pc, partTypeOf(m, pc)))
-        def partKey(df: DataFrame): DataFrame = {
-          val keyed = df.select(col(p.idCol).as("vec_id"),
-            lit(0).as("label"), col(colName).as("embedding"),
-            col(pc).cast("string").as("part"))
-          pins.fold(keyed)(ps => keyed.where(col("part").isin(ps: _*)))
-        }
-        val rowsP = partKey(all)
-        val (corpusAssigned, cents) = retrainGeometryRankedByPart(rowsP, p)
-        val cbArrByPart = trainPqCodebookRankedByPart(
-            rowsP.select(col("part"), col("vec_id"), col("embedding")))
-          .groupBy("part")
-          .agg(array_sort(collect_list(struct(col("c_id"), col("c_emb"))))
-            .as("cents"))
-        val codedAll = (0 until graft.llm.Similarity.PqM).foldLeft(
-            corpusAssigned.join(broadcast(cbArrByPart), "part")) {
-          (df, b) => df.withColumn(s"code$b",
-            graft.llm.Similarity.pqCode(col("cents"), col("embedding"), b))
-        }.drop("cents")
-        val coded = predicate match {
-          case None => codedAll
-          case Some(pred) => codedAll.join(
-            partKey(all.where(pred)).select(col("part"), col("vec_id")),
-            Seq("part", "vec_id"), "left_semi")
-        }
-        val bAssigned = assignBatchAllParts(b0, cents)
-        val wAdcP = org.apache.spark.sql.expressions.Window
-          .partitionBy("bid", "part").orderBy(desc("sim_adc"), col("vec_id"))
-        val top = bAssigned
-          .select(col("part"), col("vec_id").as("bid"),
-            col("embedding").as("e_n"), col("list_id"))
-          .join(coded.drop("embedding", "label"), Seq("part", "list_id"))
-          .join(broadcast(cbArrByPart), "part")
-          .withColumn("sim_adc",
-            Similarity.pqAdc(col("cents"), col("e_n"), b => col(s"code$b")))
-          .withColumn("rk", row_number().over(wAdcP))
-          .filter(col("rk") <= rerank)
-          .select(col("bid"), col("e_n"), col("part"), col("vec_id"))
-        // rerank keys on (part, vec_id), not vec_id alone (r15 advice):
-        // ids only need be unique within a partition
-        val pairs = top
-          .join(corpusAssigned.select(col("part"), col("vec_id"),
-            col("embedding").as("e_o")), Seq("part", "vec_id"))
-          .select(col("bid"), col("vec_id").as("nn_id"),
-            dotFixed(col("e_n"), col("e_o")).as("sim"))
-        rankTop(pairs)
-      case _ =>
-        // in-query replay: geometry + codebook training + codes under
-        // the persisted policy — a fresh rebuild's answer, no pruning;
-        // the predicate still narrows the coded candidates before each
-        // row's cutoff
-        val names = m.entries.filter(_.rows > 0).map(_.name)
-        val rows = scanFiles(spark, mt.dir, names)
-          .select(col(p.idCol).as("vec_id"), lit(0).as("label"),
-            col(colName).as("embedding"))
-        val n = rows.count()
-        val (corpusAssigned, cents) = retrainGeometry(rows, p, n)
-        val cb = trainPqCodebook(
-          rows.select(col("vec_id"), col("embedding")), n)
-        if (cb.isEmpty) throw new IllegalStateException(
-          s"$op: no PQ codebook trains (no rows below the anchor cap) — " +
-            "use knnJoin")
-        val cbArr = pqCbArr(cb)
-        val codedAll = encodePq(
-          corpusAssigned.select(col("vec_id"), col("embedding"),
-            col("list_id")), cbArr)
-        val coded = predicate match {
-          case None => codedAll
-          case Some(pred) => codedAll.join(
-            scanFiles(spark, mt.dir, names).where(pred)
-              .select(col(p.idCol).as("vec_id")),
-            Seq("vec_id"), "left_semi")
-        }
-        val bAssigned = Similarity.assignLists(b0, cents)
-        val top = bAssigned
-          .select(col("vec_id").as("bid"), col("embedding").as("e_n"),
-            col("list_id"))
-          .join(coded.drop("embedding", "cents"), Seq("list_id"))
-          .crossJoin(broadcast(cbArr))
-          .withColumn("sim_adc",
-            Similarity.pqAdc(col("cents"), col("e_n"), b => col(s"code$b")))
-          .withColumn("rk", row_number().over(wAdc))
-          .filter(col("rk") <= rerank)
-          .select(col("bid"), col("e_n"), col("vec_id"))
-        val pairs = top
-          .join(corpusAssigned.select(col("vec_id"), col("embedding")
-            .as("e_o")), "vec_id")
-          .select(col("bid"), col("vec_id").as("nn_id"),
-            dotFixed(col("e_n"), col("e_o")).as("sim"))
-        rankTop(pairs)
-    }
-  }
-
-  /** TIME-TRAVEL-CONSISTENT ANN — search a TABLE SNAPSHOT with the
-    * index version that covered it: the snapshot manifest carries the
-    * `vecidx.` prop AS OF that commit, so when its digest matches the
-    * snapshot's own file set (and the sidecar dir hasn't been VACUUMed)
-    * the HISTORICAL posting lists prune and the candidate scan pins
-    * both the files and the snapshot — DV state as of the version, so a
-    * later merge-on-read DELETE doesn't leak backward and a
-    * since-deleted row still ranks where it did. The text tier's C200
-    * guard solved the inverse hazard (a pinned scan must never prune
-    * against the CURRENT posting list); this is the positive
-    * capability: prune against the snapshot's OWN list. A snapshot
-    * whose index is stale or whose sidecars were reaped retrains
-    * in-query over the snapshot rows under the prop's persisted policy
-    * — always correct, no pruning (the retrain posture; `refresh` would
-    * mutate CURRENT state to serve the past, so the onStale policy
-    * deliberately does not apply). BY PARTITION snapshots serve their
-    * own sub-geometries (r14); WHERE/PQ compose at the version (r15).
-    * Output: (vec_id, list_id, sim), like [[search]]. */
+  /** TIME-TRAVEL-CONSISTENT ANN — search a TABLE SNAPSHOT with the index
+    * version that covered it: the snapshot manifest carries the
+    * `vecidx.` prop AS OF that commit, so the HISTORICAL posting lists
+    * prune and the candidate scan pins both the files and the snapshot —
+    * DV state as of the version, so a later merge-on-read DELETE doesn't
+    * leak backward and a since-deleted row still ranks where it did. The
+    * text tier's C200 guard solved the inverse hazard (a pinned scan must
+    * never prune against the CURRENT posting list); this is the positive
+    * capability: prune against the snapshot's OWN list. */
   def searchAsOf(spark: SparkSession, table: String, colName: String,
       probe: Array[Float], topK: Int, version: Int,
       probes: Int = 1): DataFrame =
-    searchAsOfAttempt(spark, table, colName, probe, topK, version, probes,
-      None, None)
+    serve(spark, table, colName, Probe(probe, topK, probes), None, None,
+      Some(version))
 
-  /** FILTERED time travel (r15 — the C238 refusal lifted): reproduce
-    * yesterday's FILTERED RAG serve — the predicate narrows the
-    * snapshot's candidates BEFORE the top-k (the filtered-ANN rule,
-    * evaluated against the snapshot's own rows and DV state, so the
-    * filter set is exactly what it was at the version). On a BY
-    * PARTITION snapshot the predicate's partition pins route to the
-    * snapshot's own sub-geometries, like [[searchWhere]]. */
+  /** FILTERED time travel: reproduce yesterday's FILTERED RAG serve — the
+    * predicate evaluates against the snapshot's own rows and DV state,
+    * so the filter set is exactly what it was at the version. */
   def searchAsOfWhere(spark: SparkSession, table: String, colName: String,
       probe: Array[Float], topK: Int, version: Int, probes: Int,
-      predicate: org.apache.spark.sql.Column): DataFrame =
-    searchAsOfAttempt(spark, table, colName, probe, topK, version, probes,
-      Some(predicate), None)
+      predicate: Column): DataFrame =
+    serve(spark, table, colName, Probe(probe, topK, probes), None,
+      Some(predicate), Some(version))
 
-  /** PQ time travel (r15): the snapshot dir carries its OWN `pqcb/` +
-    * `codes/` sidecars, so the compressed serve replays at the version —
-    * ADC pre-rank over the historical codes, exact rerank pinned to the
-    * snapshot scan. An optional predicate semi-joins the codes BEFORE
-    * each cutoff (the filtered-PQ rule), evaluated against the
-    * snapshot's rows. On a BY PARTITION snapshot every pin serves its
-    * OWN historical codebook/codes (part-local ADC cutoff and top-k,
-    * then the global top-k) — the fresh partitioned PQ dataflow with
-    * every read pinned to the version. */
+  /** PQ time travel: the snapshot dir carries its OWN `pqcb/` + `codes/`
+    * sidecars, so the compressed serve replays at the version — ADC
+    * pre-rank over the historical codes, exact rerank pinned to the
+    * snapshot scan. */
   def searchAsOfPq(spark: SparkSession, table: String, colName: String,
       probe: Array[Float], topK: Int, version: Int, probes: Int,
-      rerank: Int,
-      predicate: Option[org.apache.spark.sql.Column] = None): DataFrame =
-    searchAsOfAttempt(spark, table, colName, probe, topK, version, probes,
-      predicate, Some(rerank))
+      rerank: Int, predicate: Option[Column] = None): DataFrame =
+    serve(spark, table, colName, Probe(probe, topK, probes), Some(rerank),
+      predicate, Some(version))
 
-  private def searchAsOfAttempt(spark: SparkSession, table: String,
-      colName: String, probe: Array[Float], topK: Int, version: Int,
-      probes: Int, predicate: Option[org.apache.spark.sql.Column],
-      rerankPq: Option[Int]): DataFrame = {
-    import graft.llm.Similarity
-    val op = "VECTOR SEARCH AS OF"
-    val mt = resolveTable(spark, table, op)
-    val m = Manifest.readSnapshot(mt.dir, version).getOrElse(
-      throw new IllegalArgumentException(
-        s"$op: snapshot $version expired or never existed at ${mt.dir}"))
-    val p = parseProp(m.props.getOrElse(PropPrefix + colName.toLowerCase,
-      throw new IllegalStateException(
-        s"$op: no vector index on $table ($colName) existed as of " +
-          s"version $version — the snapshot carries no vecidx prop")))
-    val names = m.entries.filter(_.rows > 0).map(_.name)
-    val pv = typedLit(probe.toSeq)
-    def snapScan(fs: Seq[String]): DataFrame =
-      spark.read.format("graft.sources.GraftManifestSink")
-        .option("path", mt.dir.toString)
-        .option("snapshot", version.toString)
-        .option("files", fs.mkString(","))
-        .load()
-    def rekey(df: DataFrame): DataFrame =
-      df.select(col(p.idCol).as("vec_id"), lit(0).as("label"),
-        col(colName).as("embedding"))
-    def rank(rows: DataFrame, cents: DataFrame,
-        pLists: Seq[Int]): DataFrame =
-      Similarity.assignListsHierLocal(rows, cents, p.coarse)
-        .where(col("list_id").isin(pLists: _*))
-        .select(col("vec_id"), col("list_id"),
-          graft.llm.PortableHash.dotFixed(col("embedding"), pv).as("sim"))
-        .orderBy(desc("sim"), col("vec_id")).limit(topK)
-    rerankPq.foreach { rerank =>
-      // RERANK USING PQ × VERSION AS OF (r15): the historical sidecar
-      // dir carries the snapshot's own pqcb/codes, so the compressed
-      // serve replays exactly at the version; an optional predicate
-      // narrows the codes BEFORE the cutoff against the snapshot's rows
-      p.partCol.foreach { pc =>
-        // BY PARTITION × PQ × time travel (the last vector time-travel
-        // refusal, lifted): every pin ADC-ranks the snapshot's OWN
-        // per-partition codes against its OWN ranked codebook, the
-        // exact rerank fetches through the snapshot-pinned scan keyed
-        // on (part, vec_id), part-local top-k then the global top-k —
-        // the fresh partitioned PQ dataflow with every read pinned to
-        // the version. Stale/reaped → part-keyed ranked SAMPLE-aware
-        // replay (geometry + codebooks + codes) over the snapshot rows.
-        val idxDirP = mt.dir.resolve(p.idxName)
-        val servableP = p.isCurrent(digestOf(m)) &&
-          Seq("cents", "posts", "pqcb", "codes").forall(s =>
-            java.nio.file.Files.exists(idxDirP.resolve(s)))
-        val pins = predicate.flatMap(
-          partitionPins(_, pc, partTypeOf(m, pc)))
-        val wAdcP = org.apache.spark.sql.expressions.Window
-          .partitionBy("part").orderBy(desc("sim_adc"), col("vec_id"))
-        val wkP = org.apache.spark.sql.expressions.Window
-          .partitionBy("part").orderBy(desc("sim"), col("vec_id"))
-        if (servableP) {
-          val cents0 = graft.Tables.sidecar(spark, 
-            idxDirP.resolve("cents").toString)
-          val centsP = pins.fold(cents0)(ps =>
-            cents0.where(col("part").isin(ps: _*)))
-          val probed = probePairsOf(centsP, probe, probes)
-          val codesProbed = spark.read
-            .parquet(idxDirP.resolve("codes").toString)
-            .join(broadcast(probed), Seq("part", "list_id"))
-          val codes = predicate match {
-            case None => codesProbed
-            case Some(pred) =>
-              val pFiles = spark.read
-                .parquet(idxDirP.resolve("posts").toString)
-                .join(probed, Seq("part", "list_id"))
-                .select("file").distinct().collect().map(_.getString(0))
-              if (pFiles.isEmpty) codesProbed.where(lit(false))
-              else {
-                val match0 = snapScan(pFiles.toSeq).where(pred)
-                  .select(col(p.idCol).as("vec_id"),
-                    col(pc).cast("string").as("part"))
-                val matching = pins.fold(match0)(ps =>
-                  match0.where(col("part").isin(ps: _*)))
-                codesProbed.join(matching, Seq("part", "vec_id"),
-                  "left_semi")
-              }
-          }
-          val cbByPart = spark.read
-            .parquet(idxDirP.resolve("pqcb").toString)
-            .groupBy("part")
-            .agg(array_sort(collect_list(struct(col("c_id"), col("c_emb"))))
-              .as("cents"))
-          val top = codes.join(broadcast(cbByPart), "part")
-            .withColumn("sim_adc",
-              Similarity.pqAdc(col("cents"), pv, b => col(s"code$b")))
-            .withColumn("ark", row_number().over(wAdcP))
-            .where(col("ark") <= rerank)
-            .select(col("part"), col("vec_id"), col("list_id"),
-              col("file"))
-            .localCheckpoint()
-          val cand = top.select("file").distinct()
-            .collect().map(_.getString(0))
-          if (cand.isEmpty) return emptyResult(spark, m, p.idCol)
-          return snapScan(cand.toSeq)
-            .select(col(p.idCol).as("vec_id"),
-              col(colName).as("embedding"),
-              col(pc).cast("string").as("part"))
-            .join(broadcast(top.select(col("part"), col("vec_id"),
-              col("list_id"))), Seq("part", "vec_id"))
-            .select(col("part"), col("vec_id"), col("list_id"),
-              graft.llm.PortableHash.dotFixed(col("embedding"), pv)
-                .as("sim"))
-            .withColumn("prk", row_number().over(wkP))
-            .where(col("prk") <= topK)
-            .select(col("vec_id"), col("list_id"), col("sim"))
-            .orderBy(desc("sim"), col("vec_id")).limit(topK)
-        } else {
-          val all = snapScan(names)
-          def partKeyP(df: DataFrame): DataFrame = {
-            val keyed = df.select(col(p.idCol).as("vec_id"),
-              lit(0).as("label"), col(colName).as("embedding"),
-              col(pc).cast("string").as("part"))
-            pins.fold(keyed)(ps => keyed.where(col("part").isin(ps: _*)))
-          }
-          val rowsP = partKeyP(all)
-          val (assigned, cents) = retrainGeometryRankedByPart(rowsP, p)
-          val cbArrByPart = trainPqCodebookRankedByPart(
-              rowsP.select(col("part"), col("vec_id"), col("embedding")))
-            .groupBy("part")
-            .agg(array_sort(collect_list(
-              struct(col("c_id"), col("c_emb")))).as("cents"))
-          val probed = probePairsOf(cents, probe, probes)
-          val inLists = assigned.join(broadcast(probed),
-            Seq("part", "list_id"))
-          val candRows = predicate match {
-            case None => inLists
-            case Some(pred) => inLists.join(
-              partKeyP(all.where(pred)).select(col("part"), col("vec_id")),
-              Seq("part", "vec_id"), "left_semi")
-          }
-          return (0 until Similarity.PqM).foldLeft(
-              candRows.join(broadcast(cbArrByPart), "part")) { (df, b) =>
-              df.withColumn(s"code$b",
-                Similarity.pqCode(col("cents"), col("embedding"), b))
-            }
-            .withColumn("sim_adc",
-              Similarity.pqAdc(col("cents"), pv, b => col(s"code$b")))
-            .withColumn("ark", row_number().over(wAdcP))
-            .where(col("ark") <= rerank)
-            .select(col("part"), col("vec_id"), col("list_id"),
-              graft.llm.PortableHash.dotFixed(col("embedding"), pv)
-                .as("sim"))
-            .withColumn("prk", row_number().over(wkP))
-            .where(col("prk") <= topK)
-            .select(col("vec_id"), col("list_id"), col("sim"))
-            .orderBy(desc("sim"), col("vec_id")).limit(topK)
-        }
-      }
-      import graft.llm.PortableHash.dotFixed
-      def exactTop(cand: DataFrame): DataFrame =
-        cand.select(col("vec_id"), col("list_id"),
-            dotFixed(col("embedding"), pv).as("sim"))
-          .orderBy(desc("sim"), col("vec_id")).limit(topK)
-      val idxDir = mt.dir.resolve(p.idxName)
-      val servable = p.isCurrent(digestOf(m)) &&
-        Seq("cents", "posts", "pqcb", "codes").forall(s =>
-          java.nio.file.Files.exists(idxDir.resolve(s)))
-      if (servable) {
-        val cents = graft.Tables.sidecar(spark, idxDir.resolve("cents").toString)
-        val pLists = probeListsOf(cents, probe, probes)
-        val codes0 = graft.Tables.sidecar(spark, idxDir.resolve("codes").toString)
-          .where(col("list_id").isin(pLists: _*))
-        val codes = predicate match {
-          case None => codes0
-          case Some(pred) =>
-            val pFiles = spark.read
-              .parquet(idxDir.resolve("posts").toString)
-              .where(col("list_id").isin(pLists: _*))
-              .select("file").distinct().collect().map(_.getString(0))
-            if (pFiles.isEmpty) return emptyResult(spark, m, p.idCol)
-            // the snapshot-pinned scan evaluates the predicate against
-            // the version's rows and DV state — a row deleted AFTER the
-            // version still matches, a row appended after never does
-            val matching = snapScan(pFiles.toSeq).where(pred)
-              .select(col(p.idCol).as("vec_id"))
-            codes0.join(matching, Seq("vec_id"), "left_semi")
-        }
-        val cbArr = pqCbArr(
-          graft.Tables.sidecar(spark, idxDir.resolve("pqcb").toString))
-        val top = codes.crossJoin(broadcast(cbArr))
-          .withColumn("sim_adc",
-            Similarity.pqAdc(col("cents"), pv, b => col(s"code$b")))
-          .orderBy(desc("sim_adc"), col("vec_id")).limit(rerank)
-          .select(col("vec_id"), col("list_id"), col("file"))
-          .localCheckpoint()
-        val cand = top.select("file").distinct()
-          .collect().map(_.getString(0))
-        if (cand.isEmpty) return emptyResult(spark, m, p.idCol)
-        return exactTop(snapScan(cand.toSeq)
-          .select(col(p.idCol).as("vec_id"), col(colName).as("embedding"))
-          .join(broadcast(top.select(col("vec_id"), col("list_id"))),
-            "vec_id"))
-      } else {
-        // stale snapshot index (or reaped sidecars): replay geometry +
-        // codebook + codes over the SNAPSHOT rows under the persisted
-        // policy — what a rebuild at that version would have answered
-        val all = snapScan(names)
-        val rows = rekey(all)
-        val n = rows.count()
-        val (assigned, cents) = retrainGeometry(rows, p, n)
-        val cb = trainPqCodebook(rows, n)
-        if (cb.limit(1).count() == 0) throw new IllegalStateException(
-          s"$op: no PQ codebook trains at snapshot $version (no rows " +
-            "below the anchor cap) — use searchAsOf")
-        val cbArr = pqCbArr(cb)
-        val inLists = assigned.where(col("list_id").isin(
-          probeListsOf(cents, probe, probes): _*))
-        val candRows = predicate match {
-          case None => inLists
-          case Some(pred) => inLists.join(
-            all.where(pred).select(col(p.idCol).as("vec_id")),
-            Seq("vec_id"), "left_semi")
-        }
-        val top = encodePq(candRows, cbArr)
-          .withColumn("sim_adc",
-            Similarity.pqAdc(col("cents"), pv, b => col(s"code$b")))
-          .orderBy(desc("sim_adc"), col("vec_id")).limit(rerank)
-        return exactTop(top)
-      }
-    }
-    p.partCol.foreach { pc =>
-      // BY PARTITION time travel (r14 — formerly a refusal): the
-      // snapshot's OWN sub-geometries serve the pins-are-all-partitions
-      // union, one part-keyed dataflow over the snapshot-pinned scan;
-      // per-part top-k then the global top-k. Stale/reaped → part-keyed
-      // ranked SAMPLE-aware retrain over the snapshot rows.
-      def partKey(df: DataFrame): DataFrame =
-        df.select(col(p.idCol).as("vec_id"), lit(0).as("label"),
-          col(colName).as("embedding"), col(pc).cast("string").as("part"))
-      def rankByPart(assigned: DataFrame, probed: DataFrame): DataFrame = {
-        val wp = org.apache.spark.sql.expressions.Window
-          .partitionBy("part").orderBy(desc("sim"), col("vec_id"))
-        assigned.join(broadcast(probed), Seq("part", "list_id"))
-          .select(col("part"), col("vec_id"), col("list_id"),
-            graft.llm.PortableHash.dotFixed(col("embedding"), pv).as("sim"))
-          .withColumn("prk", row_number().over(wp))
-          .where(col("prk") <= topK)
-          .select(col("vec_id"), col("list_id"), col("sim"))
-          .orderBy(desc("sim"), col("vec_id")).limit(topK)
-      }
-      val idxDirP = mt.dir.resolve(p.idxName)
-      val servableP = p.isCurrent(digestOf(m)) &&
-        java.nio.file.Files.exists(idxDirP.resolve("cents")) &&
-        java.nio.file.Files.exists(idxDirP.resolve("posts"))
-      // the predicate's partition pins route to the snapshot's OWN
-      // sub-geometries (the multi-pin serving shape, at the version);
-      // the full predicate then narrows candidates before the top-k
-      val pins = predicate.flatMap(partitionPins(_, pc, partTypeOf(m, pc)))
-      if (servableP) {
-        val cents0 = graft.Tables.sidecar(spark, idxDirP.resolve("cents").toString)
-        val cents = pins.fold(cents0)(ps =>
-          cents0.where(col("part").isin(ps: _*)))
-        val probed = probePairsOf(cents, probe, probes)
-        val cand = graft.Tables.sidecar(spark, idxDirP.resolve("posts").toString)
-          .join(probed, Seq("part", "list_id"))
-          .select("file").distinct().collect().map(_.getString(0))
-        if (cand.isEmpty) return emptyResult(spark, m, p.idCol)
-        val scanned = snapScan(cand.toSeq)
-        return rankByPart(graft.llm.Similarity.assignListsHierByPartLocal(
-          partKey(predicate.fold(scanned)(scanned.where)), cents,
-          p.coarse), probed)
-      } else {
-        val all = snapScan(names)
-        val rows = partKey(all)
-        val (assigned, cents) = retrainGeometryRankedByPart(rows, p)
-        val centsP = pins.fold(cents)(ps =>
-          cents.where(col("part").isin(ps: _*)))
-        val candRows = predicate match {
-          case None => assigned
-          case Some(pred) => assigned.join(
-            all.where(pred).select(col(pc).cast("string").as("part"),
-              col(p.idCol).as("vec_id")),
-            Seq("part", "vec_id"), "left_semi")
-        }
-        return rankByPart(candRows, probePairsOf(centsP, probe, probes))
-      }
-    }
-    val idxDir = mt.dir.resolve(p.idxName)
-    // servable = digest-fresh AND every sidecar the serve path reads is
-    // present (cents/ AND posts/) — a partially reaped or half-written
-    // historical dir takes the documented retrain fallback instead of
-    // an opaque parquet path error (r14 advice)
-    val servable = p.isCurrent(digestOf(m)) &&
-      java.nio.file.Files.exists(idxDir.resolve("cents")) &&
-      java.nio.file.Files.exists(idxDir.resolve("posts"))
-    if (servable) {
-      val cents = graft.Tables.sidecar(spark, idxDir.resolve("cents").toString)
-      val pLists = probeListsOf(cents, probe, probes)
-      val cand = graft.Tables.sidecar(spark, idxDir.resolve("posts").toString)
-        .where(col("list_id").isin(pLists: _*))
-        .select("file").distinct().collect().map(_.getString(0))
-      if (cand.isEmpty) return emptyResult(spark, m, p.idCol)
-      // the predicate narrows the snapshot's candidates BEFORE the
-      // top-k (the filtered-ANN rule, at the version's own DV state)
-      val scanned = snapScan(cand.toSeq)
-      rank(rekey(predicate.fold(scanned)(scanned.where)), cents, pLists)
-    } else {
-      // the snapshot's index was stale (or its sidecars reaped):
-      // retrain over the SNAPSHOT rows under the persisted policy —
-      // exactly what a rebuild at that version would have answered
-      val all = snapScan(names)
-      val rows = rekey(all)
-      val (_, cents) = retrainGeometry(rows, p, rows.count())
-      rank(rekey(predicate.fold(all)(all.where)), cents,
-        probeListsOf(cents, probe, probes))
-    }
-  }
-
-  /** TIME-TRAVEL kNN JOIN (r14) — [[knnJoin]] against a TABLE SNAPSHOT
-    * with the index version that covered it: reproducing yesterday's
-    * RAG candidate fetch (the C238 motivation) needs the BATCH JOIN,
+  /** TIME-TRAVEL kNN JOIN — [[knnJoin]] against a TABLE SNAPSHOT:
+    * reproducing yesterday's RAG candidate fetch needs the batch join,
     * not just the single-probe search. Snapshot resolution is
-    * [[searchAsOf]]'s — the snapshot manifest's OWN `vecidx.` prop, the
-    * candidate scan pinned to both the historical files and the
-    * snapshot's DV state, so later appends/deletes never leak backward.
-    * Servable = digest-fresh AND every sidecar the serve reads present
-    * (cents/ + posts/); otherwise the in-query retrain replays what a
-    * rebuild at that version would have trained (the retrain posture —
-    * refresh would mutate CURRENT state to serve the past). BY
-    * PARTITION snapshots fan the batch out under every historical pin
-    * (r14). Output (vec_id, rank, nn_id, sim) like [[knnJoin]]. */
+    * [[searchAsOf]]'s. */
   def knnJoinAsOf(spark: SparkSession, table: String, colName: String,
       batch: DataFrame, k: Int, version: Int,
-      predicate: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+      predicate: Option[Column] = None): DataFrame =
+    serve(spark, table, colName, Batch(batch, k), None, predicate,
+      Some(version))
+
+  /** TIME-TRAVEL PQ kNN JOIN — [[knnJoinPq]] against a TABLE SNAPSHOT:
+    * per-row ADC cutoff over the snapshot's OWN codes against its OWN
+    * codebook, survivors fetched through the snapshot-pinned scan. */
+  def knnJoinAsOfPq(spark: SparkSession, table: String, colName: String,
+      batch: DataFrame, k: Int, version: Int, rerank: Int = 50,
+      predicate: Option[Column] = None): DataFrame =
+    serve(spark, table, colName, Batch(batch, k), Some(rerank), predicate,
+      Some(version))
+
+  /** IVF top-k for `probe` over the indexed column: rows of the probe's
+    * `probes` nearest clusters ranked by exact fixed-point dot (multi-
+    * probe is the standard IVF recall knob: boundary-straddling neighbors
+    * surface at ~probes× candidate cost, still Σ\|list\| — never the
+    * table). */
+  def search(spark: SparkSession, table: String, colName: String,
+      probe: Array[Float], topK: Int, probes: Int = 1): DataFrame =
+    serve(spark, table, colName, Probe(probe, topK, probes), None, None,
+      None)
+
+  /** FILTERED IVF search — the filtered-ANN rule: the predicate narrows
+    * the CANDIDATES (pushdown and zone-map file skipping stack with the
+    * posting pruning), so the top-k is never under-filled. */
+  def searchWhere(spark: SparkSession, table: String, colName: String,
+      probe: Array[Float], topK: Int, probes: Int,
+      predicate: Column): DataFrame =
+    serve(spark, table, colName, Probe(probe, topK, probes), None,
+      Some(predicate), None)
+
+  /** IVF-PQ top-k — the candidate-COMPRESSION path of the standard 100 TB
+    * ANN architecture: raise `rerank` toward the list size and it
+    * converges on [[search]]. Deletion vectors (the BM25 deleted-docs
+    * rule's analog): a DV'd row never RANKS — the exact-rerank scan drops
+    * it — but its stored code can occupy a rerank slot until the next
+    * REFRESH, which since the dv-digest tier sees DV-only churn and
+    * re-derives exactly the touched files' codes (`t$indexes` reports
+    * the interim `dv_drift`); result membership is always live-exact. */
+  def searchPq(spark: SparkSession, table: String, colName: String,
+      probe: Array[Float], topK: Int, probes: Int = 1,
+      rerank: Int = 50): DataFrame =
+    serve(spark, table, colName, Probe(probe, topK, probes), Some(rerank),
+      None, None)
+
+  /** FILTERED IVF-PQ search — the RAG serving shape at 100 TB: a metadata
+    * predicate AND compressed candidates in one query; the result is the
+    * exact top-k among the ADC-top-`rerank` of the PREDICATE-MATCHING
+    * rows of the probed lists. */
+  def searchPqWhere(spark: SparkSession, table: String, colName: String,
+      probe: Array[Float], topK: Int, probes: Int, rerank: Int,
+      predicate: Column): DataFrame =
+    serve(spark, table, colName, Probe(probe, topK, probes), Some(rerank),
+      Some(predicate), None)
+
+  /** The query side of a serve (stage 4): one probe vector, or a batch
+    * carrying the table's own id + embedding columns. */
+  private[graft] sealed trait Shape
+  private[graft] final case class Probe(probe: Array[Float], topK: Int,
+      probes: Int) extends Shape
+  private[graft] final case class Batch(batch: DataFrame, k: Int)
+      extends Shape
+
+  /** THE serve pipeline behind every search and kNN join (see the object
+    * doc). This is stage 1, the snapshot; [[Pipeline]] runs the rest.
+    * `allowRefresh` bounds the live stale→refresh→re-serve recursion to
+    * a SINGLE catch-up: if a concurrent writer re-stales the table
+    * between the refresh's digest stamp and the re-check, the second
+    * attempt falls through to the in-query retrain (or the fail policy)
+    * instead of chasing the writer. */
+  private[graft] def serve(spark: SparkSession, table: String,
+      colName: String, shape: Shape, rerank: Option[Int],
+      predicate: Option[Column], version: Option[Int],
+      allowRefresh: Boolean = true): DataFrame = {
+    val pqTag = if (rerank.isDefined) " PQ" else ""
+    val op = (shape, version) match {
+      case (_: Probe, None) => s"VECTOR SEARCH$pqTag"
+      case (_: Probe, Some(_)) => "VECTOR SEARCH AS OF"
+      case (_: Batch, None) => s"KNN JOIN$pqTag"
+      case (_: Batch, Some(_)) => s"VECTOR KNN JOIN$pqTag AS OF"
+    }
+    val mt = resolveTable(spark, table, op)
+    val m = version match {
+      case None => Manifest.read(mt.dir).getOrElse(
+        throw new IllegalStateException(s"$op: no manifest at ${mt.dir}"))
+      case Some(v) => Manifest.readSnapshot(mt.dir, v).getOrElse(
+        throw new IllegalArgumentException(
+          s"$op: snapshot $v expired or never existed at ${mt.dir}"))
+    }
+    val p = parseProp(m.props.getOrElse(PropPrefix + colName.toLowerCase,
+      throw new IllegalStateException(s"$op: no vector index on $table " +
+        s"($colName)" + (version match {
+          case Some(v) => s" existed as of version $v — the snapshot " +
+            "carries no vecidx prop"
+          case None if op == "VECTOR SEARCH" => s" — CREATE VECTOR INDEX " +
+            s"ON $table ($colName) ANCHORS (<idCol>) first"
+          case None if op == "VECTOR SEARCH PQ" => ""
+          case None => " — CREATE VECTOR INDEX first"
+        }))))
+    def noCodebook(trained: Boolean): Nothing =
+      throw new IllegalStateException((shape, version) match {
+        case (_: Probe, None) => s"$op: the index on $table ($colName) " +
+          "has no PQ codebook — either the anchor id range had no rows " +
+          s"below ${graft.llm.Similarity.PqCbK}, or a BY PARTITION index " +
+          "predates the per-partition PQ tier; re-run CREATE VECTOR " +
+          "INDEX, or use search/searchWhere"
+        case (_, Some(v)) => s"$op: no PQ codebook trains at snapshot $v " +
+          "(no rows below the anchor cap) — use " +
+          (if (shape.isInstanceOf[Probe]) "searchAsOf" else "knnJoinAsOf")
+        case _ if trained => s"$op: no PQ codebook trains (no rows below " +
+          "the anchor cap) — use knnJoin"
+        case _ => s"$op: the index on $table ($colName) has no PQ " +
+          "codebook — re-run CREATE VECTOR INDEX, or use knnJoin"
+      })
+    val idxDir = mt.dir.resolve(p.idxName)
+    def has(sidecar: String) =
+      java.nio.file.Files.exists(idxDir.resolve(sidecar))
+    val fresh = p.isCurrent(digestOf(m))
+    // the one servability rule: the stored sidecars serve iff the digest
+    // is current and — at a version, whose dir VACUUM may have reaped —
+    // every sidecar the serve reads is present; a live PQ serve refuses
+    // a fresh index without a codebook rather than retrain it
+    val stored = version match {
+      case Some(_) => fresh && (Seq("cents", "posts") ++
+        rerank.map(_ => Seq("pqcb", "codes")).getOrElse(Nil)).forall(has)
+      case None if fresh =>
+        if (rerank.isDefined && !has("pqcb")) noCodebook(trained = false)
+        true
+      case None => onStale(spark) match {
+        case "fail" => staleRefused(op, table)
+        case "refresh" if allowRefresh =>
+          refuseRefreshIfReadOnly(spark, op)
+          refresh(spark, mt.dir, colName)
+          return serve(spark, table, colName, shape, rerank, predicate,
+            version, allowRefresh = false)
+        case _ => false
+      }
+    }
+    new Pipeline(spark, mt.dir, m, p, colName, version, predicate, stored,
+      () => noCodebook(trained = true)).run(shape, rerank)
+  }
+
+  /** Stages 2-4 of one serve over a resolved snapshot. */
+  private final class Pipeline(spark: SparkSession, dir: Path, m: Manifest,
+      p: Prop, colName: String, version: Option[Int],
+      predicate: Option[Column], stored: Boolean,
+      noCodebook: () => Nothing) {
     import graft.llm.Similarity
     import graft.llm.PortableHash.dotFixed
-    val op = "VECTOR KNN JOIN AS OF"
-    val mt = resolveTable(spark, table, op)
-    val m = Manifest.readSnapshot(mt.dir, version).getOrElse(
-      throw new IllegalArgumentException(
-        s"$op: snapshot $version expired or never existed at ${mt.dir}"))
-    val p = parseProp(m.props.getOrElse(PropPrefix + colName.toLowerCase,
-      throw new IllegalStateException(
-        s"$op: no vector index on $table ($colName) existed as of " +
-          s"version $version — the snapshot carries no vecidx prop")))
-    val names = m.entries.filter(_.rows > 0).map(_.name)
-    def snapScan(fs: Seq[String]): DataFrame =
-      spark.read.format("graft.sources.GraftManifestSink")
-        .option("path", mt.dir.toString)
-        .option("snapshot", version.toString)
-        .option("files", fs.mkString(","))
-        .load()
-    def rekey(df: DataFrame): DataFrame =
-      df.select(col(p.idCol).as("vec_id"), lit(0).as("label"),
-        col(colName).as("embedding"))
-    val b0 = batch.select(col(p.idCol).as("vec_id"), lit(0).as("label"),
-      col(colName).as("embedding"))
-    def finish(bAssigned: DataFrame, corpusAssigned: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("bid").orderBy(desc("sim"), col("nn_id"))
-      bAssigned.select(col("vec_id").as("bid"),
-          col("embedding").as("e_n"), col("list_id"))
-        .join(corpusAssigned.select(col("list_id"),
-          col("vec_id").as("nn_id"), col("embedding").as("e_o")),
-          Seq("list_id"))
-        .select(col("bid"), col("nn_id"),
-          dotFixed(col("e_n"), col("e_o")).as("sim"))
-        .withColumn("rank", row_number().over(w)
-          .cast(org.apache.spark.sql.types.IntegerType))
-        .filter(col("rank") <= k)
-        .select(col("bid").as("vec_id"), col("rank"), col("nn_id"),
-          col("sim"))
-        .orderBy("vec_id", "rank")
+
+    def run(shape: Shape, rerank: Option[Int]): DataFrame = {
+      val f = shape match {
+        case s: Probe => new ProbeForm(s)
+        case s: Batch => new BatchForm(s)
+      }
+      rerank.fold(exact(f))(pq(f, _))
     }
-    p.partCol.foreach { pc =>
-      // BY PARTITION time travel for the batch join (r14): the
-      // snapshot's OWN sub-geometries serve the unpinned union — the
-      // batch fans out under every historical pin, per-(row, pin)
-      // top-ks union into the global per-row top-k, all over the
-      // snapshot-pinned scan; stale/reaped → part-keyed ranked
-      // SAMPLE-aware retrain over the snapshot rows.
-      def partKey(df: DataFrame): DataFrame =
-        df.select(col(p.idCol).as("vec_id"), lit(0).as("label"),
-          col(colName).as("embedding"), col(pc).cast("string").as("part"))
-      def finishByPart(bAssigned: DataFrame,
-          corpusAssigned: DataFrame): DataFrame = {
-        val wpp = org.apache.spark.sql.expressions.Window
-          .partitionBy("bid", "part").orderBy(desc("sim"), col("nn_id"))
-        val wb = org.apache.spark.sql.expressions.Window
-          .partitionBy("bid").orderBy(desc("sim"), col("nn_id"))
-        bAssigned.select(col("part"), col("vec_id").as("bid"),
-            col("embedding").as("e_n"), col("list_id"))
-          .join(corpusAssigned.select(col("part"), col("list_id"),
-            col("vec_id").as("nn_id"), col("embedding").as("e_o")),
-            Seq("part", "list_id"))
-          .select(col("bid"), col("part"), col("nn_id"),
-            dotFixed(col("e_n"), col("e_o")).as("sim"))
-          .withColumn("rk", row_number().over(wpp))
-          .filter(col("rk") <= k)
-          .withColumn("rank", row_number().over(wb)
-            .cast(org.apache.spark.sql.types.IntegerType))
-          .filter(col("rank") <= k)
+
+    // ---- stage 2: the geometry source, keyed by `keys` ----
+    private val grp: Seq[String] = p.partCol.map(_ => "part").toSeq
+    private val keys: Seq[String] = grp :+ "list_id"
+    // partition pins apply here and only here: to the centroids and to
+    // every keyed row set (so also to the retrain's training rows)
+    private val pins: Option[Seq[String]] = for {
+      pc <- p.partCol
+      pr <- predicate
+      ps <- partitionPins(pr, pc, partTypeOf(m, pc))
+    } yield ps
+    private def pin(df: DataFrame): DataFrame =
+      pins.fold(df)(ps => df.where(col("part").isin(ps: _*)))
+    private def scan(files: Seq[String]): DataFrame =
+      scanFiles(spark, dir, files, version)
+    private lazy val all = scan(m.entries.filter(_.rows > 0).map(_.name))
+    private def filtered(df: DataFrame): DataFrame =
+      predicate.fold(df)(df.where)
+    /** Table rows in the assigners' schema — (vec_id, label, embedding),
+      * plus `part` BY PARTITION — pinned. */
+    private def keyed(df: DataFrame): DataFrame = pin(df.select(Seq(
+        col(p.idCol).as("vec_id"), lit(0).as("label"),
+        col(colName).as("embedding")) ++
+      p.partCol.map(pc => col(pc).cast("string").as("part")): _*))
+    private def sidecar(name: String): DataFrame = graft.Tables.sidecar(spark,
+      dir.resolve(p.idxName).resolve(name).toString)
+    private lazy val trainRows = keyed(all)
+    private lazy val n = trainRows.count()
+    private val cents: DataFrame =
+      if (stored) pin(sidecar("cents"))
+      else if (grp.isEmpty) retrainGeometry(trainRows, p, n)._2
+      else retrainGeometryRankedByPart(trainRows, p)._2
+    /** The PQ codebook as one `cents` array row per `grp` group. */
+    private lazy val codebook: DataFrame = pqCbArr(
+      if (stored) sidecar("pqcb")
+      else if (grp.nonEmpty) trainPqCodebookRankedByPart(
+        trainRows.select(col("part"), col("vec_id"), col("embedding")))
+      else {
+        val cb = trainPqCodebook(trainRows, n)
+        if (cb.isEmpty) noCodebook()
+        cb
+      }, grp)
+    /** Re-derive each row's list under the geometry (two-level assigner,
+      * BY PARTITION against the row's own partition's centroids). */
+    private def assign(rows: DataFrame): DataFrame =
+      if (grp.isEmpty) Similarity.assignListsHierLocal(rows, cents, p.coarse)
+      else Similarity.assignListsHierByPartLocal(rows, cents, p.coarse)
+    private def withCodebook(df: DataFrame): DataFrame =
+      if (grp.isEmpty) df.crossJoin(broadcast(codebook))
+      else df.join(broadcast(codebook), "part")
+    /** In-query PQ codes of table rows — the retrain's `codes/`. */
+    private def encode(rows: DataFrame): DataFrame =
+      (0 until Similarity.PqM).foldLeft(withCodebook(rows)) { (df, b) =>
+        df.withColumn(s"code$b",
+          Similarity.pqCode(col("cents"), col("embedding"), b))
+      }.drop("cents")
+
+    /** The IVF lists a serve probes, from a `keys` frame: the collected
+      * ids for a global index (an IN filter that pushes into the sidecar
+      * scans), the frame itself BY PARTITION — broadcast-joined when
+      * `join` (a probe; a batch's own key join already restricts). */
+    private final class Lists(frame: DataFrame, join: Boolean) {
+      private lazy val ids =
+        frame.select("list_id").collect().map(_.getInt(0)).toSeq
+      def restrict(df: DataFrame): DataFrame =
+        if (grp.nonEmpty) { if (join) df.join(broadcast(frame), keys) else df }
+        else if (ids.isEmpty) df.where(lit(false))
+        else df.where(col("list_id").isin(ids: _*))
+      /** The table files holding rows of these lists (posting sidecar). */
+      lazy val files: Seq[String] =
+        (if (grp.nonEmpty) sidecar("posts").join(frame, keys)
+         else restrict(sidecar("posts")))
+          .select("file").distinct().collect().map(_.getString(0)).toSeq
+    }
+
+    // ---- stage 3: the scorer ----
+
+    /** Exact: candidates re-derive their list under the geometry, the
+      * predicate having narrowed them first, and rank by the fixed-point
+      * dot. Stored geometry reads only the probed lists' posting files. */
+    private def exact(f: Form): DataFrame = {
+      val src =
+        if (!stored) all
+        else {
+          val fs = f.lists.files
+          if (fs.isEmpty) return f.empty
+          scan(fs)
+        }
+      val cand = f.restrict(assign(keyed(filtered(src))))
+      f.finish(f.score(f.meet(cand)), preCut = grp.nonEmpty)
+    }
+
+    /** PQ: the ADC pre-rank over the narrow codes (the predicate
+      * semi-joins them BEFORE the cutoff), the top `rerank` per (query,
+      * part) survive, and only they fetch embeddings for the exact
+      * rerank. Stored codes come from `codes/`, the predicate from a scan
+      * of the probed lists' files for its columns only, and the
+      * survivors MATERIALIZE once — they drive the file pruning and the
+      * broadcast fetch. */
+    private def pq(f: Form, rerank: Int): DataFrame = {
+      val codes =
+        if (!stored) encode(f.restrict(assign(keyed(filtered(all)))))
+        else predicate match {
+          case None => f.restrict(sidecar("codes"))
+          case Some(pr) =>
+            val fs = f.lists.files
+            if (fs.isEmpty) return f.empty
+            // ids only need be unique within a partition: match on
+            // (part, vec_id) BY PARTITION
+            f.restrict(sidecar("codes")).join(
+              keyed(scan(fs).where(pr)).select((grp :+ "vec_id").map(col): _*),
+              grp :+ "vec_id", "left_semi")
+        }
+      val payload = if (stored) "file" else "embedding"
+      val top = topPer(withCodebook(f.meet(codes))
+          .withColumn("sim_adc",
+            Similarity.pqAdc(col("cents"), f.query, b => col(s"code$b"))),
+          f.by ++ grp, rerank, desc("sim_adc"), col("vec_id"))
+        .select((f.carry ++ grp :+ "vec_id" :+ payload).map(col): _*)
+      val rows =
+        if (!stored) top
+        else {
+          val survivors = top.localCheckpoint()
+          val fs = survivors.select("file").distinct()
+            .collect().map(_.getString(0)).toSeq
+          if (fs.isEmpty) return f.empty
+          keyed(scan(fs)).select((grp :+ "vec_id" :+ "embedding").map(col): _*)
+            .join(broadcast(survivors.drop("file")), grp :+ "vec_id")
+        }
+      // a batch's ADC window already bounds every (bid, part) group; a
+      // per-part cut there would only add an exchange
+      f.finish(f.score(rows),
+        preCut = grp.nonEmpty && f.isInstanceOf[ProbeForm])
+    }
+
+    // ---- stage 4: the shape ----
+
+    private abstract class Form {
+      /** The lists candidates are restricted to. */
+      def lists: Lists
+      def restrict(df: DataFrame): DataFrame
+      /** Pair candidates (or codes) with the query rows. */
+      def meet(df: DataFrame): DataFrame
+      /** The ADC query vector, its cutoff groups besides `part`, and the
+        * columns its survivors carry. */
+      def query: Column
+      def by: Seq[String]
+      def carry: Seq[String]
+      /** The exact fixed-point score of (query, candidate) rows. */
+      def score(rows: DataFrame): DataFrame
+      /** The top-k cut and output columns; `preCut` first cuts per part. */
+      def finish(scored: DataFrame, preCut: Boolean): DataFrame
+      def empty: DataFrame
+    }
+
+    /** One probe: its `probes` nearest lists, output (vec_id, list_id,
+      * sim), a bounded global heap. */
+    private final class ProbeForm(s: Probe) extends Form {
+      private val pv = typedLit(s.probe.toSeq)
+      val lists = new Lists(topPer(
+          cents.select(grp.map(col) ++ Seq(col("c_id"),
+            dotFixed(col("c_emb"), pv).as("pd")): _*),
+          grp, s.probes, desc("pd"), col("c_id"))
+        .select(grp.map(col) :+ col("c_id").as("list_id"): _*), join = true)
+      def restrict(df: DataFrame): DataFrame = lists.restrict(df)
+      def meet(df: DataFrame): DataFrame = df
+      def query: Column = pv
+      def by: Seq[String] = Nil
+      def carry: Seq[String] = Seq("list_id")
+      def score(rows: DataFrame): DataFrame =
+        rows.select(grp.map(col) ++ Seq(col("vec_id"), col("list_id"),
+          dotFixed(col("embedding"), pv).as("sim")): _*)
+      def finish(scored: DataFrame, preCut: Boolean): DataFrame =
+        (if (preCut) topPer(scored, grp, s.topK, desc("sim"), col("vec_id"))
+         else scored)
+          .select(col("vec_id"), col("list_id"), col("sim"))
+          .orderBy(desc("sim"), col("vec_id")).limit(s.topK)
+      def empty: DataFrame = emptyResult(spark, m, p.idCol)
+    }
+
+    /** A batch: each row's home list under every (pinned) geometry,
+      * output (vec_id, rank, nn_id, sim) with rank 1..k per batch row. */
+    private final class BatchForm(s: Batch) extends Form {
+      private val b0 = s.batch.select(col(p.idCol).as("vec_id"),
+        lit(0).as("label"), col(colName).as("embedding"))
+      // MATERIALIZED when stored: it drives the posting lookup AND the
+      // candidate join
+      private val assigned = {
+        val a =
+          if (grp.isEmpty) Similarity.assignLists(b0, cents)
+          else assignBatchAllParts(b0, cents)
+        if (stored) a.localCheckpoint() else a
+      }
+      private val side = assigned.select(grp.map(col) ++ Seq(
+        col("vec_id").as("bid"), col("embedding").as("e_n"),
+        col("list_id")): _*)
+      lazy val lists = new Lists(assigned.select(keys.map(col): _*).distinct(),
+        join = false)
+      def restrict(df: DataFrame): DataFrame =
+        if (stored) lists.restrict(df) else df
+      def meet(df: DataFrame): DataFrame = side.join(df, keys)
+      def query: Column = col("e_n")
+      def by: Seq[String] = Seq("bid")
+      def carry: Seq[String] = Seq("bid", "e_n")
+      def score(rows: DataFrame): DataFrame =
+        rows.select((col("bid") +: grp.map(col)) ++ Seq(
+          col("vec_id").as("nn_id"),
+          dotFixed(col("e_n"), col("embedding")).as("sim")): _*)
+      def finish(scored: DataFrame, preCut: Boolean): DataFrame =
+        (if (preCut)
+           topPer(scored, "bid" +: grp, s.k, desc("sim"), col("nn_id"))
+         else scored)
+          .withColumn("rank", row_number().over(Window.partitionBy("bid")
+            .orderBy(desc("sim"), col("nn_id"))).cast(IntegerType))
+          .filter(col("rank") <= s.k)
           .select(col("bid").as("vec_id"), col("rank"), col("nn_id"),
             col("sim"))
           .orderBy("vec_id", "rank")
-      }
-      val idxDirP = mt.dir.resolve(p.idxName)
-      val servableP = p.isCurrent(digestOf(m)) &&
-        java.nio.file.Files.exists(idxDirP.resolve("cents")) &&
-        java.nio.file.Files.exists(idxDirP.resolve("posts"))
-      // the predicate's partition pins route to the snapshot's own
-      // sub-geometries; the full predicate then narrows CANDIDATES
-      // before each row's top-k (the filtered-ANN rule, at the
-      // version's rows and DV state) — r15
-      val pins = predicate.flatMap(partitionPins(_, pc, partTypeOf(m, pc)))
-      if (servableP) {
-        val cents0 = graft.Tables.sidecar(spark, idxDirP.resolve("cents").toString)
-        val cents = pins.fold(cents0)(ps =>
-          cents0.where(col("part").isin(ps: _*)))
-        val bAssigned = assignBatchAllParts(b0, cents).localCheckpoint()
-        val cand = graft.Tables.sidecar(spark, idxDirP.resolve("posts").toString)
-          .join(bAssigned.select("part", "list_id").distinct(),
-            Seq("part", "list_id"))
-          .select("file").distinct().collect().map(_.getString(0))
-        if (cand.isEmpty)
-          return finish(b0.select(col("vec_id"), col("embedding"),
-            lit(0).as("list_id")).where(lit(false)),
-            b0.select(col("vec_id"), col("embedding"),
-              lit(0).as("list_id")).where(lit(false)))
-        val scanned = snapScan(cand.toSeq)
-        return finishByPart(bAssigned,
-          graft.llm.Similarity.assignListsHierByPartLocal(
-            partKey(predicate.fold(scanned)(scanned.where)), cents,
-            p.coarse))
-      } else {
-        val all = snapScan(names)
-        val rowsP = partKey(all)
-        val keyedP = pins.fold(rowsP)(ps =>
-          rowsP.where(col("part").isin(ps: _*)))
-        val (corpusAssigned, cents) = retrainGeometryRankedByPart(keyedP, p)
-        val candRows = predicate match {
-          case None => corpusAssigned
-          case Some(pred) => corpusAssigned.join(
-            partKey(all.where(pred)).select(col("part"), col("vec_id")),
-            Seq("part", "vec_id"), "left_semi")
-        }
-        return finishByPart(assignBatchAllParts(b0, cents), candRows)
-      }
-    }
-    val idxDir = mt.dir.resolve(p.idxName)
-    val servable = p.isCurrent(digestOf(m)) &&
-      java.nio.file.Files.exists(idxDir.resolve("cents")) &&
-      java.nio.file.Files.exists(idxDir.resolve("posts"))
-    if (servable) {
-      val cents = graft.Tables.sidecar(spark, idxDir.resolve("cents").toString)
-      // MATERIALIZE the batch assignment once — probed-list planning AND
-      // the candidate join (bounded by the batch), as in [[knnJoin]]
-      val bAssigned = Similarity.assignLists(b0, cents).localCheckpoint()
-      val probed = bAssigned.select("list_id").distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val candFiles =
-        if (probed.isEmpty) Seq.empty[String]
-        else graft.Tables.sidecar(spark, idxDir.resolve("posts").toString)
-          .where(col("list_id").isin(probed: _*))
-          .select("file").distinct().collect().map(_.getString(0)).toSeq
-      if (candFiles.isEmpty)
-        finish(bAssigned.where(lit(false)),
-          bAssigned.select(col("vec_id"), col("embedding"), col("list_id"))
-            .where(lit(false)))
-      else {
-        // the predicate narrows corpus CANDIDATES before each row's
-        // top-k (the filtered-ANN rule), evaluated against the
-        // snapshot's rows and DV state — r15
-        val scanned = snapScan(candFiles)
-        finish(bAssigned, Similarity.assignListsHierLocal(
-          rekey(predicate.fold(scanned)(scanned.where)), cents, p.coarse))
-      }
-    } else {
-      // stale snapshot index (or reaped sidecars): retrain over the
-      // SNAPSHOT rows under the persisted policy — a rebuild's answer
-      val all = snapScan(names)
-      val rows = rekey(all)
-      val (_, cents) = retrainGeometry(rows, p, rows.count())
-      finish(Similarity.assignLists(b0, cents),
-        Similarity.assignListsHierLocal(
-          rekey(predicate.fold(all)(all.where)), cents, p.coarse))
+      /** The zero-candidate result, in the ranked path's exact schema. */
+      def empty: DataFrame = finish(score(side.select("bid", "e_n")
+        .crossJoin(keyed(all)
+          .select((grp :+ "vec_id" :+ "embedding").map(col): _*))
+        .where(lit(false))), preCut = false)
     }
   }
 
-  /** TIME-TRAVEL PQ kNN JOIN (r15 — completing the C238 matrix):
-    * [[knnJoinPq]] against a TABLE SNAPSHOT — per-row ADC cutoff over
-    * the snapshot's OWN `codes/` sidecar against its OWN stored
-    * codebook, survivors' embeddings fetched through the snapshot-pinned
-    * scan for the exact per-row rerank. Servable = digest-fresh AND all
-    * four sidecars present; otherwise the in-query replay trains
-    * geometry + codebook + codes over the snapshot rows (the retrain
-    * posture). A BY PARTITION snapshot serves each pin's OWN
-    * historical codebook/codes with the per-(row, pin) ADC cutoff
-    * (r15 — the matrix completed). Output (vec_id, rank, nn_id,
-    * sim). */
-  def knnJoinAsOfPq(spark: SparkSession, table: String, colName: String,
-      batch: DataFrame, k: Int, version: Int, rerank: Int = 50,
-      predicate: Option[org.apache.spark.sql.Column] = None)
-      : DataFrame = {
-    import graft.llm.Similarity
-    import graft.llm.PortableHash.dotFixed
-    val op = "VECTOR KNN JOIN PQ AS OF"
-    val mt = resolveTable(spark, table, op)
-    val m = Manifest.readSnapshot(mt.dir, version).getOrElse(
-      throw new IllegalArgumentException(
-        s"$op: snapshot $version expired or never existed at ${mt.dir}"))
-    val p = parseProp(m.props.getOrElse(PropPrefix + colName.toLowerCase,
-      throw new IllegalStateException(
-        s"$op: no vector index on $table ($colName) existed as of " +
-          s"version $version — the snapshot carries no vecidx prop")))
-    val names = m.entries.filter(_.rows > 0).map(_.name)
-    def snapScan(fs: Seq[String]): DataFrame =
-      spark.read.format("graft.sources.GraftManifestSink")
-        .option("path", mt.dir.toString)
-        .option("snapshot", version.toString)
-        .option("files", fs.mkString(","))
-        .load()
-    val b0 = batch.select(col(p.idCol).as("vec_id"), lit(0).as("label"),
-      col(colName).as("embedding"))
-    val wAdc = org.apache.spark.sql.expressions.Window
-      .partitionBy("bid").orderBy(desc("sim_adc"), col("vec_id"))
-    val wTop = org.apache.spark.sql.expressions.Window
-      .partitionBy("bid").orderBy(desc("sim"), col("nn_id"))
-    def rankTop(pairs: DataFrame): DataFrame =
-      pairs
-        .withColumn("rank", row_number().over(wTop)
-          .cast(org.apache.spark.sql.types.IntegerType))
-        .filter(col("rank") <= k)
-        .select(col("bid").as("vec_id"), col("rank"), col("nn_id"),
-          col("sim"))
-        .orderBy("vec_id", "rank")
-    val idxDir = mt.dir.resolve(p.idxName)
-    val servable = p.isCurrent(digestOf(m)) &&
-      Seq("cents", "posts", "pqcb", "codes").forall(s =>
-        java.nio.file.Files.exists(idxDir.resolve(s)))
-    p.partCol.foreach { pc =>
-      // BY PARTITION × PQ × time travel for the BATCH join (r15 — the
-      // matrix completed): the batch fans out under every HISTORICAL
-      // pin, per-(row, pin) ADC cutoff over the snapshot's own codes
-      // against its own ranked codebooks, survivors fetch through the
-      // snapshot-pinned scan keyed on (part, vec_id). Stale/reaped →
-      // part-keyed ranked SAMPLE-aware replay over the snapshot rows.
-      val wAdcP = org.apache.spark.sql.expressions.Window
-        .partitionBy("bid", "part").orderBy(desc("sim_adc"), col("vec_id"))
-      val pins = predicate.flatMap(
-        partitionPins(_, pc, partTypeOf(m, pc)))
-      if (servable) {
-        val cents0 = graft.Tables.sidecar(spark, idxDir.resolve("cents").toString)
-        val cents = pins.fold(cents0)(ps =>
-          cents0.where(col("part").isin(ps: _*)))
-        val bAssigned = assignBatchAllParts(b0, cents).localCheckpoint()
-        val cbByPart = spark.read
-          .parquet(idxDir.resolve("pqcb").toString)
-          .groupBy("part")
-          .agg(array_sort(collect_list(struct(col("c_id"), col("c_emb"))))
-            .as("cents"))
-        // the predicate narrows each pin's codes BEFORE the per-row
-        // rerank cutoff (the filtered-PQ rule), evaluated against the
-        // snapshot's rows and DV state
-        val codes0 = graft.Tables.sidecar(spark, idxDir.resolve("codes").toString)
-        val codes = predicate match {
-          case None => codes0
-          case Some(pred) =>
-            val pFiles = spark.read
-              .parquet(idxDir.resolve("posts").toString)
-              .join(bAssigned.select("part", "list_id").distinct(),
-                Seq("part", "list_id"))
-              .select("file").distinct().collect().map(_.getString(0))
-            if (pFiles.isEmpty) codes0.where(lit(false))
-            else {
-              val match0 = snapScan(pFiles.toSeq).where(pred)
-                .select(col(p.idCol).as("vec_id"),
-                  col(pc).cast("string").as("part"))
-              val matching = pins.fold(match0)(ps =>
-                match0.where(col("part").isin(ps: _*)))
-              codes0.join(matching, Seq("part", "vec_id"), "left_semi")
-            }
-        }
-        val top = bAssigned
-          .select(col("part"), col("vec_id").as("bid"),
-            col("embedding").as("e_n"), col("list_id"))
-          .join(codes, Seq("part", "list_id"))
-          .join(broadcast(cbByPart), "part")
-          .withColumn("sim_adc",
-            Similarity.pqAdc(col("cents"), col("e_n"), b => col(s"code$b")))
-          .withColumn("rk", row_number().over(wAdcP))
-          .filter(col("rk") <= rerank)
-          .select(col("bid"), col("e_n"), col("part"), col("vec_id"),
-            col("file"))
-          .localCheckpoint()
-        val candFiles = top.select("file").distinct()
-          .collect().map(_.getString(0))
-        val pairs =
-          if (candFiles.isEmpty)
-            top.select(col("bid"), col("vec_id").as("nn_id"),
-              lit(0L).as("sim")).where(lit(false))
-          else snapScan(candFiles.toSeq)
-            .select(col(pc).cast("string").as("part"),
-              col(p.idCol).as("vec_id"), col(colName).as("e_o"))
-            .join(broadcast(top), Seq("part", "vec_id"))
-            .select(col("bid"), col("vec_id").as("nn_id"),
-              dotFixed(col("e_n"), col("e_o")).as("sim"))
-        return rankTop(pairs)
-      } else {
-        val all = snapScan(names)
-        def partKeyP(df: DataFrame): DataFrame = {
-          val keyed = df.select(col(p.idCol).as("vec_id"),
-            lit(0).as("label"), col(colName).as("embedding"),
-            col(pc).cast("string").as("part"))
-          pins.fold(keyed)(ps => keyed.where(col("part").isin(ps: _*)))
-        }
-        val rowsP = partKeyP(all)
-        val (corpusAssigned, cents) = retrainGeometryRankedByPart(rowsP, p)
-        val cbArrByPart = trainPqCodebookRankedByPart(
-            rowsP.select(col("part"), col("vec_id"), col("embedding")))
-          .groupBy("part")
-          .agg(array_sort(collect_list(struct(col("c_id"), col("c_emb"))))
-            .as("cents"))
-        val codedAll = (0 until Similarity.PqM).foldLeft(
-            corpusAssigned.join(broadcast(cbArrByPart), "part")) {
-          (df, b) => df.withColumn(s"code$b",
-            Similarity.pqCode(col("cents"), col("embedding"), b))
-        }.drop("cents")
-        val coded = predicate match {
-          case None => codedAll
-          case Some(pred) => codedAll.join(
-            partKeyP(all.where(pred)).select(col("part"), col("vec_id")),
-            Seq("part", "vec_id"), "left_semi")
-        }
-        val top = assignBatchAllParts(b0, cents)
-          .select(col("part"), col("vec_id").as("bid"),
-            col("embedding").as("e_n"), col("list_id"))
-          .join(coded.drop("embedding", "label"), Seq("part", "list_id"))
-          .join(broadcast(cbArrByPart), "part")
-          .withColumn("sim_adc",
-            Similarity.pqAdc(col("cents"), col("e_n"), b => col(s"code$b")))
-          .withColumn("rk", row_number().over(wAdcP))
-          .filter(col("rk") <= rerank)
-          .select(col("bid"), col("e_n"), col("part"), col("vec_id"))
-        val pairs = top
-          .join(corpusAssigned.select(col("part"), col("vec_id"),
-            col("embedding").as("e_o")), Seq("part", "vec_id"))
-          .select(col("bid"), col("vec_id").as("nn_id"),
-            dotFixed(col("e_n"), col("e_o")).as("sim"))
-        return rankTop(pairs)
-      }
-    }
-    if (servable) {
-      val cents = graft.Tables.sidecar(spark, idxDir.resolve("cents").toString)
-      val bAssigned = Similarity.assignLists(b0, cents).localCheckpoint()
-      val probed = bAssigned.select("list_id").distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val cbArr = pqCbArr(
-        graft.Tables.sidecar(spark, idxDir.resolve("pqcb").toString))
-      val codes0 =
-        if (probed.isEmpty)
-          graft.Tables.sidecar(spark, idxDir.resolve("codes").toString)
-            .where(lit(false))
-        else graft.Tables.sidecar(spark, idxDir.resolve("codes").toString)
-          .where(col("list_id").isin(probed: _*))
-      // the predicate narrows the codes BEFORE each row's rerank cutoff,
-      // evaluated against the snapshot's rows and DV state
-      val codesAll = predicate match {
-        case None => codes0
-        case Some(pred) =>
-          val pFiles =
-            if (probed.isEmpty) Array.empty[String]
-            else graft.Tables.sidecar(spark, idxDir.resolve("posts").toString)
-              .where(col("list_id").isin(probed: _*))
-              .select("file").distinct().collect().map(_.getString(0))
-          if (pFiles.isEmpty) codes0.where(lit(false))
-          else codes0.join(
-            snapScan(pFiles.toSeq).where(pred)
-              .select(col(p.idCol).as("vec_id")),
-            Seq("vec_id"), "left_semi")
-      }
-      val top = bAssigned
-        .select(col("vec_id").as("bid"), col("embedding").as("e_n"),
-          col("list_id"))
-        .join(codesAll, Seq("list_id"))
-        .crossJoin(broadcast(cbArr))
-        .withColumn("sim_adc",
-          Similarity.pqAdc(col("cents"), col("e_n"), b => col(s"code$b")))
-        .withColumn("rk", row_number().over(wAdc))
-        .filter(col("rk") <= rerank)
-        .select(col("bid"), col("e_n"), col("vec_id"), col("file"))
-        .localCheckpoint()
-      val candFiles = top.select("file").distinct()
-        .collect().map(_.getString(0))
-      val pairs =
-        if (candFiles.isEmpty)
-          top.select(col("bid"), col("vec_id").as("nn_id"),
-            lit(0L).as("sim")).where(lit(false))
-        else snapScan(candFiles.toSeq)
-          .select(col(p.idCol).as("vec_id"), col(colName).as("e_o"))
-          .join(broadcast(top), "vec_id")
-          .select(col("bid"), col("vec_id").as("nn_id"),
-            dotFixed(col("e_n"), col("e_o")).as("sim"))
-      rankTop(pairs)
-    } else {
-      // stale snapshot index (or reaped sidecars): replay geometry +
-      // codebook + codes over the SNAPSHOT rows under the persisted
-      // policy — what a rebuild at that version would have answered
-      val rows = snapScan(names)
-        .select(col(p.idCol).as("vec_id"), lit(0).as("label"),
-          col(colName).as("embedding"))
-      val n = rows.count()
-      val (corpusAssigned, cents) = retrainGeometry(rows, p, n)
-      val cb = trainPqCodebook(
-        rows.select(col("vec_id"), col("embedding")), n)
-      if (cb.isEmpty) throw new IllegalStateException(
-        s"$op: no PQ codebook trains at snapshot $version (no rows " +
-          "below the anchor cap) — use knnJoinAsOf")
-      val cbArr = pqCbArr(cb)
-      val codedAll = encodePq(
-        corpusAssigned.select(col("vec_id"), col("embedding"),
-          col("list_id")), cbArr)
-      val coded = predicate match {
-        case None => codedAll
-        case Some(pred) => codedAll.join(
-          snapScan(names).where(pred).select(col(p.idCol).as("vec_id")),
-          Seq("vec_id"), "left_semi")
-      }
-      val top = Similarity.assignLists(b0, cents)
-        .select(col("vec_id").as("bid"), col("embedding").as("e_n"),
-          col("list_id"))
-        .join(coded.drop("embedding", "cents"), Seq("list_id"))
-        .crossJoin(broadcast(cbArr))
-        .withColumn("sim_adc",
-          Similarity.pqAdc(col("cents"), col("e_n"), b => col(s"code$b")))
-        .withColumn("rk", row_number().over(wAdc))
-        .filter(col("rk") <= rerank)
-        .select(col("bid"), col("e_n"), col("vec_id"))
-      val pairs = top
-        .join(corpusAssigned.select(col("vec_id"), col("embedding")
-          .as("e_o")), "vec_id")
-        .select(col("bid"), col("vec_id").as("nn_id"),
-          dotFixed(col("e_n"), col("e_o")).as("sim"))
-      rankTop(pairs)
-    }
+  /** The top `n` rows of `df` under `order` within each `by` group — a
+    * bounded heap (TakeOrdered) when ungrouped, a ranked window
+    * otherwise. */
+  private def topPer(df: DataFrame, by: Seq[String], n: Int,
+      order: Column*): DataFrame =
+    if (by.isEmpty) df.orderBy(order: _*).limit(n)
+    else df.withColumn("rk", row_number().over(
+        Window.partitionBy(by.map(col): _*).orderBy(order: _*)))
+      .where(col("rk") <= n).drop("rk")
+
+  /** Batch rows × EVERY partition's flat geometry, one fan-out dataflow:
+    * each batch row takes its max-dot home list per part's sorted
+    * centroid array — the [[graft.llm.Similarity.assignLists]] argmax,
+    * replayed under every sub-geometry at once. \|batch\| × parts rows
+    * (an unpinned partitioned batch join probes every pin), with zero
+    * driver round-trips. */
+  private def assignBatchAllParts(b0: DataFrame,
+      cents: DataFrame): DataFrame =
+    b0.crossJoin(broadcast(pqCbArr(cents, Seq("part"))))
+      // codegen single-pass argmax — value-identical to
+      // transform(dots)+array_position(array_max)
+      .withColumn("pos",
+        graft.functions.TopTwoDotFixed.bestPos(col("embedding"), col("cents")))
+      .withColumn("list_id",
+        element_at(col("cents"), col("pos")).getField("c_id"))
+      .select(col("part"), col("vec_id"), col("embedding"), col("list_id"))
+
+  private def partTypeOf(m: Manifest,
+      pc: String): org.apache.spark.sql.types.DataType =
+    m.schema.fields.find(_.name.equalsIgnoreCase(pc)).map(_.dataType)
+      .getOrElse(org.apache.spark.sql.types.StringType)
+
+  /** The zero-candidate probe result, in the SAME schema as the ranked
+    * path: vec_id in the ID COLUMN'S declared type (not a hard-coded
+    * BIGINT — callers unioning across calls would hit a type mismatch on
+    * an INT-keyed table), list_id INT, sim DOUBLE. */
+  private def emptyResult(spark: SparkSession, m: Manifest,
+      idCol: String): DataFrame = {
+    val idType = m.schema.fields
+      .find(_.name.equalsIgnoreCase(idCol)).map(_.dataType)
+      .getOrElse(org.apache.spark.sql.types.LongType)
+    spark.range(0).select(col("id").cast(idType).as("vec_id"),
+      lit(0).as("list_id"), lit(0.0).as("sim"))
   }
 
   /** The named table must analyze to this engine's [[ManifestTable]] —
@@ -2964,57 +2182,6 @@ object VectorIndex {
     }.getOrElse(throw new UnsupportedOperationException(
       s"$op: $table is not a graft manifest table"))
 
-  /** The probe's `probes` nearest centroids of `cents` (dot desc, c_id
-    * asc — the same first-max tie-break as row assignment). One small
-    * driver-side collect; planning-class work. */
-  private def probeListsOf(cents: DataFrame, probe: Array[Float],
-      probes: Int): Seq[Int] = {
-    val pv = typedLit(probe.toSeq)
-    cents.select(col("c_id"),
-        graft.llm.PortableHash.dotFixed(col("c_emb"), pv).as("pd"))
-      .orderBy(desc("pd"), col("c_id")).limit(probes)
-      .collect().map(_.getInt(0)).toSeq
-  }
-
-  /** The PART-KEYED twin of [[probeListsOf]] — EVERY partition's probe
-    * lists in one relation (r14): a ranked window over `part` on the
-    * cents sidecar yields (part, list_id) pairs with exactly the per-pin
-    * rule (dot desc, c_id asc, top `probes`), as a FRAME rather than a
-    * per-pin collect — the replacement for the sequential driver loop
-    * the r13 verdict flagged. Zero Spark jobs; ≤ parts×probes rows. */
-  private def probePairsOf(cents: DataFrame, probe: Array[Float],
-      probes: Int): DataFrame = {
-    val pv = typedLit(probe.toSeq)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("part").orderBy(desc("pd"), col("c_id"))
-    cents.select(col("part"), col("c_id"),
-        graft.llm.PortableHash.dotFixed(col("c_emb"), pv).as("pd"))
-      .withColumn("prk", row_number().over(w))
-      .where(col("prk") <= probes)
-      .select(col("part"), col("c_id").as("list_id"))
-  }
-
-  /** Batch rows × EVERY partition's flat geometry, one fan-out dataflow
-    * (r14, the BY PARTITION kNN-join batch assignment): each batch row
-    * takes its max-dot home list per part's sorted centroid array — the
-    * [[graft.llm.Similarity.assignLists]] argmax, replayed under every
-    * sub-geometry at once. \|batch\| × parts rows (the semantics of an
-    * unpinned partitioned batch join — every pin must be probed), with
-    * zero driver round-trips. */
-  private def assignBatchAllParts(b0: DataFrame,
-      cents: DataFrame): DataFrame = {
-    val centArr = cents.groupBy("part")
-      .agg(array_sort(collect_list(struct(col("c_id"), col("c_emb"))))
-        .as("cents"))
-    b0.crossJoin(broadcast(centArr))
-      // codegen single-pass argmax (r17) — value-identical to
-      // transform(dots)+array_position(array_max)
-      .withColumn("pos",
-        graft.functions.TopTwoDotFixed.bestPos(col("embedding"), col("cents")))
-      .withColumn("list_id",
-        element_at(col("cents"), col("pos")).getField("c_id"))
-      .select(col("part"), col("vec_id"), col("embedding"), col("list_id"))
-  }
 
   /** The stale-replay retrain for BY PARTITION indexes as ONE part-keyed
     * dataflow (r14) — every affected partition's ranked, SAMPLE-aware
@@ -3115,496 +2282,4 @@ object VectorIndex {
           Manifest.write(dir, cur.copy(props = cur.props - key))
       }
     }
-
-  /** IVF top-k for `probe` over the indexed column: rows of the probe's
-    * `probes` nearest clusters ranked by exact fixed-point dot (multi-
-    * probe is the standard IVF recall knob: boundary-straddling neighbors
-    * surface at ~probes× candidate cost, still Σ\|list\| — never the
-    * table). Fresh index → candidate files from the union of the probed
-    * posting lists; stale → retrain on the fly (same result, no pruning).
-    * Output: the id column, `sim`, `list_id`. */
-  def search(spark: SparkSession, table: String, colName: String,
-      probe: Array[Float], topK: Int, probes: Int = 1): DataFrame =
-    searchWhere(spark, table, colName, probe, topK, probes, lit(true))
-
-  /** FILTERED IVF search — the predicate composes BEFORE the top-k (the
-    * classic filtered-ANN correctness trap: filtering a top-k's output
-    * under-fills the result; the filter must narrow the CANDIDATES). The
-    * predicate references the table's own columns and is evaluated
-    * scan-side over the probed lists' files — file pruning and metadata
-    * filtering stack. */
-  def searchWhere(spark: SparkSession, table: String, colName: String,
-      probe: Array[Float], topK: Int, probes: Int,
-      predicate: org.apache.spark.sql.Column): DataFrame =
-    searchWhereAttempt(spark, table, colName, probe, topK, probes,
-      predicate, allowRefresh = true)
-
-  /** One serve attempt. `allowRefresh` bounds the stale→refresh→re-serve
-    * recursion to a SINGLE catch-up: if a concurrent writer re-stales
-    * the table between the refresh's digest stamp and this re-check, the
-    * second attempt falls through to the in-query retrain (or the fail
-    * policy) instead of chasing the writer unboundedly. */
-  private def searchWhereAttempt(spark: SparkSession, table: String,
-      colName: String, probe: Array[Float], topK: Int, probes: Int,
-      predicate: org.apache.spark.sql.Column,
-      allowRefresh: Boolean): DataFrame = {
-    val mt = resolveTable(spark, table, "VECTOR SEARCH")
-    val m = Manifest.read(mt.dir).getOrElse(
-      throw new IllegalStateException(s"VECTOR SEARCH: no manifest at ${mt.dir}"))
-    val prop = m.props.getOrElse(PropPrefix + colName.toLowerCase,
-      throw new IllegalStateException(
-        s"VECTOR SEARCH: no vector index on $table ($colName) — " +
-          s"CREATE VECTOR INDEX ON $table ($colName) ANCHORS (<idCol>) first"))
-    val p = parseProp(prop)
-    val names = m.entries.filter(_.rows > 0).map(_.name)
-
-    def ranked(rows: DataFrame, cents: DataFrame,
-        pLists: Seq[Int]): DataFrame = {
-      val assigned = graft.llm.Similarity.assignListsHierLocal(rows, cents, p.coarse)
-      val pv = typedLit(probe.toSeq)
-      assigned.where(col("list_id").isin(pLists: _*))
-        .select(col("vec_id"), col("list_id"),
-          graft.llm.PortableHash.dotFixed(col("embedding"), pv).as("sim"))
-        .orderBy(desc("sim"), col("vec_id")).limit(topK)
-    }
-    // the Lloyd helper's fixed input schema
-    def rekey(df: DataFrame): DataFrame =
-      df.select(col(p.idCol).as("vec_id"), lit(0).as("label"),
-        col(colName).as("embedding"))
-    if (p.isCurrent(digestOf(m))) {
-      val idxDir = mt.dir.resolve(p.idxName)
-      p.partCol match {
-        case Some(pc) =>
-          // BY PARTITION: route to each pinned partition's OWN
-          // sub-geometry — its centroids probe, its postings prune, and
-          // NOTHING of any other partition is read (partition pruning
-          // composes with list pruning). Multi-pin (IN): per-pin top-k
-          // first, global top-k over the ≤ pins×k union. NO pin = all
-          // partitions (the same union generalized): corpus-wide search
-          // over the sub-geometries without a second global index.
-          // ONE part-keyed dataflow for ANY pin count (r14 — the per-pin
-          // sequential driver loop was the r13 weak item): probe lists
-          // come from a ranked window over `part` on the cents sidecar,
-          // candidate files from one posting-sidecar join (the single
-          // driver collect — bounded metadata, job count independent of
-          // the partition count), and the candidate scan assigns each row
-          // against ITS OWN partition's geometry via the part-keyed
-          // two-level assigner, part-local top-k before the global one.
-          val cents0 = graft.Tables.sidecar(spark, idxDir.resolve("cents").toString)
-          val posts0 = graft.Tables.sidecar(spark, idxDir.resolve("posts").toString)
-          val pins = partitionPins(predicate, pc, partTypeOf(m, pc))
-          val centsP = pins.fold(cents0)(ps =>
-            cents0.where(col("part").isin(ps: _*)))
-          // (part, list_id) probe pairs — an unseen pin value has no
-          // centroids and contributes nothing, like the old per-pin skip
-          val probed = probePairsOf(centsP, probe, probes)
-          val cand = posts0.join(probed, Seq("part", "list_id"))
-            .select("file").distinct().collect().map(_.getString(0))
-          if (cand.isEmpty) emptyResult(spark, m, p.idCol)
-          else {
-            // the pin filter on the scanned rows matters for MULTI-pin:
-            // the partition-pure layout is best-effort (an unclustered
-            // append can mix values in one file), and the probed-pairs
-            // join alone keys each row to its OWN partition's geometry —
-            // the pin filter additionally drops unpinned partitions'
-            // rows riding in shared files
-            val rows0 = scanFiles(spark, mt.dir, cand.toSeq)
-              .where(predicate)
-              .select(col(p.idCol).as("vec_id"), lit(0).as("label"),
-                col(colName).as("embedding"),
-                col(pc).cast("string").as("part"))
-            val rowsP = pins.fold(rows0)(ps =>
-              rows0.where(col("part").isin(ps: _*)))
-            val assigned = graft.llm.Similarity.assignListsHierByPartLocal(
-              rowsP, centsP, p.coarse)
-            val pv = typedLit(probe.toSeq)
-            val wp = org.apache.spark.sql.expressions.Window
-              .partitionBy("part").orderBy(desc("sim"), col("vec_id"))
-            assigned.join(broadcast(probed), Seq("part", "list_id"))
-              .select(col("part"), col("vec_id"), col("list_id"),
-                graft.llm.PortableHash.dotFixed(col("embedding"), pv)
-                  .as("sim"))
-              .withColumn("prk", row_number().over(wp))
-              .where(col("prk") <= topK)
-              .select(col("vec_id"), col("list_id"), col("sim"))
-              .orderBy(desc("sim"), col("vec_id")).limit(topK)
-          }
-        case None =>
-          val cents = graft.Tables.sidecar(spark, idxDir.resolve("cents").toString)
-          // probe lists, then their posting files — two small metadata
-          // reads
-          val pLists = probeListsOf(cents, probe, probes)
-          val cand = graft.Tables.sidecar(spark, idxDir.resolve("posts").toString)
-            .where(col("list_id").isin(pLists: _*))
-            .select("file").distinct().collect().map(_.getString(0))
-          if (cand.isEmpty) return emptyResult(spark, m, p.idCol)
-          // the metadata predicate narrows CANDIDATES, before the top-k
-          // — applied on the raw scan so it sees the table's own column
-          // names
-          ranked(rekey(scanFiles(spark, mt.dir, cand.toSeq)
-            .where(predicate)), cents, pLists)
-      }
-    } else onStale(spark) match {
-      case "fail" => staleRefused("VECTOR SEARCH", table)
-      case "refresh" if allowRefresh =>
-        // bounded catch-up (dead postings drop, new files assign against
-        // the stored geometry; a legacy-assigner index rebuilds), then
-        // serve from the now-fresh index — pruning included
-        refuseRefreshIfReadOnly(spark, "VECTOR SEARCH")
-        refresh(spark, mt.dir, colName)
-        searchWhereAttempt(spark, table, colName, probe, topK, probes,
-          predicate, allowRefresh = false)
-      case _ =>
-        // retrain from the declared anchors over the CURRENT rows under
-        // the build's persisted LISTS/SAMPLE policy — exactly what a
-        // rebuild would answer, minus the file pruning. The geometry
-        // trains on the UNFILTERED corpus (it is a corpus-level
-        // artifact) — or, BY PARTITION, on the pinned partition's rows
-        // (ranked seeding, the sub-index rule); the predicate narrows
-        // only the ranked candidates.
-        val all = scanFiles(spark, mt.dir, names)
-        p.partCol match {
-          case Some(pc) =>
-            // pinned partitions retrain their ranked, SAMPLE-aware
-            // sub-geometries in ONE part-keyed dataflow (r14 — formerly
-            // a sequential per-pin kmeans loop that also ignored the
-            // persisted SAMPLE policy), then each predicate-matching
-            // candidate ranks against its own partition's geometry:
-            // part-local top-k, global top-k over the ≤ pins×k union —
-            // the fresh path's multi-pin semantics, replayed.
-            val pins = partitionPins(predicate, pc, partTypeOf(m, pc))
-            def partKey(df: DataFrame): DataFrame = {
-              val keyed = df.select(col(p.idCol).as("vec_id"),
-                lit(0).as("label"), col(colName).as("embedding"),
-                col(pc).cast("string").as("part"))
-              pins.fold(keyed)(ps => keyed.where(col("part").isin(ps: _*)))
-            }
-            val cents = retrainGeometryRankedByPart(partKey(all), p)._2
-            val probed = probePairsOf(cents, probe, probes)
-            val assigned = graft.llm.Similarity.assignListsHierByPartLocal(
-              partKey(all.where(predicate)), cents, p.coarse)
-            val pv = typedLit(probe.toSeq)
-            val wp = org.apache.spark.sql.expressions.Window
-              .partitionBy("part").orderBy(desc("sim"), col("vec_id"))
-            assigned.join(broadcast(probed), Seq("part", "list_id"))
-              .select(col("part"), col("vec_id"), col("list_id"),
-                graft.llm.PortableHash.dotFixed(col("embedding"), pv)
-                  .as("sim"))
-              .withColumn("prk", row_number().over(wp))
-              .where(col("prk") <= topK)
-              .select(col("vec_id"), col("list_id"), col("sim"))
-              .orderBy(desc("sim"), col("vec_id")).limit(topK)
-          case None =>
-            val cents = retrainGeometry(rekey(all), p)._2
-            ranked(rekey(all.where(predicate)), cents,
-              probeListsOf(cents, probe, probes))
-        }
-    }
-  }
-
-  private def partTypeOf(m: Manifest,
-      pc: String): org.apache.spark.sql.types.DataType =
-    m.schema.fields.find(_.name.equalsIgnoreCase(pc)).map(_.dataType)
-      .getOrElse(org.apache.spark.sql.types.StringType)
-
-  /** The zero-candidate result, in the SAME schema as the ranked path:
-    * vec_id in the ID COLUMN'S declared type (not a hard-coded BIGINT —
-    * callers unioning across calls would hit a type mismatch on an
-    * INT-keyed table), list_id INT, sim DOUBLE. */
-  private def emptyResult(spark: SparkSession, m: Manifest,
-      idCol: String): DataFrame = {
-    val idType = m.schema.fields
-      .find(_.name.equalsIgnoreCase(idCol)).map(_.dataType)
-      .getOrElse(org.apache.spark.sql.types.LongType)
-    spark.range(0).select(col("id").cast(idType).as("vec_id"),
-      lit(0).as("list_id"), lit(0.0).as("sim"))
-  }
-
-  /** IVF-PQ top-k — the candidate-COMPRESSION path of the standard 100 TB
-    * ANN architecture: the probe's `probes` lists' rows are pre-ranked by
-    * the asymmetric (ADC) score over the stored PQ codes — a scan of the
-    * NARROW `codes/` sidecar (PqM small ints per row), never the embedding
-    * column — and only the top `rerank` survivors have their embeddings
-    * fetched (broadcast id semi-join against the posting files) for the
-    * exact fixed-point rerank. Approximation is explicit and bounded: the
-    * result is the exact top-k AMONG the ADC-top-`rerank` candidates of
-    * the probed lists (raise `rerank` toward the list size and it
-    * converges on [[search]]); every step is deterministic — codebook =
-    * the PqK lowest-anchor rows, first-min/first-max tie-breaks,
-    * fixed-point scores — so the DuckDB oracle replays the whole pipeline
-    * from raw data. Stale index: the onStale policy applies; `retrain`
-    * replays geometry + codes in-query (same answer a rebuild would give,
-    * no pruning). Deletion vectors (the BM25 deleted-docs rule's analog):
-    * a DV'd row never RANKS — the exact-rerank scan drops it — but its
-    * stored code can occupy a rerank slot until the next REFRESH, which
-    * since the dv-digest tier sees DV-only churn and re-derives exactly
-    * the touched files' codes (`t$indexes` reports the interim
-    * `dv_drift`); result membership is always live-exact either way.
-    * Output: (vec_id, list_id, sim). */
-  def searchPq(spark: SparkSession, table: String, colName: String,
-      probe: Array[Float], topK: Int, probes: Int = 1,
-      rerank: Int = 50): DataFrame =
-    searchPqAttempt(spark, table, colName, probe, topK, probes, rerank,
-      predicate = None, allowRefresh = true)
-
-  /** FILTERED IVF-PQ search — the RAG serving shape at 100 TB: a
-    * metadata predicate AND compressed candidates in one query. The
-    * predicate composes BEFORE the ADC rerank cutoff (the filtered-ANN
-    * rule, applied at the compression tier: filtering the ADC top-r's
-    * OUTPUT would under-fill the rerank budget whenever the filter is
-    * selective). Dataflow: the probed lists' files are scanned once for
-    * the predicate columns ONLY (pushdown applies; the embedding column
-    * is not read), the matching ids semi-join the narrow codes sidecar,
-    * ADC pre-ranks the survivors, and only the top-`rerank` fetch
-    * embeddings for the exact rerank — so the result is the exact top-k
-    * among the ADC-top-`rerank` of the PREDICATE-MATCHING rows of the
-    * probed lists, deterministic and oracle-replayable. */
-  def searchPqWhere(spark: SparkSession, table: String, colName: String,
-      probe: Array[Float], topK: Int, probes: Int, rerank: Int,
-      predicate: org.apache.spark.sql.Column): DataFrame =
-    searchPqAttempt(spark, table, colName, probe, topK, probes, rerank,
-      predicate = Some(predicate), allowRefresh = true)
-
-  /** One PQ serve attempt — `allowRefresh` bounds the
-    * stale→refresh→re-serve recursion exactly as in
-    * [[searchWhereAttempt]]. */
-  private def searchPqAttempt(spark: SparkSession, table: String,
-      colName: String, probe: Array[Float], topK: Int, probes: Int,
-      rerank: Int, predicate: Option[org.apache.spark.sql.Column],
-      allowRefresh: Boolean): DataFrame = {
-    import graft.llm.Similarity
-    val mt = resolveTable(spark, table, "VECTOR SEARCH PQ")
-    val m = Manifest.read(mt.dir).getOrElse(
-      throw new IllegalStateException(s"VECTOR SEARCH PQ: no manifest at ${mt.dir}"))
-    val prop = m.props.getOrElse(PropPrefix + colName.toLowerCase,
-      throw new IllegalStateException(
-        s"VECTOR SEARCH PQ: no vector index on $table ($colName)"))
-    val p = parseProp(prop)
-    val names = m.entries.filter(_.rows > 0).map(_.name)
-    val pv = typedLit(probe.toSeq)
-
-    def noPqCodebook(): Nothing = throw new IllegalStateException(
-      s"VECTOR SEARCH PQ: the index on $table ($colName) has no PQ " +
-        s"codebook — either the anchor id range had no rows below " +
-        s"${Similarity.PqCbK}, or a BY PARTITION index predates the " +
-        "per-partition PQ tier; re-run CREATE VECTOR INDEX, or use " +
-        "search/searchWhere")
-
-    def exactTop(cand: DataFrame): DataFrame =
-      cand.select(col("vec_id"), col("list_id"),
-          graft.llm.PortableHash.dotFixed(col("embedding"), pv).as("sim"))
-        .orderBy(desc("sim"), col("vec_id")).limit(topK)
-
-    if (p.isCurrent(digestOf(m))) {
-      val idxDir = mt.dir.resolve(p.idxName)
-      if (!java.nio.file.Files.exists(idxDir.resolve("pqcb"))) noPqCodebook()
-      p.partCol match {
-        case Some(pc) =>
-          // BY PARTITION (r13): every pin ADC-ranks ITS OWN codes against
-          // ITS OWN ranked codebook, reranks exactly within its files,
-          // and the global top-k ranks the ≤ pins×k union — the same
-          // multi-pin shape as searchWhere, with the compression tier's
-          // two-stage candidate cut inside each pin. No pin = all
-          // partitions (the C225 union). ONE part-keyed dataflow (r14):
-          // probe pairs from the ranked cents window, per-part ADC
-          // cutoff via a (part)-keyed window against per-part broadcast
-          // codebooks, one survivor-file collect, one rerank scan with
-          // part-local then global top-k — two driver collects total,
-          // independent of the partition count.
-          val cents0 = graft.Tables.sidecar(spark, idxDir.resolve("cents").toString)
-          val posts0 = graft.Tables.sidecar(spark, idxDir.resolve("posts").toString)
-          val cb0 = graft.Tables.sidecar(spark, idxDir.resolve("pqcb").toString)
-          val codesAll = graft.Tables.sidecar(spark, idxDir.resolve("codes").toString)
-          val pins = predicate.flatMap(
-            partitionPins(_, pc, partTypeOf(m, pc)))
-          val centsP = pins.fold(cents0)(ps =>
-            cents0.where(col("part").isin(ps: _*)))
-          val probed = probePairsOf(centsP, probe, probes)
-          val codesProbed = codesAll.join(broadcast(probed),
-            Seq("part", "list_id"))
-          // the predicate narrows each pin's codes BEFORE its rerank
-          // cutoff (the filtered-PQ rule, per pin): the probed lists'
-          // files scan for the predicate columns only, matching
-          // (part, id) pairs semi-join the codes
-          val codes = predicate match {
-            case None => codesProbed
-            case Some(pred) =>
-              val pFiles = posts0.join(probed, Seq("part", "list_id"))
-                .select("file").distinct().collect().map(_.getString(0))
-              if (pFiles.isEmpty) codesProbed.where(lit(false))
-              else {
-                val match0 = scanFiles(spark, mt.dir, pFiles.toSeq)
-                  .where(pred)
-                  .select(col(p.idCol).as("vec_id"),
-                    col(pc).cast("string").as("part"))
-                val matching = pins.fold(match0)(ps =>
-                  match0.where(col("part").isin(ps: _*)))
-                codesProbed.join(matching, Seq("part", "vec_id"),
-                  "left_semi")
-              }
-          }
-          val cbByPart = cb0.groupBy("part")
-            .agg(array_sort(collect_list(struct(col("c_id"), col("c_emb"))))
-              .as("cents"))
-          val wAdcP = org.apache.spark.sql.expressions.Window
-            .partitionBy("part").orderBy(desc("sim_adc"), col("vec_id"))
-          val top = codes.join(broadcast(cbByPart), "part")
-            .withColumn("sim_adc",
-              Similarity.pqAdc(col("cents"), pv, b => col(s"code$b")))
-            .withColumn("ark", row_number().over(wAdcP))
-            .where(col("ark") <= rerank)
-            .select(col("part"), col("vec_id"), col("list_id"), col("file"))
-            .localCheckpoint()
-          val cand = top.select("file").distinct()
-            .collect().map(_.getString(0))
-          if (cand.isEmpty) return emptyResult(spark, m, p.idCol)
-          val wkP = org.apache.spark.sql.expressions.Window
-            .partitionBy("part").orderBy(desc("sim"), col("vec_id"))
-          return scanFiles(spark, mt.dir, cand.toSeq)
-            .select(col(p.idCol).as("vec_id"), col(colName).as("embedding"),
-              col(pc).cast("string").as("part"))
-            .join(broadcast(top.select(col("part"), col("vec_id"),
-              col("list_id"))), Seq("part", "vec_id"))
-            .select(col("part"), col("vec_id"), col("list_id"),
-              graft.llm.PortableHash.dotFixed(col("embedding"), pv)
-                .as("sim"))
-            .withColumn("prk", row_number().over(wkP))
-            .where(col("prk") <= topK)
-            .select(col("vec_id"), col("list_id"), col("sim"))
-            .orderBy(desc("sim"), col("vec_id")).limit(topK)
-        case None => ()
-      }
-      val cents = graft.Tables.sidecar(spark, idxDir.resolve("cents").toString)
-      val pLists = probeListsOf(cents, probe, probes)
-      val cbArr = pqCbArr(graft.Tables.sidecar(spark, idxDir.resolve("pqcb").toString))
-      // ADC pre-rank over the NARROW codes sidecar (list filter pushed to
-      // the parquet scan) — the embedding column is never read here. A
-      // predicate narrows the codes FIRST (before the rerank cutoff):
-      // the probed lists' files are scanned for the predicate columns
-      // only and the matching ids semi-join the codes — at 100 TB that
-      // scan touches ~1/k of the files and never the embedding column.
-      // The survivors are MATERIALIZED (≤rerank rows): they drive both
-      // the file pruning and the broadcast id semi-join below.
-      val codes0 = graft.Tables.sidecar(spark, idxDir.resolve("codes").toString)
-        .where(col("list_id").isin(pLists: _*))
-      val codes = predicate match {
-        case None => codes0
-        case Some(pred) =>
-          val pFiles = graft.Tables.sidecar(spark, idxDir.resolve("posts").toString)
-            .where(col("list_id").isin(pLists: _*))
-            .select("file").distinct().collect().map(_.getString(0))
-          if (pFiles.isEmpty) return emptyResult(spark, m, p.idCol)
-          val matching = scanFiles(spark, mt.dir, pFiles.toSeq).where(pred)
-            .select(col(p.idCol).as("vec_id"))
-          codes0.join(matching, Seq("vec_id"), "left_semi")
-      }
-      val top = codes
-        .crossJoin(broadcast(cbArr))
-        .withColumn("sim_adc",
-          Similarity.pqAdc(col("cents"), pv, b => col(s"code$b")))
-        .orderBy(desc("sim_adc"), col("vec_id")).limit(rerank)
-        .select(col("vec_id"), col("list_id"), col("file"))
-        .localCheckpoint()
-      // exact rerank touches ONLY the survivors: their ≤rerank FILES are
-      // the scan (codes carry the file column), and the broadcast id
-      // semi-join narrows rows within them
-      val cand = top.select("file").distinct()
-        .collect().map(_.getString(0))
-      if (cand.isEmpty) return emptyResult(spark, m, p.idCol)
-      val rows = scanFiles(spark, mt.dir, cand.toSeq)
-        .select(col(p.idCol).as("vec_id"), col(colName).as("embedding"))
-        .join(broadcast(top.select(col("vec_id"), col("list_id"))), "vec_id")
-      exactTop(rows)
-    } else onStale(spark) match {
-      case "fail" => staleRefused("VECTOR SEARCH PQ", table)
-      case "refresh" if allowRefresh =>
-        refuseRefreshIfReadOnly(spark, "VECTOR SEARCH PQ")
-        refresh(spark, mt.dir, colName)
-        searchPqAttempt(spark, table, colName, probe, topK, probes, rerank,
-          predicate, allowRefresh = false)
-      case _ =>
-        // in-query replay of the WHOLE pipeline (geometry + codebook
-        // training + codes) under the build's persisted LISTS/SAMPLE
-        // policy, so the answer matches a fresh rebuild's — no pruning,
-        // same determinism
-        val all = scanFiles(spark, mt.dir, names)
-        p.partCol match {
-          case Some(pc) =>
-            // pinned partitions replay ranked slice retrain + ranked
-            // codebook + codes + per-pin ADC cutoff + per-pin exact
-            // top-k + global top-k in ONE part-keyed dataflow (r14 —
-            // formerly a sequential per-pin loop)
-            val pins = predicate.flatMap(
-              partitionPins(_, pc, partTypeOf(m, pc)))
-            def partKey(df: DataFrame): DataFrame = {
-              val keyed = df.select(col(p.idCol).as("vec_id"),
-                lit(0).as("label"), col(colName).as("embedding"),
-                col(pc).cast("string").as("part"))
-              pins.fold(keyed)(ps => keyed.where(col("part").isin(ps: _*)))
-            }
-            val rowsP = partKey(all)
-            val (assigned, cents) = retrainGeometryRankedByPart(rowsP, p)
-            val cbArrByPart = trainPqCodebookRankedByPart(
-                rowsP.select(col("part"), col("vec_id"), col("embedding")))
-              .groupBy("part")
-              .agg(array_sort(collect_list(
-                struct(col("c_id"), col("c_emb")))).as("cents"))
-            val probed = probePairsOf(cents, probe, probes)
-            val inLists = assigned.join(broadcast(probed),
-              Seq("part", "list_id"))
-            val candRows = predicate match {
-              case None => inLists
-              case Some(pred) => inLists.join(
-                partKey(all.where(pred)).select(col("part"), col("vec_id")),
-                Seq("part", "vec_id"), "left_semi")
-            }
-            val wAdcP = org.apache.spark.sql.expressions.Window
-              .partitionBy("part").orderBy(desc("sim_adc"), col("vec_id"))
-            val wkP = org.apache.spark.sql.expressions.Window
-              .partitionBy("part").orderBy(desc("sim"), col("vec_id"))
-            return (0 until Similarity.PqM).foldLeft(
-                candRows.join(broadcast(cbArrByPart), "part")) { (df, b) =>
-                df.withColumn(s"code$b",
-                  Similarity.pqCode(col("cents"), col("embedding"), b))
-              }
-              .withColumn("sim_adc",
-                Similarity.pqAdc(col("cents"), pv, b => col(s"code$b")))
-              .withColumn("ark", row_number().over(wAdcP))
-              .where(col("ark") <= rerank)
-              .select(col("part"), col("vec_id"), col("list_id"),
-                graft.llm.PortableHash.dotFixed(col("embedding"), pv)
-                  .as("sim"))
-              .withColumn("prk", row_number().over(wkP))
-              .where(col("prk") <= topK)
-              .select(col("vec_id"), col("list_id"), col("sim"))
-              .orderBy(desc("sim"), col("vec_id")).limit(topK)
-          case None => ()
-        }
-        val rows = all
-          .select(col(p.idCol).as("vec_id"), lit(0).as("label"),
-            col(colName).as("embedding"))
-        val n = rows.count()
-        val (assigned, cents) = retrainGeometry(rows, p, n)
-        val cb = trainPqCodebook(rows, n)
-        // same loud refusal as the fresh path: an empty codebook would
-        // NULL every ADC score and silently rank garbage candidates
-        if (cb.limit(1).count() == 0) noPqCodebook()
-        val cbArr = pqCbArr(cb)
-        val inLists = assigned.where(col("list_id").isin(
-          probeListsOf(cents, probe, probes): _*))
-        // predicate before the cutoff, as in the fresh path
-        val candRows = predicate match {
-          case None => inLists
-          case Some(pred) => inLists.join(
-            all.where(pred).select(col(p.idCol).as("vec_id")),
-            Seq("vec_id"), "left_semi")
-        }
-        val coded = encodePq(candRows, cbArr)
-        val top = coded
-          .withColumn("sim_adc",
-            Similarity.pqAdc(col("cents"), pv, b => col(s"code$b")))
-          .orderBy(desc("sim_adc"), col("vec_id")).limit(rerank)
-        exactTop(top)
-    }
-  }
 }

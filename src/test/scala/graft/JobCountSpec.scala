@@ -65,6 +65,16 @@ class JobCountSpec extends SparkSuite {
     ("q_table_changes_mixed", 7, 14),
     ("q_dedup_minhash_incremental_sql", 7, 14),
     ("q_dedup_embedding", 4, 6),
+    // the vector serve pipeline: the probe and batch shapes × exact and
+    // PQ scorers, global and BY PARTITION, live and VERSION AS OF, plus
+    // the SQL statement form — the deterministic twin of index_serve
+    ("q_vector_search", 7, 8),
+    ("q_vector_search_pq", 7, 9),
+    ("q_vector_knn_join", 10, 15),
+    ("q_vector_knn_join_pq", 10, 17),
+    ("q_vector_search_partitioned_pq", 10, 18),
+    ("q_vector_knn_join_asof_partitioned_pq", 13, 21),
+    ("q_vector_search_sql", 8, 10),
   )
 
   private def defaultConditions: Boolean =

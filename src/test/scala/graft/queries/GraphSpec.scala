@@ -27,6 +27,27 @@ class GraphSpec extends SparkSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
+  test("pagerank: an edge whose source has no node row is dropped") {
+    // customer 12's nation 9 is a dangling foreign key: its 9 → 0 edge
+    // carries no rank (the oracle's inner join with the rank table drops
+    // it), so the graph is the symmetric 2-node fixpoint
+    val dir = java.nio.file.Files.createTempDirectory("pr_dangling_").toString
+    Seq((0L, "ALPHA"), (1L, "BETA")).toDF("n_nationkey", "n_name")
+      .write.parquet(s"$dir/nation.parquet")
+    Seq((10L, 0L), (11L, 1L), (12L, 9L)).toDF("c_custkey", "c_nationkey")
+      .write.parquet(s"$dir/customer.parquet")
+    Seq((20L, 0L), (21L, 1L)).toDF("s_suppkey", "s_nationkey")
+      .write.parquet(s"$dir/supplier.parquet")
+    Seq((30L, 10L), (31L, 11L), (32L, 12L)).toDF("o_orderkey", "o_custkey")
+      .write.parquet(s"$dir/orders.parquet")
+    Seq((30L, 21L), (31L, 20L), (32L, 20L)).toDF("l_orderkey", "l_suppkey")
+      .write.parquet(s"$dir/lineitem.parquet")
+    val out = Graph.queries("q_graph_pagerank")(spark, dir).collect()
+      .map(r => r.getAs[String]("n_name") -> r.getAs[Long]("pr_fp")).toMap
+    assert(out === Map("ALPHA" -> 500000000000L, "BETA" -> 500000000000L))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("triangles: a planted K4 plus a pendant edge yields exactly C(4,3) per-node counts") {
     // K4 on nations 0-3 (every pair trades) + pendant node 4 attached to 0:
     // 4 triangles total; each K4 node sits in C(3,2)=3, node 4 in none.

@@ -1643,4 +1643,152 @@ class VectorIndexSpec extends SparkSuite {
     assert(e2.getMessage.contains("VECTOR SEARCH ON <table>"),
       s"got: ${e2.getMessage}")
   }
+
+  /** A table of four jittered blobs (hot axis = id % 4, partition label
+    * = id % 2) for the serve-path equivalence checks below. */
+  private def blobRows(ids: Range): org.apache.spark.sql.DataFrame =
+    ids.map(i => (i.toLong, i % 2, vec(i % 4, (8 + i % 7, 0.02f * (1 + i % 5)),
+        (20 + i % 11, 0.015f * (1 + i % 3)))))
+      .toDF("vec_id", "label", "embedding")
+
+  test("serve equivalence matrix: {probe, batch} × {exact, PQ} × " +
+      "{no predicate, predicate} agree across AS OF, stale retrain and " +
+      "PQ convergence") {
+    val probe = vec(0, (1, 0.3f))
+    val batch = Seq((1000L, vec(0, (9, 0.05f))), (1001L, vec(1, (21, 0.04f))),
+      (1002L, vec(2, (3, 0.2f)))).toDF("vec_id", "embedding")
+    val pred = col("label") === 0 && col("vec_id") % 3 =!= 0
+    // one cell of the matrix; `pq` = the rerank budget of the PQ scorer
+    def serve(t: String, batchShape: Boolean, pq: Option[Int],
+        where: Boolean, version: Option[Int]): Seq[String] = {
+      val p = if (where) Some(pred) else None
+      val df = (batchShape, pq, version) match {
+        case (false, None, None) => p.fold(VectorIndex.search(spark, t,
+          "embedding", probe, 5, 2))(VectorIndex.searchWhere(spark, t,
+          "embedding", probe, 5, 2, _))
+        case (false, None, Some(v)) => p.fold(VectorIndex.searchAsOf(spark,
+          t, "embedding", probe, 5, v, 2))(VectorIndex.searchAsOfWhere(
+          spark, t, "embedding", probe, 5, v, 2, _))
+        case (false, Some(r), None) => p.fold(VectorIndex.searchPq(spark, t,
+          "embedding", probe, 5, 2, r))(VectorIndex.searchPqWhere(spark, t,
+          "embedding", probe, 5, 2, r, _))
+        case (false, Some(r), Some(v)) => VectorIndex.searchAsOfPq(spark, t,
+          "embedding", probe, 5, v, 2, r, p)
+        case (true, None, None) => p.fold(VectorIndex.knnJoin(spark, t,
+          "embedding", batch, 4))(VectorIndex.knnJoinWhere(spark, t,
+          "embedding", batch, 4, _))
+        case (true, None, Some(v)) => VectorIndex.knnJoinAsOf(spark, t,
+          "embedding", batch, 4, v, p)
+        case (true, Some(r), None) => p.fold(VectorIndex.knnJoinPq(spark, t,
+          "embedding", batch, 4, r))(VectorIndex.knnJoinPqWhere(spark, t,
+          "embedding", batch, 4, r, _))
+        case (true, Some(r), Some(v)) => VectorIndex.knnJoinAsOfPq(spark, t,
+          "embedding", batch, 4, v, r, p)
+      }
+      df.collect().map(_.toSeq.mkString("|")).toSeq
+    }
+    val cells = for {
+      batchShape <- Seq(false, true)
+      pq <- Seq(false, true)
+      where <- Seq(false, true)
+    } yield (batchShape, pq, where)
+    def label(c: (Boolean, Boolean, Boolean)): String =
+      Seq(if (c._1) "batch" else "probe", if (c._2) "pq" else "exact",
+        if (c._3) "where" else "all").mkString("/")
+    // rerank 8 cuts below the probed lists' sizes; 100 covers the table
+    def rerankOf(pq: Boolean): Option[Int] = if (pq) Some(8) else None
+    val prevPolicy = spark.conf.getOption("spark.graft.index.onStale")
+    spark.conf.set("spark.graft.index.onStale", "retrain")
+    try Seq(("vixmx", "LISTS 4 SAMPLE 24"), ("vixmxp", "LISTS 2 BY PARTITION"))
+      .foreach { case (tag, opts) =>
+        val cat = freshCatalog(tag)
+        val t = s"$cat.ns.emb"
+        spark.sql(s"CREATE TABLE $t (vec_id BIGINT, label INT, " +
+          "embedding ARRAY<FLOAT>)" +
+          (if (opts.contains("PARTITION")) " PARTITIONED BY (label)" else ""))
+        blobRows(0 until 24).coalesce(1).writeTo(t).append()
+        blobRows(24 until 48).coalesce(1).writeTo(t).append()
+        val ddl = s"CREATE VECTOR INDEX ON $t (embedding) ANCHORS (vec_id) $opts"
+        spark.sql(ddl)
+        val dir = spark.table(t).queryExecution.analyzed.collectFirst {
+          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+            if r.table.isInstanceOf[ManifestTable] =>
+            r.table.asInstanceOf[ManifestTable].dir
+        }.get
+        val v = Manifest.snapshotVersions(dir).max
+        cells.foreach { c =>
+          val (b, pq, w) = c
+          val live = serve(t, b, rerankOf(pq), w, None)
+          assert(live.nonEmpty, s"$tag ${label(c)}: empty serve")
+          assert(serve(t, b, rerankOf(pq), w, Some(v)) == live,
+            s"$tag ${label(c)}: AS OF the current version != live")
+          if (pq) assert(serve(t, b, Some(100), w, None) ==
+              serve(t, b, None, w, None),
+            s"$tag ${label(c)}: PQ with rerank ≥ rows != exact")
+        }
+        // an append stales the index: the in-query retrain (live, and AS
+        // OF the stale version) must answer what a rebuild answers
+        blobRows(48 until 56).coalesce(1).writeTo(t).append()
+        val v2 = Manifest.snapshotVersions(dir).max
+        val stale = cells.map(c => serve(t, c._1, rerankOf(c._2), c._3, None))
+        val staleAsOf =
+          cells.map(c => serve(t, c._1, rerankOf(c._2), c._3, Some(v2)))
+        spark.sql(s"DROP VECTOR INDEX ON $t (embedding)")
+        spark.sql(ddl)
+        cells.zip(stale.zip(staleAsOf)).foreach { case (c, (st, sa)) =>
+          val rebuilt = serve(t, c._1, rerankOf(c._2), c._3, None)
+          assert(st == rebuilt,
+            s"$tag ${label(c)}: stale retrain != rebuild: $st vs $rebuilt")
+          assert(sa == rebuilt,
+            s"$tag ${label(c)}: stale AS OF retrain != rebuild: $sa vs $rebuilt")
+        }
+      }
+    finally prevPolicy match {
+      case Some(x) => spark.conf.set("spark.graft.index.onStale", x)
+      case None => spark.conf.unset("spark.graft.index.onStale")
+    }
+  }
+
+  test("empty kNN-join results keep the ranked schema (sim DOUBLE)") {
+    val batch = Seq((100L, vec(0, (30, 0.02f)))).toDF("vec_id", "embedding")
+    val cat = freshCatalog("vixes")
+    val t = stage(cat)
+    spark.sql(s"CREATE VECTOR INDEX ON $t (embedding) ANCHORS (vec_id)")
+    val v = Manifest.snapshotVersions(spark.table(t).queryExecution.analyzed
+      .collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+          if r.table.isInstanceOf[ManifestTable] =>
+          r.table.asInstanceOf[ManifestTable].dir
+      }.get).max
+    def sameSchema(empty: org.apache.spark.sql.DataFrame,
+        ranked: org.apache.spark.sql.DataFrame): Unit = {
+      assert(empty.count() == 0L && ranked.count() > 0L)
+      assert(empty.schema == ranked.schema,
+        s"${empty.schema.simpleString} vs ${ranked.schema.simpleString}")
+    }
+    // a predicate matching no row empties the PQ survivors
+    sameSchema(
+      VectorIndex.knnJoinPqWhere(spark, t, "embedding", batch, 3, 8,
+        col("vec_id") < 0),
+      VectorIndex.knnJoinPqWhere(spark, t, "embedding", batch, 3, 8,
+        col("vec_id") >= 0))
+    sameSchema(
+      VectorIndex.knnJoinAsOfPq(spark, t, "embedding", batch, 3, v, 8,
+        Some(col("vec_id") < 0)),
+      VectorIndex.knnJoinAsOfPq(spark, t, "embedding", batch, 3, v, 8,
+        Some(col("vec_id") >= 0)))
+    // BY PARTITION: a pin on an absent partition value has no geometry
+    val cat2 = freshCatalog("vixes2")
+    val t2 = s"$cat2.ns.emb"
+    spark.sql(s"CREATE TABLE $t2 (vec_id BIGINT, label INT, " +
+      "embedding ARRAY<FLOAT>) PARTITIONED BY (label)")
+    blobRows(0 until 16).coalesce(1).writeTo(t2).append()
+    spark.sql(s"CREATE VECTOR INDEX ON $t2 (embedding) ANCHORS (vec_id) " +
+      "BY PARTITION")
+    sameSchema(
+      VectorIndex.knnJoinWhere(spark, t2, "embedding", batch, 3,
+        col("label") === 7),
+      VectorIndex.knnJoinWhere(spark, t2, "embedding", batch, 3,
+        col("label") === 0))
+  }
 }
