@@ -45,26 +45,61 @@ object Tables {
     * the [[apply]] memo's class applied to the text/vector index
     * sidecars: every `spark.read.parquet` of a posts/stats/cents/codes
     * dir paid a footer schema-inference job PER QUERY INVOCATION). The
-    * key carries a per-file content token (name:length:mtime), so an
-    * in-place REFRESH that rewrites a sidecar re-reads instead of
-    * serving a stale plan; the listing itself is driver-side metadata
-    * the parquet reader would redo anyway. Lazy plan only — every
-    * action still scans the files. */
+    * entry carries the directory's [[contentToken]], so an in-place
+    * rewrite of a sidecar re-reads instead of serving a stale plan, and
+    * REPLACES the superseded entry (one entry per (session, path)). Lazy
+    * plan only — every action still scans the files. */
   def sidecar(spark: SparkSession, path: String): DataFrame = {
-    val token = {
-      val f = new java.io.File(path)
-      val kids = f.listFiles()
-      if (kids == null) ""
-      else kids.sortBy(_.getName)
-        .map(k => s"${k.getName}:${k.length}:${k.lastModified}")
-        .mkString(",")
-    }
-    cache.computeIfAbsent((spark, s"sidecar|$path|$token"),
-      _ => spark.read.parquet(path))
+    val token = contentToken(path).getOrElse("")
+    sidecars.compute((spark, path), (_, old) =>
+      if (old != null && old._1 == token) old
+      else (token, spark.read.parquet(path)))._2
   }
 
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+
+  private val sidecars = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String), (String, DataFrame)]()
+
+  /** Drops every [[sidecar]] entry under `dir` — an index directory a
+    * REFRESH just superseded — so the memo holds the live indexes, not
+    * every index the JVM ever refreshed. */
+  def forgetSidecars(dir: String): Unit = {
+    val prefix = java.nio.file.Paths.get(dir).toString + "/"
+    sidecars.keySet.removeIf(_._2.startsWith(prefix))
+  }
+
+  private[graft] def sidecarMemoSize: Int = sidecars.size
+
+  /** The content token of files or directory trees: a 128-bit digest of
+    * every file's (path, length, mtime), walking directories in name
+    * order. It is driver-side listing only (no Spark job), so memos key
+    * on it to re-read or re-stage when data is rewritten in place. The
+    * contract is (path, length, mtime), not bytes: on a filesystem with
+    * coarse mtime granularity a same-length rewrite within one tick
+    * tokens identically. None when any path does not exist or cannot be
+    * listed (a remote URI, a vanished dir) — each caller chooses its own
+    * fallback. */
+  def contentToken(paths: String*): Option[String] = {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.BasicFileAttributes
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def visit(p: java.nio.file.Path): Boolean =
+      scala.util.Try(Files.readAttributes(p, classOf[BasicFileAttributes]))
+        .toOption.exists { a =>
+          if (a.isDirectory)
+            Option(p.toFile.list()).exists(_.sorted.forall(k => visit(p.resolve(k))))
+          else {
+            md.update(s"$p:${a.size}:${a.lastModifiedTime.toMillis}\n"
+              .getBytes("UTF-8"))
+            true
+          }
+        }
+    if (paths.forall(p => visit(Paths.get(p))))
+      Some(md.digest().map("%02x".format(_)).mkString)
+    else None
+  }
 
   /** Row count of a testdata table from PARQUET FOOTER METADATA — no
     * Spark job (r17, guide §6; VERDICT r16 #5: the clustering/graph
@@ -72,17 +107,15 @@ object Tables {
     * size k / the IVF list count — at 100 TB that is a table scan to
     * compute one scalar the footers already hold). Exact by the parquet
     * spec (every footer records its file's row count). Memoized per
-    * (path, content token) like [[sidecar]]. */
+    * (path, [[contentToken]]). */
   def rowCount(dir: String, name: String): Long = {
     val root = new java.io.File(s"$dir/$name.parquet")
-    val files =
-      if (root.isDirectory)
-        root.listFiles().filter(f => f.getName.endsWith(".parquet"))
-          .sortBy(_.getName).toSeq
-      else Seq(root)
-    val token = files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString(",")
+    val token = contentToken(root.getPath).getOrElse("")
     countCache.computeIfAbsent(s"${root.getPath}|$token", _ => {
+      val files =
+        if (root.isDirectory)
+          root.listFiles().filter(f => f.getName.endsWith(".parquet")).toSeq
+        else Seq(root)
       val conf = new org.apache.hadoop.conf.Configuration()
       files.map { f =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(

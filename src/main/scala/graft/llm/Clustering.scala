@@ -430,17 +430,14 @@ object Clustering extends QueryModule {
     // re-ingest no production pipeline pays; the file-set key re-stages
     // when the data actually changes.
     if (df.inputFiles.length * 4 <= cores) {
-      // the memo key carries a CONTENT token per file (name:length:mtime
-      // — the Text.tableVersionToken pattern, r16 advice): an in-place
-      // rewrite of a same-named file re-stages instead of serving the
-      // JVM-lifetime-stale checkpoint.
+      // the memo key carries the input files' content token: an
+      // in-place rewrite of a same-named file re-stages instead of
+      // serving the JVM-lifetime-stale checkpoint.
+      val files = df.inputFiles.sorted
       val key = df.sparkSession.sparkContext.applicationId + "|" +
-        df.inputFiles.sorted.map { u =>
-          val p = scala.util.Try(java.net.URI.create(u).getPath)
-            .getOrElse(u)
-          val f = new java.io.File(p)
-          s"$u:${f.length}:${f.lastModified}"
-        }.mkString(",")
+        files.mkString(",") + "|" + graft.Tables.contentToken(files.map(u =>
+          scala.util.Try(java.net.URI.create(u).getPath).getOrElse(u)): _*)
+          .getOrElse("")
       fannedOut.computeIfAbsent(key,
         _ => df.repartition(cores).localCheckpoint())
     } else df

@@ -293,22 +293,10 @@ object Text extends QueryModule {
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
        org.apache.spark.sql.DataFrame)]()
 
-  /** Digest of a table directory's (name, length, mtime) triples — the
-    * cheap "did the data change" version token for per-JVM model memos. */
-  private def tableVersionToken(d: String, table: String): String = {
-    val f = new java.io.File(s"$d/$table.parquet")
-    val entries =
-      if (f.isDirectory)
-        f.listFiles().sortBy(_.getName)
-          .map(x => s"${x.getName}:${x.length}:${x.lastModified}")
-      else Array(s"${f.getName}:${f.length}:${f.lastModified}")
-    // 128-bit digest of the full listing, not a 32-bit hash (r16 advice):
-    // a hashCode collision would silently serve a stale model for the
-    // JVM's lifetime.
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(entries.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-  }
+  /** The table's [[graft.Tables.contentToken]] — the cheap "did the data
+    * change" version token for per-JVM model memos. */
+  private def tableVersionToken(d: String, table: String): String =
+    graft.Tables.contentToken(s"$d/$table.parquet").getOrElse("")
 
   private def nbModel(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,

@@ -434,13 +434,9 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     * another connector (which may have its own row-level DELETE path) or
     * does not resolve at all (the delegate produces the proper error). */
   private def resolvesToManifestTable(target: String): Boolean =
-    try {
-      org.apache.spark.sql.SparkSession.active.table(target)
-        .queryExecution.analyzed.collectFirst {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-            if r.table.isInstanceOf[graft.sources.ManifestTable] => true
-        }.getOrElse(false)
-    } catch { case _: Exception => false }
+    try graft.sources.ManifestTable
+      .find(org.apache.spark.sql.SparkSession.active, target).isDefined
+    catch { case _: Exception => false }
 
   /** A `(VECTOR SEARCH …)` group INSIDE a larger statement — the
     * composable-relation form. The rewrite finds the balanced
@@ -1935,13 +1931,10 @@ private[plans] object VectorSearchDf {
   * error instead of a silent wrong lowering. */
 private[plans] object ManifestTarget {
   def of(spark: SparkSession, target: String, op: String): graft.sources.ManifestTable =
-    spark.table(target).queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-        if r.table.isInstanceOf[graft.sources.ManifestTable] =>
-        r.table.asInstanceOf[graft.sources.ManifestTable]
-    }.getOrElse(throw new UnsupportedOperationException(
-      s"$op: $target is not a graft manifest table — this engine lowers " +
-        s"$op only for its own catalog tables"))
+    graft.sources.ManifestTable.find(spark, target).getOrElse(
+      throw new UnsupportedOperationException(
+        s"$op: $target is not a graft manifest table — this engine lowers " +
+          s"$op only for its own catalog tables"))
 }
 
 /** The name-addressed VACUUM: resolve the catalog table to its manifest

@@ -65,10 +65,7 @@ object MaterializedView {
   /** Every manifest-table relation of the plan, in plan order (a dir may
     * repeat — self-joins — which the incremental path must notice). */
   private def manifestSources(plan: LogicalPlan): Seq[(DataSourceV2Relation, ManifestTable)] =
-    plan.collect {
-      case r: DataSourceV2Relation if r.table.isInstanceOf[ManifestTable] =>
-        (r, r.table.asInstanceOf[ManifestTable])
-    }
+    ManifestTable.relations(plan)
 
   /** The ONE manifest-table relation of a plan, when the plan reads exactly
     * one (the legacy-props contract). */
@@ -121,9 +118,7 @@ object MaterializedView {
     // pin the ORIGINAL plan's relations only, matched by object identity —
     // a CDF splice's replacement subtree scans the SAME directory, and a
     // directory-keyed match would re-splice inside it forever
-    val targets = plan.collect {
-      case r: DataSourceV2Relation if r.table.isInstanceOf[ManifestTable] => r
-    }
+    val targets = ManifestTable.relations(plan).map(_._1)
     val surgered = plan.transform {
       case r: DataSourceV2Relation if targets.exists(_ eq r) &&
           pins.contains(r.table.asInstanceOf[ManifestTable].dir.toAbsolutePath.toString) =>

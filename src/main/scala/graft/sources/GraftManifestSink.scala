@@ -1781,6 +1781,29 @@ private[sources] object DeletionVector {
 }
 
 private[graft] object ManifestTable {
+  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+  import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+
+  /** Every relation of `plan` that reads one of this engine's manifest
+    * tables, in plan order (a table repeats under a self-join). */
+  def relations(plan: LogicalPlan): Seq[(DataSourceV2Relation, ManifestTable)] =
+    plan.collect {
+      case r: DataSourceV2Relation if r.table.isInstanceOf[ManifestTable] =>
+        (r, r.table.asInstanceOf[ManifestTable])
+    }
+
+  /** The manifest table the name `table` analyzes to, if it is one. */
+  def find(spark: org.apache.spark.sql.SparkSession,
+      table: String): Option[ManifestTable] =
+    relations(spark.table(table).queryExecution.analyzed).headOption.map(_._2)
+
+  /** The manifest table the name `table` analyzes to, or the refusal
+    * every name-addressed operation `op` shares. */
+  def resolve(spark: org.apache.spark.sql.SparkSession, table: String,
+      op: String): ManifestTable =
+    find(spark, table).getOrElse(throw new UnsupportedOperationException(
+      s"$op: $table is not a graft manifest table"))
+
   /** AUTOMATIC RETRY on optimistic conflict (the Delta/Iceberg commit
     * loop): a row-level operation that loses the publish race recomputes
     * against the FRESH snapshot and tries again — `body` must be the

@@ -1052,6 +1052,7 @@ object VectorIndex {
         (key -> renderProp(idxName, idCol, digestOf(m), p.lists, p.sample,
           p.coarse, dvDigest = dvDigestOf(m)))))
     }
+    graft.Tables.forgetSidecars(oldDir.toString)
     (newFiles.length.toLong, dead.nonEmpty)
   }
 
@@ -1163,6 +1164,7 @@ object VectorIndex {
         (key -> renderProp(idxName, p.idCol, digestOf(m), p.lists, p.sample,
           p.coarse, p.partCol, dvDigest = dvDigestOf(m)))))
     }
+    graft.Tables.forgetSidecars(oldDir.toString)
     (newFiles.length.toLong, dead.nonEmpty)
   }
 
@@ -1227,7 +1229,7 @@ object VectorIndex {
     import graft.llm.{Clustering, Dedup, Similarity}
     import graft.llm.PortableHash.dotFixed
     val op = "SEMANTIC DEDUP INCREMENTAL"
-    val mt = resolveTable(spark, table, op)
+    val mt = ManifestTable.resolve(spark, table, op)
     val m = Manifest.read(mt.dir).getOrElse(
       throw new IllegalStateException(s"$op: no manifest at ${mt.dir}"))
     val prop = m.props.getOrElse(PropPrefix + colName.toLowerCase,
@@ -1456,7 +1458,7 @@ object VectorIndex {
     import graft.llm.{Clustering, Dedup, Similarity}
     import graft.llm.PortableHash.dotFixed
     val op = "SEMANTIC DEDUP INCREMENTAL AS OF"
-    val mt = resolveTable(spark, table, op)
+    val mt = ManifestTable.resolve(spark, table, op)
     val m = Manifest.readSnapshot(mt.dir, version).getOrElse(
       throw new IllegalArgumentException(
         s"$op: snapshot $version expired or never existed at ${mt.dir}"))
@@ -1824,7 +1826,7 @@ object VectorIndex {
       case (_: Batch, None) => s"KNN JOIN$pqTag"
       case (_: Batch, Some(_)) => s"VECTOR KNN JOIN$pqTag AS OF"
     }
-    val mt = resolveTable(spark, table, op)
+    val mt = ManifestTable.resolve(spark, table, op)
     val m = version match {
       case None => Manifest.read(mt.dir).getOrElse(
         throw new IllegalStateException(s"$op: no manifest at ${mt.dir}"))
@@ -2171,18 +2173,6 @@ object VectorIndex {
       lit(0).as("list_id"), lit(0.0).as("sim"))
   }
 
-  /** The named table must analyze to this engine's [[ManifestTable]] —
-    * shared by every index-tier query surface. */
-  private def resolveTable(spark: SparkSession, table: String,
-      op: String): ManifestTable =
-    spark.table(table).queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-        if r.table.isInstanceOf[ManifestTable] =>
-        r.table.asInstanceOf[ManifestTable]
-    }.getOrElse(throw new UnsupportedOperationException(
-      s"$op: $table is not a graft manifest table"))
-
-
   /** The stale-replay retrain for BY PARTITION indexes as ONE part-keyed
     * dataflow (r14) — every affected partition's ranked, SAMPLE-aware
     * sub-geometry ([[graft.llm.Clustering.kmeansAssignRankedByPart]])
@@ -2202,7 +2192,7 @@ object VectorIndex {
   private def rowsAndCentsByPart(spark: SparkSession, table: String,
       colName: String, labelCol: String, op: String)
       : Option[(DataFrame, DataFrame, Int)] = {
-    val mt = resolveTable(spark, table, op)
+    val mt = ManifestTable.resolve(spark, table, op)
     val m = Manifest.read(mt.dir).getOrElse(
       throw new IllegalStateException(s"$op: no manifest at ${mt.dir}"))
     val prop = m.props.getOrElse(PropPrefix + colName.toLowerCase,
@@ -2240,7 +2230,7 @@ object VectorIndex {
   private def rowsAndCents(spark: SparkSession, table: String,
       colName: String, labelCol: String, op: String)
       : (DataFrame, DataFrame, Int) = {
-    val mt = resolveTable(spark, table, op)
+    val mt = ManifestTable.resolve(spark, table, op)
     val m = Manifest.read(mt.dir).getOrElse(
       throw new IllegalStateException(s"$op: no manifest at ${mt.dir}"))
     val prop = m.props.getOrElse(PropPrefix + colName.toLowerCase,

@@ -75,6 +75,11 @@ class JobCountSpec extends SparkSuite {
     ("q_vector_search_partitioned_pq", 10, 18),
     ("q_vector_knn_join_asof_partitioned_pq", 13, 21),
     ("q_vector_search_sql", 8, 10),
+    // staged-fixture queries: the staging memo's content token is a
+    // driver-side listing, so a staged base adds no job once staged
+    ("q_meta_files", 2, 4),
+    ("q_text_bm25_asof", 4, 8),
+    ("q_join_dpp", 3, 5),
   )
 
   private def defaultConditions: Boolean =
