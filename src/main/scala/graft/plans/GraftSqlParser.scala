@@ -1692,6 +1692,7 @@ private[plans] object Bm25SearchDf {
       where: Option[String],
       version: Option[Int] = None): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
+    import graft.sources.TextIndex
     val terms = MergeParse.splitTop(termsList, ',').map(_.trim).map { t =>
       if (t.length >= 2 && t.head == '\'' && t.last == '\'')
         t.substring(1, t.length - 1).replace("''", "'")
@@ -1699,30 +1700,13 @@ private[plans] object Bm25SearchDf {
         s"BM25 SEARCH: TERMS component $t is not a single-quoted string " +
           "literal")
     }
-    version.foreach { v =>
-      // WHERE composes with time travel (r15): the scope's statistics
-      // (df/N/avgdl) come from the SNAPSHOT's scoped sub-corpus, zone
-      // maps proven against the snapshot manifest's own entries
-      val asof = where match {
-        case Some(w) => graft.sources.TextIndex.bm25TopKScopedAsOf(
-          spark, target, colName, idCol, terms, topK, expr(w), v)
-        case None => graft.sources.TextIndex
-          .bm25TopKAsOf(spark, target, colName, idCol, terms, topK, v)
-      }
-      return asof
-        .select(col(idCol).cast(org.apache.spark.sql.types.LongType),
-          col("n_terms").cast(org.apache.spark.sql.types.LongType),
-          col("score").cast(org.apache.spark.sql.types.DoubleType))
-    }
-    val res = where match {
-      case Some(w) => graft.sources.TextIndex.bm25TopKScoped(spark, target,
-        colName, idCol, terms, topK, expr(w))
-      case None => graft.sources.TextIndex.bm25TopK(spark, target, colName,
-        idCol, terms, topK)
-    }
-    res.select(col(idCol).cast(org.apache.spark.sql.types.LongType),
-      col("n_terms").cast(org.apache.spark.sql.types.LongType),
-      col("score").cast(org.apache.spark.sql.types.DoubleType))
+    // WHERE composes with time travel (r15): the scope's statistics
+    // (df/N/avgdl) come from the SNAPSHOT's scoped sub-corpus
+    TextIndex.serve(spark, target, colName,
+        TextIndex.TopK(idCol, terms, topK, where.map(expr)), version)
+      .select(col(idCol).cast(org.apache.spark.sql.types.LongType),
+        col("n_terms").cast(org.apache.spark.sql.types.LongType),
+        col("score").cast(org.apache.spark.sql.types.DoubleType))
   }
 }
 
@@ -1763,18 +1747,14 @@ private[plans] object Bm25JoinDf {
       idCol: String, batchSql: String, topK: Int,
       version: Option[Int] = None): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
-    val batch = spark.sql(batchSql)
-    val res = version match {
-      case Some(v) => graft.sources.TextIndex.bm25JoinAsOf(spark, target,
-        colName, idCol, batch, idCol, colName, topK, v)
-      case None => graft.sources.TextIndex.bm25Join(spark, target,
-        colName, idCol, batch, idCol, colName, topK)
-    }
-    res.select(col("qid").cast(org.apache.spark.sql.types.LongType),
-      col("rank").cast(org.apache.spark.sql.types.IntegerType),
-      col(idCol).cast(org.apache.spark.sql.types.LongType),
-      col("n_terms").cast(org.apache.spark.sql.types.LongType),
-      col("score").cast(org.apache.spark.sql.types.DoubleType))
+    import graft.sources.TextIndex
+    TextIndex.serve(spark, target, colName, TextIndex.Join(idCol,
+        spark.sql(batchSql), idCol, colName, topK), version)
+      .select(col("qid").cast(org.apache.spark.sql.types.LongType),
+        col("rank").cast(org.apache.spark.sql.types.IntegerType),
+        col(idCol).cast(org.apache.spark.sql.types.LongType),
+        col("n_terms").cast(org.apache.spark.sql.types.LongType),
+        col("score").cast(org.apache.spark.sql.types.DoubleType))
   }
 }
 
@@ -1878,17 +1858,14 @@ private[plans] object MinhashDedupDf {
       idCol: String, batchSql: String, where: Option[String],
       version: Option[Int] = None): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
+    import graft.sources.TextIndex
     val batch0 = spark.sql(batchSql)
     val batch = where.fold(batch0)(w => batch0.where(expr(w)))
-    val res = version match {
-      case Some(v) => graft.sources.TextIndex
-        .dedupIncrementalAsOf(spark, target, colName, idCol, batch, v)
-      case None => graft.sources.TextIndex
-        .dedupIncremental(spark, target, colName, idCol, batch)
-    }
     // the serve path normalizes the id to `doc_id` internally —
     // surface it under the statement's declared ID column name
-    res.select(col("doc_id").cast(org.apache.spark.sql.types.LongType)
+    TextIndex.serve(spark, target, colName, TextIndex.MinHash(idCol, batch),
+        version)
+      .select(col("doc_id").cast(org.apache.spark.sql.types.LongType)
           .as(idCol),
         col("dup_of").cast(org.apache.spark.sql.types.LongType),
         col("is_dup").cast(org.apache.spark.sql.types.BooleanType))

@@ -1804,6 +1804,41 @@ private[graft] object ManifestTable {
     find(spark, table).getOrElse(throw new UnsupportedOperationException(
       s"$op: $table is not a graft manifest table"))
 
+  /** A scan of the named files of the table at `dir` — at `version`,
+    * pinned to that snapshot's rows and DV state. */
+  def scanFiles(spark: org.apache.spark.sql.SparkSession, dir: Path,
+      names: Seq[String],
+      version: Option[Int] = None): org.apache.spark.sql.DataFrame = {
+    val r = spark.read.format("graft.sources.GraftManifestSink")
+      .option("path", dir.toString)
+      .option("files", names.mkString(","))
+    version.fold(r)(v => r.option("snapshot", v.toString)).load()
+  }
+
+  private def sha256(s: String): String = {
+    val d = java.security.MessageDigest.getInstance("SHA-256")
+    d.digest(s.getBytes(UTF_8)).map("%02x".format(_)).mkString
+  }
+
+  /** The digest an index prop records for the file set it covers: SHA-256
+    * over the sorted live file names. Deliberately BLIND to deletion
+    * vectors: a DV'd row never surfaces from a fetch (the reader masks
+    * it), so pruning through an index stays admissible and serving
+    * freshness never flips on DV churn. */
+  def digestOf(m: Manifest): String =
+    sha256(m.entries.filter(_.rows > 0).map(_.name).sorted.mkString("\n"))
+
+  /** DV-identity digest over the same file set (`name:dvName` pairs) —
+    * what an index REFRESH compares to see DV-ONLY churn: a row-level
+    * DELETE on a merge-on-read table changes no file names, but the
+    * per-file rows an index stores (BM25 statistics, signatures,
+    * postings) still count the dead rows until the touched files
+    * re-derive. */
+  def dvDigestOf(m: Manifest): String =
+    sha256(m.entries.filter(_.rows > 0)
+      .map(e => e.name + ":" + e.dv.map(_._1).getOrElse("-"))
+      .sorted.mkString("\n"))
+
   /** AUTOMATIC RETRY on optimistic conflict (the Delta/Iceberg commit
     * loop): a row-level operation that loses the publish race recomputes
     * against the FRESH snapshot and tries again — `body` must be the

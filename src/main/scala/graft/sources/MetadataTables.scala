@@ -190,27 +190,27 @@ object MetadataTables {
     case "indexes" =>
       val m = Manifest.read(dir).getOrElse(
         throw new IllegalStateException(s"metadata table: no manifest at $dir"))
-      val curDigest = TextIndex.digestOf(m) // same digest contract both kinds
-      val curDvDigest = TextIndex.dvDigestOf(m)
+      val curDigest = ManifestTable.digestOf(m) // same contract both kinds
+      val curDvDigest = ManifestTable.dvDigestOf(m)
       m.props.toSeq.sortBy(_._1).collect {
         case (k, v) if k.startsWith(TextIndex.PropPrefix) =>
-          val fields = v.split(";", -1)
+          val p = TextIndex.parseProp(k, v)
           // `fresh` is serving admissibility (names-only digest — DVs
           // never flip it); DV-only drift (ranking statistics counting
           // dead rows until REFRESH re-derives the touched files)
           // surfaces in details so operators see the catch-up debt
-          val drifted = fields.length > 2 && fields(2) != curDvDigest
+          val drifted = p.dvDigest.exists(_ != curDvDigest)
           // a BY PARTITION index reports its routing column like the
           // vector tier's `by=` (r16)
-          val details = (TextIndex.propPartCol(v).map(pc => s"by=$pc") ++
+          val details = (p.partCol.map(pc => s"by=$pc") ++
             (if (drifted) Some("dv_drift=true") else None)).mkString(" ")
           Array[Any](UTF8String.fromString("text"),
             UTF8String.fromString(k.stripPrefix(TextIndex.PropPrefix)),
-            UTF8String.fromString(fields(0)), fields(1) == curDigest,
+            UTF8String.fromString(p.idxName), p.digest == curDigest,
             if (details.isEmpty) null
             else UTF8String.fromString(details)) +:
-            textPartRows(dir, m, fields(1) == curDigest, drifted,
-              k.stripPrefix(TextIndex.PropPrefix), fields(0))
+            textPartRows(dir, m, p.digest == curDigest, drifted,
+              k.stripPrefix(TextIndex.PropPrefix), p.idxName)
         case (k, v) if k.startsWith(VectorIndex.PropPrefix) =>
           val p = VectorIndex.parseProp(v)
           val pq = java.nio.file.Files.exists(

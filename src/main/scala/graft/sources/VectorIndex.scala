@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType}
 
+import ManifestTable.{digestOf, dvDigestOf, scanFiles}
+
 /** FILE-LEVEL IVF VECTOR INDEX over a managed table's `array<float>`
   * column — ANN with file skipping, the embedding twin of [[TextIndex]]:
   * the corpus is k-means-clustered once at build time, and a probe search
@@ -220,22 +222,6 @@ object VectorIndex {
         "spark.graft.index.onStale=fail — run REFRESH VECTOR INDEX (or " +
         "CREATE VECTOR INDEX to retrain) first")
 
-  private def sha256(s: String): String = {
-    val d = java.security.MessageDigest.getInstance("SHA-256")
-    d.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-  private def digestOf(m: Manifest): String =
-    sha256(m.entries.filter(_.rows > 0).map(_.name).sorted.mkString("\n"))
-
-  /** DV-identity digest — the [[TextIndex.dvDigestOf]] contract shared
-    * verbatim: serving freshness stays names-only (a DV'd row never
-    * surfaces from a fetch, so pruning is always admissible), but a
-    * dv-digest divergence tells [[refresh]] that posting/code/band rows
-    * still carry dead vec_ids (wasting PQ rerank budget and candidate
-    * fetches) until the touched files re-derive against the stored
-    * geometry. */
-  private def dvDigestOf(m: Manifest): String = TextIndex.dvDigestOf(m)
-
   /** The `(file, dv)` coverage sidecar — same two jobs as the text
     * tier's: drift attribution when the dv digest diverges, and coverage
     * for files whose rows are all deletion-vectored (no posting survives
@@ -273,16 +259,6 @@ object VectorIndex {
         .filter(e => indexed(e.name) && e.dv.isDefined)
         .map(_.name).toSet)
     }
-  }
-
-  /** A scan of the named files — at `version`, pinned to that snapshot's
-    * rows and DV state. */
-  private def scanFiles(spark: SparkSession, dir: Path, names: Seq[String],
-      version: Option[Int] = None): DataFrame = {
-    val r = spark.read.format("graft.sources.GraftManifestSink")
-      .option("path", dir.toString)
-      .option("files", names.mkString(","))
-    version.fold(r)(v => r.option("snapshot", v.toString)).load()
   }
 
   private def checkCols(m: Manifest, colName: String, idCol: String): Unit = {

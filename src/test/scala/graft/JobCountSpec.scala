@@ -80,6 +80,14 @@ class JobCountSpec extends SparkSuite {
     ("q_meta_files", 2, 4),
     ("q_text_bm25_asof", 4, 8),
     ("q_join_dpp", 3, 5),
+    // the text serve pipeline: membership, phrase, BM25 top-k (global,
+    // scoped, SQL) and the BM25 batch join, live and VERSION AS OF
+    ("q_text_bm25_indexed", 6, 12),
+    ("q_text_bm25_scoped", 3, 5),
+    ("q_text_bm25_join", 8, 16),
+    ("q_text_bm25_sql", 4, 7),
+    ("q_text_phrase_search_asof", 3, 6),
+    ("q_text_search_partitioned", 3, 7),
   )
 
   private def defaultConditions: Boolean =

@@ -1254,4 +1254,112 @@ class TextIndexSpec extends SparkSuite {
     assert(asofB.toSeq == res.sortBy(r => (r._1, r._2)).toSeq,
       "partitioned AS OF == the pre-append serve, scores bit-for-bit")
   }
+
+  test("bm25TopK on an empty un-indexed table returns no rows") {
+    val (cat, _) = freshCatalog("tixEmpty")
+    val t = s"$cat.ns.none"
+    spark.sql(s"CREATE TABLE $t (id BIGINT, text STRING)")
+    assert(TextIndex.bm25TopK(spark, t, "text", "id", Seq("x"), 5)
+      .count() == 0L)
+  }
+
+  test("bm25TopK hit and miss results share the ranked schema " +
+      "(STRING id)") {
+    val (cat, _) = freshCatalog("tixSid")
+    val t = s"$cat.ns.sdocs"
+    spark.sql(s"CREATE TABLE $t (id STRING, text STRING)")
+    Seq(("a", "alpha beta"), ("b", "beta gamma")).toDF("id", "text")
+      .coalesce(1).writeTo(t).append()
+    for (indexed <- Seq(false, true)) {
+      if (indexed) spark.sql(s"CREATE TEXT INDEX ON $t (text)")
+      val hit = TextIndex.bm25TopK(spark, t, "text", "id", Seq("beta"), 5)
+      val miss = TextIndex.bm25TopK(spark, t, "text", "id", Seq("zeta"), 5)
+      assert(hit.count() == 2L && miss.count() == 0L)
+      assert(miss.schema == hit.schema, s"indexed=$indexed: " +
+        s"${miss.schema.simpleString} vs ${hit.schema.simpleString}")
+    }
+  }
+
+  test("text serve equivalence matrix: AS OF = live, stale recompute = " +
+      "rebuild, partition pin = the unpinned scope") {
+    val (cat, _) = freshCatalog("tixMx")
+    val t = s"$cat.ns.mdocs"
+    // `text` carries a global index, `body` (the same strings) a BY
+    // PARTITION one
+    spark.sql(s"CREATE TABLE $t (id BIGINT, src STRING, text STRING, " +
+      "body STRING) PARTITIONED BY (src)")
+    def put(rows: (Long, String, String)*): Unit =
+      rows.map { case (i, p, x) => (i, p, x, x) }
+        .toDF("id", "src", "text", "body").coalesce(1).writeTo(t).append()
+    put((1L, "a", "x x y"), (2L, "a", "the quick fox x"),
+      (3L, "a", "quick brown fox jumps"))
+    put((11L, "b", "x q"), (12L, "b", "the quick fox jumps"),
+      (13L, "b", "q r s"))
+    val dir = dirOf(t)
+    def index(): Unit = {
+      spark.sql(s"CREATE TEXT INDEX ON $t (text)")
+      spark.sql(s"CREATE TEXT INDEX ON $t (body) BY PARTITION")
+    }
+    index()
+    val batch = Seq((101L, "a", "quick brown fox jumps"),
+        (102L, "b", "the quick fox jumps"), (103L, "b", "x y z"))
+      .map { case (i, p, x) => (i, p, x, x) }
+      .toDF("id", "src", "text", "body")
+    val terms = Seq("x", "quick", "q")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    // one serve per scorer; membership, phrase, BM25 top-k, BM25 join
+    // and MinHash dedup, live or at a version
+    def serves(c: String, v: Option[Int]): Seq[(String, Seq[String])] = Seq(
+      "membership" -> rows(v.fold(TextIndex.search(spark, t, c, "x"))(
+        TextIndex.searchAsOf(spark, t, c, "x", _))),
+      "phrase" -> rows(v.fold(TextIndex.phraseSearch(spark, t, c,
+        "quick fox"))(TextIndex.phraseSearchAsOf(spark, t, c, "quick fox", _))),
+      "bm25" -> rows(v.fold(TextIndex.bm25TopK(spark, t, c, "id", terms, 3))(
+        TextIndex.bm25TopKAsOf(spark, t, c, "id", terms, 3, _))),
+      "bm25 join" -> rows(v.fold(TextIndex.bm25Join(spark, t, c, "id",
+        batch, "id", c, 2))(TextIndex.bm25JoinAsOf(spark, t, c, "id", batch,
+        "id", c, 2, _))),
+      "minhash" -> rows(v.fold(TextIndex.dedupIncremental(spark, t, c, "id",
+        batch))(TextIndex.dedupIncrementalAsOf(spark, t, c, "id", batch, _))))
+    def same(what: String, a: Seq[(String, Seq[String])],
+        b: Seq[(String, Seq[String])]): Unit =
+      a.zip(b).foreach { case ((s, x), (_, y)) =>
+        assert(x == y, s"$what, $s: $x vs $y")
+      }
+    // AS OF shares every stage but the snapshot read with live; the part
+    // keys make the BY PARTITION index the stricter case
+    same("AS OF current = live", serves("body",
+      Some(Manifest.snapshotVersions(dir).max)), serves("body", None))
+    // a partition pin serves the pinned slices' statistics; the global
+    // index serves the same scope from its zone-map-proven files
+    val scope = col("src") === "a"
+    assert(rows(TextIndex.searchWhere(spark, t, "body", "x", scope)) ==
+      rows(TextIndex.searchWhere(spark, t, "text", "x", scope)))
+    val pinned = TextIndex.bm25TopKScoped(spark, t, "body", "id", terms, 3,
+      scope)
+    assert(rows(pinned) ==
+      rows(TextIndex.bm25TopKScoped(spark, t, "text", "id", terms, 3, scope)))
+    // a BY PARTITION join ranks each query within its own slice
+    val joined = TextIndex.bm25Join(spark, t, "body", "id", batch, "id",
+      "body", 2).collect()
+    for ((qid, p, q) <- Seq((101L, "a", "quick brown fox jumps"),
+        (103L, "b", "x y z")))
+      assert(joined.filter(_.getLong(0) == qid)
+          .map(r => Seq(r(2), r(3), r(4)).mkString("[", ",", "]")).toSeq.sorted ==
+        rows(TextIndex.bm25TopKScoped(spark, t, "text", "id",
+          q.split(" ").toSeq, 2, col("src") === p)), s"query $qid")
+    // stale (onStale=retrain, the default): the recompute equals a
+    // DROP + CREATE of the same index. On `body` this also checks the
+    // MinHash pin: the stored part-keyed signatures against the
+    // per-partition recompute
+    put((4L, "a", "x quick fox"), (14L, "b", "the quick fox"))
+    val cols = Seq("text", "body")
+    val stale = cols.map(c => serves(c, None))
+    cols.foreach(c => spark.sql(s"DROP TEXT INDEX ON $t ($c)"))
+    index()
+    cols.zip(stale).foreach { case (c, st) =>
+      same(s"stale recompute = rebuild ($c)", st, serves(c, None))
+    }
+  }
 }
