@@ -1186,12 +1186,6 @@ case class OptimizeManifestCommand(target: String, targetBytes: Long,
   }
 }
 
-/** The lowered REORG … APPLY (PURGE): one scoped distributed rewrite of the
-  * table's deletion-vector-bearing files via
-  * [[graft.sources.ManifestTable.reorgPurge]] — live rows re-emit
-  * vector-free, every other file keeps its name and layout. Reports
-  * (files_purged, files_rewritten); a table with no vectors is a (0, 0)
-  * no-op. */
 /** The lowered COPY INTO: list the source directory, drop already-loaded
   * paths (the `copy.log` sidecar), ingest the rest, and commit data +
   * advanced log in ONE atomic manifest swap —
@@ -1213,6 +1207,12 @@ case class CopyIntoCommand(target: String, source: String, format: String,
   }
 }
 
+/** The lowered REORG … APPLY (PURGE): one scoped distributed rewrite of the
+  * table's deletion-vector-bearing files via
+  * [[graft.sources.ManifestTable.reorgPurge]] — live rows re-emit
+  * vector-free, every other file keeps its name and layout. Reports
+  * (files_purged, files_rewritten); a table with no vectors is a (0, 0)
+  * no-op. */
 case class ReorgTableCommand(target: String) extends LeafRunnableCommand {
   import org.apache.spark.sql.types.IntegerType
   override val output: Seq[Attribute] = Seq(

@@ -22,10 +22,11 @@ import org.apache.spark.sql.types.StructField
   * routes every row through the FIRST applying clause of its group
   * (matched / not-matched / not-matched-by-source, in statement order —
   * the ANSI rule), evaluated with both sides in scope under their aliases.
-  * The result publishes through the sink's atomic truncate-overwrite; the
-  * self-referencing write is safe on a manifest table because the scan
-  * plans from the pre-swap manifest, staged files get unique names, and
-  * the commit swap never deletes files the scan is reading.
+  * The result commits through the sink's row-level pipeline
+  * ([[graft.sources.ManifestTable.rowLevel]]); the self-referencing write
+  * is safe on a manifest table because the scan plans from the pre-swap
+  * manifest, staged files get unique names, and the commit swap never
+  * deletes files the scan is reading.
   *
   * Semantics pinned here (and certified by `q_merge_conditional`):
   *  - clause conditions see `t.*` and `s.*` (NULL side for non-matches);
@@ -50,8 +51,7 @@ import org.apache.spark.sql.types.StructField
   * those files join the source and rewrite (inserts surface in the same
   * join), and the swap replaces exactly them; an insert-only MERGE is a
   * pure append. With NOT-MATCHED-BY-SOURCE every unmatched target row is
-  * in scope, so the rewrite is inherently whole-table
-  * (truncate-overwrite). The join itself shuffles each side once — the
+  * in scope, so the rewrite is inherently whole-table. The join itself shuffles each side once — the
   * unavoidable MERGE cost; broadcast when the source is small.
   */
 object MergeParse {
@@ -469,49 +469,43 @@ case class MergeIntoFullCommand(spec: MergeParse.Spec) extends LeafRunnableComma
     // WHOLE-TABLE shape: a NOT MATCHED BY SOURCE clause touches every
     // unmatched target row, so no file can be excluded up front; a
     // shadowed `_file` column defeats the metadata-column discovery. Both
-    // route through the same rewrite/publish machinery below with the
-    // touched set = EVERY entry — so commit-time CDC still records (the
-    // actioned frame carries per-clause codes either way; the old
-    // truncate-overwrite fallback silently dropped CDC on changeFeed
-    // tables).
+    // commit through the same pipeline with the touched set = EVERY entry
+    // — so commit-time CDC still records (the actioned frame carries
+    // per-clause codes either way).
     val wholeTable = nmbs.nonEmpty || fileColShadowed
 
-    {
-      // FILE-BOUNDED path (the Delta merge algorithm): without
-      // NOT-MATCHED-BY-SOURCE clauses, rows in files holding NO matched
-      // key are untouched by every clause — so (1) one semi-join over the
-      // `_file` metadata column finds the files containing matched keys,
-      // (2) ONLY those files full-outer-join the source (unmatched source
-      // rows — the inserts — surface there too; a source key absent from
-      // the touched files matches nothing anywhere, by construction of
-      // the touched set), and (3) the rewrite publishes atomically,
-      // replacing exactly the touched files. A selective MERGE over a
-      // 100 TB table rewrites only the files it touches; an insert-only
-      // MERGE rewrites none (pure append). The whole-table shape skips
-      // the discovery and takes every entry.
-      import graft.sources.{Manifest, ManifestTable}
-      val dir = mt.dir
-      // the whole snapshot→discover→rewrite→publish sequence retries
-      // against the fresh manifest on optimistic conflict
-      ManifestTable.withConflictRetry("MERGE") {
-      val m = Manifest.read(dir).getOrElse(Manifest(targetSchema, Seq.empty))
-      val touchedEntries = if (wholeTable) m.entries else {
+    // FILE-BOUNDED path (the Delta merge algorithm): without
+    // NOT-MATCHED-BY-SOURCE clauses, rows in files holding NO matched key
+    // are untouched by every clause — so (1) one semi-join over the
+    // `_file` metadata column finds the files containing matched keys,
+    // (2) ONLY those files full-outer-join the source (unmatched source
+    // rows — the inserts — surface there too; a source key absent from
+    // the touched files matches nothing anywhere, by construction of the
+    // touched set), and (3) the row-level pipeline commits, replacing or
+    // vectoring exactly the touched files. A selective MERGE over a 100 TB
+    // table touches only the files it matches; an insert-only MERGE
+    // rewrites none (pure append). The whole-table shape skips the
+    // discovery and takes every entry. The whole snapshot→discover→
+    // commit sequence retries against the fresh manifest on optimistic
+    // conflict.
+    import graft.sources.ManifestTable
+    val dir = mt.dir
+    ManifestTable.rowLevel(dir, "MERGE") { m =>
+      val touched = if (wholeTable) m.entries else {
         // Pin the discovery scan to m's snapshot (the exact file list read
         // above): without the pin, a concurrent commit landing between
-        // Manifest.read and scan planning could surface `_file` names
+        // the manifest read and scan planning could surface `_file` names
         // absent from m.entries, which the touched-set filter below would
         // silently drop — their matched rows would never rewrite.
-        val tKeys = spark.read.format("graft.sources.GraftManifestSink")
-          .option("path", dir.toString)
-          .option("files", m.entries.map(_.name).mkString(",")).load()
+        val tKeys = ManifestTable.scanFiles(spark, dir, m.entries.map(_.name))
           .select(spec.keyPairs.map(p => col(p._1)) :+ col("_file"): _*).as("__mt")
         val sKeys = sourceDf.as("__ms")
         val kCond = spec.keyPairs
           .map { case (tc, sc) => col(s"__mt.$tc") === col(s"__ms.$sc") }
           .reduce(_ && _)
-        val touched = tKeys.join(sKeys, kCond, "left_semi")
+        val keyFiles = tKeys.join(sKeys, kCond, "left_semi")
           .select(col("_file")).distinct().collect().map(_.getString(0)).toSet
-        m.entries.filter(e => touched(e.name))
+        m.entries.filter(e => keyFiles(e.name))
       }
       // commit-time CDC ([[graft.sources.ManifestTable.writeCdc]]): the
       // merge's exact change rows, attributed per CLAUSE KIND — updates
@@ -530,10 +524,7 @@ case class MergeIntoFullCommand(spec: MergeParse.Spec) extends LeafRunnableComma
       def inCodes(codes: Seq[String]): Column =
         if (codes.isEmpty) lit(false)
         else col("__graft_action").isin(codes: _*)
-      val cdcProps = ManifestTable.writeCdc(dir, m, {
-        val tdf = spark.read.format("graft.sources.GraftManifestSink")
-          .option("path", dir.toString)
-          .option("files", touchedEntries.map(_.name).mkString(",")).load()
+      def changes(tdf: org.apache.spark.sql.DataFrame) = {
         val acts = actioned(tdf)
         val tP = coalesce(col("__graft_t"), lit(false))
         val tCols = targetSchema.fields
@@ -548,44 +539,21 @@ case class MergeIntoFullCommand(spec: MergeParse.Spec) extends LeafRunnableComma
             .select(tCols: _*).withColumn("_change_type", lit("delete")))
           .unionByName(acts.filter(!tP && inCodes(insertCodes))
             .select(outCols: _*).withColumn("_change_type", lit("insert")))
-      })
-      // the DV tier needs BOTH metadata columns un-shadowed (`_file` +
-      // `_pos` drive the hit discovery); whole-table-by-shadowing falls
-      // back to copy-on-write
-      val dvMode = m.props.get("tbl.delete.dv").contains("true") &&
-        !names.exists(_.equalsIgnoreCase("_pos")) && !fileColShadowed
-      if (dvMode && touchedEntries.nonEmpty) {
-        // MERGE-ON-READ tier: kept rows stay in their files. Job 1 appends
-        // ONLY the changed output (updated rows + inserts) through the
-        // normal staging writer; job 2 re-runs the same deterministic join
-        // over the same pinned file set to fold the MODIFIED target
-        // ordinals (updates AND deletes) into per-file deletion vectors,
-        // written executor-side — the driver handles one sidecar ref per
-        // touched file, never the ordinals. A selective MERGE into a
-        // 100 TB table appends its deltas and vectors a few ordinals
-        // instead of rewriting every touched file.
-        val appended = ManifestTable.rewriteFiles(dir, m, touchedEntries,
-          df => projectMerged(actioned(df), excludeKeep = true))
-        val tdfMeta = spark.read.format("graft.sources.GraftManifestSink")
-          .option("path", dir.toString)
-          .option("files", touchedEntries.map(_.name).mkString(",")).load()
-        val hits = actioned(tdfMeta
-            .select(col("*"), col("_file").as("__graft_file"),
-              col("_pos").as("__graft_pos")))
-          .filter(coalesce(col("__graft_t"), lit(false)) &&
-            col("__graft_action") =!= "keep")
-          .select(col("__graft_file"), col("__graft_pos"))
-        val dvUpdated = ManifestTable.vectorize(dir, touchedEntries, hits)
-        ManifestTable.publishReplacing(dir, m, dvUpdated.map(_._1),
-          dvUpdated.flatMap(_._2) ++ appended, cdcProps)
-      } else {
-        ManifestTable.refuseRewriteUnderRowTracking(m.props,
-          "MERGE INTO (copy-on-write)")
-        val rewritten = ManifestTable.rewriteFiles(dir, m, touchedEntries, mergeResult)
-        ManifestTable.publishReplacing(dir, m, touchedEntries.map(_.name), rewritten,
-          cdcProps)
       }
-      }
+      // merge-on-read: the changed output (updated rows + inserts)
+      // appends, and the MODIFIED target ordinals (updates AND deletes)
+      // are the hits — the same deterministic join over the same pinned
+      // file set, with the metadata columns carried under private names
+      ManifestTable.commit(dir, m, "MERGE INTO (copy-on-write)",
+        ManifestTable.RowPlan(touched, mergeResult,
+          hits = Some(tdf => actioned(tdf
+              .select(col("*"), col("_file").as("__graft_file"),
+                col("_pos").as("__graft_pos")))
+            .filter(coalesce(col("__graft_t"), lit(false)) &&
+              col("__graft_action") =!= "keep")
+            .select(col("__graft_file"), col("__graft_pos"))),
+          appended = Some(tdf => projectMerged(actioned(tdf), excludeKeep = true)),
+          changes = Some(changes), inserts = true))
     }
     Seq.empty
   }

@@ -1595,96 +1595,28 @@ private[graft] class ManifestTable(val dir: Path, writeSchema: StructType,
     * every file as PROVABLY all-matching (range entirely inside the
     * predicate → dropped from the manifest, metadata-only), provably
     * non-matching (→ untouched), or CUT (the predicate crosses its range —
-    * or the range can't decide, e.g. NULLs present). Cut files are
-    * rewritten COPY-ON-WRITE by a distributed Spark job that reads only
-    * those files, keeps the non-matching rows, and stages replacements
-    * through the normal writer — so a selective delete over a 100 TB table
-    * rewrites only the files it touches, and an aligned delete rewrites
-    * nothing. Everything publishes in ONE atomic manifest swap; superseded
-    * files stay on disk for archived snapshots until `VACUUM MANIFEST …
-    * RETAIN n SNAPSHOTS` reaps them. `canDeleteWhere` accepts a predicate
-    * iff every conjunct translates to a row-level [[Column]]
+    * or the range can't decide, e.g. NULLs present). Cut files commit
+    * through [[ManifestTable.rowLevel]] (vectored or rewritten), reading
+    * only those files — so a selective delete over a 100 TB table touches
+    * only the files it cuts, and an aligned delete rewrites nothing.
+    * Everything publishes in ONE atomic manifest swap; superseded files
+    * stay on disk for archived snapshots until `VACUUM MANIFEST … RETAIN n
+    * SNAPSHOTS` reaps them. `canDeleteWhere` accepts a predicate iff every
+    * conjunct translates to a row-level [[Column]]
     * ([[ManifestScanBuilder.filterColumn]]) — an untranslatable filter
     * must be refused up front, never approximated. */
-  private def classify(entries: Seq[ManifestFile], filters: Array[Filter])
-    : (Seq[ManifestFile], Seq[ManifestFile], Seq[ManifestFile]) = {
-    val (drop, rest) = entries.partition(e =>
-      filters.forall(f => ManifestScanBuilder.mustMatchAll(f, e.stats)))
-    val (cut, keep) = rest.partition(e =>
-      filters.forall(f => ManifestScanBuilder.mightMatch(f, e.stats)) &&
-        e.rows > 0)
-    (drop, keep, cut)
-  }
-
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     filters.forall(f => ManifestScanBuilder.filterColumn(f).isDefined)
 
   override def deleteWhere(filters: Array[Filter]): Unit =
-    ManifestTable.withConflictRetry("DELETE") {
-    ManifestTable.assertWritable(dir, "DELETE")
-    // ONE manifest read for the whole compound decision — schema, entries
-    // and props must come from the same published version
-    val m = Manifest.read(dir).getOrElse(Manifest(writeSchema, Seq.empty))
-    val (drop, keep, cut) = classify(m.entries, filters)
-    val _ = keep
-    val pred = filters.map(f => ManifestScanBuilder.filterColumn(f).getOrElse(
-      throw new UnsupportedOperationException(
-        s"DELETE FROM: cannot evaluate pushed filter $f row-by-row")))
-      .reduce(_ && _)
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    // commit-time CDC: the deleted rows, exactly — drop files contribute
-    // every row (zone-proven all-matching), cut files their matching rows.
-    // The filter re-evaluates over both, so the tag never over-claims.
-    // Note CDC turns the metadata-only drop tier into a bounded scan of
-    // the dropped files — the Delta trade, paid only when the feed is on.
-    def cdcDeletes: Map[String, String] =
-      ManifestTable.writeCdc(dir, m, {
-        val spark = org.apache.spark.sql.SparkSession.active
-        spark.read.format("graft.sources.GraftManifestSink")
-          .option("path", dir.toString)
-          .option("files", (drop ++ cut).map(_.name).mkString(","))
-          .load()
-          .where(coalesce(pred, lit(false)))
-          .select(m.schema.fieldNames.map(col).toIndexedSeq: _*)
-          .withColumn("_change_type", lit("delete"))
-      })
-    if (cut.isEmpty) {
-      ManifestTable.publishReplacing(dir, m, drop.map(_.name), Seq.empty,
-        if (drop.isEmpty) Map.empty else cdcDeletes)
-      return
+    ManifestTable.rowLevel(dir, "DELETE") { m =>
+      import org.apache.spark.sql.functions.{coalesce, lit}
+      val (drop, cut) = ManifestTable.classify(m.entries, filters)
+      val pred = ManifestTable.rowPredicate(filters, "DELETE FROM")
+      ManifestTable.commit(dir, m, "DELETE (copy-on-write)",
+        ManifestTable.deleting(drop, cut, coalesce(pred, lit(false))))
+      ()
     }
-    if (m.props.get("tbl.delete.dv").contains("true")) {
-      // MERGE-ON-READ tier (TBLPROPERTIES 'delete.dv'='true'): instead of
-      // rewriting each cut file, record the matching rows' physical
-      // ordinals in a per-file deletion-vector sidecar the reader skips —
-      // a selective delete becomes O(matched rows) metadata. One
-      // distributed job over ONLY the cut files finds (file, ordinal)
-      // pairs and writes each file's sidecar executor-side; the driver
-      // sees one ref per touched file. Existing vectors merge (the scan
-      // below reads through them, so rediscovered ordinals are impossible
-      // — union by construction); a file whose vector reaches its row
-      // count drops from the manifest entirely.
-      val spark = org.apache.spark.sql.SparkSession.active
-      val hits = spark.read.format("graft.sources.GraftManifestSink")
-        .option("path", dir.toString)
-        .option("files", cut.map(_.name).mkString(","))
-        .load()
-        .where(coalesce(pred, lit(false)))
-        .select(col("_file"), col("_pos"))
-      val updated = ManifestTable.vectorize(dir, cut, hits)
-      ManifestTable.publishReplacing(dir, m,
-        drop.map(_.name) ++ updated.map(_._1), updated.flatMap(_._2),
-        cdcDeletes)
-    } else {
-      ManifestTable.refuseRewriteUnderRowTracking(m.props, "DELETE (copy-on-write)")
-      // DELETE removes rows where the predicate is TRUE; NULL/FALSE rows
-      // survive — hence the coalesce, not a bare negation
-      val rewritten = ManifestTable.rewriteFiles(dir, m, cut,
-        df => df.filter(not(coalesce(pred, lit(false)))))
-      ManifestTable.publishReplacing(dir, m, (drop ++ cut).map(_.name), rewritten,
-        cdcDeletes)
-    }
-  }
 }
 
 /** Pluggable mutual exclusion for a table directory's manifest
@@ -1781,6 +1713,7 @@ private[sources] object DeletionVector {
 }
 
 private[graft] object ManifestTable {
+  import org.apache.spark.sql.{Column, DataFrame}
   import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
@@ -1908,7 +1841,7 @@ private[graft] object ManifestTable {
     * layout rewrite silently reassigns every id a downstream consumer
     * holds. Deletion-vector DML never moves a surviving row and stays
     * allowed. */
-  private[graft] def refuseRewriteUnderRowTracking(
+  private def refuseRewriteUnderRowTracking(
       props: Map[String, String], op: String): Unit =
     if (Manifest.rowTracking(props)) throw new UnsupportedOperationException(
       s"$op: this table has rowTracking=true — row ids are file-base + " +
@@ -1917,93 +1850,186 @@ private[graft] object ManifestTable {
         "(TBLPROPERTIES('delete.dv'='true')) or UNSET " +
         "TBLPROPERTIES('rowTracking') first")
 
-  /** COPY-ON-WRITE rewrite step shared by row-level DELETE and UPDATE: run
-    * `transform` over ONLY the given files of table `dir` (a distributed
-    * Spark job — the scan plans one partition per file, the write stages
-    * per-task files with fresh zone maps) and return manifest entries for
-    * the results. The caller composes the final entry list and performs
-    * the single atomic swap; the replaced files stay on disk for archived
-    * snapshots. The staging detour through a scratch table keeps this on
-    * the exact writer/commit machinery every batch write uses. */
-  private[graft] def rewriteFiles(dir: Path, m: Manifest,
-      files: Seq[ManifestFile],
-      transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-    : Seq[ManifestFile] = {
+  /** One row-level commit as [[commit]] executes it: the caller describes
+    * the operation and makes no tier or staging decision. Every function
+    * runs over ONE pinned scan ([[scanFiles]]) of `touch`; `changes` reads
+    * `drop` as well.
+    *
+    * @param touch     the files the operation reads and replaces
+    * @param rewrite   copy-on-write: the rows that replace `touch`
+    * @param drop      zone-proven files removed metadata-only
+    * @param hits      merge-on-read: `(_file, _pos)` of the rows that
+    *                  change or disappear; `None` keeps the op
+    *                  copy-on-write (OPTIMIZE, REORG, replaceWhere)
+    * @param appended  merge-on-read: the new rows (updated copies, inserts)
+    * @param changes   commit-time CDC: data columns + `_change_type`
+    * @param inserts   `rewrite` yields rows even when `touch` is empty
+    *                  (MERGE's inserts, COPY INTO's source)
+    * @param clustered the staged rows follow the table's partition
+    *                  clustering (an ingest); a rewrite keeps the layout
+    *                  its own transform chose
+    * @param added     files the write job already staged (replaceWhere)
+    * @param props     extra commit props: the no-data-change stamp, the
+    *                  copy log, identity high-water marks */
+  private[graft] final case class RowPlan(
+      touch: Seq[ManifestFile] = Seq.empty,
+      rewrite: DataFrame => DataFrame = identity,
+      drop: Seq[ManifestFile] = Seq.empty,
+      hits: Option[DataFrame => DataFrame] = None,
+      appended: Option[DataFrame => DataFrame] = None,
+      changes: Option[DataFrame => DataFrame] = None,
+      inserts: Boolean = false,
+      clustered: Boolean = false,
+      added: Seq[ManifestFile] = Seq.empty,
+      props: Map[String, String] = Map.empty)
+
+  /** THE ROW-LEVEL COMMIT PIPELINE. DELETE (both tiers), UPDATE, MERGE,
+    * replaceWhere, OPTIMIZE, REORG and COPY INTO all commit through the
+    * same stages, each written once (the Delta protocol: rewrite the
+    * touched files, then commit add/remove actions):
+    *
+    *  1. snapshot — this function: conflict retry, the writability check
+    *     and ONE manifest read. `body` is the WHOLE operation, so a retry
+    *     re-plans against the fresh snapshot. replaceWhere enters at stage
+    *     2 with its own read: a write commit cannot re-run its write job;
+    *  2. plan — `body` describes the commit as a [[RowPlan]];
+    *  3. tier — [[commit]]: MERGE-ON-READ iff the plan reads files and
+    *     names their hit rows, the table sets `delete.dv`, and no data
+    *     column shadows `_file` or `_pos` (a shadowing column would feed
+    *     the hit scan data values instead of entry names and ordinals);
+    *     otherwise COPY-ON-WRITE. The rowTracking refusal fires only when
+    *     copy-on-write rewrites at least one file;
+    *  4. stage — [[stage]] writes the rewrite (COW) or the appended rows
+    *     (MoR); MoR folds the hits into deletion vectors ([[vectorize]]);
+    *  5. publish — the change rows ([[writeCdc]]), then one conflict-
+    *     checked [[publishReplacing]] swap.
+    *
+    * After the operation, committed or not, the table's indexes
+    * auto-refresh once (a fresh index costs one manifest read and a digest
+    * compare). */
+  private[graft] def rowLevel[T](dir: Path, op: String)(body: Manifest => T): T = {
+    val out = withConflictRetry(op) {
+      assertWritable(dir, op)
+      body(Manifest.read(dir).getOrElse(
+        throw new IllegalStateException(s"$op: no manifest at $dir")))
+    }
+    maybeAutoRefreshIndexes(dir)
+    out
+  }
+
+  /** Stages 3–5 of [[rowLevel]] for plan `p` against snapshot `m`; `what`
+    * names the op in the rowTracking refusal. Returns the staged files. */
+  private[graft] def commit(dir: Path, m: Manifest, what: String,
+      p: RowPlan): Seq[ManifestFile] = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val src = spark.read.format("graft.sources.GraftManifestSink")
-      .option("path", dir.toString)
-      .option("files", files.map(_.name).mkString(","))
-      .load()
-    val scratch = Files.createTempDirectory("graft_cow_")
-    // carry the table's USER props (e.g. bloom.columns) into the scratch
-    // manifest so copy-on-write outputs keep their blooms. The sink's OWN
-    // props stay behind deliberately: a rewrite's layout is owned by its
-    // explicit transform (OPTIMIZE ZORDER must not be re-shuffled by the
-    // partition-clustering contract), and epoch watermarks belong to the
-    // real table only.
+    lazy val scan = scanFiles(spark, dir, p.touch.map(_.name))
+    val mergeOnRead = p.touch.nonEmpty && p.hits.isDefined &&
+      m.props.get("tbl.delete.dv").contains("true") &&
+      !m.schema.fieldNames.exists(n =>
+        n.equalsIgnoreCase("_file") || n.equalsIgnoreCase("_pos"))
+    val (replaced, vectored, staged) =
+      if (mergeOnRead) {
+        // kept rows stay in their files: only the new rows append, and
+        // the hits' ordinals land in per-file vectors written executor-
+        // side. Both jobs read the SAME pinned file set with the same
+        // deterministic plan, so the appended and the vectored rows
+        // describe the same rows; the scan reads through existing
+        // vectors, so no hit is an ordinal already deleted
+        val appended = p.appended.fold(Seq.empty[ManifestFile])(f =>
+          stage(dir, m, f(scan), p.clustered))
+        val dv = vectorize(dir, p.touch, p.hits.get(scan))
+        (p.drop.map(_.name) ++ dv.map(_._1), dv.flatMap(_._2), appended)
+      } else {
+        if (p.touch.nonEmpty) refuseRewriteUnderRowTracking(m.props, what)
+        val rewritten =
+          if (p.touch.isEmpty && !p.inserts) Seq.empty
+          else stage(dir, m, p.rewrite(scan), p.clustered)
+        ((p.drop ++ p.touch).map(_.name), Seq.empty, rewritten)
+      }
+    // a commit that reads no file and inserts nothing has no change rows
+    val cdc = p.changes
+      .filter(_ => p.drop.nonEmpty || p.touch.nonEmpty || p.inserts)
+      .fold(Map.empty[String, String])(f => writeCdc(dir, m,
+        f(scanFiles(spark, dir, (p.drop ++ p.touch).map(_.name)))))
+    publishReplacing(dir, m, replaced, vectored ++ staged ++ p.added,
+      cdc ++ p.props)
+    staged
+  }
+
+  /** The plan of a DELETE of the rows where `cond` is TRUE (`cond` is
+    * NULL-safe: NULL and FALSE rows survive, the ANSI rule) — shared by
+    * the v1-filter tier and the expression tier. `drop` contributes every
+    * row to the change rows (zone-proven all-matching), `touch` its
+    * matching rows; the filter re-evaluates over both, so the tag never
+    * over-claims. CDC turns the metadata-only drop tier into a bounded
+    * scan of the dropped files — the Delta trade, paid only when the feed
+    * is on. */
+  private[sources] def deleting(drop: Seq[ManifestFile], touch: Seq[ManifestFile],
+      cond: Column): RowPlan = {
+    import org.apache.spark.sql.functions.{col, lit, not}
+    RowPlan(touch, _.filter(not(cond)), drop,
+      hits = Some(_.where(cond).select(col("_file"), col("_pos"))),
+      changes = Some(df => df.where(cond)
+        .select(df.schema.fieldNames.map(col).toIndexedSeq: _*)
+        .withColumn("_change_type", lit("delete"))))
+  }
+
+  /** Split `entries` by the pushed `filters`' zone-map verdicts into the
+    * files PROVABLY all-matching (drop, metadata-only) and the files the
+    * filters CUT (must be read row-by-row); the rest are untouched. */
+  private[sources] def classify(entries: Seq[ManifestFile], filters: Array[Filter])
+    : (Seq[ManifestFile], Seq[ManifestFile]) = {
+    val (drop, rest) = entries.partition(e =>
+      filters.forall(f => ManifestScanBuilder.mustMatchAll(f, e.stats)))
+    (drop, rest.filter(e => e.rows > 0 &&
+      filters.forall(f => ManifestScanBuilder.mightMatch(f, e.stats))))
+  }
+
+  /** The pushed `filters` as one row-level predicate for `op`. */
+  private[sources] def rowPredicate(filters: Array[Filter], op: String): Column =
+    filters.map(f => ManifestScanBuilder.filterColumn(f).getOrElse(
+      throw new UnsupportedOperationException(
+        s"$op: cannot evaluate pushed filter $f row-by-row")))
+      .reduceOption(_ && _).getOrElse(org.apache.spark.sql.functions.lit(true))
+
+  /** Write `df` as NEW entries of the table at `dir` WITHOUT publishing —
+    * [[commit]]'s staging step. The rows land in a scratch table whose
+    * manifest carries the table's schema (so the NOT NULL contract and
+    * the `check.*` properties bind in the WriteBuilder: staged outputs obey
+    * the same write-time constraints as direct writes) and its USER props
+    * (e.g. bloom.columns), so the staged files keep their blooms. The
+    * bucket-transform contract rides along too: the fanout writer keeps
+    * staged files bucket-pure whatever the clustering, so OPTIMIZE/COW
+    * preserve SPJ readiness — and OPTIMIZE of a table with legacy untagged
+    * files UPGRADES them to bucket-pure. `clustered` carries the partition
+    * columns as well: an ingest clusters like any append, while a rewrite's
+    * layout is owned by its explicit transform (OPTIMIZE ZORDER must not be
+    * re-shuffled). Epoch watermarks belong to the real table only. The
+    * files then move into the table directory unreferenced; the entries
+    * returned are what [[publishReplacing]] commits. */
+  private[sources] def stage(dir: Path, m: Manifest, df: DataFrame,
+      clustered: Boolean): Seq[ManifestFile] = {
+    val scratch = Files.createTempDirectory("graft_stage_")
+    val sinkProps = Manifest.PartitionTransformsProp +:
+      (if (clustered) Seq(Manifest.PartitionColsProp) else Seq.empty)
     val carried = m.props.filter(_._1.startsWith(GraftCatalog.TblPropPrefix)) ++
-      // the bucket-transform contract rides along too (NOT partitionCols —
-      // that would re-shuffle the rewrite's explicit layout): the fanout
-      // writer keeps rewritten files bucket-pure whatever the clustering,
-      // so OPTIMIZE/COW preserve SPJ readiness — and OPTIMIZE of a table
-      // with legacy untagged files UPGRADES them to bucket-pure
-      m.props.get(Manifest.PartitionTransformsProp)
-        .map(Manifest.PartitionTransformsProp -> _)
-    // ALWAYS write the scratch manifest (even with no carried props): the
-    // schema's NOT NULL contract and the `check.*` properties must bind in
-    // the rewrite's WriteBuilder, so copy-on-write outputs obey the same
-    // write-time constraints as direct writes
+      sinkProps.flatMap(k => m.props.get(k).map(k -> _))
     Manifest.write(scratch, Manifest(m.schema, Seq.empty, carried))
-    transform(src)
-      .write.format("graft.sources.GraftManifestSink")
+    df.write.format("graft.sources.GraftManifestSink")
       .option("path", scratch.toString).mode("append").save()
     val entries = Manifest.read(scratch).map(_.entries).getOrElse(Seq.empty)
-    val moved = entries.map { e =>
+    entries.foreach { e =>
       Files.move(scratch.resolve(e.name), dir.resolve(e.name),
         StandardCopyOption.REPLACE_EXISTING)
       e.blobsFile.foreach(b => Files.move(scratch.resolve(b), dir.resolve(b),
         StandardCopyOption.REPLACE_EXISTING))
-      e
     }
     // scratch holds only the manifest + snapshots now — reap it
     val walk = Files.walk(scratch)
     try walk.sorted(java.util.Comparator.reverseOrder[Path]())
       .forEach(p => Files.deleteIfExists(p))
     finally walk.close()
-    moved
-  }
-
-  /** Write `df` as NEW entries of the table at `dir` WITHOUT publishing:
-    * the rows land in a scratch manifest (inheriting the table's user
-    * props + transform contract, so blooms/constraints/bucket layout
-    * apply), the files move into the table directory unreferenced, and
-    * the returned entries are what [[publishReplacing]] commits — letting
-    * a caller bind extra props (e.g. the COPY INTO idempotency log) into
-    * the SAME atomic swap as the data. */
-  private[graft] def stageAppend(dir: Path, m: Manifest,
-      df: org.apache.spark.sql.DataFrame): Seq[ManifestFile] = {
-    val scratch = Files.createTempDirectory("graft_copy_")
-    val carried = m.props.filter(_._1.startsWith(GraftCatalog.TblPropPrefix)) ++
-      m.props.get(Manifest.PartitionTransformsProp)
-        .map(Manifest.PartitionTransformsProp -> _) ++
-      m.props.get(Manifest.PartitionColsProp)
-        .map(Manifest.PartitionColsProp -> _)
-    Manifest.write(scratch, Manifest(m.schema, Seq.empty, carried))
-    df.write.format("graft.sources.GraftManifestSink")
-      .option("path", scratch.toString).mode("append").save()
-    val entries = Manifest.read(scratch).map(_.entries).getOrElse(Seq.empty)
-    val moved = entries.map { e =>
-      Files.move(scratch.resolve(e.name), dir.resolve(e.name),
-        StandardCopyOption.REPLACE_EXISTING)
-      e.blobsFile.foreach(b => Files.move(scratch.resolve(b), dir.resolve(b),
-        StandardCopyOption.REPLACE_EXISTING))
-      e
-    }
-    val walk = Files.walk(scratch)
-    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(p => Files.deleteIfExists(p))
-    finally walk.close()
-    moved
+    entries
   }
 
   /** `COPY INTO <table> FROM '<dir>'` — idempotent FILE-LEVEL ingestion
@@ -2016,11 +2042,7 @@ private[graft] object ManifestTable {
     * or neither. Returns (files copied, rows copied, files skipped). */
   private[graft] def copyInto(spark: org.apache.spark.sql.SparkSession,
       dir: Path, source: String, format: String,
-      pattern: Option[String]): (Long, Long, Long) = withConflictRetry("COPY INTO") {
-    import org.apache.spark.sql.functions.col
-    assertWritable(dir, "COPY INTO")
-    val m = Manifest.read(dir).getOrElse(
-      throw new IllegalStateException(s"COPY INTO: no manifest at $dir"))
+      pattern: Option[String]): (Long, Long, Long) = rowLevel(dir, "COPY INTO") { m =>
     val loaded: Set[String] = m.props.get(Manifest.CopyLogProp).map { log =>
       Files.readAllLines(dir.resolve(log)).asScala.filter(_.nonEmpty).toSet
     }.getOrElse(Set.empty)
@@ -2039,16 +2061,13 @@ private[graft] object ManifestTable {
       .map(_.toAbsolutePath.toString).sorted
     val fresh = candidates.filterNot(loaded)
     if (fresh.isEmpty) (0L, 0L, candidates.length.toLong)
-    else copyFresh(spark, dir, m, fresh, candidates.length, format)
+    else copyFresh(spark, dir, m, loaded, fresh, candidates.length, format)
   }
 
   private def copyFresh(spark: org.apache.spark.sql.SparkSession, dir: Path,
-      m: Manifest, fresh: Seq[String], nCandidates: Int,
+      m: Manifest, loaded: Set[String], fresh: Seq[String], nCandidates: Int,
       format: String): (Long, Long, Long) = {
     import org.apache.spark.sql.functions.col
-    val loaded: Set[String] = m.props.get(Manifest.CopyLogProp).map { log =>
-      Files.readAllLines(dir.resolve(log)).asScala.filter(_.nonEmpty).toSet
-    }.getOrElse(Set.empty)
     val reader = format.toLowerCase match {
       case "parquet" => spark.read.parquet(fresh: _*)
       case "csv" => spark.read.option("header", "true")
@@ -2067,12 +2086,11 @@ private[graft] object ManifestTable {
             s"(source columns: ${reader.columns.mkString(", ")})")
       col(f.name).cast(f.dataType).as(f.name)
     }: _*)
-    val entries = stageAppend(dir, m, projected)
     val log = s"copylog-${java.util.UUID.randomUUID.toString.take(8)}.txt"
     Files.write(dir.resolve(log),
       (loaded ++ fresh).toSeq.sorted.mkString("\n").getBytes(UTF_8))
-    publishReplacing(dir, m, Seq.empty, entries,
-      Map(Manifest.CopyLogProp -> log))
+    val entries = commit(dir, m, "COPY INTO", RowPlan(rewrite = _ => projected,
+      inserts = true, clustered = true, props = Map(Manifest.CopyLogProp -> log)))
     (fresh.length.toLong, entries.map(_.rows).sum,
       (nCandidates - fresh.length).toLong)
   }
@@ -2114,11 +2132,12 @@ private[graft] object ManifestTable {
     * only), committed as a dataChange=false layout commit that data
     * streams already skip. Best-effort by contract: a compaction failure
     * (e.g. losing a concurrent-writer race) never fails the write that
-    * triggered it. */
-  private[sources] def maybeAutoCompact(dir: Path): Unit = try {
+    * triggered it. Returns whether the compaction ran to completion —
+    * then [[rowLevel]] already refreshed the table's indexes. */
+  private def maybeAutoCompact(dir: Path): Boolean = try {
     val spark = org.apache.spark.sql.SparkSession.active
-    Manifest.read(dir).foreach { m =>
-      if (m.props.get(GraftCatalog.TblPropPrefix + "autoCompact").contains("true")) {
+    Manifest.read(dir).exists { m =>
+      m.props.get(GraftCatalog.TblPropPrefix + "autoCompact").contains("true") && {
         val minFiles = spark.conf.getOption("spark.graft.autoCompact.minFiles")
           .map(_.toInt).getOrElse(50)
         val target = spark.conf.getOption("spark.graft.autoCompact.targetBytes")
@@ -2128,13 +2147,21 @@ private[graft] object ManifestTable {
           val p = Manifest.resolveData(chain, e.name)
           Files.exists(p) && Files.size(p) < target * 9 / 10
         })
-        if (small >= minFiles) { optimize(dir, target); () }
+        small >= minFiles && { optimize(dir, target); true }
       }
     }
   } catch {
     case e: Exception =>
       System.err.println(s"[graft] auto-compact at $dir skipped: ${e.getMessage}")
+      false
   }
+
+  /** Post-commit maintenance of a write commit (append, streaming epoch,
+    * replaceWhere): the auto-compaction where due, then exactly one index
+    * auto-refresh, so one pass covers both the data and the layout
+    * commit. */
+  private[sources] def afterWrite(dir: Path): Unit =
+    if (!maybeAutoCompact(dir)) maybeAutoRefreshIndexes(dir)
 
   /** POST-COMMIT INDEX AUTO-REFRESH: a table with
     * TBLPROPERTIES('index.autoRefresh'='true') refreshes every published
@@ -2144,9 +2171,11 @@ private[graft] object ManifestTable {
     * is one manifest read + digest compare (no-op), so the amortized cost
     * tracks the ingest, not the corpus. Best-effort like auto-compaction:
     * a refresh failure never fails the write that triggered it (searches
-    * just fall back until the next refresh). Runs AFTER auto-compaction
-    * so one pass covers both the data and any layout commit. */
-  private[sources] def maybeAutoRefreshIndexes(dir: Path): Unit = try {
+    * just fall back until the next refresh). Runs once per commit: after
+    * a row-level operation ([[rowLevel]]) — since the refresh is
+    * incremental, that costs the rewritten files, never the corpus — and
+    * after a write's auto-compaction ([[afterWrite]]). */
+  private def maybeAutoRefreshIndexes(dir: Path): Unit = try {
     val spark = org.apache.spark.sql.SparkSession.active
     Manifest.read(dir).foreach { m =>
       if (m.props.get(GraftCatalog.TblPropPrefix + "index.autoRefresh")
@@ -2185,9 +2214,9 @@ private[graft] object ManifestTable {
     * ordinal through the driver. An entry whose merged vector reaches its
     * row count is dropped outright (the task skips the sidecar write).
     * Returns (replaced entry name, replacement or None=fully deleted) —
-    * the shape [[publishReplacing]] takes. Shared by the DV tiers of
-    * DELETE, UPDATE and MERGE. */
-  private[graft] def vectorize(dir: Path, entries: Seq[ManifestFile],
+    * the shape [[publishReplacing]] takes — the merge-on-read step of
+    * [[commit]]. */
+  private def vectorize(dir: Path, entries: Seq[ManifestFile],
       hits: org.apache.spark.sql.DataFrame): Seq[(String, Option[ManifestFile])] = {
     import org.apache.spark.sql.{Encoders, functions => F}
     // planner metadata into the closure: existing sidecar per file (reads
@@ -2239,13 +2268,6 @@ private[graft] object ManifestTable {
     }
   }
 
-  /** Publish a row-level operation's result: replace exactly the files the
-    * op read (`replaced`, from its base snapshot `base`) with `rewritten`,
-    * keeping every entry some CONCURRENT append added since — the RMW runs
-    * against the CURRENT manifest under the commit lock, so row-level ops
-    * commute with appends instead of silently un-publishing them. The op's
-    * row semantics stay snapshot-isolated: it read `base`, and files it
-    * never saw are left for the next operation. */
   /** COMMIT-TIME CDC (Delta's change-data files): under `TBLPROPERTIES
     * ('changeFeed' = 'true')`, each row-level DML records its EXACT change
     * rows — data columns + `_change_type` — as a self-contained mini
@@ -2274,9 +2296,6 @@ private[graft] object ManifestTable {
       Map(Manifest.CdcDirProp -> name)
     }
 
-  /** Refuse any mutation of an IMMUTABLE TAG directory ([[Tag]]): the
-    * pinned manifest carries [[Tag.PinProp]], and a tag must never
-    * diverge — that is the whole reproducible-release contract. */
   /** TABLE FEATURES this engine implements (the Delta table-features
     * protocol idea): a table may declare
     * `TBLPROPERTIES('feature.required.<name>' = 'true')` and every reader
@@ -2306,6 +2325,9 @@ private[graft] object ManifestTable {
         "declared in error")
   }
 
+  /** Refuse any mutation of an IMMUTABLE TAG directory ([[Tag]]): the
+    * pinned manifest carries [[Tag.PinProp]], and a tag must never
+    * diverge — that is the whole reproducible-release contract. */
   private[graft] def assertWritable(dir: Path, op: String): Unit = {
     val m = Manifest.read(dir)
     // ALTER TABLE stays allowed on a feature-gated table — it is the
@@ -2319,6 +2341,13 @@ private[graft] object ManifestTable {
     }
   }
 
+  /** Publish a row-level operation's result: replace exactly the files the
+    * op read (`replaced`, from its base snapshot `base`) with `rewritten`,
+    * keeping every entry some CONCURRENT append added since — the RMW runs
+    * against the CURRENT manifest under the commit lock, so row-level ops
+    * commute with appends instead of silently un-publishing them. The op's
+    * row semantics stay snapshot-isolated: it read `base`, and files it
+    * never saw are left for the next operation. */
   private[graft] def publishReplacing(dir: Path, base: Manifest,
       replaced: Seq[String], rewritten: Seq[ManifestFile],
       extraProps: Map[String, String] = Map.empty): Unit = {
@@ -2348,13 +2377,6 @@ private[graft] object ManifestTable {
       Manifest.write(dir, Manifest(cur.schema, ents,
         Manifest.sealRowTracking(cur.props ++ extraProps, ents)))
     }
-    // layout/DML rewrites keep autoRefresh indexes fresh too: since the
-    // refresh is always incremental (dead postings drop, only rewritten
-    // output re-indexes), running it after OPTIMIZE/DELETE/MERGE/REORG
-    // costs the rewritten files, never the corpus. Fresh index → one
-    // digest compare, a no-op. (Outside the commit lock, best-effort,
-    // like the append path's.)
-    maybeAutoRefreshIndexes(dir)
   }
 
   /** Execute `DELETE FROM <table at dir> WHERE pred` for predicates the
@@ -2371,39 +2393,26 @@ private[graft] object ManifestTable {
     * NULL (ANSI DELETE removes TRUE rows only). One atomic publish;
     * commit-time CDC records the deleted rows when the feed is on. */
   private[graft] def deleteWhereSql(dir: Path, whereSql: String): Unit =
-    withConflictRetry("DELETE") {
-    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not}
-    assertWritable(dir, "DELETE")
-    val spark = org.apache.spark.sql.SparkSession.active
-    val m = Manifest.read(dir).getOrElse(
-      throw new IllegalStateException(s"DELETE: no manifest at $dir"))
-    val pruning = conjuncts(
-      spark.sessionState.sqlParser.parseExpression(whereSql)).flatMap(exprFilter)
-    val touch = m.entries.filter(e => e.rows > 0 &&
-      pruning.forall(f => ManifestScanBuilder.mightMatch(f, e.stats)))
-    if (touch.isEmpty) return
-    val cond = coalesce(expr(whereSql), lit(false))
-    def scanTouch = spark.read.format("graft.sources.GraftManifestSink")
-      .option("path", dir.toString)
-      .option("files", touch.map(_.name).mkString(","))
-      .load()
-    def cdcDeletes: Map[String, String] = writeCdc(dir, m,
-      scanTouch.where(cond)
-        .select(m.schema.fieldNames.map(col).toIndexedSeq: _*)
-        .withColumn("_change_type", lit("delete")))
-    val dvMode = m.props.get("tbl.delete.dv").contains("true") &&
-      !m.schema.fieldNames.exists(n =>
-        n.equalsIgnoreCase("_file") || n.equalsIgnoreCase("_pos"))
-    if (dvMode) {
-      val hits = scanTouch.where(cond).select(col("_file"), col("_pos"))
-      val updated = vectorize(dir, touch, hits)
-      publishReplacing(dir, m, updated.map(_._1), updated.flatMap(_._2),
-        cdcDeletes)
-    } else {
-      refuseRewriteUnderRowTracking(m.props, "DELETE (copy-on-write)")
-      val rewritten = rewriteFiles(dir, m, touch, df => df.filter(not(cond)))
-      publishReplacing(dir, m, touch.map(_.name), rewritten, cdcDeletes)
+    rowLevel(dir, "DELETE") { m =>
+      import org.apache.spark.sql.functions.{coalesce, expr, lit}
+      val touch = pruned(m, Some(whereSql))
+      if (touch.nonEmpty) commit(dir, m, "DELETE (copy-on-write)",
+        deleting(Seq.empty, touch, coalesce(expr(whereSql), lit(false))))
+      ()
     }
+
+  /** The live files of `m` the translatable conjuncts of `whereSql`
+    * ([[exprFilter]]) cannot exclude through the zone maps — every live
+    * file without a predicate. An untranslatable conjunct only costs
+    * pruning, never correctness: the op re-evaluates the whole predicate
+    * row by row. */
+  private def pruned(m: Manifest, whereSql: Option[String]): Seq[ManifestFile] = {
+    val pruning = whereSql.toSeq.flatMap { w =>
+      conjuncts(org.apache.spark.sql.SparkSession.active
+        .sessionState.sqlParser.parseExpression(w)).flatMap(exprFilter)
+    }
+    m.entries.filter(e => e.rows > 0 &&
+      pruning.forall(f => ManifestScanBuilder.mightMatch(f, e.stats)))
   }
 
   /** Execute `UPDATE <table at dir> SET col = expr, … [WHERE pred]`
@@ -2413,20 +2422,18 @@ private[graft] object ManifestTable {
     *
     * Scale shape: the WHERE conjuncts that translate to v1 filters
     * ([[exprFilter]]) prune provably-unaffected files via the zone maps —
-    * a selective UPDATE over a 100 TB table rewrites only the files whose
-    * ranges the predicate can touch. An untranslatable conjunct only costs
-    * pruning, never correctness: every touched file is rewritten with the
-    * predicate re-evaluated row-by-row (NULL/FALSE keeps the row
-    * unchanged; every assignment reads the OLD row, per ANSI UPDATE), and
-    * the result publishes in ONE atomic manifest swap. Assignments cast to
-    * the column's declared type so the table schema never drifts. */
+    * a selective UPDATE over a 100 TB table touches only the files whose
+    * ranges the predicate can touch. Every touched file commits through
+    * [[rowLevel]] with the predicate re-evaluated row-by-row (NULL/FALSE
+    * keeps the row unchanged; every assignment reads the OLD row, per ANSI
+    * UPDATE): copy-on-write rewrites it, merge-on-read (the Delta DV-update
+    * shape) appends the UPDATED copies of the matching rows and vectors
+    * their old ordinals — a 1-row update of a 1 GB file is a tiny append +
+    * an 8-byte sidecar, not a rewrite. Assignments cast to the column's
+    * declared type so the table schema never drifts. */
   private[graft] def updateWhere(dir: Path, rawSets: Seq[(String, String)],
-      whereSql: Option[String]): Unit = withConflictRetry("UPDATE") {
+      whereSql: Option[String]): Unit = rowLevel(dir, "UPDATE") { m =>
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
-    assertWritable(dir, "UPDATE")
-    val spark = org.apache.spark.sql.SparkSession.active
-    val m = Manifest.read(dir).getOrElse(
-      throw new IllegalStateException(s"UPDATE: no manifest at $dir"))
     // SET c = DEFAULT substitutes the declared default's SQL (NULL when
     // none — the ANSI rule) ONCE, so every downstream path (COW rewrite,
     // DV append, CDC postimages) evaluates the same expression
@@ -2449,98 +2456,67 @@ private[graft] object ManifestTable {
     }.foreach { c =>
       throw new IllegalArgumentException(s"UPDATE: column $c assigned more than once")
     }
-    val pruning = whereSql.toSeq.flatMap { w =>
-      conjuncts(spark.sessionState.sqlParser.parseExpression(w)).flatMap(exprFilter)
-    }
-    val (touch, keep) = m.entries.partition(e => e.rows > 0 &&
-      pruning.forall(f => ManifestScanBuilder.mightMatch(f, e.stats)))
-    if (touch.isEmpty) return
-    val cond = coalesce(whereSql.map(expr).getOrElse(lit(true)), lit(false))
-    val _ = keep
-    // generated columns recompute from the POST-SET row (Delta's UPDATE
-    // rule) — assigning one directly is rejected, like identity columns
-    val gens = Manifest.generatedCols(m.props)
-    val idSpecs = Manifest.identityCols(m.props)
-    sets.foreach { case (c, _) =>
-      gens.collectFirst { case (n, g) if n.equalsIgnoreCase(c) => g }.foreach { g =>
-        throw new IllegalArgumentException(
-          s"UPDATE: column $c is GENERATED ALWAYS AS ($g) — it recomputes " +
-            "automatically; update its source columns instead")
+    val touch = pruned(m, whereSql)
+    if (touch.nonEmpty) {
+      val cond = coalesce(whereSql.map(expr).getOrElse(lit(true)), lit(false))
+      // generated columns recompute from the POST-SET row (Delta's UPDATE
+      // rule) — assigning one directly is rejected, like identity columns
+      val gens = Manifest.generatedCols(m.props)
+      val idSpecs = Manifest.identityCols(m.props)
+      sets.foreach { case (c, _) =>
+        gens.collectFirst { case (n, g) if n.equalsIgnoreCase(c) => g }.foreach { g =>
+          throw new IllegalArgumentException(
+            s"UPDATE: column $c is GENERATED ALWAYS AS ($g) — it recomputes " +
+              "automatically; update its source columns instead")
+        }
+        if (idSpecs.keys.exists(_.equalsIgnoreCase(c)))
+          throw new IllegalArgumentException(
+            s"UPDATE: identity column $c cannot be assigned")
       }
-      if (idSpecs.keys.exists(_.equalsIgnoreCase(c)))
-        throw new IllegalArgumentException(
-          s"UPDATE: identity column $c cannot be assigned")
-    }
-    // second projection over the post-SET row: recomputing an untouched
-    // row's generated column reproduces its value exactly (generation
-    // expressions are deterministic by DDL contract), so applying it
-    // unconditionally is sound and keeps one codegen stage
-    val regen = m.schema.fields.toIndexedSeq.map { f =>
-      gens.collectFirst { case (n, g) if n.equalsIgnoreCase(f.name) => g } match {
-        case Some(g) => expr(g).cast(f.dataType).as(f.name)
-        case None => col(f.name)
+      // second projection over the post-SET row: recomputing an untouched
+      // row's generated column reproduces its value exactly (generation
+      // expressions are deterministic by DDL contract), so applying it
+      // unconditionally is sound and keeps one codegen stage
+      val regen = m.schema.fields.toIndexedSeq.map { f =>
+        gens.collectFirst { case (n, g) if n.equalsIgnoreCase(f.name) => g } match {
+          case Some(g) => expr(g).cast(f.dataType).as(f.name)
+          case None => col(f.name)
+        }
       }
-    }
-    def regenerated(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      if (gens.isEmpty) df else df.select(regen: _*)
-    val updCols = m.schema.fields.map { f =>
-      sets.find(_._1.equalsIgnoreCase(f.name)) match {
-        case Some((_, rhs)) => expr(rhs).cast(f.dataType).as(f.name)
-        case None => col(f.name)
-      }
-    }
-    // commit-time CDC: both images of every matching row — the preimage is
-    // the old row verbatim, the postimage the same row through the SET
-    // list (one bounded scan of the touched files, same pinned set and
-    // predicate as the rewrite itself). Caveat, stated plainly: this is a
-    // SEPARATE job re-evaluating the SET expressions, so a
-    // NON-DETERMINISTIC rhs (rand(), current_timestamp) records
-    // postimages that can differ from the rows the rewrite committed —
-    // exact CDC is guaranteed for deterministic SET lists only (the same
-    // caveat Delta documents for CDF + nondeterministic expressions).
-    def cdcUpdates: Map[String, String] = writeCdc(dir, m, {
-      val base = spark.read.format("graft.sources.GraftManifestSink")
-        .option("path", dir.toString)
-        .option("files", touch.map(_.name).mkString(","))
-        .load().where(cond)
-      base.select(m.schema.fieldNames.map(col).toIndexedSeq: _*)
-        .withColumn("_change_type", lit("update_preimage"))
-        .unionByName(regenerated(base.select(updCols.toIndexedSeq: _*))
-          .withColumn("_change_type", lit("update_postimage")))
-    })
-    if (m.props.get("tbl.delete.dv").contains("true")) {
-      // MERGE-ON-READ update (the Delta DV-update shape): append the
-      // UPDATED copies of matching rows as new files, and mark the old
-      // ordinals deleted in per-file vectors — a 1-row update of a 1 GB
-      // file is a tiny append + an 8-byte sidecar, not a rewrite.
-      // Non-matching rows of touched files stay in place (live: their
-      // ordinals never enter a vector). Both jobs scan the SAME pinned
-      // file set with the same deterministic predicate, so the appended
-      // set and the deleted set describe the same rows.
-      val appended = rewriteFiles(dir, m, touch,
-        df => regenerated(df.filter(cond).select(updCols.toIndexedSeq: _*)))
-      val hits = spark.read.format("graft.sources.GraftManifestSink")
-        .option("path", dir.toString)
-        .option("files", touch.map(_.name).mkString(","))
-        .load().where(cond)
-        .select(col("_file"), col("_pos"))
-      val dvUpdated = vectorize(dir, touch, hits)
-      publishReplacing(dir, m, dvUpdated.map(_._1),
-        dvUpdated.flatMap(_._2) ++ appended, cdcUpdates)
-    } else {
-      refuseRewriteUnderRowTracking(m.props, "UPDATE (copy-on-write)")
-      val rewritten = rewriteFiles(dir, m, touch, df => {
-        val cols = m.schema.fields.map { f =>
+      def regenerated(df: DataFrame): DataFrame =
+        if (gens.isEmpty) df else df.select(regen: _*)
+      // the SET list over the old row: `value` places each assigned
+      // column's new value (cast to its declared type)
+      def assigned(value: (Column, StructField) => Column): Seq[Column] =
+        m.schema.fields.toIndexedSeq.map { f =>
           sets.find(_._1.equalsIgnoreCase(f.name)) match {
-            case Some((_, rhs)) =>
-              when(cond, expr(rhs).cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+            case Some((_, rhs)) => value(expr(rhs).cast(f.dataType), f).as(f.name)
             case None => col(f.name)
           }
         }
-        regenerated(df.select(cols.toIndexedSeq: _*))
-      })
-      publishReplacing(dir, m, touch.map(_.name), rewritten, cdcUpdates)
+      val updCols = assigned((v, _) => v)
+      commit(dir, m, "UPDATE (copy-on-write)", RowPlan(touch,
+        df => regenerated(df.select(assigned((v, f) =>
+          when(cond, v).otherwise(col(f.name))): _*)),
+        hits = Some(_.where(cond).select(col("_file"), col("_pos"))),
+        appended = Some(df => regenerated(df.filter(cond).select(updCols: _*))),
+        // commit-time CDC: both images of every matching row — the
+        // preimage is the old row verbatim, the postimage the same row
+        // through the SET list. Caveat, stated plainly: this is a SEPARATE
+        // job re-evaluating the SET expressions, so a NON-DETERMINISTIC
+        // rhs (rand(), current_timestamp) records postimages that can
+        // differ from the rows the rewrite committed — exact CDC is
+        // guaranteed for deterministic SET lists only (the same caveat
+        // Delta documents for CDF + nondeterministic expressions).
+        changes = Some { df =>
+          val base = df.where(cond)
+          base.select(m.schema.fieldNames.map(col).toIndexedSeq: _*)
+            .withColumn("_change_type", lit("update_preimage"))
+            .unionByName(regenerated(base.select(updCols: _*))
+              .withColumn("_change_type", lit("update_postimage")))
+        }))
     }
+    ()
   }
 
   /** ROW-LEVEL CHANGE-DATA-FEED with pre/post images, derived at read
@@ -2578,9 +2554,7 @@ private[graft] object ManifestTable {
       else Manifest.readSnapshot(dir, v).map(_.entries.map(e =>
         e.name -> ((e.rows, e.dv.map(_._1)))).toMap).getOrElse(Map.empty)
     def scan(v: Int, files: Iterable[String]) =
-      spark.read.format("graft.sources.GraftManifestSink")
-        .option("path", dir.toString).option("snapshot", v.toString)
-        .option("files", files.mkString(",")).load()
+      scanFiles(spark, dir, files.toSeq, Some(v))
     // commit-time CDC preference: a commit whose snapshot carries a CDC
     // dir DIFFERENT from its predecessor's recorded its exact change rows
     // at write time ([[writeCdc]]) — replay them verbatim (insert-vs-
@@ -2756,11 +2730,8 @@ private[graft] object ManifestTable {
     * (files before, files after). */
   private[graft] def optimize(dir: Path, targetBytes: Long,
       zorderByReq: Option[Seq[String]] = None,
-      whereSql: Option[String] = None): (Int, Int) = withConflictRetry("OPTIMIZE") {
+      whereSql: Option[String] = None): (Int, Int) = rowLevel(dir, "OPTIMIZE") { m =>
     import org.apache.spark.sql.functions.{col, expr}
-    assertWritable(dir, "OPTIMIZE")
-    val m = Manifest.read(dir).getOrElse(
-      throw new IllegalStateException(s"OPTIMIZE: no manifest at $dir"))
     // a CLUSTER BY table re-clusters by its declared spec when OPTIMIZE
     // names no explicit ZORDER (the liquid-clustering maintenance rule);
     // the Z-interleave takes at most 3 dimensions
@@ -2772,13 +2743,7 @@ private[graft] object ManifestTable {
     // table touches that day's files, nothing else. Untranslatable
     // conjuncts only cost scoping (more files compacted), never rows —
     // every scoped file is rewritten whole, no row is dropped.
-    val pruning = whereSql.toSeq.flatMap { w =>
-      conjuncts(org.apache.spark.sql.SparkSession.active
-        .sessionState.sqlParser.parseExpression(w)).flatMap(exprFilter)
-    }
-    val scoped = m.entries.filter(e => e.rows > 0 &&
-      pruning.forall(f => ManifestScanBuilder.mightMatch(f, e.stats)))
-    if (scoped.isEmpty) return (0, 0)
+    val scoped = pruned(m, whereSql)
     val chain = Manifest.resolveChain(dir)
     def sizeOf(e: ManifestFile): Long = {
       val p = Manifest.resolveData(chain, e.name)
@@ -2793,13 +2758,12 @@ private[graft] object ManifestTable {
     val live =
       if (zorderBy.isDefined) scoped
       else scoped.filter(e => e.dv.isDefined || sizeOf(e) < targetBytes * 9 / 10)
-    if (live.isEmpty) return (scoped.length, scoped.length)
-    val bytes = live.map(sizeOf).sum
-    val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+    val n = math.max(1, math.ceil(live.map(sizeOf).sum.toDouble / targetBytes).toInt)
+    if (live.isEmpty) (scoped.length, scoped.length)
     // no-op when the small-file set is already at or under the target count
-    if (live.length <= n && zorderBy.isEmpty) return (live.length, live.length)
-    val transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      zorderBy match {
+    else if (live.length <= n && zorderBy.isEmpty) (live.length, live.length)
+    else {
+      val transform: DataFrame => DataFrame = zorderBy match {
         case None => _.repartition(n)
         case Some(cols) =>
           val keys = cols.map(zScaleKey(m, live, _))
@@ -2818,11 +2782,10 @@ private[graft] object ManifestTable {
             .sortWithinPartitions("__graft_z")
             .drop("__graft_z")
       }
-    refuseRewriteUnderRowTracking(m.props, "OPTIMIZE")
-    val rewritten = rewriteFiles(dir, m, live, transform)
-    publishReplacing(dir, m, live.map(_.name), rewritten,
-      Manifest.noDataChangeStamp())
-    (live.length, rewritten.length)
+      val rewritten = commit(dir, m, "OPTIMIZE",
+        RowPlan(live, transform, props = Manifest.noDataChangeStamp()))
+      (live.length, rewritten.length)
+    }
   }
 
   /** `REORG TABLE … APPLY (PURGE)` (Delta's statement): materialize the
@@ -2835,17 +2798,11 @@ private[graft] object ManifestTable {
     * purity and OS cache locality); archived snapshots keep referencing
     * the vectored originals, so time travel still reads through the DVs
     * until VACUUM reaps them. Returns (files_purged, files_rewritten). */
-  private[graft] def reorgPurge(dir: Path): (Int, Int) = withConflictRetry("REORG") {
-    assertWritable(dir, "REORG")
-    val m = Manifest.read(dir).getOrElse(
-      throw new IllegalStateException(s"REORG: no manifest at $dir"))
+  private[graft] def reorgPurge(dir: Path): (Int, Int) = rowLevel(dir, "REORG") { m =>
     val vectored = m.entries.filter(_.dv.isDefined)
-    if (vectored.isEmpty) return (0, 0)
-    refuseRewriteUnderRowTracking(m.props, "REORG TABLE ... APPLY (PURGE)")
-    val rewritten = rewriteFiles(dir, m, vectored, identity)
-    publishReplacing(dir, m, vectored.map(_.name), rewritten,
-      Manifest.noDataChangeStamp())
-    (vectored.length, rewritten.length)
+    if (vectored.isEmpty) (0, 0)
+    else (vectored.length, commit(dir, m, "REORG TABLE ... APPLY (PURGE)",
+      RowPlan(vectored, props = Manifest.noDataChangeStamp())).length)
   }
 
   /** Order-preserving map of a numeric-ordered column onto the int key
@@ -3356,27 +3313,13 @@ private[sources] class ManifestBatchWrite(dir: Path, schema: StructType,
       import org.apache.spark.sql.functions.{coalesce, lit, not}
       val m = Manifest.read(dir).getOrElse(
         Manifest(Manifest.relaxNullability(schema), Seq.empty))
-      val (drop, rest) = m.entries.partition(e =>
-        filters.forall(f => ManifestScanBuilder.mustMatchAll(f, e.stats)))
-      val (cut, _) = rest.partition(e => e.rows > 0 &&
-        filters.forall(f => ManifestScanBuilder.mightMatch(f, e.stats)))
-      val pred = filters.map(f => ManifestScanBuilder.filterColumn(f).getOrElse(
-        throw new UnsupportedOperationException(
-          s"replaceWhere: cannot evaluate pushed filter $f row-by-row")))
-        .reduceOption(_ && _).getOrElse(lit(true))
-      val rewritten =
-        if (cut.isEmpty) Seq.empty
-        else {
-          ManifestTable.refuseRewriteUnderRowTracking(m.props,
-            "replaceWhere (partial-file rewrite)")
-          ManifestTable.rewriteFiles(dir, m, cut,
-            df => df.filter(not(coalesce(pred, lit(false)))))
-        }
-      ManifestTable.publishReplacing(dir, m, (drop ++ cut).map(_.name),
-        rewritten ++ committed,
-        Manifest.identityCommitProps(m.props, committed))
-      ManifestTable.maybeAutoCompact(dir)
-      ManifestTable.maybeAutoRefreshIndexes(dir)
+      val (drop, cut) = ManifestTable.classify(m.entries, filters)
+      val pred = ManifestTable.rowPredicate(filters, "replaceWhere")
+      ManifestTable.commit(dir, m, "replaceWhere (partial-file rewrite)",
+        ManifestTable.RowPlan(cut, _.filter(not(coalesce(pred, lit(false)))),
+          drop, added = committed,
+          props = Manifest.identityCommitProps(m.props, committed)))
+      ManifestTable.afterWrite(dir)
       return
     }
     // truncate drops old files from the CURRENT manifest only — they stay
@@ -3404,8 +3347,7 @@ private[sources] class ManifestBatchWrite(dir: Path, schema: StructType,
             prevProps ++ Manifest.identityCommitProps(prevProps, committed),
             prev ++ committed)))
     }
-    ManifestTable.maybeAutoCompact(dir)
-    ManifestTable.maybeAutoRefreshIndexes(dir)
+    ManifestTable.afterWrite(dir)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -3505,10 +3447,7 @@ private[sources] class ManifestStreamingWrite(dir: Path, schema: StructType,
       }
     }
     // OUTSIDE the commit lock: compaction takes the same lock itself
-    if (published) {
-      ManifestTable.maybeAutoCompact(dir)
-      ManifestTable.maybeAutoRefreshIndexes(dir)
-    }
+    if (published) ManifestTable.afterWrite(dir)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =

@@ -271,10 +271,7 @@ object MetadataTables {
     val newFiles = (live -- indexed).toSeq.sorted
     val newParts: Set[String] =
       if (newFiles.isEmpty) Set.empty
-      else spark.read.format("graft.sources.GraftManifestSink")
-        .option("path", dir.toString)
-        .option("files", newFiles.mkString(","))
-        .load()
+      else ManifestTable.scanFiles(spark, dir, newFiles)
         .select(org.apache.spark.sql.functions.col(pc).cast("string"))
         .distinct().collect().map(_.getString(0)).toSet
     // dv-drifted files surface in THEIR partitions' details (catch-up
@@ -357,10 +354,7 @@ object MetadataTables {
         val newFiles = (live -- indexed).toSeq.sorted
         val newParts: Set[String] =
           if (newFiles.isEmpty) Set.empty
-          else spark.read.format("graft.sources.GraftManifestSink")
-            .option("path", dir.toString)
-            .option("files", newFiles.mkString(","))
-            .load()
+          else ManifestTable.scanFiles(spark, dir, newFiles)
             .select(org.apache.spark.sql.functions.col(pc).cast("string"))
             .distinct().collect().map(_.getString(0)).toSet
         val allStale = p.version != VectorIndex.AssignVersion

@@ -88,6 +88,19 @@ class JobCountSpec extends SparkSuite {
     ("q_text_bm25_sql", 4, 7),
     ("q_text_phrase_search_asof", 3, 6),
     ("q_text_search_partitioned", 3, 7),
+    // the row-level commit pipeline: DELETE (filter tier copy-on-write
+    // and merge-on-read, expression tier), UPDATE, the file-bounded and
+    // merge-on-read MERGE, replaceWhere, REORG and COPY INTO — each
+    // query's count includes its fixture writes and the final read
+    ("q_delete_rows", 4, 5),
+    ("q_delete_dv", 5, 8),
+    ("q_delete_expr", 3, 4),
+    ("q_update_rows", 4, 5),
+    ("q_merge_bounded", 4, 8),
+    ("q_merge_dv", 6, 12),
+    ("q_replace_where", 4, 6),
+    ("q_reorg_purge", 5, 8),
+    ("q_copy_into", 3, 4),
   )
 
   private def defaultConditions: Boolean =

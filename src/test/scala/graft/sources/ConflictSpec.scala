@@ -148,8 +148,9 @@ class ConflictSpec extends SparkSuite {
     (51L to 60L).map(i => (i, i * 1.0)).toDF("id", "v").coalesce(1)
       .writeTo("graftcf.q.ap").append()
     // the op replaces its (unchanged) file — no conflict, append preserved
-    val rewrite = graft.sources.ManifestTable.rewriteFiles(dir, base,
-      Seq(base.entries.head), df => df.filter($"id" <= 40L))
+    val rewrite = ManifestTable.stage(dir, base,
+      ManifestTable.scanFiles(spark, dir, Seq(base.entries.head.name))
+        .filter($"id" <= 40L), clustered = false)
     ManifestTable.publishReplacing(dir, base,
       Seq(base.entries.head.name), rewrite)
     assert(spark.table("graftcf.q.ap").count() == 50L) // 40 kept + 10 appended

@@ -93,4 +93,35 @@ class DeleteExprSpec extends SparkSuite {
     assert(!e.getMessage.contains("not a graft manifest table"),
       s"non-graft target must take the delegate's path, got: ${e.getMessage}")
   }
+
+  test("row-level DML on a delete.dv table with a shadowing _file or _pos column " +
+    "matches a plain table") {
+    rootDir
+    // a data column named like a metadata column wins the name (Spark's
+    // metadata-conflict rule), so the merge-on-read hit scan cannot read
+    // entry names or ordinals through it: every op must fall back to
+    // copy-on-write instead of vectoring data values
+    Seq((2L, 20.0, "s2"), (11L, 11.0, "s11")).toDF("id", "v", "tag")
+      .createOrReplaceTempView("delx_shadow_src")
+    val ops: Seq[(String, (String, String) => String)] = Seq(
+      "DSv2 DELETE" -> ((t, _) => s"DELETE FROM $t WHERE id = 3"),
+      "expression DELETE" -> ((t, _) => s"DELETE FROM $t WHERE id % 4 = 1"),
+      "UPDATE" -> ((t, _) => s"UPDATE $t SET v = 100.0 WHERE id = 2"),
+      "MERGE" -> ((t, c) => s"MERGE INTO $t t USING delx_shadow_src s " +
+        "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v " +
+        s"WHEN NOT MATCHED THEN INSERT (id, v, $c) VALUES (s.id, s.v, s.tag)"))
+    for (shadow <- Seq("_file", "_pos"); ((op, sql), i) <- ops.zipWithIndex) {
+      def run(dv: Boolean): Seq[(Long, Double, String)] = {
+        val t = s"graftdelx.q.shadow$i${shadow}_${if (dv) "dv" else "plain"}"
+        spark.sql(s"CREATE TABLE $t (id BIGINT, v DOUBLE, $shadow STRING)" +
+          (if (dv) " TBLPROPERTIES ('delete.dv' = 'true')" else ""))
+        (1L to 10L).map(k => (k, k * 1.0, s"x$k")).toDF("id", "v", shadow)
+          .coalesce(1).writeTo(t).append()
+        spark.sql(sql(t, shadow))
+        spark.table(t).orderBy("id").collect()
+          .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq
+      }
+      assert(run(dv = true) == run(dv = false), s"$op with a $shadow column")
+    }
+  }
 }

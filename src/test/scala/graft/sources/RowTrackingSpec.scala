@@ -91,6 +91,30 @@ class RowTrackingSpec extends SparkSuite {
     assert(spark.table("graftrt.q.g").count() == 4)
   }
 
+  test("insert-only MERGE appends under tracking, with and without delete.dv") {
+    rootDir
+    Seq((7L, "v7"), (8L, "v8")).toDF("id", "v").createOrReplaceTempView("rt_ins_src")
+    Seq("mi" -> "", "mv" -> ", 'delete.dv' = 'true'").foreach { case (name, dv) =>
+      val t = s"graftrt.q.$name"
+      spark.sql(s"CREATE TABLE $t (id BIGINT, v STRING) " +
+        s"TBLPROPERTIES ('rowTracking' = 'true'$dv)")
+      (1L to 3L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1)
+        .writeTo(t).append()
+      def ids(): Map[Long, Long] = spark.sql(s"SELECT id, _row_id FROM $t")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val before = ids()
+      // the source matches no target key: no file is rewritten, so the
+      // copy-on-write refusal has nothing to protect
+      spark.sql(s"MERGE INTO $t t USING rt_ins_src s ON t.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *")
+      val after = ids()
+      assert(after.keySet == Set(1L, 2L, 3L, 7L, 8L), s"$name: $after")
+      assert(before.forall { case (k, rid) => after(k) == rid },
+        s"$name: existing rows must keep their ids: $before vs $after")
+      assert(after.values.toSet.size == 5, s"$name: ids must be unique: $after")
+    }
+  }
+
   test("enabling tracking on an existing table seals every entry in the DDL commit") {
     rootDir
     spark.sql("CREATE TABLE graftrt.q.e (id BIGINT)")
