@@ -4,31 +4,38 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, IntegerType,
+  LongType, StringType, StructType}
 
 /** Parser-tier extension (`SparkSessionExtensions.injectParser`) — the last
   * of the four public extension tiers (the others: expressions/functions,
-  * optimizer rule, planner strategy — `functions/GraftExtensions`). Adds ONE
-  * maintenance statement for the manifest-committed sink
-  * ([[graft.sources.GraftManifestSink]]):
+  * optimizer rule, planner strategy — `functions/GraftExtensions`). Adds
+  * this engine's statements to Spark SQL:
+  *  - maintenance and metadata for the manifest-committed tables
+  *    ([[graft.sources.GraftManifestSink]]): VACUUM, OPTIMIZE, REORG,
+  *    RESTORE, SHALLOW CLONE, DESCRIBE HISTORY/DETAIL, branches, tags,
+  *    constraints, SET PARTITIONING, materialized views;
+  *  - row-level DML lowered to the table's commit pipeline: UPDATE,
+  *    MERGE, DELETE with an untranslatable predicate, INSERT … REPLACE
+  *    WHERE, COPY INTO;
+  *  - index DDL (CREATE/DROP/REFRESH TEXT|VECTOR INDEX) and the six
+  *    index-serve statements ([[Serve]]), standalone, composable and
+  *    under EXPLAIN;
+  *  - the QUALIFY clause, rewritten to the subquery it abbreviates.
   *
-  * {{{ VACUUM MANIFEST '<table dir>' [RETAIN n SNAPSHOTS] [OLDER THAN m MINUTES] }}}
-  *
-  * deletes files the commit protocol made unreachable — staged leftovers
-  * from crashed attempts (everything under `_staging/`) and data files no manifest
-  * references (from torn pre-commit failures) — and reports one row per
-  * file removed. The analog of Delta's `VACUUM`, scoped to this sink.
-  *
-  * Everything that is not this statement delegates VERBATIM to Spark's own
-  * parser — the extension adds syntax without forking the grammar.
-  */
+  * A statement that names this engine's keyword but misses its clause
+  * shape raises a targeted error; everything else delegates VERBATIM to
+  * Spark's own parser — the extension adds syntax without forking the
+  * grammar. */
 class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
+  import Serve.balancedCloseFrom
 
   private val Vacuum =
     ("""(?is)\s*VACUUM\s+MANIFEST\s+'([^']+)'(?:\s+RETAIN\s+(\d+)\s+SNAPSHOTS)?""" +
@@ -233,200 +240,10 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     ("""(?is)\s*REFRESH\s+(TEXT|VECTOR)\s+INDEX\s+ON\s+""" +
       """((?:[\w.]+|`[^`]+`)+)\s*\(\s*(\w+)\s*\)\s*;?\s*""").r
 
-  /** `VECTOR SEARCH ON t (col) PROBE (f, f, …) TOP k [PROBES p]
-    * [RERANK r USING PQ] [WHERE pred]` — the index tier's ANN reachable
-    * from plain SQL ([[graft.sources.VectorIndex.searchWhere]]): exact
-    * IVF over the probe's p nearest stored clusters, file pruning via
-    * the posting list, the optional predicate narrowing CANDIDATES
-    * before the top-k. `RERANK r USING PQ` routes through the
-    * compression tier ([[graft.sources.VectorIndex.searchPq]]): ADC
-    * pre-rank over the stored codes, exact rerank of the top-r
-    * survivors; combined with WHERE, the predicate-matching ids
-    * semi-join the codes BEFORE the cutoff
-    * ([[graft.sources.VectorIndex.searchPqWhere]]). An EXPLICIT statement
-    * rather than a transparent `ORDER BY dot(…) LIMIT k` rewrite on
-    * purpose: IVF is approximate (it ranks the probed lists, not the
-    * corpus), and an optimizer rule must never silently trade exactness
-    * for speed. Spark's grammar has no VECTOR SEARCH form, so the regex
-    * never shadows delegate syntax. */
-  private val VecSearch =
-    ("""(?is)\s*VECTOR\s+SEARCH\s+ON\s+((?:[\w.]+|`[^`]+`)+)""" +
-      """\s*\(\s*(\w+)\s*\)\s+PROBE\s*\(([^)]+)\)\s+TOP\s+(\d+)""" +
-      """(?:\s+VERSION\s+AS\s+OF\s+(\d+))?""" +
-      """(?:\s+PROBES\s+(\d+))?(?:\s+RERANK\s+(\d+)\s+USING\s+PQ)?""" +
-      """(?:\s+WHERE\s+(.+?))?\s*;?\s*""").r
-
   /** Split on `sep` at paren depth 0 outside single-quoted literals
     * (shared with the MERGE clause parser). */
   private def splitTop(s: String, sep: Char): Seq[String] =
     MergeParse.splitTop(s, sep)
-
-  /** `VECTOR KNN JOIN ON t (col) USING (<query>) TOP k
-    * [RERANK r USING PQ]` — the batch ANN join
-    * ([[graft.sources.VectorIndex.knnJoin]] / `knnJoinPq`) from plain
-    * SQL: for each row of the USING subquery (any relation yielding the
-    * table's id + embedding columns), its k nearest corpus rows off the
-    * stored geometry. The USING group carries a full subquery (nested
-    * parens, quoted literals), so the head regex stops at its opening
-    * paren and a quote-aware balance scan finds the close; the tail
-    * parses separately. */
-  private val VecKnnHead =
-    ("""(?is)\s*VECTOR\s+KNN\s+JOIN\s+ON\s+((?:[\w.]+|`[^`]+`)+)""" +
-      """\s*\(\s*(\w+)\s*\)\s+USING\s*\(""").r
-  private val VecKnnTail =
-    ("""(?is)\s*TOP\s+(\d+)(?:\s+VERSION\s+AS\s+OF\s+(\d+))?""" +
-      """(?:\s+RERANK\s+(\d+)\s+USING\s+PQ)?""" +
-      """(?:\s+WHERE\s+(.+?))?\s*;?\s*""").r
-
-  /** The balanced close of the paren group OPENING at `open` —
-    * quote-aware like [[vecSubGroup]] (parens inside single-quoted
-    * literals don't count, `''` escapes honored by re-toggling), and —
-    * r14 advice — equally aware of double-quoted strings and backquoted
-    * identifiers inside the USING subquery: a ')' inside `"a)b"` or
-    * `` `a)b` `` must not unbalance the scan. */
-  private def balancedCloseFrom(sql: String, open: Int): Option[Int] = {
-    var i = open
-    var depth = 0
-    var quote: Char = 0
-    while (i < sql.length) {
-      val ch = sql.charAt(i)
-      if (quote != 0) { if (ch == quote) quote = 0 }
-      else if (ch == '\'' || ch == '"' || ch == '`') quote = ch
-      else if (ch == '(') depth += 1
-      else if (ch == ')') { depth -= 1; if (depth == 0) return Some(i) }
-      i += 1
-    }
-    None
-  }
-
-  /** `BM25 SEARCH ON t (col) ID (idCol) TERMS ('a', 'b', …) TOP k
-    * [WHERE <scope>]` — index-accelerated BM25 from plain SQL
-    * ([[graft.sources.TextIndex.bm25TopK]]; a WHERE scope routes through
-    * the per-domain statistics tier, `bm25TopKScoped` — df/N/avgdl over
-    * the scoped sub-corpus, zone-map-served when the layout proves it).
-    * An EXPLICIT statement like VECTOR SEARCH: ranking statistics come
-    * from the index, which a transparent rewrite of an ORDER BY
-    * expression must never silently substitute. */
-  private val Bm25Search =
-    ("""(?is)\s*BM25\s+SEARCH\s+ON\s+((?:[\w.]+|`[^`]+`)+)""" +
-      """\s*\(\s*(\w+)\s*\)\s+ID\s*\(\s*(\w+)\s*\)\s+TERMS\s*\(([^)]+)\)""" +
-      """\s+TOP\s+(\d+)(?:\s+VERSION\s+AS\s+OF\s+(\d+))?""" +
-      """(?:\s+WHERE\s+(.+?))?\s*;?\s*""").r
-
-  private object VecKnn {
-    def unapply(sql: String): Option[(String, String, String, Int,
-        Option[Int], Option[Int], Option[String])] =
-      VecKnnHead.findPrefixMatchOf(sql).flatMap { m =>
-        val open = m.end - 1
-        balancedCloseFrom(sql, open).flatMap { close =>
-          sql.substring(close + 1) match {
-            case VecKnnTail(k, v, r, w)
-              if Option(w).forall(_.count(_ == '\'') % 2 == 0) =>
-              Some((m.group(1), m.group(2), sql.substring(open + 1, close),
-                k.toInt, Option(v).map(_.toInt), Option(r).map(_.toInt),
-                Option(w)))
-            case _ => None
-          }
-        }
-      }
-  }
-
-  /** `SEMANTIC DEDUP ON t (col) USING (<query>) [WHERE <pred>]` — the
-    * index-backed incremental SemDeDup serve path
-    * ([[graft.sources.VectorIndex.semDedupIncremental]]) from plain SQL
-    * (r15 — the C212 "every operator reachable from SQL" rule finished
-    * for the dedup tier): each USING row assigns against the STORED
-    * centroids, hashes against the STORED anchor panel, joins the
-    * STORED corpus band sidecar, and only candidate-bucket files fetch
-    * corpus embeddings. WHERE filters the batch rows BEFORE routing
-    * (the daily-ingest "dedup this partition's arrivals" pin); the
-    * per-row verdicts are batch-row-independent, so the filter
-    * commutes with the dedup. Spark's grammar has no SEMANTIC DEDUP
-    * form, so the regex never shadows delegate syntax. */
-  private val SemDedupHead =
-    ("""(?is)\s*SEMANTIC\s+DEDUP\s+ON\s+((?:[\w.]+|`[^`]+`)+)""" +
-      """\s*\(\s*(\w+)\s*\)\s+USING\s*\(""").r
-  private val SemDedupTail =
-    ("""(?is)(?:\s+VERSION\s+AS\s+OF\s+(\d+))?""" +
-      """(?:\s+WHERE\s+(.+?))?\s*;?\s*""").r
-  private object SemDedup {
-    def unapply(sql: String): Option[(String, String, String,
-        Option[Int], Option[String])] =
-      SemDedupHead.findPrefixMatchOf(sql).flatMap { m =>
-        val open = m.end - 1
-        balancedCloseFrom(sql, open).flatMap { close =>
-          sql.substring(close + 1) match {
-            case SemDedupTail(v, w)
-              if Option(w).forall(_.count(_ == '\'') % 2 == 0) =>
-              Some((m.group(1), m.group(2),
-                sql.substring(open + 1, close),
-                Option(v).map(_.toInt), Option(w)))
-            case _ => None
-          }
-        }
-      }
-  }
-
-  /** `MINHASH DEDUP ON t (col) ID (idCol) USING (<query>) [WHERE
-    * <pred>]` — the index-backed incremental MinHash dedup
-    * ([[graft.sources.TextIndex.dedupIncremental]]) from plain SQL:
-    * each USING row shingles + bands per-row, joins the STORED corpus
-    * signature sidecar with the exact Jaccard fused inline, and corpus
-    * text is never re-read. Same clause conventions as SEMANTIC
-    * DEDUP. */
-  private val MinhashDedupHead =
-    ("""(?is)\s*MINHASH\s+DEDUP\s+ON\s+((?:[\w.]+|`[^`]+`)+)""" +
-      """\s*\(\s*(\w+)\s*\)\s+ID\s*\(\s*(\w+)\s*\)\s+USING\s*\(""").r
-  private object MinhashDedup {
-    def unapply(sql: String): Option[(String, String, String, String,
-        Option[Int], Option[String])] =
-      MinhashDedupHead.findPrefixMatchOf(sql).flatMap { m =>
-        val open = m.end - 1
-        balancedCloseFrom(sql, open).flatMap { close =>
-          sql.substring(close + 1) match {
-            case SemDedupTail(v, w)
-              if Option(w).forall(_.count(_ == '\'') % 2 == 0) =>
-              Some((m.group(1), m.group(2), m.group(3),
-                sql.substring(open + 1, close),
-                Option(v).map(_.toInt), Option(w)))
-            case _ => None
-          }
-        }
-      }
-  }
-
-  /** `BM25 JOIN ON t (col) ID (idCol) USING (<query>) TOP k
-    * [VERSION AS OF v]` — the batch BM25 retrieval join
-    * ([[graft.sources.TextIndex.bm25Join]]) from plain SQL: for each
-    * row of the USING subquery (any relation yielding the table's id +
-    * text columns — the query log shape), its k best-ranked corpus
-    * rows off the stored statistics, one dataflow for the whole batch.
-    * Same USING conventions as VECTOR KNN JOIN (balanced quote-aware
-    * subquery group); VERSION AS OF serves the snapshot's own
-    * statistics, postings and rows. On a BY PARTITION index the USING
-    * query also carries the partition column and each query ranks
-    * within its own slice's statistics. */
-  private val Bm25JoinHead =
-    ("""(?is)\s*BM25\s+JOIN\s+ON\s+((?:[\w.]+|`[^`]+`)+)""" +
-      """\s*\(\s*(\w+)\s*\)\s+ID\s*\(\s*(\w+)\s*\)\s+USING\s*\(""").r
-  private val Bm25JoinTail =
-    """(?is)\s*TOP\s+(\d+)(?:\s+VERSION\s+AS\s+OF\s+(\d+))?\s*;?\s*""".r
-  private object Bm25Join {
-    def unapply(sql: String): Option[(String, String, String, String,
-        Int, Option[Int])] =
-      Bm25JoinHead.findPrefixMatchOf(sql).flatMap { m =>
-        val open = m.end - 1
-        balancedCloseFrom(sql, open).flatMap { close =>
-          sql.substring(close + 1) match {
-            case Bm25JoinTail(k, v) =>
-              Some((m.group(1), m.group(2), m.group(3),
-                sql.substring(open + 1, close),
-                k.toInt, Option(v).map(_.toInt)))
-            case _ => None
-          }
-        }
-      }
-  }
 
   /** Best-effort parse-time check that `target` resolves to one of this
     * engine's manifest tables. A statement this parser would lower based
@@ -438,202 +255,30 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
       .find(org.apache.spark.sql.SparkSession.active, target).isDefined
     catch { case _: Exception => false }
 
-  /** A `(VECTOR SEARCH …)` group INSIDE a larger statement — the
-    * composable-relation form. The rewrite finds the balanced
-    * parenthesized group, builds the search DataFrame ([[VectorSearchDf]]
-    * — plan construction plus the index tier's small metadata reads, no
-    * corpus work), registers it as a session temp view, and substitutes
-    * the view name so the surrounding SELECT/JOIN/CTE parses through the
-    * delegate untouched: `SELECT d.text, v.sim FROM (VECTOR SEARCH ON t
-    * (emb) PROBE (…) TOP 10) v JOIN docs d ON v.vec_id = d.id` works
-    * like any relation. Multiple groups rewrite one per recursion. The
-    * standalone statement form stays a command (it prints ranked rows). */
-  private val VecSubOpen = """(?i)\(\s*VECTOR\s+SEARCH\s+ON""".r
-
-  /** The first `(VECTOR SEARCH` group start that is OUTSIDE any
-    * single-quoted literal, plus its balanced close (quote-aware: parens
-    * inside literals don't count, `''` escapes honored). A match inside
-    * a string literal — `SELECT '(VECTOR SEARCH …)'` — must parse as the
-    * literal it is, and a WHERE containing `')'` in a literal must not
-    * close the group early. */
-  private def vecSubGroup(sql: String): Option[(Int, Int)] = {
-    val starts = VecSubOpen.findAllMatchIn(sql).map(_.start).toSet
-    var i = 0
-    var inQuote = false
-    var open = -1
-    var depth = 0
-    while (i < sql.length) {
-      val ch = sql.charAt(i)
-      if (inQuote) { if (ch == '\'') inQuote = false }
-      else if (ch == '\'') inQuote = true
-      else if (open < 0 && starts.contains(i)) { open = i; depth = 1 }
-      else if (open >= 0 && ch == '(') depth += 1
-      else if (open >= 0 && ch == ')') {
-        depth -= 1
-        if (depth == 0) return Some((open, i))
-      }
-      i += 1
-    }
-    None
-  }
-
-  private def rewriteVecSearchSubqueries(sql: String): Option[String] = {
-    if (VecSubOpen.findFirstIn(sql).isEmpty) return None
-    val (open, close) = vecSubGroup(sql).getOrElse(return None)
-    val inner = sql.substring(open + 1, close)
-    inner match {
-      case VecSearch(target, colName, probeList, topK, version, probes,
-          rerank, where)
-        if Option(where).forall(_.count(_ == '\'') % 2 == 0) =>
-        val spark = org.apache.spark.sql.SparkSession.active
-        // deterministic name (hash of the inner text): a session serving
-        // the same statement repeatedly reuses ONE temp view instead of
-        // leaking a fresh one per parse — the view count is bounded by
-        // the distinct statements parsed
-        val view = "graft_vecsearch_" +
-          java.lang.Integer.toHexString(inner.trim.hashCode)
-        VectorSearchDf.of(spark, target, colName, probeList, topK.toInt,
-            Option(probes).map(_.toInt).getOrElse(1),
-            Option(rerank).map(_.toInt), Option(where),
-            Option(version).map(_.toInt))
-          .createOrReplaceTempView(view)
-        Some(sql.substring(0, open) + view + sql.substring(close + 1))
-      case _ =>
-        customSyntaxError(inner.trim)
-        None
-    }
-  }
-
-  /** A `(VECTOR KNN JOIN …)` / `(BM25 SEARCH …)` group INSIDE a larger
-    * statement — the composable-relation form, same mechanics as the
-    * VECTOR SEARCH relation (balanced quote-aware group, temp-view
-    * substitution, surrounding statement delegates untouched). The
-    * group's OWN balanced close covers nested subqueries (the KNN
-    * join's USING group). */
-  private val VecKnnSubOpen = """(?i)\(\s*VECTOR\s+KNN\s+JOIN\s+ON""".r
-  private val Bm25SubOpen = """(?i)\(\s*BM25\s+SEARCH\s+ON""".r
-  private val Bm25JoinSubOpen = """(?i)\(\s*BM25\s+JOIN\s+ON""".r
-  private val SemDedupSubOpen = """(?i)\(\s*SEMANTIC\s+DEDUP\s+ON""".r
-  private val MinhashDedupSubOpen = """(?i)\(\s*MINHASH\s+DEDUP\s+ON""".r
-
-  /** The first start from `starts` that is OUTSIDE any single-quoted
-    * literal, with its balanced close. */
-  private def groupOutsideQuotes(sql: String,
-      starts: Set[Int]): Option[(Int, Int)] = {
-    var i = 0
-    var inQuote = false
-    var open = -1
-    while (i < sql.length && open < 0) {
-      val ch = sql.charAt(i)
-      if (inQuote) { if (ch == '\'') inQuote = false }
-      else if (ch == '\'') inQuote = true
-      else if (starts.contains(i)) open = i
-      i += 1
-    }
-    if (open < 0) None
-    else balancedCloseFrom(sql, open).map(open -> _)
-  }
-
-  private def rewriteVecKnnSubqueries(sql: String): Option[String] = {
-    val starts = VecKnnSubOpen.findAllMatchIn(sql).map(_.start).toSet
-    if (starts.isEmpty) return None
-    val (open, close) = groupOutsideQuotes(sql, starts).getOrElse(return None)
-    val inner = sql.substring(open + 1, close)
-    inner match {
-      case VecKnn(target, colName, batchSql, topK, version, rerank, where) =>
-        val spark = org.apache.spark.sql.SparkSession.active
-        val view = "graft_vecknn_" +
-          java.lang.Integer.toHexString(inner.trim.hashCode)
-        VectorKnnJoinDf.of(spark, target, colName, batchSql, topK, rerank,
-            where, version)
-          .createOrReplaceTempView(view)
-        Some(sql.substring(0, open) + view + sql.substring(close + 1))
-      case _ =>
-        customSyntaxError(inner.trim)
-        None
-    }
-  }
-
-  private def rewriteBm25Subqueries(sql: String): Option[String] = {
-    val starts = Bm25SubOpen.findAllMatchIn(sql).map(_.start).toSet
-    if (starts.isEmpty) return None
-    val (open, close) = groupOutsideQuotes(sql, starts).getOrElse(return None)
-    val inner = sql.substring(open + 1, close)
-    inner match {
-      case Bm25Search(target, colName, idCol, termsList, topK, version,
-          where)
-        if termsList.count(_ == '\'') % 2 == 0 &&
-          Option(where).forall(_.count(_ == '\'') % 2 == 0) =>
-        val spark = org.apache.spark.sql.SparkSession.active
-        val view = "graft_bm25_" +
-          java.lang.Integer.toHexString(inner.trim.hashCode)
-        Bm25SearchDf.of(spark, target, colName, idCol, termsList,
-            topK.toInt, Option(where), Option(version).map(_.toInt))
-          .createOrReplaceTempView(view)
-        Some(sql.substring(0, open) + view + sql.substring(close + 1))
-      case _ =>
-        customSyntaxError(inner.trim)
-        None
-    }
-  }
-
-  private def rewriteBm25JoinSubqueries(sql: String): Option[String] = {
-    val starts = Bm25JoinSubOpen.findAllMatchIn(sql).map(_.start).toSet
-    if (starts.isEmpty) return None
-    val (open, close) = groupOutsideQuotes(sql, starts).getOrElse(return None)
-    val inner = sql.substring(open + 1, close)
-    inner match {
-      case Bm25Join(target, colName, idCol, batchSql, topK, version) =>
-        val spark = org.apache.spark.sql.SparkSession.active
-        val view = "graft_bm25join_" +
-          java.lang.Integer.toHexString(inner.trim.hashCode)
-        Bm25JoinDf.of(spark, target, colName, idCol, batchSql, topK,
-            version)
-          .createOrReplaceTempView(view)
-        Some(sql.substring(0, open) + view + sql.substring(close + 1))
-      case _ =>
-        customSyntaxError(inner.trim)
-        None
-    }
-  }
-
-  private def rewriteSemDedupSubqueries(sql: String): Option[String] = {
-    val starts = SemDedupSubOpen.findAllMatchIn(sql).map(_.start).toSet
-    if (starts.isEmpty) return None
-    val (open, close) = groupOutsideQuotes(sql, starts).getOrElse(return None)
-    val inner = sql.substring(open + 1, close)
-    inner match {
-      case SemDedup(target, colName, batchSql, version, where) =>
-        val spark = org.apache.spark.sql.SparkSession.active
-        val view = "graft_semdedup_" +
-          java.lang.Integer.toHexString(inner.trim.hashCode)
-        SemanticDedupDf.of(spark, target, colName, batchSql, where, version)
-          .createOrReplaceTempView(view)
-        Some(sql.substring(0, open) + view + sql.substring(close + 1))
-      case _ =>
-        customSyntaxError(inner.trim)
-        None
-    }
-  }
-
-  private def rewriteMinhashDedupSubqueries(sql: String): Option[String] = {
-    val starts = MinhashDedupSubOpen.findAllMatchIn(sql).map(_.start).toSet
-    if (starts.isEmpty) return None
-    val (open, close) = groupOutsideQuotes(sql, starts).getOrElse(return None)
-    val inner = sql.substring(open + 1, close)
-    inner match {
-      case MinhashDedup(target, colName, idCol, batchSql, version, where) =>
-        val spark = org.apache.spark.sql.SparkSession.active
-        val view = "graft_mhdedup_" +
-          java.lang.Integer.toHexString(inner.trim.hashCode)
-        MinhashDedupDf.of(spark, target, colName, idCol, batchSql, where,
-            version)
-          .createOrReplaceTempView(view)
-        Some(sql.substring(0, open) + view + sql.substring(close + 1))
-      case _ =>
-        customSyntaxError(inner.trim)
-        None
-    }
+  /** A serve statement's parenthesized group INSIDE a larger statement —
+    * the composable-relation form. The rewrite finds the first group
+    * outside quoted text ([[Serve.group]]), builds the statement's
+    * DataFrame (plan construction plus the index tier's small metadata
+    * reads, no corpus work), registers it as a session temp view, and
+    * substitutes the view name so the surrounding SELECT/JOIN/CTE parses
+    * through the delegate untouched: `SELECT d.text, v.sim FROM (VECTOR
+    * SEARCH ON t (emb) PROBE (…) TOP 10) v JOIN docs d ON v.vec_id = d.id`
+    * works like any relation. Multiple groups rewrite one per recursion;
+    * a group's own subqueries (a USING query) rewrite when its builder
+    * parses them. A group that does not match its statement's grammar
+    * raises that statement's clause-shape error. */
+  private def rewriteServeGroup(sql: String): Option[String] = for {
+    (open, close) <- Serve.group(sql)
+    inner = sql.substring(open + 1, close)
+    serve <- Serve.unapply(inner).orElse(customSyntaxError(inner.trim))
+  } yield {
+    // deterministic name (hash of the inner text): a session serving the
+    // same statement repeatedly reuses ONE temp view instead of leaking a
+    // fresh one per parse — the view count is bounded by the distinct
+    // statements parsed
+    val view = "graft_serve_" + Integer.toHexString(inner.trim.hashCode)
+    serve.df(SparkSession.active).createOrReplaceTempView(view)
+    sql.substring(0, open) + view + sql.substring(close + 1)
   }
 
   /** `SELECT … QUALIFY <pred> [ORDER BY …] [LIMIT …]` — the
@@ -775,9 +420,8 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
       (if (tail.isEmpty) "" else s" $tail"))
   }
 
-  /** `EXPLAIN [mode] <custom statement>` (r15): the statement families
-    * this parser owns (VECTOR SEARCH / VECTOR KNN JOIN / BM25 SEARCH /
-    * SEMANTIC DEDUP / MINHASH DEDUP) are commands, so the delegate's
+  /** `EXPLAIN [mode] <custom statement>` (r15): the serve statements
+    * this parser owns ([[Serve.syntaxes]]) are commands, so the delegate's
     * EXPLAIN can't see through them — rewrite to the statement's OWN
     * composable-relation form (`EXPLAIN [mode] SELECT * FROM (<stmt>)`)
     * and re-feed, so EXPLAIN renders the underlying serve dataflow's
@@ -793,8 +437,7 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     * statement's own bounded staging. */
   private val ExplainCustom =
     ("""(?is)\s*EXPLAIN(\s+(?:EXTENDED|CODEGEN|COST|FORMATTED))?\s+""" +
-      """((?:VECTOR\s+SEARCH|VECTOR\s+KNN\s+JOIN|BM25\s+SEARCH|""" +
-      """BM25\s+JOIN|SEMANTIC\s+DEDUP|MINHASH\s+DEDUP)\s+ON\s+.*?)\s*;?\s*""").r
+      "((?:" + Serve.keywords + """)\s+ON\s+.*?)\s*;?\s*""").r
 
   private def rewriteExplainCustom(sql: String): Option[String] =
     sql match {
@@ -806,12 +449,7 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 
   override def parsePlan(sqlText: String): LogicalPlan =
     rewriteExplainCustom(sqlText)
-      .orElse(rewriteVecSearchSubqueries(sqlText))
-      .orElse(rewriteVecKnnSubqueries(sqlText))
-      .orElse(rewriteBm25Subqueries(sqlText))
-      .orElse(rewriteBm25JoinSubqueries(sqlText))
-      .orElse(rewriteSemDedupSubqueries(sqlText))
-      .orElse(rewriteMinhashDedupSubqueries(sqlText))
+      .orElse(rewriteServeGroup(sqlText))
       .orElse(rewriteQualify(sqlText)) match {
       case Some(rewritten) => parsePlan(rewritten)
       case None => parsePlanMatched(sqlText)
@@ -858,27 +496,7 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     case DropVecIdx(target, colName) => DropVectorIndexCommand(target, colName)
     case RefreshIdx(kind, target, colName) =>
       RefreshIndexCommand(kind.toLowerCase, target, colName)
-    case VecSearch(target, colName, probeList, topK, version, probes,
-        rerank, where)
-      if Option(where).forall(_.count(_ == '\'') % 2 == 0) =>
-      VectorSearchCommand(target, colName, probeList,
-        topK.toInt, Option(probes).map(_.toInt).getOrElse(1),
-        Option(rerank).map(_.toInt), Option(where),
-        Option(version).map(_.toInt))
-    case VecKnn(target, colName, batchSql, topK, version, rerank, where) =>
-      VectorKnnJoinCommand(target, colName, batchSql, topK, rerank, where,
-        version)
-    case SemDedup(target, colName, batchSql, version, where) =>
-      SemanticDedupCommand(target, colName, batchSql, where, version)
-    case MinhashDedup(target, colName, idCol, batchSql, version, where) =>
-      MinhashDedupCommand(target, colName, idCol, batchSql, where, version)
-    case Bm25Search(target, colName, idCol, termsList, topK, version, where)
-      if termsList.count(_ == '\'') % 2 == 0 &&
-        Option(where).forall(_.count(_ == '\'') % 2 == 0) =>
-      Bm25SearchCommand(target, colName, idCol, termsList, topK.toInt,
-        Option(where), Option(version).map(_.toInt))
-    case Bm25Join(target, colName, idCol, batchSql, topK, version) =>
-      Bm25JoinCommand(target, colName, idCol, batchSql, topK, version)
+    case Serve(serve) => ServeCommand(serve)
     case History(target) => DescribeHistoryCommand(target)
     case Detail(target) => DescribeDetailCommand(target)
     case Optimize(target, targetBytes, where, zc1, zc2, zc3)
@@ -941,62 +559,28 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     * expected clause shape instead of delegating into a generic Spark
     * ParseException that never mentions the statement. Checked from
     * [[mergeOrDelegate]] so every custom-shaped miss lands here. */
-  private val CustomSyntax: Seq[(String, String)] = Seq(
-    "VECTOR SEARCH" ->
-      ("VECTOR SEARCH ON <table> (<col>) PROBE (f, f, …) TOP <k> " +
-        "[VERSION AS OF <v>] [PROBES <p>] [RERANK <r> USING PQ] " +
-        "[WHERE <pred>] — clauses in this order; WHERE quotes must " +
-        "balance; all clauses compose with VERSION AS OF"),
-    "VECTOR KNN JOIN" ->
-      ("VECTOR KNN JOIN ON <table> (<col>) USING (<query>) TOP <k> " +
-        "[VERSION AS OF <v>] [RERANK <r> USING PQ] [WHERE <pred>] — the " +
-        "USING subquery yields the table's id + embedding columns; " +
-        "clauses in this order; all clauses compose with VERSION AS OF"),
-    "BM25 SEARCH" ->
-      ("BM25 SEARCH ON <table> (<col>) ID (<idCol>) TERMS ('a', 'b', …) " +
-        "TOP <k> [VERSION AS OF <v>] [WHERE <scope>] — clauses in this " +
-        "order; TERMS takes single-quoted string literals, quotes must " +
-        "balance; VERSION AS OF serves the snapshot's own statistics " +
-        "(no WHERE)"),
-    "BM25 JOIN" ->
-      ("BM25 JOIN ON <table> (<col>) ID (<idCol>) USING (<query>) " +
-        "TOP <k> [VERSION AS OF <v>] — the USING subquery yields the " +
-        "table's id + text columns (the query log shape); one dataflow " +
-        "ranks every query's top-k; VERSION AS OF serves the snapshot's " +
-        "own statistics, postings and rows"),
-    "SEMANTIC DEDUP" ->
-      ("SEMANTIC DEDUP ON <table> (<col>) USING (<query>) " +
-        "[VERSION AS OF <v>] [WHERE <pred>] — the USING subquery yields " +
-        "the table's id + embedding columns (and the partition column " +
-        "for a BY PARTITION index); VERSION AS OF deduplicates against " +
-        "the snapshot's own corpus; WHERE filters the batch rows before " +
-        "routing; quotes must balance"),
-    "MINHASH DEDUP" ->
-      ("MINHASH DEDUP ON <table> (<col>) ID (<idCol>) USING (<query>) " +
-        "[VERSION AS OF <v>] [WHERE <pred>] — the USING subquery yields " +
-        "the id + text columns; VERSION AS OF deduplicates against the " +
-        "snapshot's own corpus; WHERE filters the batch rows before " +
-        "routing; quotes must balance"),
-    "QUALIFY" ->
-      ("SELECT … FROM … QUALIFY <pred> [ORDER BY …] [LIMIT …] — the " +
-        "post-window filter: name the window expression in the SELECT " +
-        "list and reference its alias in the predicate (rewritten to " +
-        "the subquery it abbreviates; composes with WITH and CTE arms)"),
-    "CREATE VECTOR INDEX" ->
-      ("CREATE VECTOR INDEX ON <table> (<col>) ANCHORS (<idCol>) " +
-        "[LISTS <k>] [SAMPLE <n>] [COARSE PROBES <c>] [BY PARTITION] — " +
-        "clauses in this order"),
-    "DROP VECTOR INDEX" -> "DROP VECTOR INDEX ON <table> (<col>)",
-    "CREATE TEXT INDEX" ->
-      "CREATE TEXT INDEX ON <table> (<col>) [BY PARTITION]",
-    "DROP TEXT INDEX" -> "DROP TEXT INDEX ON <table> (<col>)",
-    "REFRESH TEXT INDEX" -> "REFRESH TEXT INDEX ON <table> (<col>)",
-    "REFRESH VECTOR INDEX" -> "REFRESH VECTOR INDEX ON <table> (<col>)",
-    "VACUUM MANIFEST" ->
-      ("VACUUM MANIFEST '<dir>' [RETAIN <n> SNAPSHOTS] " +
-        "[STAGING OLDER THAN <m> MINUTES] [DRY RUN]"),
-    "COPY INTO" ->
-      "COPY INTO <table> FROM '<dir>' FILEFORMAT = <fmt> [PATTERN = '<glob>']")
+  private val CustomSyntax: Seq[(String, String)] =
+    Serve.syntaxes.map(s => s.keyword -> s.help) ++ Seq(
+      "QUALIFY" ->
+        ("SELECT … FROM … QUALIFY <pred> [ORDER BY …] [LIMIT …] — the " +
+          "post-window filter: name the window expression in the SELECT " +
+          "list and reference its alias in the predicate (rewritten to " +
+          "the subquery it abbreviates; composes with WITH and CTE arms)"),
+      "CREATE VECTOR INDEX" ->
+        ("CREATE VECTOR INDEX ON <table> (<col>) ANCHORS (<idCol>) " +
+          "[LISTS <k>] [SAMPLE <n>] [COARSE PROBES <c>] [BY PARTITION] — " +
+          "clauses in this order"),
+      "DROP VECTOR INDEX" -> "DROP VECTOR INDEX ON <table> (<col>)",
+      "CREATE TEXT INDEX" ->
+        "CREATE TEXT INDEX ON <table> (<col>) [BY PARTITION]",
+      "DROP TEXT INDEX" -> "DROP TEXT INDEX ON <table> (<col>)",
+      "REFRESH TEXT INDEX" -> "REFRESH TEXT INDEX ON <table> (<col>)",
+      "REFRESH VECTOR INDEX" -> "REFRESH VECTOR INDEX ON <table> (<col>)",
+      "VACUUM MANIFEST" ->
+        ("VACUUM MANIFEST '<dir>' [RETAIN <n> SNAPSHOTS] " +
+          "[STAGING OLDER THAN <m> MINUTES] [DRY RUN]"),
+      "COPY INTO" ->
+        "COPY INTO <table> FROM '<dir>' FILEFORMAT = <fmt> [PATTERN = '<glob>']")
 
   private def customSyntaxError(sqlText: String): Option[Nothing] = {
     // normalize only the statement HEAD (longest keyword is 19 chars):
@@ -1567,28 +1151,17 @@ case class RefreshIndexCommand(kind: String, target: String, colName: String)
   }
 }
 
-/** `VECTOR SEARCH ON t (col) PROBE (…) TOP k [PROBES p]
-  * [RERANK r USING PQ] [WHERE pred]` — ANN over the published IVF index
-  * from plain SQL ([[graft.sources.VectorIndex.searchWhere]], or
-  * [[graft.sources.VectorIndex.searchPq]]/`searchPqWhere` when
-  * RERANK … USING PQ is given). The WHERE text compiles against the
-  * table's own columns and narrows CANDIDATES before the top-k — and,
-  * on the PQ path, before the ADC rerank cutoff (the filtered-ANN rule
-  * at both tiers). Output is the anchor id (cast BIGINT), the matched
-  * cluster, and the
-  * exact fixed-point dot — top-k rows, ranked (sim DESC, vec_id). */
 /** Driver-side replacement for the serve commands' final
   * `orderBy(keys).collect()` (r17, guide §2.4): the rows materialize to
   * the driver EITHER WAY (a RunnableCommand returns Seq[Row]), so the
   * distributed sort only added a rangepartitioning SAMPLE job and a sort
-  * exchange per statement execution. Every caller's keys form a TOTAL
+  * exchange per statement execution. Every serve's keys form a TOTAL
   * order (the trailing id/rank column is unique) over non-null
   * fixed-point values, so `java.lang.{Long,Integer,Double}.compare`
   * reproduces Spark's sort exactly (fixed-point arithmetic can produce
   * neither NaN nor -0.0, the two places the orderings could diverge). */
 private[plans] object SortedCollect {
-  def apply(df: org.apache.spark.sql.DataFrame,
-      keys: (String, Boolean)*): Seq[Row] = {
+  def apply(df: DataFrame, keys: (String, Boolean)*): Seq[Row] = {
     val sch = df.schema
     val ks = keys.map { case (n, asc) =>
       (sch.fieldIndex(n), asc, sch(n).dataType) }
@@ -1596,11 +1169,9 @@ private[plans] object SortedCollect {
       def compare(a: Row, b: Row): Int = {
         ks.foreach { case (i, asc, dt) =>
           val c = dt match {
-            case org.apache.spark.sql.types.LongType =>
-              java.lang.Long.compare(a.getLong(i), b.getLong(i))
-            case org.apache.spark.sql.types.IntegerType =>
-              Integer.compare(a.getInt(i), b.getInt(i))
-            case org.apache.spark.sql.types.DoubleType =>
+            case LongType => java.lang.Long.compare(a.getLong(i), b.getLong(i))
+            case IntegerType => Integer.compare(a.getInt(i), b.getInt(i))
+            case DoubleType =>
               java.lang.Double.compare(a.getDouble(i), b.getDouble(i))
             case other => throw new IllegalStateException(
               s"SortedCollect: unsupported sort key type $other")
@@ -1614,84 +1185,240 @@ private[plans] object SortedCollect {
   }
 }
 
-case class VectorSearchCommand(target: String, colName: String,
+/** An index-serve statement, parsed: VECTOR SEARCH, VECTOR KNN JOIN,
+  * BM25 SEARCH, BM25 JOIN, SEMANTIC DEDUP or MINHASH DEDUP. Each
+  * statement is described once: its companion object (a [[Serve.Syntax]])
+  * holds the keyword, the clause grammar and the help text a refusal
+  * quotes; the case class holds the parsed clauses, the normalized output
+  * schema, the order keys and the DataFrame builder — the frame the index
+  * tier's serve pipeline builds for the statement's Scala twin
+  * ([[graft.sources.VectorIndex.serve]], [[graft.sources.TextIndex.serve]]).
+  * The parser runs every step off [[Serve.syntaxes]]: a standalone
+  * statement becomes one [[ServeCommand]]; a parenthesized group inside a
+  * larger statement is built at parse time and substituted as a temp view;
+  * `EXPLAIN <stmt>` re-feeds the statement as that relation.
+  *
+  * The statements are EXPLICIT rather than transparent rewrites of an
+  * `ORDER BY dot(…) LIMIT k` or a BM25 expression on purpose: IVF is
+  * approximate (it ranks the probed lists, not the corpus) and ranking
+  * statistics come from the index, and an optimizer rule must never
+  * silently trade exactness or substitute statistics. Spark's grammar has
+  * none of these forms, so they never shadow delegate syntax. */
+private[plans] sealed trait Serve {
+  /** The output columns (nullable): the ids cast to BIGINT, ranks to
+    * INT, scores to DOUBLE — one schema at every surface. */
+  def schema: Seq[(String, DataType)]
+  /** The total order the standalone statement returns its rows in:
+    * (column, ascending). */
+  def order: Seq[(String, Boolean)]
+  /** The index tier's serve frame, holding the [[schema]] columns. */
+  protected def frame(spark: SparkSession): DataFrame
+  final def df(spark: SparkSession): DataFrame =
+    frame(spark).select(schema.map { case (n, t) => col(n).cast(t) }: _*)
+}
+
+private[plans] object Serve {
+  type Build = PartialFunction[List[String], Serve]
+
+  /** One serve statement's grammar: `<keyword> ON <table> (<col>)`, then
+    * `clauses`, then an optional `;`. A statement that takes a subquery
+    * ends `clauses` at the opening paren of `USING (`; the subquery is the
+    * balanced quote-aware group ([[balancedCloseFrom]] — nested parens and
+    * quoted text inside it are its own), and `tail` must match what
+    * follows it. `build` receives the groups in order — table, column, the
+    * clause groups, the USING text, the tail groups; null for an absent
+    * optional clause — and refuses (by not matching) a free-text clause
+    * whose single quotes do not balance: a quoted literal could hide a
+    * keyword from the regex. */
+  sealed abstract class Syntax(val keyword: String, clauses: String,
+      tail: Option[String], val help: String) {
+    protected def build: Build
+
+    private[plans] val keywordPattern = keyword.replace(" ", """\s+""")
+    private val head = ("""(?is)\s*""" + keywordPattern +
+      """\s+ON\s+((?:[\w.]+|`[^`]+`)+)\s*\(\s*(\w+)\s*\)""" + clauses +
+      (if (tail.isEmpty) End else "")).r
+    private val tailRe = tail.map(t => ("(?is)" + t + End).r)
+
+    def parse(sql: String): Option[Serve] = (tailRe match {
+      case None => head.unapplySeq(sql)
+      case Some(t) => for {
+        m <- head.findPrefixMatchOf(sql)
+        close <- balancedCloseFrom(sql, m.end - 1)
+        rest <- t.unapplySeq(sql.substring(close + 1))
+      } yield m.subgroups ++ (sql.substring(m.end, close) :: rest)
+    }).collect(build)
+  }
+  private final val End = """\s*;?\s*"""
+  /** The tail of both dedup statements. */
+  final val DedupTail = """(?:\s+VERSION\s+AS\s+OF\s+(\d+))?(?:\s+WHERE\s+(.+?))?"""
+
+  lazy val syntaxes: Seq[Syntax] = Seq(VectorSearch, VectorKnnJoin,
+    Bm25Search, Bm25Join, SemanticDedup, MinhashDedup)
+
+  /** The keywords as one regex alternation. */
+  lazy val keywords: String = syntaxes.map(_.keywordPattern).mkString("|")
+  private lazy val Open = ("""(?i)\(\s*(?:""" + keywords + """)\s+ON""").r
+
+  def unapply(sql: String): Option[Serve] =
+    syntaxes.iterator.flatMap(_.parse(sql)).nextOption()
+
+  /** The first `(` opening a serve statement OUTSIDE quoted text — `'…'`
+    * and `"…"` literals, `` `…` `` identifiers (a doubled quote re-toggles)
+    * — with its balanced close. Text that merely spells a statement,
+    * `SELECT "(VECTOR SEARCH ON x)"`, parses as the literal it is. */
+  def group(sql: String): Option[(Int, Int)] = {
+    val starts = Open.findAllMatchIn(sql).map(_.start).toSet
+    if (starts.isEmpty) return None
+    var i = 0
+    var quote: Char = 0
+    while (i < sql.length) {
+      val ch = sql.charAt(i)
+      if (quote != 0) { if (ch == quote) quote = 0 }
+      else if (ch == '\'' || ch == '"' || ch == '`') quote = ch
+      else if (starts(i)) return balancedCloseFrom(sql, i).map(i -> _)
+      i += 1
+    }
+    None
+  }
+
+  /** The balanced close of the paren group OPENING at `open`. Parens
+    * inside single-quoted literals, double-quoted strings and backquoted
+    * identifiers don't count: a ')' inside `'a)b'`, `"a)b"` or `` `a)b` ``
+    * must not unbalance the scan (a doubled `''` re-toggles). */
+  def balancedCloseFrom(sql: String, open: Int): Option[Int] = {
+    var i = open
+    var depth = 0
+    var quote: Char = 0
+    while (i < sql.length) {
+      val ch = sql.charAt(i)
+      if (quote != 0) { if (ch == quote) quote = 0 }
+      else if (ch == '\'' || ch == '"' || ch == '`') quote = ch
+      else if (ch == '(') depth += 1
+      else if (ch == ')') { depth -= 1; if (depth == 0) return Some(i) }
+      i += 1
+    }
+    None
+  }
+
+  /** The quote-parity guard over free-text clauses (null = absent). */
+  def balanced(texts: String*): Boolean =
+    texts.forall(t => t == null || t.count(_ == '\'') % 2 == 0)
+
+  def int(s: String): Option[Int] = Option(s).map(_.toInt)
+}
+
+/** A standalone serve statement: an eager command that builds the
+  * statement's DataFrame and returns its rows in the declared order. */
+private[plans] case class ServeCommand(serve: Serve) extends LeafRunnableCommand {
+  override val output: Seq[Attribute] = serve.schema.map { case (n, t) =>
+    AttributeReference(n, t, nullable = true)() }
+  override def run(spark: SparkSession): Seq[Row] =
+    SortedCollect(serve.df(spark), serve.order: _*)
+}
+
+/** `VECTOR SEARCH ON t (col) PROBE (f, …) TOP k [VERSION AS OF v]
+  * [PROBES p] [RERANK r USING PQ] [WHERE pred]` — ANN over the published
+  * IVF index ([[graft.sources.VectorIndex.searchWhere]]): exact IVF over
+  * the probe's p nearest stored clusters, file pruning via the posting
+  * list, the predicate (compiled against the table's own columns)
+  * narrowing CANDIDATES before the top-k. `RERANK r USING PQ` routes
+  * through the compression tier ([[graft.sources.VectorIndex.searchPq]]):
+  * ADC pre-rank over the stored codes, exact rerank of the top-r
+  * survivors, the predicate semi-joining the codes BEFORE the cutoff.
+  * Output: the anchor id (cast BIGINT), the matched cluster and the exact
+  * fixed-point dot, ranked (sim DESC, vec_id). */
+private[plans] final case class VectorSearch(target: String, colName: String,
     probeList: String, topK: Int, probes: Int, rerank: Option[Int],
-    where: Option[String], version: Option[Int] = None)
-  extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("vec_id", org.apache.spark.sql.types.LongType,
-      nullable = true)(),
-    AttributeReference("list_id", org.apache.spark.sql.types.IntegerType,
-      nullable = true)(),
-    AttributeReference("sim", org.apache.spark.sql.types.DoubleType,
-      nullable = true)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    SortedCollect(VectorSearchDf.of(spark, target, colName, probeList,
-      topK, probes, rerank, where, version),
-      ("sim", false), ("vec_id", true))
+    where: Option[String], version: Option[Int]) extends Serve {
+  def schema = Seq[(String, DataType)](
+    "vec_id" -> LongType, "list_id" -> IntegerType, "sim" -> DoubleType)
+  def order = Seq("sim" -> false, "vec_id" -> true)
+  protected def frame(spark: SparkSession): DataFrame = {
+    val probe = probeList.split(",").map { s =>
+      try s.trim.toFloat catch {
+        case _: NumberFormatException => throw new IllegalArgumentException(
+          s"VECTOR SEARCH: PROBE component '${s.trim}' is not a float " +
+            "literal — PROBE takes a comma-separated float vector")
+      }
+    }
+    import org.apache.spark.sql.functions.expr
+    import graft.sources.VectorIndex
+    VectorIndex.serve(spark, target, colName,
+        VectorIndex.Probe(probe, topK, probes), rerank, where.map(expr),
+        version)
   }
 }
 
-/** `VECTOR KNN JOIN ON t (col) USING (<query>) TOP k [RERANK r USING
-  * PQ]` — the batch ANN join from plain SQL: for each USING row its k
-  * nearest corpus rows off the stored geometry
-  * ([[graft.sources.VectorIndex.knnJoin]]; RERANK … USING PQ routes
-  * through the per-row ADC cutoff, `knnJoinPq`). Normalized output
-  * (vec_id BIGINT = the batch row's id, rank INT, nn_id BIGINT,
-  * sim DOUBLE), ordered (vec_id, rank). */
-case class VectorKnnJoinCommand(target: String, colName: String,
-    batchSql: String, topK: Int, rerank: Option[Int],
-    where: Option[String], version: Option[Int] = None)
-  extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("vec_id", org.apache.spark.sql.types.LongType,
-      nullable = true)(),
-    AttributeReference("rank", org.apache.spark.sql.types.IntegerType,
-      nullable = true)(),
-    AttributeReference("nn_id", org.apache.spark.sql.types.LongType,
-      nullable = true)(),
-    AttributeReference("sim", org.apache.spark.sql.types.DoubleType,
-      nullable = true)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    SortedCollect(VectorKnnJoinDf.of(spark, target, colName, batchSql,
-      topK, rerank, where, version),
-      ("vec_id", true), ("rank", true))
+private[plans] object VectorSearch extends Serve.Syntax("VECTOR SEARCH",
+    """\s+PROBE\s*\(([^)]+)\)\s+TOP\s+(\d+)(?:\s+VERSION\s+AS\s+OF\s+(\d+))?""" +
+      """(?:\s+PROBES\s+(\d+))?(?:\s+RERANK\s+(\d+)\s+USING\s+PQ)?""" +
+      """(?:\s+WHERE\s+(.+?))?""", None,
+    "VECTOR SEARCH ON <table> (<col>) PROBE (f, f, …) TOP <k> " +
+      "[VERSION AS OF <v>] [PROBES <p>] [RERANK <r> USING PQ] " +
+      "[WHERE <pred>] — clauses in this order; WHERE quotes must " +
+      "balance; all clauses compose with VERSION AS OF") {
+  protected def build: Serve.Build = {
+    case List(t, c, probe, k, v, probes, r, w) if Serve.balanced(w) =>
+      VectorSearch(t, c, probe, k.toInt, Option(probes).fold(1)(_.toInt),
+        Serve.int(r), Option(w), Serve.int(v))
   }
 }
 
-/** `BM25 SEARCH ON t (col) ID (idCol) TERMS (…) TOP k [WHERE scope]` —
-  * the search-engine top-k from plain SQL: df per term and the corpus
-  * stats come from the token index (a WHERE scope routes through the
-  * per-domain statistics tier — [[graft.sources.TextIndex
-  * .bm25TopKScoped]]). Normalized output (<idCol> cast BIGINT — the
-  * VECTOR SEARCH anchor-id rule — n_terms BIGINT, score DOUBLE),
-  * ranked (score DESC, id). */
-case class Bm25SearchCommand(target: String, colName: String,
+/** `VECTOR KNN JOIN ON t (col) USING (<query>) TOP k [VERSION AS OF v]
+  * [RERANK r USING PQ] [WHERE pred]` — the batch ANN join
+  * ([[graft.sources.VectorIndex.knnJoin]]; PQ: `knnJoinPq`): for each
+  * row of the USING query (any relation yielding the table's id +
+  * embedding columns; it parses through `spark.sql`, so nested serve
+  * groups rewrite like any statement's), its k nearest corpus rows off
+  * the stored geometry. Output (vec_id BIGINT = the batch row's id,
+  * rank INT, nn_id BIGINT, sim DOUBLE), ordered (vec_id, rank). */
+private[plans] final case class VectorKnnJoin(target: String,
+    colName: String, batchSql: String, topK: Int, rerank: Option[Int],
+    where: Option[String], version: Option[Int]) extends Serve {
+  def schema = Seq[(String, DataType)]("vec_id" -> LongType,
+    "rank" -> IntegerType, "nn_id" -> LongType, "sim" -> DoubleType)
+  def order = Seq("vec_id" -> true, "rank" -> true)
+  protected def frame(spark: SparkSession): DataFrame = {
+    import org.apache.spark.sql.functions.expr
+    import graft.sources.VectorIndex
+    VectorIndex.serve(spark, target, colName,
+        VectorIndex.Batch(spark.sql(batchSql), topK), rerank,
+        where.map(expr), version)
+  }
+}
+
+private[plans] object VectorKnnJoin extends Serve.Syntax("VECTOR KNN JOIN",
+    """\s+USING\s*\(""",
+    Some("""\s*TOP\s+(\d+)(?:\s+VERSION\s+AS\s+OF\s+(\d+))?""" +
+      """(?:\s+RERANK\s+(\d+)\s+USING\s+PQ)?(?:\s+WHERE\s+(.+?))?"""),
+    "VECTOR KNN JOIN ON <table> (<col>) USING (<query>) TOP <k> " +
+      "[VERSION AS OF <v>] [RERANK <r> USING PQ] [WHERE <pred>] — the " +
+      "USING subquery yields the table's id + embedding columns; " +
+      "clauses in this order; all clauses compose with VERSION AS OF") {
+  protected def build: Serve.Build = {
+    case List(t, c, batch, k, v, r, w) if Serve.balanced(w) =>
+      VectorKnnJoin(t, c, batch, k.toInt, Serve.int(r), Option(w),
+        Serve.int(v))
+  }
+}
+
+/** `BM25 SEARCH ON t (col) ID (idCol) TERMS ('a', …) TOP k
+  * [VERSION AS OF v] [WHERE scope]` — index-accelerated BM25
+  * ([[graft.sources.TextIndex.bm25TopK]]): df per term and the corpus
+  * statistics come from the token index; a WHERE scope routes through the
+  * per-domain statistics tier (`bm25TopKScoped` — df/N/avgdl over the
+  * scoped sub-corpus, the snapshot's under VERSION AS OF). Output
+  * (<idCol> cast BIGINT, n_terms BIGINT, score DOUBLE), ranked
+  * (score DESC, id). */
+private[plans] final case class Bm25Search(target: String, colName: String,
     idCol: String, termsList: String, topK: Int, where: Option[String],
-    version: Option[Int] = None)
-  extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference(idCol, org.apache.spark.sql.types.LongType,
-      nullable = true)(),
-    AttributeReference("n_terms", org.apache.spark.sql.types.LongType,
-      nullable = true)(),
-    AttributeReference("score", org.apache.spark.sql.types.DoubleType,
-      nullable = true)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    SortedCollect(Bm25SearchDf.of(spark, target, colName, idCol,
-      termsList, topK, where, version),
-      ("score", false), (idCol, true))
-  }
-}
-
-/** The BM25 SEARCH dataflow as a DataFrame — shared by the standalone
-  * statement and the composable `( … )` relation form. */
-private[plans] object Bm25SearchDf {
-  def of(spark: SparkSession, target: String, colName: String,
-      idCol: String, termsList: String, topK: Int,
-      where: Option[String],
-      version: Option[Int] = None): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
+    version: Option[Int]) extends Serve {
+  def schema = Seq[(String, DataType)](
+    idCol -> LongType, "n_terms" -> LongType, "score" -> DoubleType)
+  def order = Seq("score" -> false, idCol -> true)
+  protected def frame(spark: SparkSession): DataFrame = {
+    import org.apache.spark.sql.functions.expr
     import graft.sources.TextIndex
     val terms = MergeParse.splitTop(termsList, ',').map(_.trim).map { t =>
       if (t.length >= 2 && t.head == '\'' && t.last == '\'')
@@ -1700,204 +1427,142 @@ private[plans] object Bm25SearchDf {
         s"BM25 SEARCH: TERMS component $t is not a single-quoted string " +
           "literal")
     }
-    // WHERE composes with time travel (r15): the scope's statistics
-    // (df/N/avgdl) come from the SNAPSHOT's scoped sub-corpus
     TextIndex.serve(spark, target, colName,
         TextIndex.TopK(idCol, terms, topK, where.map(expr)), version)
-      .select(col(idCol).cast(org.apache.spark.sql.types.LongType),
-        col("n_terms").cast(org.apache.spark.sql.types.LongType),
-        col("score").cast(org.apache.spark.sql.types.DoubleType))
   }
 }
 
-/** `BM25 JOIN ON t (col) ID (idCol) USING (<query>) TOP k` — the batch
-  * BM25 retrieval join from plain SQL: every USING row's k best-ranked
-  * corpus rows off the stored statistics in one dataflow
-  * ([[graft.sources.TextIndex.bm25Join]]). Normalized output
-  * (qid BIGINT = the batch row's id, rank INT, <idCol> BIGINT,
-  * n_terms BIGINT, score DOUBLE), ordered (qid, rank). */
-case class Bm25JoinCommand(target: String, colName: String,
-    idCol: String, batchSql: String, topK: Int,
-    version: Option[Int] = None)
-  extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("qid", org.apache.spark.sql.types.LongType,
-      nullable = true)(),
-    AttributeReference("rank", org.apache.spark.sql.types.IntegerType,
-      nullable = true)(),
-    AttributeReference(idCol, org.apache.spark.sql.types.LongType,
-      nullable = true)(),
-    AttributeReference("n_terms", org.apache.spark.sql.types.LongType,
-      nullable = true)(),
-    AttributeReference("score", org.apache.spark.sql.types.DoubleType,
-      nullable = true)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    SortedCollect(
-      Bm25JoinDf.of(spark, target, colName, idCol, batchSql, topK, version),
-      ("qid", true), ("rank", true))
+private[plans] object Bm25Search extends Serve.Syntax("BM25 SEARCH",
+    """\s+ID\s*\(\s*(\w+)\s*\)\s+TERMS\s*\(([^)]+)\)""" +
+      """\s+TOP\s+(\d+)(?:\s+VERSION\s+AS\s+OF\s+(\d+))?""" +
+      """(?:\s+WHERE\s+(.+?))?""", None,
+    "BM25 SEARCH ON <table> (<col>) ID (<idCol>) TERMS ('a', 'b', …) " +
+      "TOP <k> [VERSION AS OF <v>] [WHERE <scope>] — clauses in this " +
+      "order; TERMS takes single-quoted string literals, quotes must " +
+      "balance; VERSION AS OF serves the snapshot's own statistics " +
+      "(no WHERE)") {
+  protected def build: Serve.Build = {
+    case List(t, c, id, terms, k, v, w) if Serve.balanced(terms, w) =>
+      Bm25Search(t, c, id, terms, k.toInt, Option(w), Serve.int(v))
   }
 }
 
-/** The BM25 JOIN dataflow as a DataFrame — shared by the standalone
-  * statement and the composable `( … )` relation form. The USING
-  * subquery yields the table's own id + text columns (the VECTOR KNN
-  * JOIN convention applied to the text tier). */
-private[plans] object Bm25JoinDf {
-  def of(spark: SparkSession, target: String, colName: String,
-      idCol: String, batchSql: String, topK: Int,
-      version: Option[Int] = None): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
+/** `BM25 JOIN ON t (col) ID (idCol) USING (<query>) TOP k
+  * [VERSION AS OF v]` — the batch BM25 retrieval join
+  * ([[graft.sources.TextIndex.bm25Join]]): for each row of the USING
+  * query (the table's id + text columns — the query-log shape), its k
+  * best-ranked corpus rows off the stored statistics, one dataflow for
+  * the whole batch; on a BY PARTITION index the query also carries the
+  * partition column and ranks within its slice. Output (qid BIGINT = the
+  * batch row's id, rank INT, <idCol> BIGINT, n_terms BIGINT,
+  * score DOUBLE), ordered (qid, rank). */
+private[plans] final case class Bm25Join(target: String, colName: String,
+    idCol: String, batchSql: String, topK: Int, version: Option[Int])
+  extends Serve {
+  def schema = Seq[(String, DataType)]("qid" -> LongType,
+    "rank" -> IntegerType, idCol -> LongType, "n_terms" -> LongType,
+    "score" -> DoubleType)
+  def order = Seq("qid" -> true, "rank" -> true)
+  protected def frame(spark: SparkSession): DataFrame = {
     import graft.sources.TextIndex
     TextIndex.serve(spark, target, colName, TextIndex.Join(idCol,
         spark.sql(batchSql), idCol, colName, topK), version)
-      .select(col("qid").cast(org.apache.spark.sql.types.LongType),
-        col("rank").cast(org.apache.spark.sql.types.IntegerType),
-        col(idCol).cast(org.apache.spark.sql.types.LongType),
-        col("n_terms").cast(org.apache.spark.sql.types.LongType),
-        col("score").cast(org.apache.spark.sql.types.DoubleType))
   }
 }
 
-/** The VECTOR KNN JOIN dataflow as a DataFrame — shared by the
-  * standalone statement and the composable `( … )` relation form. The
-  * USING text parses through `spark.sql` (a plain relation — nested
-  * custom groups rewrite first, like any statement). */
-private[plans] object VectorKnnJoinDf {
-  def of(spark: SparkSession, target: String, colName: String,
-      batchSql: String, topK: Int, rerank: Option[Int],
-      where: Option[String],
-      version: Option[Int] = None): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
-    import graft.sources.VectorIndex
-    VectorIndex.serve(spark, target, colName,
-        VectorIndex.Batch(spark.sql(batchSql), topK), rerank,
-        where.map(expr), version)
-      .select(col("vec_id").cast(org.apache.spark.sql.types.LongType),
-        col("rank").cast(org.apache.spark.sql.types.IntegerType),
-        col("nn_id").cast(org.apache.spark.sql.types.LongType),
-        col("sim").cast(org.apache.spark.sql.types.DoubleType))
+private[plans] object Bm25Join extends Serve.Syntax("BM25 JOIN",
+    """\s+ID\s*\(\s*(\w+)\s*\)\s+USING\s*\(""",
+    Some("""\s*TOP\s+(\d+)(?:\s+VERSION\s+AS\s+OF\s+(\d+))?"""),
+    "BM25 JOIN ON <table> (<col>) ID (<idCol>) USING (<query>) " +
+      "TOP <k> [VERSION AS OF <v>] — the USING subquery yields the " +
+      "table's id + text columns (the query log shape); one dataflow " +
+      "ranks every query's top-k; VERSION AS OF serves the snapshot's " +
+      "own statistics, postings and rows") {
+  protected def build: Serve.Build = {
+    case List(t, c, id, batch, k, v) =>
+      Bm25Join(t, c, id, batch, k.toInt, Serve.int(v))
   }
 }
 
-/** `SEMANTIC DEDUP ON t (col) USING (<query>) [WHERE <pred>]` — the
-  * index-backed incremental SemDeDup from plain SQL
-  * ([[graft.sources.VectorIndex.semDedupIncremental]]). Normalized
-  * output (vec_id BIGINT = the batch row's id, dup_of BIGINT = the
-  * min-id corpus witness or NULL, is_dup BOOLEAN), ordered by
-  * vec_id. */
-case class SemanticDedupCommand(target: String, colName: String,
-    batchSql: String, where: Option[String],
-    version: Option[Int] = None)
-  extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("vec_id", org.apache.spark.sql.types.LongType,
-      nullable = true)(),
-    AttributeReference("dup_of", org.apache.spark.sql.types.LongType,
-      nullable = true)(),
-    AttributeReference("is_dup", org.apache.spark.sql.types.BooleanType,
-      nullable = true)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    SortedCollect(
-      SemanticDedupDf.of(spark, target, colName, batchSql, where, version),
-      ("vec_id", true))
-  }
-}
-
-/** `MINHASH DEDUP ON t (col) ID (idCol) USING (<query>) [WHERE <pred>]`
-  * — the index-backed incremental MinHash dedup from plain SQL
-  * ([[graft.sources.TextIndex.dedupIncremental]]). Normalized output
-  * (<idCol> BIGINT, dup_of BIGINT, is_dup BOOLEAN), ordered by id. */
-case class MinhashDedupCommand(target: String, colName: String,
-    idCol: String, batchSql: String, where: Option[String],
-    version: Option[Int] = None)
-  extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference(idCol, org.apache.spark.sql.types.LongType,
-      nullable = true)(),
-    AttributeReference("dup_of", org.apache.spark.sql.types.LongType,
-      nullable = true)(),
-    AttributeReference("is_dup", org.apache.spark.sql.types.BooleanType,
-      nullable = true)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    SortedCollect(MinhashDedupDf.of(spark, target, colName, idCol,
-      batchSql, where, version),
-      (idCol, true))
-  }
-}
-
-/** The SEMANTIC DEDUP dataflow as a DataFrame — shared by the standalone
-  * statement and the composable `( … )` relation form. WHERE filters the
-  * USING batch BEFORE routing (verdicts are batch-row-independent, so
-  * the filter commutes with the dedup). */
-private[plans] object SemanticDedupDf {
-  def of(spark: SparkSession, target: String, colName: String,
-      batchSql: String, where: Option[String],
-      version: Option[Int] = None): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
+/** `SEMANTIC DEDUP ON t (col) USING (<query>) [VERSION AS OF v]
+  * [WHERE pred]` — the index-backed incremental SemDeDup
+  * ([[graft.sources.VectorIndex.semDedupIncremental]]): each USING row
+  * assigns against the STORED centroids, hashes against the STORED anchor
+  * panel and joins the STORED corpus band sidecar; only candidate-bucket
+  * files fetch corpus embeddings. WHERE filters the batch rows BEFORE
+  * routing (verdicts are batch-row-independent, so the filter commutes
+  * with the dedup); VERSION AS OF deduplicates against the corpus as it
+  * was — the snapshot's own sidecars witness. Output (vec_id BIGINT,
+  * dup_of BIGINT = the min-id corpus witness or NULL, is_dup BOOLEAN),
+  * ordered by vec_id. */
+private[plans] final case class SemanticDedup(target: String,
+    colName: String, batchSql: String, where: Option[String],
+    version: Option[Int]) extends Serve {
+  def schema = Seq[(String, DataType)](
+    "vec_id" -> LongType, "dup_of" -> LongType, "is_dup" -> BooleanType)
+  def order = Seq("vec_id" -> true)
+  protected def frame(spark: SparkSession): DataFrame = {
+    import org.apache.spark.sql.functions.expr
     val batch0 = spark.sql(batchSql)
     val batch = where.fold(batch0)(w => batch0.where(expr(w)))
-    // VERSION AS OF (r15): the batch deduplicates against the corpus
-    // AS IT WAS — the snapshot's own sidecars witness, nothing after
-    // the version does (the ingest-audit reproduction shape)
-    val res = version match {
+    version match {
       case Some(v) => graft.sources.VectorIndex
         .semDedupIncrementalAsOf(spark, target, colName, batch, v)
       case None => graft.sources.VectorIndex
         .semDedupIncremental(spark, target, colName, batch)
     }
-    res.select(col("vec_id").cast(org.apache.spark.sql.types.LongType),
-      col("dup_of").cast(org.apache.spark.sql.types.LongType),
-      col("is_dup").cast(org.apache.spark.sql.types.BooleanType))
   }
 }
 
-/** The MINHASH DEDUP dataflow as a DataFrame — shared by the standalone
-  * statement and the composable `( … )` relation form. */
-private[plans] object MinhashDedupDf {
-  def of(spark: SparkSession, target: String, colName: String,
-      idCol: String, batchSql: String, where: Option[String],
-      version: Option[Int] = None): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
+private[plans] object SemanticDedup extends Serve.Syntax("SEMANTIC DEDUP",
+    """\s+USING\s*\(""", Some(Serve.DedupTail),
+    "SEMANTIC DEDUP ON <table> (<col>) USING (<query>) " +
+      "[VERSION AS OF <v>] [WHERE <pred>] — the USING subquery yields " +
+      "the table's id + embedding columns (and the partition column " +
+      "for a BY PARTITION index); VERSION AS OF deduplicates against " +
+      "the snapshot's own corpus; WHERE filters the batch rows before " +
+      "routing; quotes must balance") {
+  protected def build: Serve.Build = {
+    case List(t, c, batch, v, w) if Serve.balanced(w) =>
+      SemanticDedup(t, c, batch, Option(w), Serve.int(v))
+  }
+}
+
+/** `MINHASH DEDUP ON t (col) ID (idCol) USING (<query>)
+  * [VERSION AS OF v] [WHERE pred]` — the index-backed incremental MinHash
+  * dedup ([[graft.sources.TextIndex.dedupIncremental]]): each USING row
+  * shingles and bands per row and joins the STORED corpus signature
+  * sidecar with the exact Jaccard fused inline; corpus text is never
+  * re-read. Same clause conventions as SEMANTIC DEDUP. Output
+  * (<idCol> BIGINT, dup_of BIGINT, is_dup BOOLEAN), ordered by id. */
+private[plans] final case class MinhashDedup(target: String,
+    colName: String, idCol: String, batchSql: String,
+    where: Option[String], version: Option[Int]) extends Serve {
+  def schema = Seq[(String, DataType)](
+    idCol -> LongType, "dup_of" -> LongType, "is_dup" -> BooleanType)
+  def order = Seq(idCol -> true)
+  protected def frame(spark: SparkSession): DataFrame = {
+    import org.apache.spark.sql.functions.expr
     import graft.sources.TextIndex
     val batch0 = spark.sql(batchSql)
     val batch = where.fold(batch0)(w => batch0.where(expr(w)))
     // the serve path normalizes the id to `doc_id` internally —
     // surface it under the statement's declared ID column name
     TextIndex.serve(spark, target, colName, TextIndex.MinHash(idCol, batch),
-        version)
-      .select(col("doc_id").cast(org.apache.spark.sql.types.LongType)
-          .as(idCol),
-        col("dup_of").cast(org.apache.spark.sql.types.LongType),
-        col("is_dup").cast(org.apache.spark.sql.types.BooleanType))
+        version).withColumnRenamed("doc_id", idCol)
   }
 }
 
-/** The VECTOR SEARCH dataflow as a DataFrame — shared by the standalone
-  * statement ([[VectorSearchCommand]], which orders and collects it) and
-  * the COMPOSABLE subquery form (`SELECT … FROM (VECTOR SEARCH …) v JOIN
-  * …`, which registers it as a relation — see
-  * [[GraftSqlParser.parsePlan]]). Normalized schema (vec_id BIGINT,
-  * list_id INT, sim DOUBLE) at both surfaces. */
-private[plans] object VectorSearchDf {
-  def of(spark: SparkSession, target: String, colName: String,
-      probeList: String, topK: Int, probes: Int, rerank: Option[Int],
-      where: Option[String],
-      version: Option[Int] = None): org.apache.spark.sql.DataFrame = {
-    val probe = probeList.split(",").map { s =>
-      try s.trim.toFloat catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"VECTOR SEARCH: PROBE component '${s.trim}' is not a float " +
-            "literal — PROBE takes a comma-separated float vector")
-      }
-    }
-    import org.apache.spark.sql.functions.{col, expr}
-    import graft.sources.VectorIndex
-    VectorIndex.serve(spark, target, colName,
-        VectorIndex.Probe(probe, topK, probes), rerank, where.map(expr),
-        version)
-      .select(col("vec_id").cast(org.apache.spark.sql.types.LongType),
-        col("list_id").cast(org.apache.spark.sql.types.IntegerType),
-        col("sim").cast(org.apache.spark.sql.types.DoubleType))
+private[plans] object MinhashDedup extends Serve.Syntax("MINHASH DEDUP",
+    """\s+ID\s*\(\s*(\w+)\s*\)\s+USING\s*\(""", Some(Serve.DedupTail),
+    "MINHASH DEDUP ON <table> (<col>) ID (<idCol>) USING (<query>) " +
+      "[VERSION AS OF <v>] [WHERE <pred>] — the USING subquery yields " +
+      "the id + text columns; VERSION AS OF deduplicates against the " +
+      "snapshot's own corpus; WHERE filters the batch rows before " +
+      "routing; quotes must balance") {
+  protected def build: Serve.Build = {
+    case List(t, c, id, batch, v, w) if Serve.balanced(w) =>
+      MinhashDedup(t, c, id, batch, Option(w), Serve.int(v))
   }
 }
 

@@ -1772,6 +1772,51 @@ private[graft] object ManifestTable {
       .map(e => e.name + ":" + e.dv.map(_._1).getOrElse("-"))
       .sorted.mkString("\n"))
 
+  /** An index's COVERAGE sidecar (`covered/` under the index dir, both
+    * [[TextIndex]] and [[VectorIndex]]): one `(file, dv)` row per covered
+    * file — the dv sidecar name each file's index rows reflect (null =
+    * none at derivation time). Two jobs: (a) when the dv digest diverges,
+    * a refresh reads it ([[coverageAndDrift]]) to find WHICH files
+    * drifted (re-derive those, carry the rest — bounded by DV churn, never
+    * the corpus); (b) it records coverage independently of the index
+    * rows, so a file whose rows are ALL deletion-vectored (no stat or
+    * posting row survives the masked scan) still counts as covered
+    * instead of re-deriving on every refresh. Metadata-class: one narrow
+    * row per file. */
+  private[sources] def writeCovered(spark: org.apache.spark.sql.SparkSession,
+      idxDir: Path, m: Manifest, names: Seq[String]): Unit = {
+    import spark.implicits._
+    val byName = m.entries.map(e => e.name -> e.dv.map(_._1)).toMap
+    names.map(n => (n, byName.get(n).flatten.orNull))
+      .toDF("file", "dv")
+      .coalesce(1).write.parquet(idxDir.resolve("covered").toString)
+  }
+
+  /** (covered files, drifted files) for a refresh of the index at
+    * `idxDir` against `m`: coverage from the `covered/` sidecar when
+    * present, else `fallbackIndexed` (a legacy index's recovery from its
+    * own rows); drift = covered files whose recorded dv identity no
+    * longer matches (legacy fallback: any live indexed file that
+    * currently carries a dv — conservative, bounded by the DV'd files,
+    * and the refresh writes `covered/` so the next compares exactly). */
+  private[sources] def coverageAndDrift(spark: org.apache.spark.sql.SparkSession,
+      idxDir: Path, m: Manifest, fallbackIndexed: => Set[String])
+      : (Set[String], Set[String]) = {
+    val liveEntries = m.entries.filter(_.rows > 0)
+    val coveredPath = idxDir.resolve("covered")
+    if (Files.exists(coveredPath)) {
+      val rec = graft.Tables.sidecar(spark, coveredPath.toString).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      (rec.keySet, liveEntries.filter(e => rec.contains(e.name) &&
+        rec(e.name) != e.dv.map(_._1).orNull).map(_.name).toSet)
+    } else {
+      val indexed = fallbackIndexed
+      (indexed, liveEntries
+        .filter(e => indexed(e.name) && e.dv.isDefined)
+        .map(_.name).toSet)
+    }
+  }
+
   /** AUTOMATIC RETRY on optimistic conflict (the Delta/Iceberg commit
     * loop): a row-level operation that loses the publish race recomputes
     * against the FRESH snapshot and tries again — `body` must be the
@@ -1946,6 +1991,10 @@ private[graft] object ManifestTable {
           else stage(dir, m, p.rewrite(scan), p.clustered)
         ((p.drop ++ p.touch).map(_.name), Seq.empty, rewritten)
       }
+    // a plan that drops, touches, stages and adds no file and changes no
+    // property publishes nothing: a no-op never grows the snapshot trail
+    if (replaced.isEmpty && staged.isEmpty && p.added.isEmpty && p.props.isEmpty)
+      return Seq.empty
     // a commit that reads no file and inserts nothing has no change rows
     val cdc = p.changes
       .filter(_ => p.drop.nonEmpty || p.touch.nonEmpty || p.inserts)
@@ -2395,9 +2444,8 @@ private[graft] object ManifestTable {
   private[graft] def deleteWhereSql(dir: Path, whereSql: String): Unit =
     rowLevel(dir, "DELETE") { m =>
       import org.apache.spark.sql.functions.{coalesce, expr, lit}
-      val touch = pruned(m, Some(whereSql))
-      if (touch.nonEmpty) commit(dir, m, "DELETE (copy-on-write)",
-        deleting(Seq.empty, touch, coalesce(expr(whereSql), lit(false))))
+      commit(dir, m, "DELETE (copy-on-write)", deleting(Seq.empty,
+        pruned(m, Some(whereSql)), coalesce(expr(whereSql), lit(false))))
       ()
     }
 

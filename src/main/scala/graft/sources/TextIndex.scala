@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import ManifestTable.{digestOf, dvDigestOf, scanFiles}
+import ManifestTable.{coverageAndDrift, digestOf, dvDigestOf, scanFiles, writeCovered}
 
 /** FILE-LEVEL INVERTED TOKEN INDEX over a managed table's string column —
   * the text-search analog of the zone-map/bloom tier: a posting-list
@@ -161,24 +161,6 @@ object TextIndex {
     stats.coalesce(1).write.parquet(idxDir.resolve("stats").toString)
   }
 
-  /** The COVERAGE sidecar: one `(file, dv)` row per covered file — the
-    * dv sidecar name each file's index rows reflect (null = none at
-    * derivation time). Two jobs: (a) when the dv digest diverges,
-    * [[refresh]] reads this to find WHICH files drifted (re-derive
-    * those, carry the rest — bounded by DV churn, never the corpus);
-    * (b) it records coverage independently of the stat rows, so a file
-    * whose rows are ALL deletion-vectored (no stats row survives the
-    * masked scan) still counts as covered instead of re-deriving on
-    * every refresh. Metadata-class: one narrow row per file. */
-  private def writeCovered(spark: SparkSession, idxDir: Path, m: Manifest,
-      names: Seq[String]): Unit = {
-    import spark.implicits._
-    val byName = m.entries.map(e => e.name -> e.dv.map(_._1)).toMap
-    names.map(n => (n, byName.get(n).flatten.orNull))
-      .toDF("file", "dv")
-      .coalesce(1).write.parquet(idxDir.resolve("covered").toString)
-  }
-
   /** The STORED-SIGNATURE sidecar rows for `names` — `(file, pos, hv,
     * mh)` per live row ([[graft.llm.Dedup.minhashSignatureRows]]): the
     * C69 incremental-dedup contract made a real artifact, so a daily
@@ -330,32 +312,12 @@ object TextIndex {
       // an index persisted by the pre-per-file stats format (one
       // corpus-total row) can't remap — rebuild once, migrating it
       return (build(spark, dir, colName)._1, true)
-    // which files did the stored index cover, under which dv state? The
-    // coverage sidecar records both; a legacy index (no `covered/`)
-    // recovers names from the stat rows and treats any live covered file
-    // that CURRENTLY carries a dv as drifted (conservative — correct,
-    // bounded by the DV'd files; this refresh writes `covered/` so the
-    // next one compares exactly)
-    val liveEntries = m.entries.filter(_.rows > 0)
-    val liveDv = liveEntries.map(e => e.name -> e.dv.map(_._1).orNull).toMap
-    val coveredPath = oldDir.resolve("covered")
-    val recorded: Option[Map[String, String]] =
-      if (Files.exists(coveredPath))
-        Some(graft.Tables.sidecar(spark, coveredPath.toString).collect()
-          .map(r => r.getString(0) -> r.getString(1)).toMap)
-      else None
-    val indexedFiles: Set[String] = recorded.map(_.keySet).getOrElse(
+    // which files did the stored index cover, under which dv state? A
+    // legacy index (no `covered/`) recovers the names from its stat rows
+    val (indexedFiles, drift) = coverageAndDrift(spark, oldDir, m,
       oldStats.select(col("file")).distinct()
         .collect().map(_.getString(0)).toSet)
-    val drift: Set[String] = recorded match {
-      case Some(rec) => liveEntries
-        .filter(e => rec.contains(e.name) &&
-          rec(e.name) != liveDv(e.name)).map(_.name).toSet
-      case None => liveEntries
-        .filter(e => indexedFiles(e.name) && e.dv.isDefined)
-        .map(_.name).toSet
-    }
-    val live = liveEntries.map(_.name)
+    val live = m.entries.filter(_.rows > 0).map(_.name)
     val newFiles = live.filterNot(f => indexedFiles(f) && !drift(f))
     val dead = ((indexedFiles -- live.toSet) ++ drift).toSeq.sorted
     if (namesCurrent && newFiles.isEmpty && dead.isEmpty) {
@@ -367,8 +329,7 @@ object TextIndex {
         // autoRefresh two concurrent readers could both observe
         // covered/ missing and race the parquet write — the loser's
         // "path already exists" failed that refresh spuriously (r14)
-        if (recorded.isEmpty &&
-            !Files.exists(oldDir.resolve("covered")))
+        if (!Files.exists(oldDir.resolve("covered")))
           writeCovered(spark, oldDir, m, live)
       }
       publish(dir, m, p.key, p.idxName, partCol)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType}
 
-import ManifestTable.{digestOf, dvDigestOf, scanFiles}
+import ManifestTable.{coverageAndDrift, digestOf, dvDigestOf, scanFiles, writeCovered}
 
 /** FILE-LEVEL IVF VECTOR INDEX over a managed table's `array<float>`
   * column — ANN with file skipping, the embedding twin of [[TextIndex]]:
@@ -221,45 +221,6 @@ object VectorIndex {
       s"$op: the vector index on $table is STALE and " +
         "spark.graft.index.onStale=fail — run REFRESH VECTOR INDEX (or " +
         "CREATE VECTOR INDEX to retrain) first")
-
-  /** The `(file, dv)` coverage sidecar — same two jobs as the text
-    * tier's: drift attribution when the dv digest diverges, and coverage
-    * for files whose rows are all deletion-vectored (no posting survives
-    * the masked scan). */
-  private def writeCovered(spark: SparkSession, idxDir: Path, m: Manifest,
-      names: Seq[String]): Unit = {
-    import spark.implicits._
-    val byName = m.entries.map(e => e.name -> e.dv.map(_._1)).toMap
-    names.map(n => (n, byName.get(n).flatten.orNull))
-      .toDF("file", "dv")
-      .coalesce(1).write.parquet(idxDir.resolve("covered").toString)
-  }
-
-  /** (covered files, drifted files) for a refresh: coverage from the
-    * `covered/` sidecar when present (it alone records files whose rows
-    * are ALL deletion-vectored), else `fallbackIndexed` (the legacy
-    * posts-derived recovery); drift = covered files whose recorded dv
-    * identity no longer matches (legacy fallback: any live indexed file
-    * that currently carries a dv — conservative, bounded by the DV'd
-    * files, and this refresh writes `covered/` so the next compares
-    * exactly). */
-  private def coverageAndDrift(spark: SparkSession, oldDir: Path,
-      m: Manifest, fallbackIndexed: => Set[String])
-      : (Set[String], Set[String]) = {
-    val liveEntries = m.entries.filter(_.rows > 0)
-    val coveredPath = oldDir.resolve("covered")
-    if (java.nio.file.Files.exists(coveredPath)) {
-      val rec = graft.Tables.sidecar(spark, coveredPath.toString).collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      (rec.keySet, liveEntries.filter(e => rec.contains(e.name) &&
-        rec(e.name) != e.dv.map(_._1).orNull).map(_.name).toSet)
-    } else {
-      val indexed = fallbackIndexed
-      (indexed, liveEntries
-        .filter(e => indexed(e.name) && e.dv.isDefined)
-        .map(_.name).toSet)
-    }
-  }
 
   private def checkCols(m: Manifest, colName: String, idCol: String): Unit = {
     def field(c: String) =

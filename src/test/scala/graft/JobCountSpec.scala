@@ -101,6 +101,13 @@ class JobCountSpec extends SparkSuite {
     ("q_replace_where", 4, 6),
     ("q_reorg_purge", 5, 8),
     ("q_copy_into", 3, 4),
+    // the SQL serve statements: the standalone KNN and BM25 joins, the
+    // PQ-reranked VECTOR SEARCH and the composable VECTOR SEARCH relation
+    // joined back to table columns
+    ("q_vector_knn_join_sql", 12, 19),
+    ("q_text_bm25_join_sql", 9, 17),
+    ("q_vector_search_sql_pq", 8, 11),
+    ("q_vector_search_join", 8, 10),
   )
 
   private def defaultConditions: Boolean =

@@ -78,6 +78,22 @@ class DeleteExprSpec extends SparkSuite {
     assert(rows == Set((2L, 2.0, "delete"), (7L, 7.0, "delete")))
   }
 
+  test("a DELETE that matches no file publishes no snapshot, in both tiers") {
+    rootDir
+    spark.sql("CREATE TABLE graftdelx.q.noop (id BIGINT, v DOUBLE)")
+    val dir = Paths.get(rootDir, "q", "noop")
+    (1L to 10L).map(i => (i, i * 1.0)).toDF("id", "v").coalesce(1)
+      .writeTo("graftdelx.q.noop").append()
+    val before = Manifest.snapshotVersions(dir)
+    // the DSv2 filter tier: the zone maps exclude the only file
+    spark.sql("DELETE FROM graftdelx.q.noop WHERE id = 999")
+    assert(Manifest.snapshotVersions(dir) == before, "DSv2 tier")
+    // the expression tier: the translatable conjunct excludes it too
+    spark.sql("DELETE FROM graftdelx.q.noop WHERE id > 100 AND id % 3 = 0")
+    assert(Manifest.snapshotVersions(dir) == before, "expression tier")
+    assert(spark.table("graftdelx.q.noop").count() == 10L)
+  }
+
   test("a non-manifest target with an untranslatable predicate DELEGATES") {
     // the lowering is shape-triggered; a target owned by another
     // connector must reach Spark's native DELETE path (and ITS error),

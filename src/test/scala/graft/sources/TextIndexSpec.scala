@@ -20,18 +20,8 @@ class TextIndexSpec extends SparkSuite {
     (tag, root)
   }
 
-  private def stage(cat: String): String = {
-    val t = s"$cat.ns.docs"
-    spark.sql(s"CREATE TABLE $t (id BIGINT, text STRING)")
-    // three commits → three files; 'needle' lives in exactly one
-    Seq((1L, "alpha beta gamma"), (2L, "beta gamma delta"))
-      .toDF("id", "text").coalesce(1).writeTo(t).append()
-    Seq((3L, "needle in the hay"), (4L, "gamma hay"))
-      .toDF("id", "text").coalesce(1).writeTo(t).append()
-    Seq((5L, "alpha delta"), (6L, "delta hay"))
-      .toDF("id", "text").coalesce(1).writeTo(t).append()
-    t
-  }
+  private def stage(cat: String): String =
+    IndexFixtures.docs(spark, s"$cat.ns.docs")
 
   private def dirOf(t: String): java.nio.file.Path =
     spark.table(t).queryExecution.analyzed.collectFirst {

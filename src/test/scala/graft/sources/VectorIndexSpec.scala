@@ -12,13 +12,9 @@ import graft.SparkSuite
 class VectorIndexSpec extends SparkSuite {
   import spark.implicits._
 
-  private val dim = 64
-  private def vec(hot: Int, jitter: (Int, Float)* ): Array[Float] = {
-    val a = new Array[Float](dim)
-    a(hot) = 1f
-    jitter.foreach { case (i, x) => a(i) = x }
-    a
-  }
+  private val dim = IndexFixtures.dim
+  private def vec(hot: Int, jitter: (Int, Float)*): Array[Float] =
+    IndexFixtures.vec(hot, jitter: _*)
 
   private def freshCatalog(tag: String): String = {
     val root = Files.createTempDirectory(s"graft_vix_$tag").toString
@@ -28,20 +24,8 @@ class VectorIndexSpec extends SparkSuite {
     tag
   }
 
-  /** Two orthogonal blobs, one commit each: blob A (axis 0) holds vec_ids
-    * 0-5, blob B (axis 1) 6-11, each blob's vectors identical — so every
-    * blob collapses into ONE cluster (equal dots tie-break to the first
-    * anchor) and each posting list covers exactly its blob's file. */
-  private def stage(cat: String): String = {
-    val t = s"$cat.ns.emb"
-    spark.sql(s"CREATE TABLE $t (vec_id BIGINT, label INT, " +
-      "embedding ARRAY<FLOAT>)")
-    val blobA = (0 to 5).map(i => (i.toLong, 0, vec(0, (10, 0.05f))))
-    val blobB = (6 to 11).map(i => (i.toLong, 1, vec(1, (20, 0.05f))))
-    blobA.toDF("vec_id", "label", "embedding").coalesce(1).writeTo(t).append()
-    blobB.toDF("vec_id", "label", "embedding").coalesce(1).writeTo(t).append()
-    t
-  }
+  private def stage(cat: String): String =
+    IndexFixtures.vectors(spark, s"$cat.ns.emb")
 
   private def plannedFiles(df: org.apache.spark.sql.DataFrame): Int = {
     def go(p: org.apache.spark.sql.execution.SparkPlan): Seq[ManifestScan] = {
