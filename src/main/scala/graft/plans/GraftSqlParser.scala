@@ -700,10 +700,8 @@ case class DescribeHistoryCommand(target: String) extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
     val mt = ManifestTarget.of(spark, target, "DESCRIBE HISTORY")
-    import graft.sources.Manifest
-    Manifest.snapshotVersions(mt.dir).flatMap { v =>
-      Manifest.readSnapshot(mt.dir, v).map(m =>
-        Row(v, m.entries.length, m.entries.map(_.liveRows).sum))
+    graft.sources.Commits.history(mt.dir).map { case (v, files, rows, _) =>
+      Row(v, files, rows)
     }
   }
 }
@@ -828,10 +826,10 @@ case class RestoreTableCommand(target: String, version: Int)
   }
 }
 
-/** The time-addressed RESTORE: resolve 'ts' to the NEWEST snapshot whose
-  * archived manifest was committed at or before it (the same mtime
-  * authority the read-side `TIMESTAMP AS OF` uses), then run the
-  * version-addressed restore. */
+/** The time-addressed RESTORE: resolve 'ts' to the NEWEST snapshot
+  * committed at or before it ([[graft.sources.Commits.atOrBefore]], as
+  * the read-side `TIMESTAMP AS OF`), then run the version-addressed
+  * restore. */
 case class RestoreTimestampCommand(target: String, ts: String)
   extends LeafRunnableCommand {
   import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -841,7 +839,6 @@ case class RestoreTimestampCommand(target: String, ts: String)
     AttributeReference("n_rows", LongType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    import graft.sources.Manifest
     val mt = ManifestTarget.of(spark, target, "RESTORE TABLE")
     val cutoff = try java.sql.Timestamp.valueOf(ts).getTime
       catch { case _: IllegalArgumentException =>
@@ -849,10 +846,9 @@ case class RestoreTimestampCommand(target: String, ts: String)
           s"RESTORE TABLE: cannot parse timestamp '$ts' " +
             "(expected yyyy-MM-dd HH:mm:ss[.fff])")
       }
-    val v = Manifest.snapshotVersions(mt.dir).reverse.find { sv =>
-      Files.getLastModifiedTime(mt.dir.resolve(s"_manifest.v$sv")).toMillis <= cutoff
-    }.getOrElse(throw new IllegalArgumentException(
-      s"RESTORE TABLE: no snapshot of $target committed at or before $ts"))
+    val v = graft.sources.Commits.atOrBefore(mt.dir, cutoff).getOrElse(
+      throw new IllegalArgumentException(
+        s"RESTORE TABLE: no snapshot of $target committed at or before $ts"))
     val (files, rows) = graft.sources.ManifestTable.restore(mt.dir, v)
     Seq(Row(v, files, rows))
   }
@@ -1693,7 +1689,7 @@ case class VacuumManifestCommand(dir: String, retainSnapshots: Option[Int],
     // CDC dirs reap whole, behind the same age guard (a DML may have
     // written its CDC rows and not yet swapped its manifest in)
     val cdcReachable: Set[String] =
-      manifests.flatMap(_.props.get(Manifest.CdcDirProp)).toSet
+      manifests.flatMap(graft.sources.Commits.cdcDirOf).toSet
     val cdcOrphans = listed(root)(_.toSeq)
       .filter(p => Files.isDirectory(p) &&
         p.getFileName.toString.startsWith("_cdc_"))

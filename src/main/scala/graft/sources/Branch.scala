@@ -10,8 +10,9 @@ import scala.jdk.CollectionConverters._
   *
   *  - `ALTER TABLE t CREATE BRANCH b` forks the table's CURRENT snapshot
   *    into `t@b` — a metadata-only shallow clone living under the table's
-  *    own directory (`_branch_b/`), with the fork version recorded. Zero
-  *    data movement; reads resolve through the clone chain.
+  *    own directory (`_branch_b/`), with the fork version recorded and the
+  *    props [[Commits.forked]]. Zero data movement; reads resolve through
+  *    the clone chain.
   *  - writes address the branch as an ordinary table: `INSERT INTO t@b`,
   *    row-level DML, OPTIMIZE — all the existing machinery, isolated from
   *    main (copy-on-write divergence, exactly like clones).
@@ -21,8 +22,9 @@ import scala.jdk.CollectionConverters._
   *    has not advanced past the fork point, the branch's current state
   *    becomes main's next version in one atomic swap (branch-local data /
   *    sidecar / segment files move into the table directory first — names
-  *    are globally unique, so the moves can never collide), and the branch
-  *    ref is dropped. A diverged main refuses loudly — not a fast-forward.
+  *    are globally unique, so the moves can never collide; the props are
+  *    [[Commits.republished]] over main's), and the branch ref is dropped.
+  *    A diverged main refuses loudly — not a fast-forward.
   *  - `ALTER TABLE t DROP BRANCH b` abandons the branch: its local files
   *    die with its directory; nothing in main ever referenced them.
   *
@@ -55,16 +57,7 @@ private[graft] object Branch {
       s"CREATE BRANCH: no manifest at $dir"))
     Files.createDirectories(bdir)
     val base = Manifest.snapshotVersions(dir).lastOption.getOrElse(0)
-    // same prop hygiene as SHALLOW CLONE: streaming epoch fences must not
-    // ride into the branch (a resumed query would drop epochs as replays),
-    // and the predecessor-relative layout-commit stamp must not either —
-    // inherited, the branch's first state vs its empty predecessor would
-    // misclassify as a layout commit and branch CDF would emit nothing
-    val props = m.props.filterNot(p =>
-        p._1 == Manifest.LastEpochProp ||
-        p._1.startsWith(Manifest.LastEpochProp + ".") ||
-        p._1 == Manifest.CdcDirProp ||
-        p._1 == Manifest.DataChangeStampProp) +
+    val props = Commits.forked(m.props) +
       (Manifest.CloneSourceProp -> dir.toAbsolutePath.toString) +
       (BaseProp -> base.toString)
     Manifest.write(bdir, Manifest(m.schema, m.entries, props, m.segments))
@@ -110,17 +103,9 @@ private[graft] object Branch {
         e.dv.foreach(d => moveHome(d._1))
       }
       bm.segments.foreach { case (n, _) => moveHome(n) }
-      // the branch's last DML CDC pointer dies with the ref — a published
-      // fast-forward's change semantics are the read-time NET diff. The
-      // layout-commit stamp is predecessor-relative ON MAIN'S CHAIN: the
-      // published manifest must carry main's CURRENT stamp (a branch-side
-      // OPTIMIZE's fresh stamp would misclassify this genuine data-change
-      // publish as a layout commit and CDF would silently skip it)
-      val mainStamp = Manifest.read(dir)
-        .flatMap(_.props.get(Manifest.DataChangeStampProp))
-      val props = bm.props - Manifest.CloneSourceProp - BaseProp -
-        Manifest.CdcDirProp - Manifest.DataChangeStampProp ++
-        mainStamp.map(Manifest.DataChangeStampProp -> _)
+      val props = Commits.republished(
+        Manifest.read(dir).map(_.props).getOrElse(Map.empty),
+        bm.props - Manifest.CloneSourceProp - BaseProp)
       Manifest.write(dir, Manifest(bm.schema, bm.entries, props, bm.segments))
     }
     // the published state is live; the branch ref is spent
@@ -195,11 +180,7 @@ private[graft] object Tag {
           s"CREATE TAG: no manifest at $dir")), cur)
     }
     Files.createDirectories(tdir)
-    val props = m.props.filterNot(p =>
-        p._1 == Manifest.LastEpochProp ||
-        p._1.startsWith(Manifest.LastEpochProp + ".") ||
-        p._1 == Manifest.CdcDirProp ||
-        p._1 == Manifest.DataChangeStampProp) +
+    val props = Commits.forked(m.props) +
       (Manifest.CloneSourceProp -> dir.toAbsolutePath.toString) +
       (PinProp -> v.toString)
     Manifest.write(tdir, Manifest(m.schema, m.entries, props, m.segments))

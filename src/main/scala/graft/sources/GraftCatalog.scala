@@ -202,10 +202,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     * reads resolve absent files through the chain
     * ([[Manifest.resolveChain]]), copy-on-write ops rewrite locally and
     * drop the reference, so the clone diverges file-by-file without ever
-    * touching the source. The streaming epoch watermark is deliberately
-    * NOT inherited — a fresh streaming query into the clone starts its
-    * epochs unfenced (the Delta clone txn-reset rule). History starts
-    * fresh at the clone point. */
+    * touching the source. History starts fresh at the clone point, so the
+    * props are [[Commits.forked]]. */
   private[graft] def shallowClone(ident: Identifier, src: Manifest,
       srcDir: Path): Unit = {
     val dir = tableDir(ident)
@@ -214,27 +212,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     if (dir.toAbsolutePath == srcDir.toAbsolutePath)
       throw new IllegalArgumentException("SHALLOW CLONE: target is the source")
     Files.createDirectories(dir)
-    // Streaming epoch fences live under both the bare key and per-query
-    // `lastEpoch.<queryId>` keys — strip the whole prefix, or a query
-    // resumed against the clone inherits the source's watermark and
-    // silently drops its first epochs as replays.
-    // the CDC pointer is commit-scoped: inherited into a clone it would
-    // claim the source's last DML rows as the clone's first commit
     // the ref-state props stay behind too: cloning a TAG must yield a
     // WRITABLE table pinned at the tagged state (the reproducible-
     // experiment fork), not a second immutable ref; a branch's fork
     // version is meaningless outside its parent directory
-    // the layout-commit stamp is PREDECESSOR-RELATIVE (a commit is a
-    // layout commit iff the stamp CHANGED vs its predecessor): inherited
-    // into a clone whose predecessor is "no table", the clone's first
-    // state would misclassify as a layout commit and CDF/streaming reads
-    // from v0 would silently emit nothing
-    val props = src.props.filterNot(p =>
-        p._1 == Manifest.LastEpochProp ||
-        p._1.startsWith(Manifest.LastEpochProp + ".") ||
-        p._1 == Manifest.CdcDirProp ||
-        p._1 == Manifest.DataChangeStampProp ||
-        p._1 == Tag.PinProp || p._1 == Branch.BaseProp) +
+    val props = Commits.forked(src.props) - Tag.PinProp - Branch.BaseProp +
       (Manifest.CloneSourceProp -> srcDir.toAbsolutePath.toString)
     // carry the SOURCE's segment composition: the clone's root then
     // re-publishes those segment files BY REFERENCE (resolved through the
@@ -292,19 +274,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
   }
 
   /** `TIMESTAMP AS OF t` resolves to the NEWEST snapshot committed at or
-    * before `t` (Spark hands the timestamp as epoch micros) — commit time
-    * is the archived manifest file's mtime, written atomically by the same
-    * swap that published it. Coarser than a logged commit timestamp but
-    * derived from the same single authority; millisecond granularity is
-    * the floor on local filesystems. */
+    * before `t` (Spark hands the timestamp as epoch micros) —
+    * [[Commits.atOrBefore]]; millisecond granularity is the floor on local
+    * filesystems. */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val dir = tableDir(ident)
     if (!Files.exists(dir.resolve("_manifest"))) throw new NoSuchTableException(ident)
     val cutoffMillis = Math.floorDiv(timestampMicros, 1000L)
-    val at = Manifest.snapshotVersions(dir).reverse.find { v =>
-      Files.getLastModifiedTime(dir.resolve(s"_manifest.v$v")).toMillis <= cutoffMillis
-    }
-    val v = at.getOrElse(throw new IllegalArgumentException(
+    val v = Commits.atOrBefore(dir, cutoffMillis).getOrElse(throw new IllegalArgumentException(
       s"TIMESTAMP AS OF: no snapshot of ${ident.name()} committed at or before " +
         java.time.Instant.ofEpochMilli(cutoffMillis)))
     val m = Manifest.readSnapshot(dir, v).getOrElse(throw new IllegalStateException(

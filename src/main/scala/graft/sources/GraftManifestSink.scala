@@ -87,8 +87,8 @@ class GraftManifestSink extends TableProvider {
     }
     val schema = m.map(_.schema).getOrElse(throw new IllegalArgumentException(
       s"no _manifest at $dir: write first, or pass a schema"))
-    // streaming change feed ([[ManifestCdfStream]]): the relation carries
-    // the change columns
+    // streaming change feed ([[ManifestStream.changeFeed]]): the relation
+    // carries the change columns
     if (options.getBoolean("changeFeed", false))
       StructType(schema.fields :+
         StructField("_change_type", StringType, nullable = false) :+
@@ -739,15 +739,6 @@ private[graft] object Manifest {
     }
   }
 
-  /** The newest snapshot committed at or before epoch-millis `cutoff`
-    * (commit time = the archived manifest's mtime — the same authority
-    * the read-side TIMESTAMP AS OF uses); None when every snapshot is
-    * newer. */
-  private[sources] def versionAtOrBefore(dir: Path, cutoff: Long): Option[Int] =
-    snapshotVersions(dir).reverse.find { v =>
-      Files.getLastModifiedTime(dir.resolve(s"_manifest.v$v")).toMillis <= cutoff
-    }
-
   /** Manifest property recording the highest streaming epoch committed to
     * this table — the idempotence watermark [[ManifestStreamingWrite]]
     * checks on replay. */
@@ -756,25 +747,12 @@ private[graft] object Manifest {
   /** Manifest property naming the CDC sub-table (`_cdc_*`) holding the
     * EXACT change rows of the commit that archived this snapshot — set by
     * the row-level DML publishes of a `TBLPROPERTIES ('changeFeed' =
-    * 'true')` table, INHERITED (not re-set) by every other commit.
-    * [[ManifestTable.changes]] attributes a CDC dir to a commit iff the
-    * value CHANGED from the previous snapshot — inheritance self-heals
-    * without prop-stripping on appends/OPTIMIZE. Clone / restore /
-    * fast-forward strip it (their change semantics are the read-time
-    * diff's, not some older commit's recorded rows). */
+    * 'true')` table ([[ManifestTable.writeCdc]]); read by [[Commits]]. */
   private[graft] val CdcDirProp = "cdcDir"
 
-  /** Manifest property stamping a commit as NO-DATA-CHANGE (Delta's
-    * `dataChange=false` file flag, lifted to commit granularity — this
-    * engine's layout ops are whole commits): OPTIMIZE and REORG APPLY
-    * (PURGE) rearrange bytes without changing table CONTENT, so the
-    * change feed must emit NOTHING for them instead of falling into the
-    * rewrite-diff branch (streaming CDF used to refuse such commits on
-    * changeFeed tables, permanently wedging the stream — the table
-    * property was already set; there was nothing else to enable). The
-    * value is a fresh UUID per layout commit: like [[CdcDirProp]], the
-    * prop is INHERITED by later commits, and a commit is a layout commit
-    * iff the value CHANGED from its predecessor. */
+  /** Manifest property stamping a commit as NO-DATA-CHANGE (OPTIMIZE and
+    * REORG APPLY (PURGE)): a fresh UUID per layout commit; read by
+    * [[Commits]]. */
   private[graft] val DataChangeStampProp = "dataChangeStamp"
   private[graft] def noDataChangeStamp(): Map[String, String] =
     Map(DataChangeStampProp ->
@@ -1569,10 +1547,7 @@ private[graft] class ManifestTable(val dir: Path, writeSchema: StructType,
   // without CDF).
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val changesFrom = Option(options.get("changesFrom")).map(_.toInt)
-    val streamOpts = Seq("maxFilesPerTrigger", "maxRowsPerTrigger",
-        "startingVersion", "startingTimestamp", "skipChangeCommits",
-        "ignoreChanges")
-      .flatMap(k => Option(options.get(k)).map(k -> _)).toMap
+    val streamOpts = ManifestStream.options(options)
     new ManifestScanBuilder(dir,
       Option(options.get("changesTo")).map(_.toInt)
         .orElse(Option(options.get("snapshot")).map(_.toInt)).orElse(snapshot),
@@ -1991,10 +1966,18 @@ private[graft] object ManifestTable {
           else stage(dir, m, p.rewrite(scan), p.clustered)
         ((p.drop ++ p.touch).map(_.name), Seq.empty, rewritten)
       }
-    // a plan that drops, touches, stages and adds no file and changes no
-    // property publishes nothing: a no-op never grows the snapshot trail
-    if (replaced.isEmpty && staged.isEmpty && p.added.isEmpty && p.props.isEmpty)
+    // a plan that replaces no file, adds no row and changes no property
+    // publishes nothing: a no-op never grows the snapshot trail. A write
+    // over an empty frame still stages 0-row files; they are unreferenced
+    // here, so they go
+    val adds = staged ++ p.added
+    if (replaced.isEmpty && adds.forall(_.rows == 0) && p.props.isEmpty) {
+      adds.foreach { e =>
+        Files.deleteIfExists(dir.resolve(e.name))
+        e.blobsFile.foreach(b => Files.deleteIfExists(dir.resolve(b)))
+      }
       return Seq.empty
+    }
     // a commit that reads no file and inserts nothing has no change rows
     val cdc = p.changes
       .filter(_ => p.drop.nonEmpty || p.touch.nonEmpty || p.inserts)
@@ -2567,197 +2550,137 @@ private[graft] object ManifestTable {
     ()
   }
 
-  /** ROW-LEVEL CHANGE-DATA-FEED with pre/post images, derived at read
-    * time (Delta's CDC-without-change-files mode): walk the snapshot
-    * trail inside (from, to], and for each commit diff the files it
-    * REPLACED (gone names, or same name with a changed row count /
-    * deletion vector) against the files it ADDED — two bounded scans and
-    * a multiset `exceptAll` each way, so rows a copy-on-write rewrite
-    * merely CARRIED cancel out and only genuinely changed rows surface:
+  /** ROW-LEVEL CHANGE-DATA-FEED with pre/post images: each commit in
+    * (from, to], as [[Commits.classify]] judges it, contributes
     *
-    *  - pure append  → added rows as `insert`;
-    *  - pure delete (files dropped / vectors grown, nothing new) →
-    *    removed rows as `delete`;
-    *  - a rewrite    → `update_preimage` / `update_postimage` pairs.
+    *  - layout       → nothing;
+    *  - recorded CDC → its recorded change rows, replayed verbatim;
+    *  - append       → its added rows as `insert`;
+    *  - rewrite      → the read-time diff of the files it replaced against
+    *    the files it added: removed rows as `delete` when nothing was
+    *    added, else one multiset diff in which carried rows cancel and the
+    *    rest surface as `update_preimage` / `update_postimage` pairs.
     *
     * Cost is O(files touched by the window's commits), never a full-table
-    * scan — the per-commit file sets come straight from the archived
-    * manifests. Approximation stated plainly: inside ONE mixed commit
-    * (e.g. a MERGE that inserts and updates) row-level insert-vs-update
-    * attribution is not derivable without per-row change files; all
-    * non-cancelled added rows of such a commit surface as
-    * `update_postimage`. Output = data columns + `_change_type` +
-    * `_commit_version`. */
+    * scan. Approximation stated plainly: inside ONE mixed rewrite without
+    * recorded CDC (e.g. a MERGE that inserts and updates) insert-vs-update
+    * attribution is not derivable without a declared row key; all
+    * non-cancelled added rows surface as `update_postimage`. Output = data
+    * columns + `_change_type` + `_commit_version`. */
   private[graft] def changes(spark: org.apache.spark.sql.SparkSession,
       dir: Path, from: Int, to: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{abs, col, explode, lit, max, min, sequence, sum, when}
     require(from <= to, s"changes: from=$from > to=$to")
-    val trail = Manifest.snapshotVersions(dir)
-      .filter(v => v >= from && v <= to)
-    if (from > 0 && !trail.headOption.contains(from))
+    if (from > 0 && !Manifest.snapshotVersions(dir).contains(from))
       throw new IllegalArgumentException(
         s"changes: snapshot $from expired or never existed at $dir")
-    def keyed(v: Int): Map[String, (Long, Option[String])] =
-      if (v == 0) Map.empty
-      else Manifest.readSnapshot(dir, v).map(_.entries.map(e =>
-        e.name -> ((e.rows, e.dv.map(_._1)))).toMap).getOrElse(Map.empty)
-    def scan(v: Int, files: Iterable[String]) =
-      scanFiles(spark, dir, files.toSeq, Some(v))
-    // commit-time CDC preference: a commit whose snapshot carries a CDC
-    // dir DIFFERENT from its predecessor's recorded its exact change rows
-    // at write time ([[writeCdc]]) — replay them verbatim (insert-vs-
-    // update attribution inside mixed commits is exact there, where the
-    // diff below cannot attribute). An INHERITED value (appends, OPTIMIZE
-    // carry the prop forward untouched) never claims the old rows.
-    // strict prop read: `None` must mean "no prop", never "snapshot
-    // vacuumed" — an expired predecessor with an INHERITED cdcDir on b
-    // would otherwise misattribute an older commit's recorded rows to b
-    def propOf(v: Int, p: String): Option[String] =
-      if (v == 0) None
-      else Manifest.readSnapshot(dir, v).getOrElse(throw new IllegalStateException(
-        s"changes: snapshot $v expired (VACUUM RETAIN) at $dir — " +
-          "that window is no longer exactly replayable")).props.get(p)
-    def cdcOf(v: Int): Option[String] = propOf(v, Manifest.CdcDirProp)
-    def cdcReplay(a: Int, b: Int): Option[org.apache.spark.sql.DataFrame] = {
-      val bCdc = cdcOf(b)
-      if (bCdc.isEmpty || bCdc == cdcOf(a)) None
-      else {
-        val sub = dir.resolve(bCdc.get)
-        if (!Files.exists(sub.resolve("_manifest")))
-          throw new IllegalStateException(
-            s"changes: commit $b's CDC dir ${bCdc.get} was vacuumed — " +
-              "that window is no longer exactly replayable")
-        val cols = Manifest.readSnapshot(dir, b).get.schema.fieldNames.toSeq
-        val df = spark.read.format("graft.sources.GraftManifestSink")
-          .option("path", sub.toString).load()
-        Some(df.select((cols :+ "_change_type").map(col): _*)
-          .withColumn("_commit_version", lit(b)))
+    val trail = Commits.Trail(dir, "changes",
+      "that window is no longer exactly replayable")
+    def scan(v: Int, files: Seq[ManifestFile]) =
+      scanFiles(spark, dir, files.map(_.name), Some(v))
+    def replay(c: Commits.Commit, cdcDir: String) = {
+      val (sub, _) = trail.recorded(c, cdcDir)
+      val cols = c.after.schema.fieldNames.toSeq
+      spark.read.format("graft.sources.GraftManifestSink")
+        .option("path", sub.toString).load()
+        .select((cols :+ "_change_type").map(col): _*)
+        .withColumn("_commit_version", lit(c.version))
+    }
+    def tagged(c: Commits.Commit, df: org.apache.spark.sql.DataFrame, t: String) =
+      df.select(c.after.schema.fieldNames.map(col).toIndexedSeq: _*)
+        .withColumn("_change_type", lit(t))
+        .withColumn("_commit_version", lit(c.version))
+    def rewrite(c: Commits.Commit, removed: Seq[ManifestFile],
+        added: Seq[ManifestFile]): Option[org.apache.spark.sql.DataFrame] = {
+      val b = c.version
+      val cols = c.after.schema.fieldNames.toSeq
+      def tag(df: org.apache.spark.sql.DataFrame, t: String) = tagged(c, df, t)
+      if (added.isEmpty) return Some(tag(scan(c.prev, removed), "delete"))
+      // metadata alone cannot tell a COW DELETE (old file out, thinner
+      // file in) from a COW UPDATE — the diff can. ONE multiset diff
+      // serves both delta sides: union + per-row side counts + one grouped
+      // aggregate IS exceptAll's own evaluation strategy, run once for
+      // both directions; the sides then derive narrowly from the
+      // checkpointed group counts (multiplicity re-expansion keeps exact
+      // multiset semantics)
+      val pre = scan(c.prev, removed).select(cols.map(col): _*)
+      val post = scan(b, added).select(cols.map(col): _*)
+      val diff = pre
+        .withColumn("_graft_pre", lit(1L)).withColumn("_graft_post", lit(0L))
+        .unionByName(post
+          .withColumn("_graft_pre", lit(0L)).withColumn("_graft_post", lit(1L)))
+        .groupBy(cols.map(col): _*)
+        .agg(sum(col("_graft_pre")).as("_graft_pre"),
+          sum(col("_graft_post")).as("_graft_post"))
+        .where(col("_graft_pre") =!= col("_graft_post"))
+        .localCheckpoint()
+      def side(n: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
+        diff.where(n > 0L)
+          .withColumn("_graft_dup", explode(sequence(lit(1L), n)))
+          .select(cols.map(col): _*)
+      val preD = side(col("_graft_pre") - col("_graft_post"))
+      val postD = side(col("_graft_post") - col("_graft_pre"))
+      // a DECLARED row key (`TBLPROPERTIES ('key' = 'c1[,c2…]')`) makes a
+      // mixed commit's attribution exact without the change feed: ONE
+      // window over the fused diff attributes every row — a key present
+      // on both sides is an update (both images), a post-only key an
+      // insert, a pre-only key a delete. Declared keys are assumed unique
+      // per row (the same contract MERGE's ON key carries)
+      val keyCols = c.after.props.get("tbl.key")
+        .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
+        .filter(ks => ks.nonEmpty &&
+          ks.forall(k => cols.exists(_.equalsIgnoreCase(k))))
+      keyCols match {
+        case Some(ks) =>
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(ks.map(col): _*)
+          val sides = diff
+            .withColumn("_graft_dup", explode(sequence(lit(1L),
+              abs(col("_graft_pre") - col("_graft_post")))))
+            .withColumn("_graft_side",
+              when(col("_graft_pre") > col("_graft_post"), lit("pre"))
+                .otherwise(lit("post")))
+          Some(sides
+            .withColumn("_graft_both",
+              min(col("_graft_side")).over(w) =!=
+                max(col("_graft_side")).over(w))
+            .withColumn("_change_type",
+              when(col("_graft_side") === "post",
+                when(col("_graft_both"), "update_postimage")
+                  .otherwise("insert"))
+                .otherwise(
+                  when(col("_graft_both"), "update_preimage")
+                    .otherwise("delete")))
+            .withColumn("_commit_version", lit(b))
+            .select((cols :+ "_change_type" :+ "_commit_version")
+              .map(col): _*))
+        case None =>
+          // one aggregate over the checkpointed diff answers both
+          // emptiness probes
+          val flags = diff.agg(
+            max(when(col("_graft_pre") > col("_graft_post"), 1)
+              .otherwise(0)),
+            max(when(col("_graft_post") > col("_graft_pre"), 1)
+              .otherwise(0))).collect().head
+          val preEmpty = flags.isNullAt(0) || flags.getInt(0) == 0
+          val postEmpty = flags.isNullAt(1) || flags.getInt(1) == 0
+          if (preEmpty && postEmpty) None // carried rows only
+          else if (postEmpty) Some(tag(preD, "delete"))
+          else if (preEmpty) Some(tag(postD, "insert"))
+          else Some(tag(preD, "update_preimage")
+            .unionByName(tag(postD, "update_postimage")))
       }
     }
-    def changeDiff(a: Int, b: Int): Option[org.apache.spark.sql.DataFrame] = {
-      // a layout commit (OPTIMIZE / REORG PURGE — fresh dataChange stamp)
-      // carries rows without changing content: skip it outright instead
-      // of proving emptiness with two exceptAll jobs
-      if (propOf(b, Manifest.DataChangeStampProp) !=
-          propOf(a, Manifest.DataChangeStampProp)) return None
-      val prev = keyed(a)
-      val curr = keyed(b)
-      val changed = curr.keySet.intersect(prev.keySet)
-        .filter(n => curr(n) != prev(n))
-      val removed = (prev.keySet -- curr.keySet) ++ changed
-      val added = (curr.keySet -- prev.keySet) ++ changed
-      val cols = Manifest.readSnapshot(dir, b).get.schema.fieldNames.toSeq
-      def tag(df: org.apache.spark.sql.DataFrame, t: String) =
-        df.select(cols.map(col): _*)
-          .withColumn("_change_type", lit(t))
-          .withColumn("_commit_version", lit(b))
-      (removed.isEmpty, added.isEmpty) match {
-        case (true, true) => None // props-only commit
-        case (true, false) => Some(tag(scan(b, added), "insert"))
-        case (false, true) => Some(tag(scan(a, removed), "delete"))
-        case (false, false) =>
-          // a rewrite commit: metadata alone cannot tell a COW DELETE (old
-          // file out, thinner file in) from a COW UPDATE — the diff can: a
-          // one-sided diff IS a pure delete / pure insert. Each emptiness
-          // probe is one bounded job over this commit's own files.
-          val pre = scan(a, removed).select(cols.map(col): _*)
-          val post = scan(b, added).select(cols.map(col): _*)
-          // ONE multiset diff for BOTH delta sides (r17, §2.4 — r16
-          // materialized each side's exceptAll separately: two checkpoint
-          // jobs that each scanned pre AND post, plus two isEmpty probe
-          // jobs in the keyless branch — 4 jobs per rewrite window).
-          // union + per-row side counts + one grouped aggregate IS
-          // exceptAll's own evaluation strategy, run once for both
-          // directions; the sides then derive narrowly from the
-          // checkpointed group counts (multiplicity re-expansion keeps
-          // exact multiset semantics), and emptiness of either side is
-          // one driver lookup over the same frame.
-          val diff = pre
-            .withColumn("_graft_pre", lit(1L)).withColumn("_graft_post", lit(0L))
-            .unionByName(post
-              .withColumn("_graft_pre", lit(0L)).withColumn("_graft_post", lit(1L)))
-            .groupBy(cols.map(col): _*)
-            .agg(sum(col("_graft_pre")).as("_graft_pre"),
-              sum(col("_graft_post")).as("_graft_post"))
-            .where(col("_graft_pre") =!= col("_graft_post"))
-            .localCheckpoint()
-          def side(n: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
-            diff.where(n > 0L)
-              .withColumn("_graft_dup",
-                explode(sequence(lit(1L), n)))
-              .select(cols.map(col): _*)
-          val preD = side(col("_graft_pre") - col("_graft_post"))
-          val postD = side(col("_graft_post") - col("_graft_pre"))
-          // a DECLARED row key (`TBLPROPERTIES ('key' = 'c1[,c2…]')`)
-          // makes a MIXED commit's attribution exact WITHOUT the change
-          // feed: a post-side row whose key exists on the pre side is an
-          // update (both images); a fresh key is an insert; a vanished
-          // key a delete — the key-anti/semi joins run over the two
-          // delta-sized sides only, and SUBSUME the emptiness probes (a
-          // pure append keys everything to `insert`, a pure delete to
-          // `delete`, a carried-only rewrite to nothing) — two fewer
-          // driver jobs per keyed commit. Declared keys are assumed
-          // unique per row (the same contract MERGE's ON key carries);
-          // without the prop the probe-classified approximation stands.
-          val keyCols = Manifest.readSnapshot(dir, b)
-            .flatMap(_.props.get("tbl.key"))
-            .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-            .filter(ks => ks.nonEmpty &&
-              ks.forall(k => cols.exists(_.equalsIgnoreCase(k))))
-          keyCols match {
-            case Some(ks) =>
-              // ONE window over the fused diff attributes every row
-              // (r17 — was two distinct-key frames + four semi/anti join
-              // legs, each re-deriving its delta side): a key present on
-              // both sides is an update (both images), a post-only key
-              // an insert, a pre-only key a delete — exactly the old
-              // join-leg classification under the declared unique-key
-              // contract the joins already assumed.
-              val w = org.apache.spark.sql.expressions.Window
-                .partitionBy(ks.map(col): _*)
-              val sides = diff
-                .withColumn("_graft_dup", explode(sequence(lit(1L),
-                  abs(col("_graft_pre") - col("_graft_post")))))
-                .withColumn("_graft_side",
-                  when(col("_graft_pre") > col("_graft_post"), lit("pre"))
-                    .otherwise(lit("post")))
-              val attributed = sides
-                .withColumn("_graft_both",
-                  min(col("_graft_side")).over(w) =!=
-                    max(col("_graft_side")).over(w))
-                .withColumn("_change_type",
-                  when(col("_graft_side") === "post",
-                    when(col("_graft_both"), "update_postimage")
-                      .otherwise("insert"))
-                    .otherwise(
-                      when(col("_graft_both"), "update_preimage")
-                        .otherwise("delete")))
-                .withColumn("_commit_version", lit(b))
-                .select((cols :+ "_change_type" :+ "_commit_version")
-                  .map(col): _*)
-              Some(attributed)
-            case None =>
-              // one aggregate over the checkpointed diff answers both
-              // emptiness probes (r17 — was two isEmpty jobs)
-              val flags = diff.agg(
-                max(when(col("_graft_pre") > col("_graft_post"), 1)
-                  .otherwise(0)),
-                max(when(col("_graft_post") > col("_graft_pre"), 1)
-                  .otherwise(0))).collect().head
-              val preEmpty = flags.isNullAt(0) || flags.getInt(0) == 0
-              val postEmpty = flags.isNullAt(1) || flags.getInt(1) == 0
-              if (preEmpty && postEmpty) None // carried rows only (compaction)
-              else if (postEmpty) Some(tag(preD, "delete"))
-              else if (preEmpty) Some(tag(postD, "insert"))
-              else Some(tag(preD, "update_preimage")
-                .unionByName(tag(postD, "update_postimage")))
-          }
+    val frames = trail.commits(from, to).flatMap { c =>
+      c.change match {
+        case Commits.Layout => None
+        case Commits.Recorded(cdcDir, _, _) => Some(replay(c, cdcDir))
+        case Commits.Append(added) =>
+          if (added.isEmpty) None // props-only commit
+          else Some(tagged(c, scan(c.version, added), "insert"))
+        case Commits.Rewrite(removed, added) => rewrite(c, removed, added)
       }
-    }
-    val base = if (from == 0) 0 +: trail else trail
-    val frames = base.zip(base.drop(1)).flatMap { case (a, b) =>
-      cdcReplay(a, b).orElse(changeDiff(a, b))
-    }
+    }.toSeq
     frames.reduceOption(_.unionByName(_)).getOrElse {
       val sch = Manifest.read(dir).map(_.schema).getOrElse(
         new StructType(Array.empty))
@@ -2927,10 +2850,9 @@ private[graft] object ManifestTable {
     * as the CURRENT state — a metadata-only rollback (the old files are
     * still on disk unless VACUUM reaped them, which fails the restore
     * loudly up front). The restore itself archives the pre-restore state,
-    * so a mistaken rollback is itself rollback-able. The streaming epoch
-    * watermark stays MONOTONE: restoring data must not re-open the door to
-    * replayed epochs, so the higher of (current, snapshot) lastEpoch
-    * survives. Returns (files, rows) of the restored state. */
+    * so a mistaken rollback is itself rollback-able. Its props follow
+    * [[Commits.republished]]. Returns (files, rows) of the restored
+    * state. */
   private[graft] def restore(dir: Path, version: Int): (Int, Long) = {
     assertWritable(dir, "RESTORE")
     ManifestLock.withLock(dir) {
@@ -2944,24 +2866,9 @@ private[graft] object ManifestTable {
         throw new IllegalStateException(
           s"RESTORE: data file ${missing.head.name} of snapshot $version was " +
             "vacuumed — that version is no longer restorable")
-      val curEpoch = Manifest.read(dir)
-        .flatMap(_.props.get(Manifest.LastEpochProp)).map(_.toLong)
-      val snapEpoch = snap.props.get(Manifest.LastEpochProp).map(_.toLong)
-      // the layout-commit stamp is predecessor-relative: the restored
-      // manifest must carry the CURRENT head's stamp value, not the
-      // snapshot-era one — a RESTORE across an OPTIMIZE would otherwise
-      // read as "stamp changed" = layout commit and be invisible to the
-      // change feed (a restore IS a data change; the content diff must run)
-      val curStamp = Manifest.read(dir)
-        .flatMap(_.props.get(Manifest.DataChangeStampProp))
-      val props = curEpoch.filter(c => snapEpoch.forall(_ < c))
-        .map(c => snap.props + (Manifest.LastEpochProp -> c.toString))
-        .getOrElse(snap.props) -
-        // commit-scoped: the restored snapshot's old CDC pointer would
-        // claim that era's DML rows as the RESTORE's own changes
-        Manifest.CdcDirProp - Manifest.DataChangeStampProp ++
-        curStamp.map(Manifest.DataChangeStampProp -> _)
-      Manifest.write(dir, Manifest(snap.schema, snap.entries, props))
+      val head = Manifest.read(dir).map(_.props).getOrElse(Map.empty)
+      Manifest.write(dir, Manifest(snap.schema, snap.entries,
+        Commits.republished(head, snap.props)))
       (snap.entries.length, snap.entries.map(_.liveRows).sum)
     }
   }
@@ -4321,7 +4228,7 @@ private[sources] case class ManifestFilePartition(file: String, dir: String,
     entry: String = "", fileColAt: Option[Int] = None,
     posColAt: Option[Int] = None, dvPath: String = null,
     startByte: Long = 0L, startLine: Long = 0L, numLines: Long = -1L,
-    // streaming change feed ([[ManifestCdfStream]]): splice a CONSTANT
+    // streaming change feed ([[ManifestStream.changeFeed]]): splice a CONSTANT
     // `_change_type` (when not physical in the file) and `_commit_version`
     // at these output positions
     chgTypeAt: Option[Int] = None, chgTypeConst: String = null,
@@ -4349,62 +4256,58 @@ private[sources] case class SnapOffset(v: Int)
   override def json(): String = v.toString
 }
 
-/** The manifest table as a streaming SOURCE: `latestOffset` is the newest
-  * archived version, `planInputPartitions(start, end)` diffs the two
-  * snapshots' file sets and plans one partition per ADDED file. Exactly
-  *-once: versions are checkpointed offsets, and a restarted query replans
-  * the same window to the same file set (manifests are immutable once
-  * archived). Append-only windows replay exact row-level changes; a
-  * copy-on-write rewrite inside a window surfaces the rewritten files'
-  * surviving rows (documented CDF approximation). A `VACUUM` that expired
-  * a checkpointed version fails the query loudly instead of silently
-  * replaying the whole table. */
-private[sources] class ManifestChangeStream(dir: Path, full: StructType,
-    wanted: StructType, streamOpts: Map[String, String] = Map.empty)
+/** A manifest table as a streaming SOURCE: the offsets are committed
+  * versions, and each micro-batch plans the commits in its version window
+  * ([[Commits.Trail.commits]]) one at a time through `deliver`, which maps
+  * a classified commit to (file, input partition) pairs. Exactly-once:
+  * versions are checkpointed offsets, and a restarted query replans the
+  * same window to the same partitions (manifests and CDC sub-tables are
+  * immutable once archived). A `VACUUM` that expired a checkpointed
+  * version fails the query loudly instead of silently replaying the whole
+  * table. Planning is per-commit manifest metadata; each task reads only
+  * its own commit's files, so a micro-batch costs the change volume,
+  * never a table scan.
+  *
+  * Options: `startingVersion` is the FIRST version delivered;
+  * `startingTimestamp` starts after the newest version committed at or
+  * before it. ADMISSION CONTROL (`maxFilesPerTrigger` /
+  * `maxRowsPerTrigger`): a backfill must not plan its entire history as
+  * ONE micro-batch. Commits admit WHOLE (a split batch would publish half
+  * a transaction downstream), oldest first, each charged the files and
+  * live rows `deliver` plans for it, until the next commit would exceed
+  * the budget — always admitting at least one, so a single oversized
+  * commit still progresses. A commit `deliver` refuses ends the batch
+  * before it, so every commit ahead of it still arrives. */
+private[sources] class ManifestStream(trail: Commits.Trail,
+    streamOpts: Map[String, String],
+    deliver: Commits.Commit => Seq[(ManifestFile, InputPartition)])
   extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
   with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
   with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{Offset => SOffset, ReadLimit}
+  import org.apache.spark.sql.connector.read.streaming.{Offset => SOffset, ReadLimit, ReadMaxFiles, ReadMaxRows}
 
   // Trigger.AvailableNow: pin the drain target ONCE — without this Spark
   // wraps the source and the wrapper bypasses admission control, so
   // maxFilesPerTrigger would silently deliver one giant batch
   private var availableNowCap: Option[Int] = None
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(Manifest.snapshotVersions(dir).lastOption.getOrElse(0))
+    availableNowCap = Some(Commits.newest(trail.dir))
   private def newestVisible: Int = {
-    val n = Manifest.snapshotVersions(dir).lastOption.getOrElse(0)
+    val n = Commits.newest(trail.dir)
     availableNowCap.map(math.min(n, _)).getOrElse(n)
   }
 
-  private def manifestAt(v: Int): Manifest =
-    if (v == 0) Manifest(full, Seq.empty)
-    else Manifest.readSnapshot(dir, v).getOrElse(
-      throw new IllegalStateException(
-        s"streaming read: snapshot $v expired (VACUUM RETAIN) at $dir — " +
-          "reset the checkpoint to reprocess"))
-
-  // `startingVersion` = the FIRST version whose changes are delivered
-  // (the Delta option): offsets are exclusive lower bounds, so v-1;
-  // `startingTimestamp` resolves to the first version committed AFTER it
+  // offsets are exclusive lower bounds: `startingVersion` v starts at v-1
   override def initialOffset(): SOffset =
     SnapOffset(streamOpts.get("startingVersion")
       .map(v => math.max(0, v.toInt - 1))
       .orElse(streamOpts.get("startingTimestamp").map(ts =>
-        Manifest.versionAtOrBefore(dir,
+        Commits.atOrBefore(trail.dir,
           java.sql.Timestamp.valueOf(ts).getTime).getOrElse(0)))
       .getOrElse(0))
   override def deserializeOffset(json: String): SOffset = SnapOffset(json.toInt)
   override def latestOffset(): SOffset = SnapOffset(newestVisible)
 
-  /** ADMISSION CONTROL (`maxFilesPerTrigger` / `maxRowsPerTrigger`): a
-    * backfill over a large table must not plan its entire history as ONE
-    * micro-batch. Versions admit WHOLE (a commit is the atomic unit — a
-    * split batch would publish half a transaction downstream), newest
-    * first budget-checked: walk the pending versions accumulating each
-    * one's ADDED files/rows (manifest metadata, zero data I/O) and stop
-    * past the budget — always admitting at least one version, so a
-    * single oversized commit still progresses. */
   override def getDefaultReadLimit: ReadLimit =
     streamOpts.get("maxFilesPerTrigger").map(n => ReadLimit.maxFiles(n.toInt))
       .orElse(streamOpts.get("maxRowsPerTrigger")
@@ -4412,250 +4315,121 @@ private[sources] class ManifestChangeStream(dir: Path, full: StructType,
       .getOrElse(ReadLimit.allAvailable())
 
   override def latestOffset(start: SOffset, limit: ReadLimit): SOffset = {
-    import org.apache.spark.sql.connector.read.streaming.{ReadAllAvailable, ReadMaxFiles, ReadMaxRows}
     val s = start.asInstanceOf[SnapOffset].v
     val newest = newestVisible
-    limit match {
-      case _: ReadAllAvailable => SnapOffset(newest)
-      case l =>
-        val budget: (Int, Long) => Boolean = l match {
-          case f: ReadMaxFiles => (files, _) => files <= f.maxFiles()
-          case r: ReadMaxRows => (_, rows) => rows <= r.maxRows()
-          case _ => (_, _) => true
-        }
-        val versions = Manifest.snapshotVersions(dir)
-          .filter(v => v > s && v <= newest)
-        var prev = manifestAt(s).entries.map(_.name).toSet
-        var files = 0; var rows = 0L; var admitted = s; var over = false
-        versions.foreach { v =>
-          if (!over) {
-            val m = manifestAt(v)
-            val added = m.entries.filterNot(e => prev(e.name))
-            files += added.length; rows += added.map(_.liveRows).sum
-            if (admitted == s || budget(files, rows)) admitted = v
-            else over = true
-            prev = m.entries.map(_.name).toSet
-          }
-        }
-        SnapOffset(admitted)
+    val within: (Int, Long) => Boolean = limit match {
+      case f: ReadMaxFiles => (files, _) => files <= f.maxFiles()
+      case r: ReadMaxRows => (_, rows) => rows <= r.maxRows()
+      case _ => return SnapOffset(newest)
     }
+    val commits = trail.commits(s, newest)
+    var files = 0; var rows = 0L; var admitted = s; var open = true
+    while (open && commits.hasNext) {
+      val c = commits.next()
+      val planned = try Some(deliver(c)) catch {
+        case _: UnsupportedOperationException if admitted != s => None
+      }
+      planned.foreach { p => files += p.length; rows += p.map(_._1.liveRows).sum }
+      if (planned.isDefined && (admitted == s || within(files, rows))) admitted = c.version
+      else open = false
+    }
+    SnapOffset(admitted)
   }
 
-  override def planInputPartitions(start: SOffset, end: SOffset): Array[InputPartition] = {
-    val s = start.asInstanceOf[SnapOffset].v
-    val e = end.asInstanceOf[SnapOffset].v
-    if (e <= s) return Array.empty
-    val chain = Manifest.resolveChain(dir)
-    // walk the window COMMIT BY COMMIT: a layout commit (OPTIMIZE / REORG
-    // — fresh dataChange stamp) adds files that carry only rows already
-    // delivered, so it plans NOTHING (the single-window diff this
-    // replaced would have re-delivered every compacted row as new);
-    // an append mid-window still delivers even if a later layout commit
-    // compacted its file away (archived data files survive until VACUUM).
-    // Each added file's layout resolves against ITS commit's schema by
-    // name — a column added/dropped later must not shift cell positions.
-    def stampOf(v: Int): Option[String] =
-      manifestAt(v).props.get(Manifest.DataChangeStampProp)
-    // row-level DML commits (files rewritten, dropped, or newly
-    // vectored): re-delivering the rewrite's outputs would duplicate
-    // every carried row downstream, and deletes are silently invisible —
-    // so by default the stream REFUSES loudly (the Delta source's rule),
-    // with the two documented opt-outs: `skipChangeCommits` skips such
-    // commits whole, `ignoreChanges` delivers the added files
-    // (re-delivered carried rows become the consumer's contract).
-    val skipChanges = streamOpts.get("skipChangeCommits").contains("true")
-    val ignoreChanges = streamOpts.get("ignoreChanges").contains("true")
-    val versions = Manifest.snapshotVersions(dir).filter(v => v > s && v <= e)
-    (s +: versions).zip(versions).flatMap { case (a, b) =>
-      if (stampOf(b) != (if (a == 0) None else stampOf(a)))
-        Seq.empty[InputPartition] // layout commit: carried rows only
-      else {
-        val ma = manifestAt(a)
-        val mb = manifestAt(b)
-        val prevKey = ma.entries.map(e2 =>
-          e2.name -> ((e2.rows, e2.dv.map(_._1)))).toMap
-        val currKey = mb.entries.map(e2 =>
-          e2.name -> ((e2.rows, e2.dv.map(_._1)))).toMap
-        val changed = prevKey.keySet.exists(n => !currKey.get(n).contains(prevKey(n)))
-        if (changed && skipChanges) Seq.empty[InputPartition]
-        else if (changed && !ignoreChanges)
-          throw new UnsupportedOperationException(
-            s"streaming read: commit $b rewrote or removed files (row-level " +
-              "DML) — a plain data stream would duplicate carried rows and " +
-              "miss deletes. Set option skipChangeCommits=true to skip such " +
-              "commits, ignoreChanges=true to deliver the rewritten files " +
-              "anyway, or stream the change feed (changeFeed=true) for " +
-              "exact row-level changes")
-        else mb.entries.filterNot(f => prevKey.contains(f.name))
-          .map(f => ManifestFilePartition(
-            Manifest.resolveData(chain, f.name).toString,
-            dir.toString, wanted,
-            GraftManifestSink.wantedPhys(mb.schema, wanted, f),
-            dvPath = f.dv.map(d =>
-              Manifest.resolveData(chain, d._1).toString).orNull))
-      }
-    }.toArray[InputPartition]
-  }
+  override def planInputPartitions(start: SOffset, end: SOffset): Array[InputPartition] =
+    trail.commits(start.asInstanceOf[SnapOffset].v, end.asInstanceOf[SnapOffset].v)
+      .flatMap(c => deliver(c).map(_._2)).toArray
 
   override def createReaderFactory(): PartitionReaderFactory = ManifestReaderFactory
   override def commit(end: SOffset): Unit = ()
   override def stop(): Unit = ()
 }
 
-/** STREAMING CHANGE FEED (Delta's `readChangeFeed` stream): `readStream
-  * .format(…).option("changeFeed", "true")` delivers every commit's change
-  * rows — data columns + `_change_type` + `_commit_version` — one commit
-  * at a time, exactly-once (versions are the checkpointed offsets;
-  * manifests and CDC dirs are immutable once archived, so a replanned
-  * window reproduces the same rows).
-  *
-  * Per commit in the window:
-  *  - a commit with RECORDED CDC ([[ManifestTable.writeCdc]] — its cdcDir
-  *    prop changed) plans the CDC sub-table's files directly: `_change_type`
-  *    is a physical column there, attribution is exact;
-  *  - a pure append plans its added files with a constant `insert` tag —
-  *    no CDC is ever written for appends (the Delta rule: inserts derive
-  *    from the added files, costing zero extra write);
-  *  - a rewrite commit WITHOUT recorded CDC refuses loudly: a streaming
-  *    consumer must never silently receive surviving-row approximations —
-  *    enable `TBLPROPERTIES ('changeFeed'='true')` before row-level DML on
-  *    a streamed table (the batch `changes` read stays available with its
-  *    documented diff semantics).
-  *
-  * Planning is per-commit manifest metadata; each task reads only its own
-  * commit's files — at 100 TB a micro-batch costs the change volume, never
-  * a table scan. */
-private[sources] class ManifestCdfStream(dir: Path, output: StructType,
-    streamOpts: Map[String, String] = Map.empty)
-  extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-  with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
-  with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{Offset => SOffset, ReadLimit}
+private[sources] object ManifestStream {
+  /** The read options a manifest stream takes. */
+  def options(options: CaseInsensitiveStringMap): Map[String, String] =
+    Seq("maxFilesPerTrigger", "maxRowsPerTrigger", "startingVersion",
+      "startingTimestamp", "skipChangeCommits", "ignoreChanges")
+      .flatMap(k => Option(options.get(k)).map(k -> _)).toMap
 
-  // see ManifestChangeStream: the AvailableNow wrapper bypasses admission
-  private var availableNowCap: Option[Int] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(Manifest.snapshotVersions(dir).lastOption.getOrElse(0))
-  private def newestVisible: Int = {
-    val n = Manifest.snapshotVersions(dir).lastOption.getOrElse(0)
-    availableNowCap.map(math.min(n, _)).getOrElse(n)
+  private val Remedy = "reset the checkpoint to reprocess"
+
+  /** The DATA stream: each commit delivers the files it added, each laid
+    * out against ITS commit's schema by name (a column added or dropped
+    * later must not shift cell positions). A layout commit delivers
+    * nothing — its files carry rows already delivered. A commit that
+    * rewrote or removed files (row-level DML) would duplicate carried rows
+    * and miss deletes, so by default the stream REFUSES (the Delta source's
+    * rule), with two opt-outs: `skipChangeCommits` skips such commits
+    * whole, `ignoreChanges` delivers their newly named files. */
+  def data(dir: Path, wanted: StructType,
+      streamOpts: Map[String, String]): ManifestStream = {
+    val skipChanges = streamOpts.get("skipChangeCommits").contains("true")
+    val ignoreChanges = streamOpts.get("ignoreChanges").contains("true")
+    new ManifestStream(Commits.Trail(dir, "streaming read", Remedy), streamOpts, { c =>
+      val files = c.change match {
+        case Commits.Layout => Seq.empty
+        case ch if ch.removed.isEmpty => ch.added
+        case _ if skipChanges => Seq.empty
+        case ch if ignoreChanges =>
+          val replaced = ch.removed.map(_.name).toSet
+          ch.added.filterNot(f => replaced(f.name))
+        case _ => throw new UnsupportedOperationException(
+          s"streaming read: commit ${c.version} rewrote or removed files (row-level " +
+            "DML) — a plain data stream would duplicate carried rows and " +
+            "miss deletes. Set option skipChangeCommits=true to skip such " +
+            "commits, ignoreChanges=true to deliver the rewritten files " +
+            "anyway, or stream the change feed (changeFeed=true) for " +
+            "exact row-level changes")
+      }
+      val chain = Manifest.resolveChain(dir)
+      files.map(f => f -> ManifestFilePartition(
+        Manifest.resolveData(chain, f.name).toString, dir.toString, wanted,
+        GraftManifestSink.wantedPhys(c.after.schema, wanted, f),
+        dvPath = f.dv.map(d => Manifest.resolveData(chain, d._1).toString).orNull))
+    })
   }
 
-  // output = data columns + _change_type + _commit_version
-  private val dataCols = StructType(output.fields.dropRight(2))
-
-  private def manifestAt(v: Int): Manifest =
-    Manifest.readSnapshot(dir, v).getOrElse(
-      throw new IllegalStateException(
-        s"streaming change feed: snapshot $v expired (VACUUM RETAIN) at $dir — " +
-          "reset the checkpoint to reprocess"))
-
-  // `startingVersion` = the FIRST version whose changes are delivered;
-  // `startingTimestamp` resolves to the first version committed AFTER it
-  override def initialOffset(): SOffset =
-    SnapOffset(streamOpts.get("startingVersion")
-      .map(v => math.max(0, v.toInt - 1))
-      .orElse(streamOpts.get("startingTimestamp").map(ts =>
-        Manifest.versionAtOrBefore(dir,
-          java.sql.Timestamp.valueOf(ts).getTime).getOrElse(0)))
-      .getOrElse(0))
-  override def deserializeOffset(json: String): SOffset = SnapOffset(json.toInt)
-  override def latestOffset(): SOffset = SnapOffset(newestVisible)
-
-  /** ADMISSION CONTROL (`maxFilesPerTrigger`): commits admit WHOLE (a
-    * transaction never splits across micro-batches), counted by each
-    * commit's ADDED data files — manifest metadata only. At least one
-    * commit always admits, so an oversized commit still progresses. */
-  override def getDefaultReadLimit: ReadLimit =
-    streamOpts.get("maxFilesPerTrigger").map(n => ReadLimit.maxFiles(n.toInt))
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(start: SOffset, limit: ReadLimit): SOffset = {
-    import org.apache.spark.sql.connector.read.streaming.ReadMaxFiles
-    val s = start.asInstanceOf[SnapOffset].v
-    val newest = newestVisible
-    limit match {
-      case f: ReadMaxFiles =>
-        val versions = Manifest.snapshotVersions(dir)
-          .filter(v => v > s && v <= newest)
-        var prev = if (s == 0) Set.empty[String]
-          else manifestAt(s).entries.map(_.name).toSet
-        var files = 0; var admitted = s; var over = false
-        versions.foreach { v =>
-          if (!over) {
-            val m = manifestAt(v)
-            files += m.entries.count(e => !prev(e.name))
-            if (admitted == s || files <= f.maxFiles()) admitted = v
-            else over = true
-            prev = m.entries.map(_.name).toSet
-          }
-        }
-        SnapOffset(admitted)
-      case _ => SnapOffset(newest)
-    }
-  }
-
-  override def planInputPartitions(start: SOffset, end: SOffset): Array[InputPartition] = {
-    val s = start.asInstanceOf[SnapOffset].v
-    val e = end.asInstanceOf[SnapOffset].v
-    if (e <= s) return Array.empty
-    val trail = Manifest.snapshotVersions(dir).filter(v => v > s && v <= e)
-    // strict per-version prop read: `None` must mean "no prop", never
-    // "snapshot vacuumed" — if the predecessor snapshot expired, an
-    // INHERITED cdcDir would otherwise be misattributed to commit b and
-    // the stream would silently replay an OLDER commit's recorded rows
-    def propOf(v: Int, p: String): Option[String] =
-      if (v == 0) None else manifestAt(v).props.get(p)
-    def cdcOf(v: Int): Option[String] = propOf(v, Manifest.CdcDirProp)
-    def stampOf(v: Int): Option[String] =
-      propOf(v, Manifest.DataChangeStampProp)
-    val chain = Manifest.resolveChain(dir)
-    (s +: trail).zip(trail).flatMap { case (a, b) =>
-      val bCdc = cdcOf(b)
-      // a layout commit (OPTIMIZE / REORG PURGE — fresh dataChange stamp)
-      // rearranged bytes without changing content: the feed emits nothing
-      // for it, matching Delta's dataChange=false CDF rule (falling into
-      // the diff branch below would wedge the stream on a rewrite the
-      // user can do nothing about)
-      if (stampOf(b) != stampOf(a)) Seq.empty[InputPartition]
-      else if (bCdc.isDefined && bCdc != cdcOf(a)) {
-        val sub = dir.resolve(bCdc.get)
-        val cm = Manifest.read(sub).getOrElse(throw new IllegalStateException(
-          s"streaming change feed: commit $b's CDC dir ${bCdc.get} was " +
-            "vacuumed — reset the checkpoint to reprocess"))
-        val wanted = StructType(dataCols.fields :+
-          StructField("_change_type", StringType, nullable = false))
-        cm.entries.filter(_.rows > 0).map(f =>
-          ManifestFilePartition(sub.resolve(f.name).toString, dir.toString,
-            wanted, GraftManifestSink.wantedPhys(cm.schema, wanted, f),
-            commitVerAt = Some(wanted.length), commitVer = b))
-      } else {
-        val prev = if (a == 0) Map.empty[String, (Long, Option[String])]
-          else manifestAt(a).entries.map(e2 =>
-            e2.name -> ((e2.rows, e2.dv.map(_._1)))).toMap
-        val bm = manifestAt(b)
-        val curr = bm.entries.map(e2 =>
-          e2.name -> ((e2.rows, e2.dv.map(_._1)))).toMap
-        val removed = prev.keySet.filterNot(n => curr.get(n).contains(prev(n)))
-        if (removed.nonEmpty)
+  /** The CHANGE-FEED stream (Delta's `readChangeFeed` stream): each
+    * commit delivers its change rows — data columns + `_change_type` +
+    * `_commit_version`. A recorded commit plans its CDC sub-table's files
+    * (`_change_type` is physical there); an append plans its added files
+    * under a constant `insert` tag (no CDC is ever written for appends —
+    * the Delta rule); a layout commit delivers nothing. A rewrite WITHOUT
+    * recorded CDC refuses: a streaming consumer must never silently
+    * receive surviving-row approximations (the batch
+    * [[ManifestTable.changes]] read keeps its documented diff). */
+  def changeFeed(dir: Path, output: StructType,
+      streamOpts: Map[String, String]): ManifestStream = {
+    val dataCols = StructType(output.fields.dropRight(2))
+    val trail = Commits.Trail(dir, "streaming change feed", Remedy)
+    new ManifestStream(trail, streamOpts, { c =>
+      c.change match {
+        case Commits.Layout => Seq.empty
+        case Commits.Recorded(cdcDir, _, _) =>
+          val (sub, cm) = trail.recorded(c, cdcDir)
+          val wanted = StructType(dataCols.fields :+
+            StructField("_change_type", StringType, nullable = false))
+          cm.entries.filter(_.rows > 0).map(f => f -> ManifestFilePartition(
+            sub.resolve(f.name).toString, dir.toString, wanted,
+            GraftManifestSink.wantedPhys(cm.schema, wanted, f),
+            commitVerAt = Some(wanted.length), commitVer = c.version))
+        case ch if ch.removed.nonEmpty =>
           throw new UnsupportedOperationException(
-            s"streaming change feed: commit $b rewrote or removed files " +
+            s"streaming change feed: commit ${c.version} rewrote or removed files " +
               "without recorded CDC — set TBLPROPERTIES " +
               "('changeFeed'='true') before running row-level DML on a " +
               "streamed table, or use the batch changesFrom/changesTo read")
-        bm.entries.filter(f => !prev.contains(f.name) && f.rows > 0).map(f =>
-          ManifestFilePartition(Manifest.resolveData(chain, f.name).toString,
-            dir.toString, dataCols,
-            GraftManifestSink.wantedPhys(bm.schema, dataCols, f),
+        case ch =>
+          val chain = Manifest.resolveChain(dir)
+          ch.added.filter(_.rows > 0).map(f => f -> ManifestFilePartition(
+            Manifest.resolveData(chain, f.name).toString, dir.toString, dataCols,
+            GraftManifestSink.wantedPhys(c.after.schema, dataCols, f),
             chgTypeAt = Some(dataCols.length), chgTypeConst = "insert",
-            commitVerAt = Some(dataCols.length + 1), commitVer = b))
+            commitVerAt = Some(dataCols.length + 1), commitVer = c.version))
       }
-    }.toArray[InputPartition]
+    })
   }
-
-  override def createReaderFactory(): PartitionReaderFactory = ManifestReaderFactory
-  override def commit(end: SOffset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 /** The table variant the provider serves under `option("changeFeed",
@@ -4667,16 +4441,14 @@ private[sources] class ManifestCdfTable(dir: Path, output: StructType)
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val streamOpts = Seq("maxFilesPerTrigger", "startingVersion",
-        "startingTimestamp")
-      .flatMap(k => Option(options.get(k)).map(k -> _)).toMap
+    val streamOpts = ManifestStream.options(options)
     new ScanBuilder {
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = output
         override def description(): String = s"GraftCdfScan dir=$dir"
         override def toMicroBatchStream(checkpointLocation: String)
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-          new ManifestCdfStream(dir, output, streamOpts)
+          ManifestStream.changeFeed(dir, output, streamOpts)
       }
     }
   }
@@ -4728,7 +4500,7 @@ private[sources] class ManifestScan(dir: Path, full: StructType, wanted: StructT
     * transform → `writeStream`. */
   override def toMicroBatchStream(checkpointLocation: String)
     : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ManifestChangeStream(dir, full, wanted, streamOpts)
+    ManifestStream.data(dir, wanted, streamOpts)
   override def description(): String =
     s"GraftManifestScan dir=$dir cols=${wanted.fieldNames.mkString(",")} " +
       s"files=${entries.length}/$totalFiles"

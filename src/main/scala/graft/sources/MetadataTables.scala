@@ -119,13 +119,8 @@ object MetadataTables {
           if (Files.exists(p)) Files.size(p) else 0L, e.dv.isDefined)
       }.toArray
     case "snapshots" =>
-      Manifest.snapshotVersions(dir).flatMap { v =>
-        Manifest.readSnapshot(dir, v).map { m =>
-          val mtime = Files.getLastModifiedTime(
-            dir.resolve(s"_manifest.v$v")).toMillis
-          Array[Any](v, m.entries.length, m.entries.map(_.liveRows).sum,
-            mtime * 1000L) // epoch micros
-        }
+      Commits.history(dir).map { case (v, files, rows, millis) =>
+        Array[Any](v, files, rows, millis * 1000L) // epoch micros
       }.toArray
     case "refs" =>
       val branches = Branch.list(dir).flatMap { b =>

@@ -108,6 +108,13 @@ class JobCountSpec extends SparkSuite {
     ("q_text_bm25_join_sql", 9, 17),
     ("q_vector_search_sql_pq", 8, 11),
     ("q_vector_search_join", 8, 10),
+    // the commit log's readers: the changesFrom/changesTo window, the
+    // batch change feed over a COW UPDATE and over a recorded-CDC MERGE,
+    // and the incremental materialized-view refresh it feeds
+    ("q_table_changes", 3, 5),
+    ("q_table_changes_update", 5, 8),
+    ("q_table_changes_merge", 7, 15),
+    ("q_mv_cdf_refresh", 15, 28),
   )
 
   private def defaultConditions: Boolean =

@@ -346,4 +346,44 @@ class ChangeFeedSpec extends SparkSuite {
     assert(cs.exists(c => c._1 == 10L && c._3 == "insert"),
       s"the fast-forwarded insert must surface in main's CDF, got $cs")
   }
+
+  // --- the streaming epoch watermarks survive a republish: RESTORE and
+  // --- FAST FORWARD keep the higher epoch per `lastEpoch.<queryId>` key
+
+  /** Commit `props` on top of dir's current manifest (one snapshot). */
+  private def commitProps(dir: java.nio.file.Path, props: (String, String)*): Unit = {
+    val m = Manifest.read(dir).get
+    Manifest.write(dir, m.copy(props = m.props ++ props))
+  }
+
+  test("RESTORE keeps each streaming query's epoch watermark") {
+    rootDir
+    spark.sql("CREATE TABLE graftcdf.q.rw (id BIGINT, v DOUBLE)")
+    val dir = Paths.get(rootDir, "q", "rw")
+    (1L to 3L).map(i => (i, i * 1.0)).toDF("id", "v").coalesce(1)
+      .writeTo("graftcdf.q.rw").append()
+    commitProps(dir, "lastEpoch.q" -> "0")
+    val first = Manifest.snapshotVersions(dir).last
+    commitProps(dir, "lastEpoch.q" -> "1")
+    commitProps(dir, "lastEpoch.q" -> "2")
+    spark.sql(s"RESTORE TABLE graftcdf.q.rw TO VERSION AS OF $first")
+    assert(Manifest.read(dir).get.props.get("lastEpoch.q").contains("2"),
+      "a restore must not lower a query's epoch watermark")
+  }
+
+  test("FAST FORWARD keeps main's epoch watermarks") {
+    rootDir
+    spark.sql("CREATE TABLE graftcdf.q.fw (id BIGINT, v DOUBLE)")
+    val dir = Paths.get(rootDir, "q", "fw")
+    (1L to 3L).map(i => (i, i * 1.0)).toDF("id", "v").coalesce(1)
+      .writeTo("graftcdf.q.fw").append()
+    commitProps(dir, "lastEpoch.q" -> "5")
+    spark.sql("ALTER TABLE graftcdf.q.fw CREATE BRANCH wip")
+    Seq((10L, 10.0)).toDF("id", "v").coalesce(1)
+      .writeTo("graftcdf.q.`fw@wip`").append()
+    spark.sql("ALTER TABLE graftcdf.q.fw FAST FORWARD BRANCH wip")
+    assert(Manifest.read(dir).get.props.get("lastEpoch.q").contains("5"),
+      "publishing a branch must not drop main's epoch watermark")
+    assert(spark.table("graftcdf.q.fw").count() == 4L)
+  }
 }

@@ -91,6 +91,21 @@ class DeleteExprSpec extends SparkSuite {
     // the expression tier: the translatable conjunct excludes it too
     spark.sql("DELETE FROM graftdelx.q.noop WHERE id > 100 AND id % 3 = 0")
     assert(Manifest.snapshotVersions(dir) == before, "expression tier")
+    // a matched-only MERGE whose source key matches no row, a MERGE from
+    // an empty source, and a replaceWhere of an empty frame whose
+    // condition matches no file change nothing either
+    Seq((999L, 9.0)).toDF("id", "v").createOrReplaceTempView("delx_noop_miss")
+    spark.sql("MERGE INTO graftdelx.q.noop t USING delx_noop_miss s " +
+      "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v")
+    assert(Manifest.snapshotVersions(dir) == before, "matched-only MERGE")
+    Seq.empty[(Long, Double)].toDF("id", "v").createOrReplaceTempView("delx_noop_empty")
+    spark.sql("MERGE INTO graftdelx.q.noop t USING delx_noop_empty s " +
+      "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v " +
+      "WHEN NOT MATCHED THEN INSERT *")
+    assert(Manifest.snapshotVersions(dir) == before, "MERGE from an empty source")
+    Seq.empty[(Long, Double)].toDF("id", "v").writeTo("graftdelx.q.noop")
+      .overwrite(org.apache.spark.sql.functions.col("id") === 999L)
+    assert(Manifest.snapshotVersions(dir) == before, "empty replaceWhere")
     assert(spark.table("graftdelx.q.noop").count() == 10L)
   }
 

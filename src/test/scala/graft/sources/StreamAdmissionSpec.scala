@@ -81,6 +81,10 @@ class StreamAdmissionSpec extends SparkSuite {
     val (rows, batches) = drain(dir, Map("maxRowsPerTrigger" -> "20"))
     assert(rows == 40)
     assert(batches == 2, s"4x10 rows at 20/trigger = 2 batches, got $batches")
+    // the change-feed stream admits by the same rule
+    val (cdfRows, cdfBatches) = drain(dir, Map("maxRowsPerTrigger" -> "20"), cdf = true)
+    assert(cdfRows == 40)
+    assert(cdfBatches == 2, s"change feed: 2 batches, got $cdfBatches")
   }
 
   test("layout commits deliver nothing to the data stream — no duplicate " +
@@ -182,5 +186,30 @@ class StreamAdmissionSpec extends SparkSuite {
     val (pastRows, _) = drain(dir.toString,
       Map("startingTimestamp" -> "1999-01-01 00:00:00"))
     assert(pastRows == 12, s"a pre-creation start must deliver all, got $pastRows")
+  }
+
+  test("a layout commit is charged nothing: no empty micro-batch for OPTIMIZE") {
+    rootDir
+    spark.sql("CREATE TABLE graftadm.q.lc (id BIGINT)")
+    val dir = Paths.get(rootDir, "q", "lc").toString
+    (1 to 2).foreach { c =>
+      Seq.tabulate(5)(i => c * 100L + i).toDF("id").coalesce(1)
+        .writeTo("graftadm.q.lc").append()
+    }
+    spark.sql("OPTIMIZE graftadm.q.lc") // 2 files -> 1, pure layout
+    Seq(999L).toDF("id").coalesce(1).writeTo("graftadm.q.lc").append()
+    val sizes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val q = spark.readStream.format("graft.sources.GraftManifestSink")
+      .option("path", dir).option("maxFilesPerTrigger", "1").load()
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        sizes.add(df.count()); ()
+      }
+      .option("checkpointLocation", Files.createTempDirectory("graft_adm_lc_").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination(60000)
+    import scala.jdk.CollectionConverters._
+    assert(sizes.asScala.toSeq == Seq(5L, 5L, 1L),
+      s"one file per micro-batch, none empty, got ${sizes.asScala.toSeq}")
   }
 }
